@@ -776,8 +776,7 @@ def _q_triangle_profile(spark, sf_dir):
 def _q_er_clusters_synthetic(spark, sf_dir):
     from word_sense_disambiguation_spark.datagen import build_world, world_to_spark
     from word_sense_disambiguation_spark.operators.blocking import (
-        oversized_star_pairs,
-        surface_key_pairs,
+        er_candidate_pairs,
     )
     from word_sense_disambiguation_spark.operators.clustering import cluster_mentions
     from word_sense_disambiguation_spark.operators.pairs import score_mention_pairs
@@ -798,12 +797,7 @@ def _q_er_clusters_synthetic(spark, sf_dir):
     mentions = mentions_from_pages_sql(sw["pages"]).select(
         "mention_id", "norm_surface", "pos"
     ).localCheckpoint(eager=True)
-    pairs, oversized = surface_key_pairs(mentions, max_block_size=256)
-    # no silent caps: blocks over the size cap degrade to linear star
-    # edges (canopy-aware) instead of losing all their ER edges.
-    recovered = oversized_star_pairs(mentions, oversized, assignments)
-    all_pairs = pairs.select("id_a", "id_b").unionByName(recovered).distinct()
-    edges = score_mention_pairs(all_pairs, assignments)
+    edges = score_mention_pairs(er_candidate_pairs(mentions, assignments), assignments)
     return cluster_mentions(edges)
 
 
@@ -878,17 +872,17 @@ def _derived_er_cluster(mentions, assignments):
     """Derived-world snapshot build: surface-key blocking (block cap 40,
     oversized-star recovery) -> sense-only pair scoring -> adaptive CC."""
     from word_sense_disambiguation_spark.operators.blocking import (
-        oversized_star_pairs,
-        surface_key_pairs,
+        er_candidate_pairs,
     )
     from word_sense_disambiguation_spark.operators.clustering import cluster_mentions
     from word_sense_disambiguation_spark.operators.pairs import score_mention_pairs
 
-    pairs, oversized = surface_key_pairs(mentions, max_block_size=40)
-    recovered = oversized_star_pairs(mentions, oversized, assignments)
-    all_pairs = pairs.select("id_a", "id_b").unionByName(recovered).distinct()
     edges = score_mention_pairs(
-        all_pairs, assignments, w_jw=0.0, w_cos=0.0, w_sense=1.0
+        er_candidate_pairs(mentions, assignments, max_block_size=40),
+        assignments,
+        w_jw=0.0,
+        w_cos=0.0,
+        w_sense=1.0,
     )
     return cluster_mentions(edges)
 
@@ -3484,7 +3478,8 @@ _ER_DERIVED_CC_SQL = r"""
                                       ELSE len(list_intersect(m.ctx, s.profile))
                                  END) DESC NULLS LAST,
                                 s.k ASC NULLS LAST) AS rn
-              FROM m LEFT JOIN sdef s ON m.lemma = s.lemma
+              FROM m LEFT JOIN sdef s
+                ON m.lemma = s.lemma AND s.sense_id IS NOT NULL
             ),
             dec AS (
               SELECT mention_id, lemma,
@@ -4983,7 +4978,7 @@ def oracle_sql() -> dict[str, str]:
                      list(sense_definition ORDER BY k) AS defs,
                      list(sense_id ORDER BY k) AS sense_ids,
                      CAST(count(*) AS INTEGER) AS n
-              FROM sdef GROUP BY lemma
+              FROM sdef WHERE sense_id IS NOT NULL GROUP BY lemma
             ),
             ex AS (
               SELECT lemma, sense_id,
@@ -5049,7 +5044,7 @@ def oracle_sql() -> dict[str, str]:
                      list(sense_definition ORDER BY k) AS defs,
                      list(sense_id ORDER BY k) AS sense_ids,
                      CAST(count(*) AS INTEGER) AS n
-              FROM sdef GROUP BY lemma
+              FROM sdef WHERE sense_id IS NOT NULL GROUP BY lemma
             ),
             ex AS (
               SELECT lemma, sense_id,
@@ -7377,7 +7372,8 @@ def oracle_sql() -> dict[str, str]:
                                       ELSE len(list_intersect(m.ctx, s.profile))
                                  END) DESC NULLS LAST,
                                 s.k ASC NULLS LAST) AS rn
-              FROM m LEFT JOIN sprof s ON m.lemma = s.lemma
+              FROM m LEFT JOIN sprof s
+                ON m.lemma = s.lemma AND s.sense_id IS NOT NULL
             ),
             dec AS (
               SELECT mention_id, lemma,

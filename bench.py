@@ -44,9 +44,7 @@ def main() -> None:
         world_to_spark,
     )
     from word_sense_disambiguation_spark.operators.blocking import (
-        oversized_star_pairs,
-        sense_block_star_pairs,
-        surface_key_pairs,
+        er_candidate_pairs,
     )
     from word_sense_disambiguation_spark.operators.clustering import cluster_mentions
     from word_sense_disambiguation_spark.operators.dedup import (
@@ -159,18 +157,17 @@ def main() -> None:
         assignments.count()
 
         def run_er():
-            # scale path: prune unlinkable mentions (guaranteed
-            # singletons), then linear star pairs within sense canopies +
-            # exhaustive pairs only inside small surface blocks
+            # prune unlinkable mentions (guaranteed singletons), then the
+            # ER job's one blocking stage (blocking.er_candidate_pairs)
             import pyspark.sql.functions as F
 
-            # materialize the pruned projection ONCE: the pair union +
-            # scorer below consume `a` ~8 times (three blocking branches,
-            # both scorer sides, block counts), and each consumer would
+            # materialize the pruned projection ONCE: the blocking stage +
+            # scorer below consume `a` many times (blocking branches, both
+            # scorer sides, block counts), and each consumer would
             # otherwise re-scan the full 128-partition assignments cache
             # through the filter. One eager checkpoint (38k rows at sf0.1)
             # halves the cold er_cluster wall: 9.66s -> 4.29s measured,
-            # scripts/_er_cold_probe2.py. localCheckpoint, not persist —
+            # evidence in BASELINE.md. localCheckpoint, not persist —
             # CacheManager would substitute a persist()ed plan into rep 2
             # and turn it into a cache read (the r4 bench artifact).
             a = assignments.filter(
@@ -179,31 +176,7 @@ def main() -> None:
                 "mention_id", "lemma", "pos", "norm_surface", "surface",
                 "context_words", "pred_sense_id", "decision",
             ).localCheckpoint(eager=True)
-            # no silent caps, even here: two NOTA mentions with identical
-            # surface AND identical context words (exactly what near-dup
-            # pages produce) score 0.2*1.0 + 0.4*1.0 = 0.60 — which IS a
-            # match (is_match uses >=) — so dropped oversized blocks could
-            # lose real edges. Recovery scope is deliberately minimal:
-            # ASSIGNED members of oversized blocks are already covered by
-            # the canopy stars below (sense_block_star_pairs runs over ALL
-            # assigned mentions), and a cross-decision pair can never
-            # reach the threshold — identical (surface, context) implies
-            # identical deterministic decisions, so jw=1 AND cos=1 cannot
-            # straddle assigned/nota. Only the non-assigned members need
-            # the linear block-key star.
-            small, oversized = surface_key_pairs(a, max_block_size=64)
-            recovered = oversized_star_pairs(
-                a.filter(F.col("decision") != "assigned"), oversized
-            )
-            # NO distinct() on the union — the equivalence argument lives
-            # in operators/blocking.py's module docstring and is pinned by
-            # tests/test_blocking_pairs.py (construction == canonical).
-            pairs = (
-                sense_block_star_pairs(a)
-                .unionByName(small.select("id_a", "id_b"))
-                .unionByName(recovered)
-            )
-            edges = score_mention_pairs(pairs, a)
+            edges = score_mention_pairs(er_candidate_pairs(a, a), a)
             out = cluster_mentions(edges)  # returns a caller-owned cache
             n = out.count()
             out.unpersist(blocking=False)

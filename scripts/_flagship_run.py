@@ -22,9 +22,7 @@ def main() -> None:
 
     from word_sense_disambiguation_spark.datagen import build_world, world_to_spark
     from word_sense_disambiguation_spark.operators.blocking import (
-        oversized_star_pairs,
-        sense_block_star_pairs,
-        surface_key_pairs,
+        er_candidate_pairs,
     )
     from word_sense_disambiguation_spark.operators.clustering import cluster_mentions
     from word_sense_disambiguation_spark.operators.pairs import score_mention_pairs
@@ -54,8 +52,8 @@ def main() -> None:
         _materialize(sense_assignments(pages, senses))
 
     def run_full() -> None:
-        # all three north-rule stages end-to-end: blocking (surface +
-        # sense-canopy stars), pair scoring, connected components.
+        # all three north-rule stages end-to-end: blocking
+        # (blocking.er_candidate_pairs), pair scoring, connected components.
         # ER only pairs mentions with inventory evidence — no_definitions
         # mentions are guaranteed singletons (their surface blocks are
         # stop-word-sized and capped anyway), so they are pruned before the
@@ -74,23 +72,7 @@ def main() -> None:
             )
             .localCheckpoint(eager=True)
         )
-        # no silent caps: NOTA pairs with identical surface + context score
-        # exactly 0.60 (a match under >=), so oversized blocks degrade to
-        # linear star recovery — scoped to NON-ASSIGNED members only, since
-        # canopy stars already cover assigned ones and identical-context
-        # pairs cannot straddle decisions (see bench.py)
-        small, oversized = surface_key_pairs(a, max_block_size=64)
-        recovered = oversized_star_pairs(
-            a.filter(F.col("decision") != "assigned"), oversized
-        )
-        # no distinct(): sources are disjoint on this path and downstream
-        # tolerates duplicate pairs — see bench.py's rationale
-        prs = (
-            sense_block_star_pairs(a)
-            .unionByName(small.select("id_a", "id_b"))
-            .unionByName(recovered)
-        )
-        edges = score_mention_pairs(prs, a)
+        edges = score_mention_pairs(er_candidate_pairs(a, a), a)
         _materialize(cluster_mentions(edges))
 
     from scripts._hoststat import bandwidth_probe, cpu_sample, steal_pct

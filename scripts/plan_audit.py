@@ -33,9 +33,7 @@ def main() -> None:
 
     from word_sense_disambiguation_spark.datagen import build_world, world_to_spark
     from word_sense_disambiguation_spark.operators.blocking import (
-        oversized_star_pairs,
-        sense_block_star_pairs,
-        surface_key_pairs,
+        er_candidate_pairs,
     )
     from word_sense_disambiguation_spark.operators.dedup import (
         duplicate_span_stats,
@@ -167,15 +165,7 @@ def main() -> None:
         "mention_id", "lemma", "pos", "norm_surface", "surface",
         "context_words", "pred_sense_id", "decision",
     )
-    small, oversized = surface_key_pairs(a, max_block_size=64)
-    er_edges = score_mention_pairs(
-        sense_block_star_pairs(a)
-        .unionByName(small.select("id_a", "id_b"))
-        .unionByName(
-            oversized_star_pairs(a.filter(F.col("decision") != "assigned"), oversized)
-        ),
-        a,
-    )
+    er_edges = score_mention_pairs(er_candidate_pairs(a, a), a)
     qvecs = [(int(r.vec_id), list(r.embedding)) for r in emb.orderBy("vec_id").limit(2).collect()]
     ivf = ivf_index(emb, n_lists=8, lloyd_iters=1)
     lsh = lsh_index(emb)
@@ -219,12 +209,12 @@ def main() -> None:
         ),
         (
             "er_cluster edges (blocking -> pair scoring)",
-            "Canopy stars + capped surface blocks + non-assigned star "
-            "recovery, unioned WITHOUT distinct (see blocking.py for the "
-            "equivalence argument); two hash joins back to mention "
-            "attributes; JW + cosine as Arrow UDFs with the equality "
-            "fast path in the python loop. Oversized blocks surface in a "
-            "side table — no silent caps.",
+            "blocking.er_candidate_pairs: capped surface blocks + "
+            "canopy-aware star recovery of oversized blocks, unioned and "
+            "deduplicated with one distinct; two hash joins back to "
+            "mention attributes; JW + cosine as Arrow UDFs with the "
+            "equality fast path in the python loop. Oversized blocks "
+            "degrade to linear star edges — no silent caps.",
             er_edges,
         ),
         (

@@ -234,54 +234,37 @@ def test_cluster_canonical_id_is_min_member(er_outputs):
     assert bad.count() == 0
 
 
-def test_bench_er_construction_equals_canonical(spark, sworld):
-    """The bench/scaling ER pair construction (all-canopy stars + small
-    all-pairs + nota-only recovery, NO dedup shuffle) must yield the SAME
-    final clusters as the canonical construction (small all-pairs +
-    canopy-aware oversized recovery + distinct): its edge set is the
-    canonical one plus redundant in-small-block canopy edges, and
-    duplicates are harmless downstream — this test pins that argument."""
+def test_er_candidate_pairs_is_the_canonical_union(spark, sworld):
+    """er_candidate_pairs is the ER job's one blocking stage: capped
+    small-block all-pairs ∪ canopy-aware oversized-star recovery, with no
+    duplicate row and every pair oriented id_a < id_b."""
     from word_sense_disambiguation_spark.operators.blocking import (
+        er_candidate_pairs,
         oversized_star_pairs,
-        sense_block_star_pairs,
     )
 
     a = (
         sense_assignments(sworld["pages"], sworld["senses"])
-        .filter(F.col("decision") != "no_definitions")
         .select(
             "mention_id", "lemma", "pos", "norm_surface", "surface",
             "context_words", "pred_sense_id", "decision",
         )
         .localCheckpoint(eager=True)
     )
-
-    def clusters_of(pairs_df):
-        edges = score_mention_pairs(pairs_df, a)
-        rows = cluster_mentions(edges).collect()
-        by_entity = {}
-        for r in rows:
-            by_entity.setdefault(r.entity_id, set()).add(r.mention_id)
-        return {frozenset(v) for v in by_entity.values()}
-
-    # bench/scaling construction (cap 64, no distinct)
-    small, oversized = surface_key_pairs(a, max_block_size=64)
-    bench_pairs = (
-        sense_block_star_pairs(a)
-        .unionByName(small.select("id_a", "id_b"))
-        .unionByName(
-            oversized_star_pairs(
-                a.filter(F.col("decision") != "assigned"), oversized
-            )
-        )
-    )
-    # canonical construction (run_er_pipeline shape)
-    canon_pairs = (
-        small.select("id_a", "id_b")
+    # a cap small enough that this world has oversized blocks to recover
+    cap = 16
+    small, oversized = surface_key_pairs(a, max_block_size=cap)
+    assert oversized.count() > 0
+    union = {
+        (r.id_a, r.id_b)
+        for r in small.select("id_a", "id_b")
         .unionByName(oversized_star_pairs(a, oversized, a))
-        .distinct()
-    )
-    assert clusters_of(bench_pairs) == clusters_of(canon_pairs)
+        .collect()
+    }
+    got = [(r.id_a, r.id_b) for r in er_candidate_pairs(a, a, cap).collect()]
+    assert len(got) == len(set(got))
+    assert set(got) == union
+    assert all(x < y for x, y in got)
 
 
 def test_fellegi_sunter_three_zones(spark):

@@ -148,3 +148,48 @@ def test_oversized_key_degrades_to_mint(spark):
     # the hot key was excluded from attach: the mention minted instead
     assert rows[0]["attach_source"] == "minted"
     assert rows[0]["entity_id"] == "n1"
+
+
+def test_residual_blocks_under_the_er_job_cap(spark):
+    """The residual clusters under the ER job's block cap (ER_MAX_BLOCK),
+    exactly like the snapshot build: one 100-mention surface block is
+    all-pairs there, so two NOTA duplicates whose context differs from the
+    block hub's still find each other (a 64 cap would star the block over
+    its hub and strand them as singletons)."""
+    from word_sense_disambiguation_spark.operators.blocking import (
+        er_candidate_pairs,
+    )
+    from word_sense_disambiguation_spark.operators.clustering import (
+        cluster_mentions,
+    )
+    from word_sense_disambiguation_spark.operators.pairs import (
+        score_mention_pairs,
+    )
+
+    twins = {"m050", "m051"}
+    rows = []
+    for i in range(100):
+        mid = f"m{i:03d}"
+        # three tokens per bag: single-token bags collide in the 64-dim
+        # hashed embedding often enough to score cosine 1.0
+        ctx = ["twin", "words"] if mid in twins else [
+            f"alpha{i}", f"beta{i}", f"gamma{i}"
+        ]
+        rows.append((mid, "acme", "n", "acme", "Acme", ctx, None, "nota"))
+    batch = spark.createDataFrame(rows, schema=ASG_SCHEMA)
+    empty_base = spark.createDataFrame([], schema=ASG_SCHEMA)
+    empty_clusters = spark.createDataFrame(
+        [], schema="mention_id string, entity_id string"
+    )
+
+    out, _ = attach_mentions_to_clusters(batch, empty_base, empty_clusters)
+    got = {r.mention_id: r.entity_id for r in out.collect()}
+    cc = {
+        r.mention_id: r.entity_id
+        for r in cluster_mentions(
+            score_mention_pairs(er_candidate_pairs(batch, batch), batch)
+        ).collect()
+    }
+    assert got == {m: cc.get(m, m) for m in got}
+    assert got["m050"] == got["m051"] == "m050"
+    assert sum(1 for m, e in got.items() if m != e) == 1

@@ -121,6 +121,37 @@ def test_prompt_path_matches_gold_and_columnar(spark, sworld):
     assert agree / n >= 0.95, (agree, n)
 
 
+def test_null_sense_id_row_is_no_definitions_on_both_paths(spark, sworld):
+    """An inventory row with a NULL sense_id is not a sense: a mention whose
+    only inventory rows carry one gets ``no_definitions`` from the columnar
+    AND the prompted path (the prompted path used to collect it as a
+    candidate and decode it as nota or as assigned with a null id)."""
+    pages = sworld["pages"].orderBy("url").limit(10)
+    lemma = (
+        sense_assignments(pages, sworld["senses"])
+        .filter(F.col("decision") == "assigned")
+        .orderBy("mention_id")
+        .first()["lemma"]
+    )
+    senses = sworld["senses"]
+    hit = senses.filter(F.col("lemma") == lemma)
+    senses = senses.filter(F.col("lemma") != lemma).unionByName(
+        hit.withColumn("sense_id", F.lit(None).cast("string"))
+    )
+
+    for path in (sense_assignments, sense_assignments_prompted):
+        rows = (
+            path(pages, senses)
+            .filter(F.col("lemma") == lemma)
+            .select("decision", "pred_sense_id")
+            .collect()
+        )
+        assert rows, path.__name__
+        assert {(r.decision, r.pred_sense_id) for r in rows} == {
+            ("no_definitions", None)
+        }, path.__name__
+
+
 def test_scorer_factory_swap_in(spark):
     """The model swap-in contract: a different scorer_factory (the
     ModernBERT slot) changes ONLY the probability content — batching,

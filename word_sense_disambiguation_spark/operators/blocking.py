@@ -17,32 +17,13 @@ of this discipline is its length-bucketed batching
 (``wsd/masked_language_model.py:113-126``) — bounding worst-case work per
 unit, never dropping silently (it warns, ``training/train.py:374-396``).
 
-Why the bench/scaling pair union carries no distinct() (the construction
-``sense_block_star_pairs ∪ small-block all-pairs ∪ non-assigned oversized
-stars``, see bench.py):
-
-1. *Correctness does not need dedup.* The pair scorer is row-wise
-   deterministic (same pair -> same score every time) and connected
-   components is duplicate-edge-tolerant, so a pair appearing twice can
-   only cost a re-score, never change a cluster.
-2. *Coverage equals the canonical construction.* Every edge the canonical
-   form (small all-pairs + full ``oversized_star_pairs`` with
-   assignments) produces is present: small blocks are enumerated
-   exhaustively by both; oversized-block assigned members are covered
-   because ``sense_block_star_pairs`` stars over ALL assigned mentions
-   (a superset of the oversized members' canopy stars); oversized
-   non-assigned members keep their block-key star via the explicit
-   ``oversized_star_pairs`` fallback. Extra edges beyond the canonical
-   set are only in-small-block canopy stars — redundant candidates the
-   scorer vets like any other.
-3. *The dedup shuffle was a pure extra stage* (~0.8s at local[32],
-   measured r3): on this workload the three sources barely overlap —
-   same-sense canopies live in oversized surface blocks, which the
-   all-pairs source skips.
-
-``tests/test_blocking_pairs.py::test_bench_er_construction_equals_canonical``
-pins the cluster-level identity of the two constructions; future rounds
-change the bench construction only if that test moves with it.
+The ER job composes its candidate pairs in ONE place,
+:func:`er_candidate_pairs`: capped all-pairs inside small surface blocks,
+plus linear canopy-aware star edges for every block over the cap, then a
+``distinct()``. ``run_er_pipeline``, the incremental attach residual, the
+driver-contract ER queries and the bench/scaling harnesses all call it, so
+every ER job runs the same blocking policy under the same cap
+(:data:`ER_MAX_BLOCK`).
 """
 
 from __future__ import annotations
@@ -62,6 +43,9 @@ from word_sense_disambiguation_spark.functions.hashing import (
 DEFAULT_NUM_PERM = 128
 DEFAULT_BANDS = 16
 DEFAULT_MAX_BLOCK = 64
+# surface-block cap of the ER job (run_er_pipeline) and its incremental
+# residual (attach_mentions_to_clusters): one cap, one blocking policy
+ER_MAX_BLOCK = 256
 
 
 def _pairs_within_blocks(
@@ -176,6 +160,25 @@ def oversized_star_pairs(
         list(key_cols),
     )
     return canopy.unionByName(fallback)
+
+
+def er_candidate_pairs(
+    mentions: DataFrame,
+    assignments: DataFrame,
+    max_block_size: int = ER_MAX_BLOCK,
+) -> DataFrame:
+    """The ER job's blocking stage -> distinct ``(id_a < id_b)`` pairs.
+
+    Small-block all-pairs from :func:`surface_key_pairs` ∪ the
+    assignment-aware :func:`oversized_star_pairs` recovery of every block
+    over ``max_block_size`` (no silent caps: a hot block degrades to
+    linear star edges, never to zero edges), deduplicated. ``mentions``
+    needs ``mention_id`` and the surface key columns; ``assignments``
+    needs ``mention_id, decision, lemma, pred_sense_id``.
+    """
+    pairs, oversized = surface_key_pairs(mentions, max_block_size=max_block_size)
+    recovered = oversized_star_pairs(mentions, oversized, assignments)
+    return pairs.select("id_a", "id_b").unionByName(recovered).distinct()
 
 
 def minhash_bands(

@@ -38,8 +38,11 @@ def prepare_senses(senses: DataFrame) -> DataFrame:
     profile = F.filter(profile, lambda w: (w != F.col("lemma")) & (w != F.lit("")))
     from word_sense_disambiguation_spark.operators.scoring import _emb_vec_sql
 
+    # a NULL sense_id is not a sense: dropping the row here gives the
+    # columnar and the prompted path one answer for it (no_definitions)
     prepared = (
-        senses.withColumn(
+        senses.filter(F.col("sense_id").isNotNull())
+        .withColumn(
             "join_pos", F.when(F.col("pos") == "s", F.lit("a")).otherwise(F.col("pos"))
         )
         .withColumn("profile_words", profile)

@@ -57,9 +57,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from word_sense_disambiguation_spark.operators.blocking import (
-    DEFAULT_MAX_BLOCK,
-    oversized_star_pairs,
-    surface_key_pairs,
+    ER_MAX_BLOCK,
+    er_candidate_pairs,
 )
 from word_sense_disambiguation_spark.operators.clustering import cluster_mentions
 from word_sense_disambiguation_spark.operators.pairs import (
@@ -80,6 +79,9 @@ _ATTR_COLS = (
     "decision",
 )
 
+# the surface blocking key er_candidate_pairs blocks the snapshot on
+_KEY_COLS = ("norm_surface", "pos")
+
 DEFAULT_MAX_REPS_PER_KEY = 64
 
 
@@ -87,13 +89,12 @@ def attach_mentions_to_clusters(
     batch_assignments: DataFrame,
     base_assignments: DataFrame,
     base_clusters: DataFrame,
-    key_cols: tuple[str, ...] = ("norm_surface", "pos"),
     threshold: float = MATCH_THRESHOLD,
     w_jw: float = W_JW,
     w_cos: float = W_COS,
     w_sense: float = W_SENSE,
     max_reps_per_key: int = DEFAULT_MAX_REPS_PER_KEY,
-    max_block_size: int = DEFAULT_MAX_BLOCK,
+    max_block_size: int = ER_MAX_BLOCK,
 ) -> tuple[DataFrame, DataFrame]:
     """Resolve a batch of new mentions against frozen base clusters.
 
@@ -113,7 +114,7 @@ def attach_mentions_to_clusters(
     * ``oversized_keys`` — blocking keys whose base side held more than
       ``max_reps_per_key`` distinct entities, excluded from attach.
     """
-    keys = list(key_cols)
+    keys = list(_KEY_COLS)
     attrs = list(_ATTR_COLS)
 
     # 0. materialize the batch ONCE. The operator fans this input out to
@@ -202,16 +203,8 @@ def attach_mentions_to_clusters(
     residual = batch_assignments.join(
         matched.select("mention_id"), on="mention_id", how="left_anti"
     )
-    r_mentions = residual.select("mention_id", *keys)
-    r_pairs, r_oversized = surface_key_pairs(
-        r_mentions, key_cols=tuple(keys), max_block_size=max_block_size
-    )
-    r_recovered = oversized_star_pairs(
-        r_mentions, r_oversized, residual, key_cols=tuple(keys)
-    )
-    r_all = r_pairs.select("id_a", "id_b").unionByName(r_recovered).distinct()
     r_edges = score_mention_pairs(
-        r_all,
+        er_candidate_pairs(residual, residual, max_block_size),
         residual.select(*attrs),
         threshold=threshold,
         w_jw=w_jw,

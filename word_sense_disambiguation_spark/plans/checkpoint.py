@@ -32,6 +32,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from word_sense_disambiguation_spark import __version__
+from word_sense_disambiguation_spark.operators.blocking import (
+    ER_MAX_BLOCK,
+    er_candidate_pairs,
+)
 
 MANIFEST = "_MANIFEST.json"
 
@@ -224,7 +228,7 @@ def run_er_pipeline(
     senses: DataFrame,
     run_dir: str,
     run_id: str = "run",
-    max_block_size: int = 256,
+    max_block_size: int = ER_MAX_BLOCK,
     use_html: bool = False,
 ) -> dict[str, DataFrame]:
     """The full checkpointed three-stage ER pipeline.
@@ -233,18 +237,10 @@ def run_er_pipeline(
     Each is individually committed/resumable; re-running after a crash
     re-executes only uncommitted stages.
 
-    This is the CANONICAL pair construction (small-block all-pairs +
-    assignment-aware oversized-star recovery). bench.py/scaling use a
-    dedup-free reordering of the same edges (canopy stars over all
-    assigned mentions + non-assigned oversized stars, no distinct) that
-    produces identical clusters — the equivalence argument lives in
-    ``operators/blocking.py``'s module docstring and is pinned by
-    ``tests/test_blocking_pairs.py::test_bench_er_construction_equals_canonical``.
+    The pairs stage is ``blocking.er_candidate_pairs`` — the one ER
+    blocking policy (small-block all-pairs + canopy-aware oversized-star
+    recovery, deduplicated) that every ER job in the package runs.
     """
-    from word_sense_disambiguation_spark.operators.blocking import (
-        oversized_star_pairs,
-        surface_key_pairs,
-    )
     from word_sense_disambiguation_spark.operators.candidates import (
         candidates_for_mentions,
     )
@@ -273,14 +269,9 @@ def run_er_pipeline(
         "assignments",
         lambda: assign_senses(score_candidates(candidates_for_mentions(mentions, senses))),
     )
-    def _build_pairs() -> DataFrame:
-        # no silent caps: blocks over max_block_size degrade to linear
-        # canopy-aware star edges instead of losing every ER edge
-        pr, oversized = surface_key_pairs(mentions, max_block_size=max_block_size)
-        recovered = oversized_star_pairs(mentions, oversized, assignments)
-        return pr.select("id_a", "id_b").unionByName(recovered).distinct()
-
-    pairs = r.stage("pairs", _build_pairs)
+    pairs = r.stage(
+        "pairs", lambda: er_candidate_pairs(mentions, assignments, max_block_size)
+    )
     edges = r.stage("edges", lambda: score_mention_pairs(pairs, assignments))
     clusters = r.stage("clusters", lambda: cluster_mentions(edges))
     return {

@@ -2,9 +2,10 @@
 
 The Spark re-expression of the reference's request lifecycle
 (``/root/reference/wsd/word_sense_disambiguation.py:375-403``, SURVEY §3.1):
-one linear DataFrame DAG whose only shuffles are (a) the per-mention window
-in :func:`assign_senses` and (b) nothing else — the inventory join is
-broadcast, tokenization/context is a single scan. At cluster scale the plan
+one linear DataFrame DAG whose only shuffle is the per-mention aggregate
+in :func:`assign_senses` (``max_by`` with a map-side partial combine, one
+row per mention through the exchange) — the inventory join is broadcast,
+tokenization/context is a single scan. At cluster scale the plan
 is embarrassingly page-parallel until the tiny candidate-set aggregation.
 """
 
@@ -33,14 +34,15 @@ def sense_assignments(
     extractors are row-identical (tested), so the choice is purely physical.
 
     The empty-candidate short-circuit stays LOGICAL here (single
-    left-join pipeline, one Exchange, no materialization): a physical
-    checkpoint+split (the prompt path's shape) was tried in r6 and
-    REVERTED — materializing the full mention table costs more than the
-    null rows' Arrow round-trip saves (measured 3.01 s -> 5.33 s on the
-    bench row; the prompt path wins from the split only because it also
-    deletes a per-branch collect_list aggregate). Instead the cosine
-    UDF's context input is NULLED for inventory-miss rows inside
-    ``score_candidates`` — same plan, ~94% of the Arrow payload gone.
+    left-join pipeline, one Exchange, no materialization), and the cosine
+    UDF runs unsplit and unwrapped on every candidate row. Both ways of
+    moving the inventory-miss rows off the Arrow boundary were measured
+    and rejected (see ``score_candidates``): a physical checkpoint+split
+    (the prompt path's shape; 3.01 s -> 5.33 s on the bench row — the
+    prompt path wins from the split only because it also deletes a
+    per-branch collect_list aggregate), and nulling the UDF's context
+    input for those rows (+0.2-0.9 s — the boundary cost is per-batch
+    round-trip latency, not payload bytes).
     """
     if use_html:
         mentions = mentions_from_pages(pages, use_html=True)
