@@ -209,12 +209,15 @@ def main() -> None:
         ),
         (
             "er_cluster edges (blocking -> pair scoring)",
-            "blocking.er_candidate_pairs: capped surface blocks + "
-            "canopy-aware star recovery of oversized blocks, unioned and "
-            "deduplicated with one distinct; two hash joins back to "
-            "mention attributes; JW + cosine as Arrow UDFs with the "
-            "equality fast path in the python loop. Oversized blocks "
-            "degrade to linear star edges — no silent caps.",
+            "blocking.er_candidate_pairs: blocks counted once; blocks "
+            "within the cap go through one shuffle on the block key into "
+            "one MapInPandas pass that emits only the scorer-reachable "
+            "pairs (hub star, same sense, same context direction); "
+            "canopy-aware star recovery of oversized blocks is unioned "
+            "without a distinct; two hash joins back to mention "
+            "attributes; JW + cosine as Arrow UDFs with the equality fast "
+            "path in the python loop. Oversized blocks degrade to linear "
+            "star edges — no silent caps.",
             er_edges,
         ),
         (

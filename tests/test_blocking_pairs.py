@@ -234,37 +234,207 @@ def test_cluster_canonical_id_is_min_member(er_outputs):
     assert bad.count() == 0
 
 
-def test_er_candidate_pairs_is_the_canonical_union(spark, sworld):
-    """er_candidate_pairs is the ER job's one blocking stage: capped
-    small-block all-pairs ∪ canopy-aware oversized-star recovery, with no
-    duplicate row and every pair oriented id_a < id_b."""
+_ASG_COLS = (
+    "mention_id", "lemma", "pos", "norm_surface", "surface",
+    "context_words", "pred_sense_id", "decision",
+)
+_SCORER_CONFIGS = ({}, {"w_jw": 0.0, "w_cos": 0.0, "w_sense": 1.0})
+
+
+def _token_slot(tok):
+    from word_sense_disambiguation_spark.functions.hashing import EMBED_DIM, emb_hash
+
+    h = emb_hash(tok)
+    return h % EMBED_DIM, 1 if (h >> 32) & 1 else -1
+
+
+def _hand_blocks(spark):
+    """Hand-built blocks for the pruning's edge cases: case-variant
+    surfaces, a bag parallel to another (``a b a b`` vs ``a b``), two
+    distinct bags that hash to the same vector, a bag hashing to the
+    negated vector, empty and NULL contexts, near-identical contexts,
+    assigned / nota / no_definitions mixes, and contexts too long for the
+    cosine margin."""
+    toks = [f"w{i}" for i in range(4000)]
+    slots = {t: _token_slot(t) for t in toks}
+    base = toks[0]
+    twin = next(t for t in toks[1:] if slots[t] == slots[base])
+    anti = next(
+        t for t in toks[1:]
+        if slots[t][0] == slots[base][0] and slots[t][1] != slots[base][1]
+    )
+    ctx = ["red", "fox", "ran", "far", "away", "fast"]
+    rows = [
+        # block apple/n: case variants + parallel + empty/NULL contexts
+        ("h01", "Apple", ["a", "b"], "s1", "assigned"),
+        ("h02", "apple", ["a", "b"], "s1", "assigned"),
+        ("h03", "apple", ["a", "b", "a", "b"], None, "nota"),
+        ("h04", "apple", ["a", "b", "a", "b"], None, "no_definitions"),
+        ("h05", "apple", [], None, "no_definitions"),
+        ("h06", "apple", [], None, "no_definitions"),
+        ("h07", "apple", None, None, "nota"),
+        ("h08", "apple", ["b", "a"], "s2", "assigned"),
+        ("h09", "APPLE", ctx, "s2", "assigned"),
+        ("h10", "apple", ctx + ["x"], None, "nota"),
+        ("h11", "apple", ctx, None, "nota"),
+        # block cell/n: hash-colliding and anti-parallel bags
+        ("h20", "cell", [base], None, "no_definitions"),
+        ("h21", "cell", [twin], None, "no_definitions"),
+        ("h22", "cell", [anti], None, "no_definitions"),
+        ("h23", "cell", [base, base], "s9", "assigned"),
+        ("h24", "cell", [twin, anti], "s9", "assigned"),
+        ("h25", "cell", [base, twin, anti], None, "nota"),
+        # a singleton block never pairs
+        ("h30", "lone", ["a"], None, "nota"),
+        # contexts past the float margin: non-parallel, yet the float32
+        # cosine rounds to 1 — the block keeps all its pairs
+        ("h40", "wide", ["a"] * 200 + ["b"], None, "nota"),
+        ("h41", "wide", ["a"] * 201 + ["b"], None, "nota"),
+        ("h42", "wide", ["c"], None, "nota"),
+    ]
+    return spark.createDataFrame(
+        [
+            (mid, surf.lower(), "n", surf.lower(), surf, c, sense, dec)
+            for mid, surf, c, sense, dec in rows
+        ],
+        "mention_id string, lemma string, pos string, norm_surface string, "
+        "surface string, context_words array<string>, pred_sense_id string, "
+        "decision string",
+    ).select(*_ASG_COLS)
+
+
+def test_er_candidate_pairs_is_exact_for_the_scorer(spark, sworld):
+    """er_candidate_pairs' scorer-aware pruning is exact: every pair it
+    emits is in the historical candidate set (capped small-block all-pairs
+    ∪ canopy-aware oversized-star recovery), unique and oriented id_a <
+    id_b, and under the default and the sense-only scorer configs the
+    matched edges ``(id_a, id_b, score)`` and the ``cluster_mentions`` rows
+    equal those of the historical set — on the test world at cap 256 and
+    16 (oversized blocks present) and on hand-built edge-case blocks."""
     from word_sense_disambiguation_spark.operators.blocking import (
         er_candidate_pairs,
         oversized_star_pairs,
     )
 
-    a = (
+    world = (
         sense_assignments(sworld["pages"], sworld["senses"])
-        .select(
-            "mention_id", "lemma", "pos", "norm_surface", "surface",
-            "context_words", "pred_sense_id", "decision",
-        )
+        .select(*_ASG_COLS)
         .localCheckpoint(eager=True)
     )
-    # a cap small enough that this world has oversized blocks to recover
-    cap = 16
-    small, oversized = surface_key_pairs(a, max_block_size=cap)
-    assert oversized.count() > 0
-    union = {
+    hand = _hand_blocks(spark).localCheckpoint(eager=True)
+    for a, cap in ((world, 256), (world, 16), (hand, 256), (hand, 4)):
+        small, oversized = surface_key_pairs(a, max_block_size=cap)
+        old = (
+            small.select("id_a", "id_b")
+            .unionByName(oversized_star_pairs(a, oversized, a))
+            .distinct()
+            .localCheckpoint(eager=True)
+        )
+        new = er_candidate_pairs(a, a, cap).localCheckpoint(eager=True)
+        got = [(r.id_a, r.id_b) for r in new.collect()]
+        assert len(got) == len(set(got))
+        assert all(x < y for x, y in got)
+        assert set(got) <= {(r.id_a, r.id_b) for r in old.collect()}
+        for kw in _SCORER_CONFIGS:
+            e_old = score_mention_pairs(old, a, **kw)
+            e_new = score_mention_pairs(new, a, **kw)
+
+            def matched(e):
+                return sorted(
+                    tuple(r) for r in
+                    e.filter("is_match").select("id_a", "id_b", "score").collect()
+                )
+
+            assert matched(e_new) == matched(e_old), (cap, kw)
+            c_old = sorted(tuple(r) for r in cluster_mentions(e_old).collect())
+            c_new = sorted(tuple(r) for r in cluster_mentions(e_new).collect())
+            assert c_new == c_old, (cap, kw)
+    # the hand blocks exercise what they claim: the parallel pair, the
+    # hash-colliding pair, the case-variant same-sense pair and the
+    # long-context pair all match
+    hand_matches = {
         (r.id_a, r.id_b)
-        for r in small.select("id_a", "id_b")
-        .unionByName(oversized_star_pairs(a, oversized, a))
-        .collect()
+        for r in score_mention_pairs(er_candidate_pairs(hand, hand), hand)
+        .filter("is_match").collect()
     }
-    got = [(r.id_a, r.id_b) for r in er_candidate_pairs(a, a, cap).collect()]
-    assert len(got) == len(set(got))
-    assert set(got) == union
-    assert all(x < y for x, y in got)
+    assert {("h03", "h04"), ("h20", "h21"), ("h01", "h02"), ("h40", "h41")} <= hand_matches
+    assert ("h20", "h22") not in hand_matches
+
+
+def test_default_scorer_is_covered_by_the_pruning():
+    """The default weights and the sense-only oracle config are configs the
+    scorer-aware pruning is exact for; heavier string/context weights are
+    not. W_JW + W_COS <= MATCH_THRESHOLD holds in exact decimal
+    arithmetic (the float sum 0.2 + 0.4 rounds above 0.6)."""
+    from fractions import Fraction
+
+    from word_sense_disambiguation_spark.operators.pairs import (
+        MATCH_THRESHOLD,
+        W_COS,
+        W_JW,
+        pruning_covers,
+    )
+
+    def dec(x):
+        return Fraction(repr(x))
+
+    assert dec(W_JW) + dec(W_COS) <= dec(MATCH_THRESHOLD)
+    assert pruning_covers(W_JW, W_COS, MATCH_THRESHOLD)
+    assert pruning_covers(0.0, 0.0, MATCH_THRESHOLD)
+    assert pruning_covers(0.3, 0.3, 0.6)
+    assert not pruning_covers(0.3, 0.4, 0.6)
+    assert not pruning_covers(0.6, 0.0, 0.6)  # same surface alone would match
+    assert not pruning_covers(-0.1, 0.4, 0.6)
+
+
+def test_cosine_float32_error_within_blocking_margin():
+    """The margin er_candidate_pairs' exactness proof relies on: for
+    non-parallel integer count vectors of at most 24 tokens, the float32
+    ``cosine_batch`` of their normalized embeddings stays below 1.0 and
+    within the proof's error bound E of the exact cosine. Exhaustive over
+    2-D vectors (the closest-to-parallel integer pairs), random beyond."""
+    import itertools
+
+    import numpy as np
+
+    from word_sense_disambiguation_spark.functions.similarity import cosine_batch
+
+    eps = 2.0**-24
+    dim = 64
+    rng = np.random.default_rng(5)
+    us, vs = [], []
+    two_d = [
+        (a, b) for a in range(-24, 25) for b in range(0, 25)
+        if (a, b) != (0, 0) and abs(a) + b <= 24
+    ]
+    for (a, b), (c, d) in itertools.product(two_d, repeat=2):
+        if a * d != b * c:  # not parallel
+            u = np.zeros(dim); u[[3, 40]] = (a, b)
+            v = np.zeros(dim); v[[3, 40]] = (c, d)
+            us.append(u); vs.append(v)
+    for _ in range(20_000):
+        u = np.zeros(dim); v = np.zeros(dim)
+        for vec in (u, v):
+            n_tok = rng.integers(1, 25)
+            np.add.at(vec, rng.integers(0, rng.integers(1, dim + 1), n_tok),
+                      rng.choice([-1.0, 1.0], n_tok))
+        if u.any() and v.any() and np.linalg.matrix_rank(np.stack([u, v])) == 2:
+            us.append(u); vs.append(v)
+    U, V = np.stack(us), np.stack(vs)
+
+    def embed(M):
+        return (M / np.linalg.norm(M, axis=1, keepdims=True)).astype(np.float32)
+
+    got = cosine_batch(embed(U), embed(V)).astype(np.float64)
+    exact = (U * V).sum(1) / np.sqrt((U * U).sum(1) * (V * V).sum(1))
+    p, q = (U != 0).sum(1), (V != 0).sum(1)
+    k = ((U != 0) & (V != 0)).sum(1)
+    bound = (k + (p + q) / 2 + 6) * eps * 1.001
+    assert (got - exact <= bound).all()
+    assert (got < 1.0).all()
+    # and the proof's margin dominates the bound for every such pair
+    sq_u, sq_v = (U * U).sum(1), (V * V).sum(1)
+    assert (1.0 / (2 * sq_u * sq_v) > bound).all()
 
 
 def test_fellegi_sunter_three_zones(spark):

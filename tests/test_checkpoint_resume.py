@@ -11,6 +11,7 @@ import pytest
 
 from word_sense_disambiguation_spark.plans.checkpoint import (
     StageRunner,
+    er_binding,
     run_er_pipeline,
 )
 
@@ -120,7 +121,7 @@ def test_kill_and_resume_mid_pipeline(spark, sworld, tmp_path):
     pages, senses = sworld["pages"], sworld["senses"]
 
     # partial run: execute only the first two stages, then "crash"
-    r = StageRunner(spark, run_dir, run_id="partial")
+    r = StageRunner(spark, run_dir, run_id="partial", binding=er_binding(pages, senses))
     from word_sense_disambiguation_spark.operators.tokenize import mentions_from_pages
 
     r.stage("mentions", lambda: mentions_from_pages(pages))
@@ -143,3 +144,75 @@ def test_kill_and_resume_mid_pipeline(spark, sworld, tmp_path):
     a = out["clusters"].select("mention_id", "entity_id")
     b = fresh["clusters"].select("mention_id", "entity_id")
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+
+
+ER_STAGES = ("mentions", "assignments", "pairs", "edges", "clusters")
+
+
+def _next_job_id(spark) -> int:
+    """One past the last Spark job id the status tracker knows."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    tracker, i = sc.statusTracker(), 0
+    while tracker.getJobInfo(i) is not None:
+        i += 1
+    return i
+
+
+def test_er_job_counts_and_counters_once(spark, sworld, tmp_path):
+    """Each stage manifest records its Spark jobs (job group + status
+    tracker, no extra job): they sum to the jobs the tracker saw, 25 or
+    fewer for the whole ER job, and the edges manifest records its match
+    count. A crash after the data and counters were written but before
+    the manifests (simulated by deleting them) re-runs every stage and
+    leaves each stage's counters exactly once, with identical clusters."""
+    run_dir = str(tmp_path / "er")
+    pages, senses = sworld["pages"], sworld["senses"]
+    j0 = _next_job_id(spark)
+    out = run_er_pipeline(spark, pages, senses, run_dir)
+    n_jobs = _next_job_id(spark) - j0
+    r = out["runner"]
+    manifests = {name: r.manifest(name) for name in ER_STAGES}
+    per_stage = {name: m["spark_jobs"] for name, m in manifests.items()}
+    assert sum(per_stage.values()) == n_jobs, per_stage
+    assert n_jobs <= 25, per_stage
+    assert all(v >= 1 for v in per_stage.values()), per_stage
+    assert manifests["edges"]["matches"] == out["edges"].filter("is_match").count()
+    clusters = sorted(tuple(x) for x in out["clusters"].collect())
+
+    for name in ER_STAGES:
+        os.remove(os.path.join(run_dir, name, "_MANIFEST.json"))
+    again = run_er_pipeline(spark, pages, senses, run_dir, run_id="again")
+    met = again["runner"].metrics()
+    for name in ER_STAGES:
+        rows = met.filter(F.col("stage") == name).collect()
+        parts = [x.partition_id for x in rows]
+        assert len(parts) == len(set(parts)), name
+        assert {x.run_id for x in rows} == {"again"}, name
+        assert sum(x.rows for x in rows) == again["runner"].manifest(name)["rows"]
+    assert sorted(tuple(x) for x in again["clusters"].collect()) == clusters
+
+
+def test_run_dir_binding(spark, sworld, tmp_path):
+    """A run dir is bound to its parameters and inputs: re-using it with
+    another block cap or other pages raises ValueError naming the stage
+    and the field; an identical re-run skips every committed stage."""
+    urls = [x.url for x in sworld["pages"].select("url").orderBy("url").limit(31).collect()]
+    pages_dir, other_dir = str(tmp_path / "pages"), str(tmp_path / "other")
+    base = sworld["pages"].filter(F.col("url").isin(urls[:30]))
+    base.coalesce(1).write.parquet(pages_dir)
+    sworld["pages"].filter(F.col("url").isin(urls)).coalesce(1).write.parquet(other_dir)
+    pages = spark.read.parquet(pages_dir)
+    senses = sworld["senses"]
+    run_dir = str(tmp_path / "er")
+    run_er_pipeline(spark, pages, senses, run_dir)
+    manifest = os.path.join(run_dir, "clusters", "_MANIFEST.json")
+    mtime = os.path.getmtime(manifest)
+
+    with pytest.raises(ValueError, match="'mentions'.*max_block_size"):
+        run_er_pipeline(spark, pages, senses, run_dir, max_block_size=64)
+    with pytest.raises(ValueError, match="'mentions'.*pages"):
+        run_er_pipeline(spark, spark.read.parquet(other_dir), senses, run_dir)
+    out = run_er_pipeline(spark, spark.read.parquet(pages_dir), senses, run_dir)
+    assert os.path.getmtime(manifest) == mtime
+    assert out["clusters"].count() > 0

@@ -193,3 +193,18 @@ def test_residual_blocks_under_the_er_job_cap(spark):
     assert got == {m: cc.get(m, m) for m in got}
     assert got["m050"] == got["m051"] == "m050"
     assert sum(1 for m, e in got.items() if m != e) == 1
+
+
+def test_attach_rejects_scorer_configs_the_pruning_misses(spark):
+    """The attach forwards its weights to the residual's scorer-aware
+    pairs (er_candidate_pairs): a config under which a dropped pair could
+    match raises ValueError before any Spark work; the defaults and the
+    sense-only config are accepted."""
+    a = _asg(spark, [("b1", "apple", "apple-s1", "assigned")])
+    c = spark.createDataFrame([("b1", "b1")], "mention_id string, entity_id string")
+    for kw in ({"w_cos": 0.5}, {"w_jw": 0.6, "w_cos": 0.0}, {"w_jw": -0.1}):
+        with pytest.raises(ValueError, match="pruning"):
+            attach_mentions_to_clusters(a, a, c, **kw)
+    for kw in ({}, {"w_jw": 0.0, "w_cos": 0.0, "w_sense": 1.0}):
+        resolved, _ = attach_mentions_to_clusters(a, a, c, **kw)
+        assert resolved.count() == 1

@@ -74,44 +74,54 @@ def emb_hash(t: str) -> int:
 _emb_hash = emb_hash
 
 
-def embed_token_bags(bags: list, dim: int = EMBED_DIM) -> np.ndarray:
-    """Embed a whole Arrow batch of token bags at once -> (n, dim) matrix.
+def signed_count_matrix(bags: list, dim: int = EMBED_DIM) -> np.ndarray:
+    """Feature-hash a whole Arrow batch of token bags -> (n, dim) float64
+    matrix of signed token counts (exact small integers): token ``t`` adds
+    ``±1`` at column ``emb_hash(t) % dim``, the sign from hash bit 32.
+    This is the embedding BEFORE normalization; ``blocking`` keys on it
+    (its primitive integer direction) to find the pairs whose cosine can
+    reach 1.
 
-    The vectorized hot path for the pair/candidate scorers, r6 shape (the
-    ``simhash64_batch`` pattern): ``Series.explode`` + ``pd.factorize``
-    turn the batch into (row, unique-token-code) arrays at C speed, one
-    memoized md5 per *unique* token, then ONE ``np.bincount`` scatter over
-    flattened (row, slot) indices builds the whole signed-count matrix —
-    no per-occurrence python loop (the r1-r5 form looped a dict get +
-    3 list appends per token occurrence; measured 2x on a 200k-row
-    candidate batch, 1.37s -> 0.69s incl. cosine).
-
-    Bit-identity with the loop form is structural: explode preserves
-    row-major bag order, and bincount accumulates float64 weights in
-    occurrence order per bin — the same per-row addition order as the
-    sequential scatter. Empty/None bags explode to NaN and drop, leaving
-    their rows all-zero (norm guard keeps them zero).
+    Vectorized (the ``simhash64_batch`` pattern): ``Series.explode`` +
+    ``pd.factorize`` turn the batch into (row, unique-token-code) arrays at
+    C speed, one memoized md5 per *unique* token, then ONE ``np.bincount``
+    scatter over flattened (row, slot) indices builds the whole matrix — no
+    per-occurrence python loop (the r1-r5 form looped a dict get + 3 list
+    appends per token occurrence; measured 2x on a 200k-row candidate
+    batch, 1.37s -> 0.69s incl. cosine). Bit-identity with the loop form is
+    structural: explode preserves row-major bag order, and bincount
+    accumulates float64 weights in occurrence order per bin — the same
+    per-row addition order as the sequential scatter. Empty/None bags
+    explode to NaN and drop, leaving their rows all-zero.
     """
     import pandas as pd
 
     ser = bags if isinstance(bags, pd.Series) else pd.Series(bags, dtype="object")
     n = len(ser)
     ex = ser.reset_index(drop=True).explode().dropna()
-    if len(ex):
-        R = ex.index.to_numpy(dtype=np.int64)
-        codes, uniques = pd.factorize(ex.to_numpy())
-        Hu = np.fromiter(
-            (emb_hash(t) for t in uniques), dtype=np.uint64, count=len(uniques)
-        )
-        cols = (Hu % np.uint64(dim)).astype(np.int64)
-        signs = np.where(
-            ((Hu >> np.uint64(32)) & np.uint64(1)).astype(bool), 1.0, -1.0
-        )
-        M = np.bincount(
-            R * dim + cols[codes], weights=signs[codes], minlength=n * dim
-        ).reshape(n, dim)
-    else:
-        M = np.zeros((n, dim), dtype=np.float64)
+    if not len(ex):
+        return np.zeros((n, dim), dtype=np.float64)
+    R = ex.index.to_numpy(dtype=np.int64)
+    codes, uniques = pd.factorize(ex.to_numpy())
+    Hu = np.fromiter(
+        (emb_hash(t) for t in uniques), dtype=np.uint64, count=len(uniques)
+    )
+    cols = (Hu % np.uint64(dim)).astype(np.int64)
+    signs = np.where(
+        ((Hu >> np.uint64(32)) & np.uint64(1)).astype(bool), 1.0, -1.0
+    )
+    return np.bincount(
+        R * dim + cols[codes], weights=signs[codes], minlength=n * dim
+    ).reshape(n, dim)
+
+
+def embed_token_bags(bags: list, dim: int = EMBED_DIM) -> np.ndarray:
+    """Embed a whole Arrow batch of token bags at once -> (n, dim) float32
+    matrix: :func:`signed_count_matrix`, L2-normalized per row in float64,
+    then cast (all-zero rows stay zero — the norm guard). The vectorized
+    hot path of the pair and candidate scorers.
+    """
+    M = signed_count_matrix(bags, dim)
     norms = np.linalg.norm(M, axis=1, keepdims=True)
     np.divide(M, norms, out=M, where=norms > 0)
     return M.astype(np.float32)

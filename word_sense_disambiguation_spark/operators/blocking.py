@@ -18,18 +18,20 @@ of this discipline is its length-bucketed batching
 unit, never dropping silently (it warns, ``training/train.py:374-396``).
 
 The ER job composes its candidate pairs in ONE place,
-:func:`er_candidate_pairs`: capped all-pairs inside small surface blocks,
-plus linear canopy-aware star edges for every block over the cap, then a
-``distinct()``. ``run_er_pipeline``, the incremental attach residual, the
-driver-contract ER queries and the bench/scaling harnesses all call it, so
-every ER job runs the same blocking policy under the same cap
-(:data:`ER_MAX_BLOCK`).
+:func:`er_candidate_pairs`: scorer-aware pairs inside small surface blocks
+(only the pairs the default pair scorer can match, plus one hub star per
+block that keeps every member in the clustered node set), plus linear
+canopy-aware star edges for every block over the cap. ``run_er_pipeline``,
+the incremental attach residual, the driver-contract ER queries and the
+bench/scaling harnesses all call it, so every ER job runs the same blocking
+policy under the same cap (:data:`ER_MAX_BLOCK`).
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -162,23 +164,172 @@ def oversized_star_pairs(
     return canopy.unionByName(fallback)
 
 
+# float32 unit roundoff: cosine_batch computes in float32
+_F32_EPS = 2.0**-24
+
+
+def _runs(sorted_codes: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Start offset and length of each run of equal values."""
+    n = len(sorted_codes)
+    starts = np.flatnonzero(np.r_[True, sorted_codes[1:] != sorted_codes[:-1]])
+    return starts, np.diff(np.r_[starts, n])
+
+
+def _hub_pairs(group: np.ndarray, rank: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Row pairs (first, other): each group's lowest-rank row to every
+    other row of the group."""
+    o = np.lexsort((rank, group))
+    starts, sizes = _runs(group[o])
+    hub = np.repeat(starts, sizes)
+    other = np.arange(len(o)) != hub
+    return o[hub[other]], o[other]
+
+
+def _all_pairs(group: np.ndarray, rank: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Row pairs (i, j), rank[i] < rank[j], of every two rows sharing a
+    group; rows of group -1 take no part. Enumerated with repeat/cumsum
+    arithmetic, no python loop."""
+    rows = np.flatnonzero(group >= 0)
+    o = rows[np.lexsort((rank[rows], group[rows]))]
+    starts, sizes = _runs(group[o])
+    later = np.repeat(starts + sizes, sizes) - np.arange(len(o)) - 1
+    i = np.repeat(np.arange(len(o)), later)
+    j = i + 1 + np.arange(len(i)) - np.repeat(np.cumsum(later) - later, later)
+    return o[i], o[j]
+
+
+def _scorer_pairs_run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """Per-partition pass of :func:`er_candidate_pairs` over whole small
+    blocks (the partition holds every member of each of its blocks):
+    hub stars, same-sense pairs, same-direction context pairs, and all
+    pairs of any block past the float-margin bound."""
+    from word_sense_disambiguation_spark.functions.hashing import (
+        signed_count_matrix,
+    )
+
+    parts = [b for b in batches if len(b)]
+    if not parts:
+        return
+    pdf = pd.concat(parts, ignore_index=True)
+    rank, uniq = pd.factorize(pdf["mention_id"], sort=True)  # rank order == id order
+    uniq = np.asarray(uniq)
+    block = pdf.groupby(["norm_surface", "pos"], sort=False).ngroup().to_numpy()
+
+    M = signed_count_matrix(pdf["context_words"]).astype(np.int64)
+    sq = (M * M).sum(axis=1).astype(np.float64)
+    # the cosine margin proof holds in a block with 4*R*S*eps*1.001 < 1,
+    # R = max |v|^2 (nnz + 3) and S = max |v|^2 over its members
+    r_max = pd.Series(sq * ((M != 0).sum(axis=1) + 3)).groupby(block).transform("max")
+    s_max = pd.Series(sq).groupby(block).transform("max")
+    wide = (4.0 * r_max * s_max * _F32_EPS * 1.001 >= 1.0).to_numpy()
+
+    g = np.gcd.reduce(np.abs(M), axis=1)
+    has_vec = (g > 0) & ~wide
+    direction = M // np.maximum(g, 1)[:, None]
+    vec_group = np.unique(
+        np.column_stack([block, direction]), axis=0, return_inverse=True
+    )[1].reshape(-1)
+
+    assigned = (pdf["decision"] == "assigned").to_numpy() & ~wide
+    sense_group = (
+        pdf.assign(_b=block)
+        .groupby(["_b", "pred_sense_id"], sort=False, dropna=False)
+        .ngroup()
+        .to_numpy()
+    )
+    assigned &= pdf["pred_sense_id"].notna().to_numpy()
+
+    found = [
+        _hub_pairs(block, rank),
+        _all_pairs(np.where(wide, block, -1), rank),
+        _all_pairs(np.where(assigned, sense_group, -1), rank),
+        _all_pairs(np.where(has_vec, vec_group, -1), rank),
+    ]
+    i = np.concatenate([f[0] for f in found])
+    j = np.concatenate([f[1] for f in found])
+    if not len(i):
+        return
+    n = np.int64(len(pdf))
+    code = np.unique(rank[i].astype(np.int64) * n + rank[j])
+    yield pd.DataFrame({"id_a": uniq[code // n], "id_b": uniq[code % n]})
+
+
 def er_candidate_pairs(
     mentions: DataFrame,
     assignments: DataFrame,
     max_block_size: int = ER_MAX_BLOCK,
 ) -> DataFrame:
-    """The ER job's blocking stage -> distinct ``(id_a < id_b)`` pairs.
+    """The ER job's blocking stage -> unique ``(id_a < id_b)`` pairs.
 
-    Small-block all-pairs from :func:`surface_key_pairs` ∪ the
-    assignment-aware :func:`oversized_star_pairs` recovery of every block
-    over ``max_block_size`` (no silent caps: a hot block degrades to
-    linear star edges, never to zero edges), deduplicated. ``mentions``
-    needs ``mention_id`` and the surface key columns; ``assignments``
-    needs ``mention_id, decision, lemma, pred_sense_id``.
+    ``mentions`` needs ``mention_id`` (unique) and the surface key
+    ``(norm_surface, pos)``; ``assignments`` needs ``mention_id, decision,
+    pred_sense_id, context_words`` (and ``lemma`` for the oversized path)
+    — the attributes :func:`pairs.score_mention_pairs` scores. Blocks are
+    counted once. Blocks over ``max_block_size`` keep the skew-safe
+    :func:`oversized_star_pairs` recovery (no silent caps: a hot block
+    degrades to linear star edges, never to zero edges). Blocks of size
+    2..cap go through ONE shuffle on the block key and one vectorized
+    per-partition pass that emits only
+
+    (a) hub edges from the block's minimum id to every other member, so
+        every member stays in the node set ``cluster_mentions`` derives
+        from the scored pairs;
+    (b) all pairs of ``assigned`` members sharing a ``pred_sense_id``;
+    (c) all pairs whose primitive signed-count context vectors are equal
+        — the hashed embedding before normalization
+        (:func:`hashing.signed_count_matrix`) divided by the gcd of its
+        entries. An all-zero vector never pairs.
+
+    Every emitted pair is a pair of the full small-block all-pairs
+    (``surface_key_pairs``), so the union with the oversized recovery is a
+    subset of the historical candidate set and needs no ``distinct``.
+
+    **Exactness.** Every pair of the historical set that the pair scorer
+    can match is emitted, for any weights with ``w_jw, w_cos >= 0`` and
+    ``w_jw + w_cos <= threshold`` (``w_cos > 0`` when equal) —
+    :func:`pairs.pruning_covers`; the defaults 0.2 + 0.4 = 0.6 and the
+    sense-only config qualify. The node set is unchanged by (a), so
+    matched edges and clusters are identical. Proof: a pair that is not
+    same-sense (b) scores ``w_jw*jw + w_cos*max(c, 0)`` with ``jw <= 1``;
+    it can reach the threshold only if the float32 cosine ``c`` of
+    ``cosine_batch`` is >= 1.0, and ``c >= 1.0`` needs parallel integer
+    count vectors u, v, i.e. equal primitive vectors (c). For
+    non-parallel u, v, Lagrange's identity gives
+    ``|u|²|v|² - (u·v)² = Σ_{i<j} (u_i v_j - u_j v_i)² >= 1``, so
+    ``1 - cos >= 1/(2|u|²|v|²)`` — with at most 24 context tokens
+    (``CONTEXT_WINDOW = 12`` per side) that is >= 1/(2·576²) = 1.5e-6.
+    The computed value overshoots the exact cosine by at most
+    ``E = (k + (p+q)/2 + 6)·eps·(1 + 1e-3)`` (eps = 2^-24; p, q nonzero
+    entries, k <= min(p, q) nonzero products): 2·eps for rounding the
+    normalized entries to float32 (an angle shift <= eps per side), γ_k
+    for the float32 dot product (adding a zero term is exact), γ_p/2 + eps
+    and γ_q/2 + eps for the two norms, and 2·eps for the denominator
+    product and the division. Since ``(p+q+6)|u|²|v|² <= 2·R·S`` with
+    ``R = max |v|²(nnz+3)`` and ``S = max |v|²`` over the block, the
+    margin beats E whenever ``4·R·S·eps·1.001 < 1``; for 24-token contexts
+    R <= 3300 and S <= 576, giving 0.45. Then ``c <= 1 - 2^-24`` and the
+    score stays below the threshold by >= ``w_cos·2^-24``. A block whose
+    vectors break that bound (longer contexts) keeps all its pairs, so the
+    pruning is exact for any input.
     """
-    pairs, oversized = surface_key_pairs(mentions, max_block_size=max_block_size)
-    recovered = oversized_star_pairs(mentions, oversized, assignments)
-    return pairs.select("id_a", "id_b").unionByName(recovered).distinct()
+    key = ["norm_surface", "pos"]
+    keyed = mentions.select("mention_id", *key).filter(
+        F.col("norm_surface").isNotNull() & F.col("pos").isNotNull()
+    )
+    oversized = keyed.groupBy(*key).agg(F.count("*").alias("block_size")).filter(
+        F.col("block_size") > max_block_size
+    )
+    members = keyed.join(
+        F.broadcast(oversized.select(*key)), on=key, how="left_anti"
+    ).join(
+        assignments.select("mention_id", "decision", "pred_sense_id", "context_words"),
+        on="mention_id",
+    )
+    id_type = dict(mentions.dtypes)["mention_id"]
+    small = members.repartition(*key).mapInPandas(
+        _scorer_pairs_run, schema=f"id_a {id_type}, id_b {id_type}"
+    )
+    return small.unionByName(oversized_star_pairs(mentions, oversized, assignments))
 
 
 def minhash_bands(

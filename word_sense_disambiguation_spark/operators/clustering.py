@@ -510,7 +510,9 @@ def bfs_reach(
     )
 
 
-def cluster_mentions(match_edges: DataFrame) -> DataFrame:
+def cluster_mentions(
+    match_edges: DataFrame, match_count: int | None = None
+) -> DataFrame:
     """Match edges (id_a, id_b, is_match) -> (mention_id, entity_id).
 
     Non-matching pair members still get singleton clusters so every mention
@@ -523,25 +525,36 @@ def cluster_mentions(match_edges: DataFrame) -> DataFrame:
     Instead: CC over real match edges only, then one left join assigns
     ``coalesce(component, own_id)``.
 
-    CACHE OWNERSHIP (r4 ADVICE): the operator persists the scored edge
-    table internally (the fused materialize+count below); that block must
-    not outlive the call — lingering blocks are exactly the block-manager
-    pressure the r4 bench measured (149s wall vs 80s phase-sum until the
-    harness gc'd between windows), and a library must not rely on harness
-    hygiene. So the RESULT is materialized into its own cache (one extra
-    driver round that the first consumer action would have spent computing
-    the join anyway) and the edge cache is released before returning. The
-    returned DataFrame is persisted and fully materialized; the caller
-    owns it and may ``.unpersist()`` it when done — after that the only
-    remaining blocks are connected_components' internal localCheckpoints
-    on the big-graph path (lineage cuts, freed by ContextCleaner).
+    ``match_count`` — the number of ``is_match`` rows, known to a caller
+    whose ``match_edges`` is already materialized (``run_er_pipeline``
+    passes the count its edges commit observed, over the committed
+    parquet). Then no action runs here: the result is a lazy plan, and the
+    caller's one write computes it.
+
+    Without ``match_count``, CACHE OWNERSHIP (r4 ADVICE): the operator
+    persists the scored edge table internally (the fused materialize+count
+    below); that block must not outlive the call — lingering blocks are
+    exactly the block-manager pressure the r4 bench measured (149s wall vs
+    80s phase-sum until the harness gc'd between windows), and a library
+    must not rely on harness hygiene. So the RESULT is materialized into
+    its own cache (one extra driver round that the first consumer action
+    would have spent computing the join anyway) and the edge cache is
+    released before returning. The returned DataFrame is persisted and
+    fully materialized; the caller owns it and may ``.unpersist()`` it when
+    done — after that the only remaining blocks are connected_components'
+    internal localCheckpoints on the big-graph path (lineage cuts, freed by
+    ContextCleaner).
     """
-    # ONE action materializes the (possibly UDF-heavy) edge-scoring DAG
-    # into the cache AND returns the match count the CC strategy pick
-    # needs — fused, where checkpoint-then-count cost two serial driver
-    # rounds (r3 verdict nit: the parallelism-independent tail).
-    me = match_edges.select("id_a", "id_b", "is_match").persist()
-    n_match = me.filter(F.col("is_match")).count()
+    me = match_edges.select("id_a", "id_b", "is_match")
+    if match_count is None:
+        # ONE action materializes the (possibly UDF-heavy) edge-scoring
+        # DAG into the cache AND returns the match count the CC strategy
+        # pick needs — fused, where checkpoint-then-count cost two serial
+        # driver rounds (r3 verdict nit: the parallelism-independent tail).
+        me = me.persist()
+        n_match = me.filter(F.col("is_match")).count()
+    else:
+        n_match = match_count
     matches = me.filter(F.col("is_match")).select(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     )
@@ -556,7 +569,10 @@ def cluster_mentions(match_edges: DataFrame) -> DataFrame:
     out = all_ids.join(comp, on="node", how="left").select(
         F.col("node").alias("mention_id"),
         F.coalesce(F.col("component"), F.col("node")).alias("entity_id"),
-    ).persist()
+    )
+    if match_count is not None:
+        return out
+    out = out.persist()
     out.count()  # materialize the result, then release the edge cache
     me.unpersist(blocking=False)
     return out

@@ -66,6 +66,7 @@ from word_sense_disambiguation_spark.operators.pairs import (
     W_COS,
     W_JW,
     W_SENSE,
+    pruning_covers,
     score_mention_pairs,
 )
 
@@ -113,7 +114,18 @@ def attach_mentions_to_clusters(
       (``best_score`` null; ``entity_id`` is the residual-cluster min id).
     * ``oversized_keys`` — blocking keys whose base side held more than
       ``max_reps_per_key`` distinct entities, excluded from attach.
+
+    The residual is blocked by ``er_candidate_pairs``, whose pruning is
+    exact only for the scorer configs ``pairs.pruning_covers`` accepts;
+    any other config raises ``ValueError``.
     """
+    if not pruning_covers(w_jw, w_cos, threshold):
+        raise ValueError(
+            f"scorer config w_jw={w_jw}, w_cos={w_cos}, threshold={threshold}: "
+            "er_candidate_pairs' pruning is exact only for w_jw, w_cos >= 0 "
+            "and w_jw + w_cos <= threshold (w_cos > 0 at equality); see "
+            "pairs.pruning_covers"
+        )
     keys = list(_KEY_COLS)
     attrs = list(_ATTR_COLS)
 

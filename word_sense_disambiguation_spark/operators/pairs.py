@@ -38,6 +38,21 @@ W_COS = 0.4
 W_SENSE = 0.4
 
 
+def pruning_covers(w_jw: float, w_cos: float, threshold: float) -> bool:
+    """True iff ``blocking.er_candidate_pairs``' scorer-aware pruning keeps
+    every pair this scorer config can match. A pair the pruning drops is
+    not same-sense and has a float32 cosine ``c <= 1 - 2^-24``, so (with
+    ``jw <= 1`` and rounding monotone) it scores at most
+    ``w_jw + w_cos*(1 - 2^-24)``, evaluated here in the scorer's own
+    double arithmetic. The defaults qualify by ``w_cos*2^-24`` ≈ 2.4e-8 —
+    while the float sum ``0.2 + 0.4`` is 0.6000000000000001, above 0.6, so
+    a plain ``w_jw + w_cos <= threshold`` test would wrongly reject them.
+    Negative weights void the argument."""
+    if w_jw < 0 or w_cos < 0:
+        return False
+    return (0.0 + w_jw) + w_cos * (1.0 - 2.0**-24) < threshold
+
+
 @F.pandas_udf(T.DoubleType())
 def jaro_winkler_udf(s1: pd.Series, s2: pd.Series) -> pd.Series:
     # equality fast path + symmetric unique-pair memo per Arrow batch —
