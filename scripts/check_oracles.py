@@ -23,7 +23,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from word_sense_disambiguation_spark.session import get_spark  # noqa: E402
-from word_sense_disambiguation_spark.sources.catalog import TESTDATA_TABLES  # noqa: E402
+
+TESTDATA_TABLES = (
+    "region nation customer supplier part orders lineitem events documents embeddings"
+).split()
 
 
 def norm_cell(v):

@@ -6,9 +6,9 @@ Measures the flagship pipeline's docs/sec in fresh JVMs (one per core
 count, min-of-k reps) at cores = 2, 8, 32 over the same 160k-page input,
 reports BOTH the N=2 -> 4N=8 pair (inside this host's linear CPU region)
 and the 8 -> 32 pair (which runs into the host's measured compute ceiling —
-see the microbenchmark note written to BASELINE.md), plus the full headline
-bench at 8 and 32 for per-query context. Writes BENCH_scaling.json and
-refreshes the scaling section of BASELINE.md.
+see the microbenchmark note written to BASELINE.md), and the same pairs
+for the full ER job. Writes BENCH_scaling.json and refreshes the scaling
+section of BASELINE.md.
 """
 
 from __future__ import annotations
@@ -42,25 +42,7 @@ def flagship(cores: int, mode: str = "flagship", n_pages: int = N_PAGES) -> dict
     return json.loads([ln for ln in out.stdout.splitlines() if ln.startswith("{")][-1])
 
 
-def bench(cpus: int, sf_dir: str) -> dict:
-    env = dict(os.environ)
-    env["SPARK_GRAFT_CPUS"] = str(cpus)
-    env["SPARK_GRAFT_SF_DIR"] = sf_dir
-    out = subprocess.run(
-        [sys.executable, os.path.join(REPO, "bench.py")],
-        env=env,
-        capture_output=True,
-        text=True,
-        timeout=3600,
-        check=True,
-    )
-    return json.loads([ln for ln in out.stdout.splitlines() if ln.startswith("{")][-1])
-
-
 def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else os.environ.get(
-        "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"
-    )
     f = {c: flagship(c, "flagship") for c in (2, 8, 32)}
     g = {c: flagship(c, "full") for c in (2, 8, 32)}
     # the full job's non-scaling fraction (stage commits + small-graph CC)
@@ -73,8 +55,6 @@ def main() -> None:
     geff_2_8 = (g[8]["docs_per_sec"] / g[2]["docs_per_sec"]) / 4
     geff_8_32 = (g[32]["docs_per_sec"] / g[8]["docs_per_sec"]) / 4
     g2eff_2_8 = (g2[8]["docs_per_sec"] / g2[2]["docs_per_sec"]) / 4
-    b8 = bench(8, sf_dir)
-    b32 = bench(32, sf_dir)
 
     result = {
         "flagship_input_pages": f[2]["n_pages"],
@@ -86,8 +66,6 @@ def main() -> None:
         "full_job_efficiency_N2_to_4N8": round(geff_2_8, 3),
         "full_job_efficiency_N8_to_4N32": round(geff_8_32, 3),
         "full_job_2x_efficiency_N2_to_4N8": round(g2eff_2_8, 3),
-        "headline_bench_8": b8,
-        "headline_bench_32": b32,
     }
     with open(os.path.join(REPO, "BENCH_scaling.json"), "w") as fp:
         json.dump(result, fp, indent=2)
@@ -136,16 +114,7 @@ per-stage isolation shows the JVM extract/join/agg stages scale ~2.6x
 from 8 -> 32 while the fixed serial fraction (plan analysis, broadcast,
 driver scheduling) amortizes with input size — at 10^12 rows it vanishes.
 
-Headline suite (bench.py) at the same two levels, sf_dir={sf_dir}:
-
-| query | local[8] s | local[32] s |
-|---|---|---|
-""" + "".join(
-        f"| {q} | {b8['queries'][q]} | {b32['queries'][q]} |\n"
-        for q in b8["queries"]
-    ) + f"""
-Full data in `BENCH_scaling.json`; flagship docs/sec at 32 cores:
-{b32['docs_per_sec']} on {b32['pages']:,} pages (sf0.1 mixed crawl+synthetic).
+Full data in `BENCH_scaling.json`.
 """
     path = os.path.join(REPO, "BASELINE.md")
     text = open(path).read()

@@ -1,7 +1,5 @@
 from __future__ import annotations
 
-import os
-
 import pytest
 
 from word_sense_disambiguation_spark.datagen import build_world, world_to_spark
@@ -10,9 +8,6 @@ from word_sense_disambiguation_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    # the session default (24g) lets one suite-long JVM grow its heap past
-    # the RAM of a 16 GB host until the kernel OOM-kills it mid-suite
-    os.environ.setdefault("WSD_SPARK_DRIVER_MEM", "8g")
     s = get_spark(app_name="wsd_spark_tests", master="local[4]", shuffle_partitions=8)
     yield s
 

@@ -5,15 +5,22 @@ from __future__ import annotations
 
 import json
 import os
+import signal
+import subprocess
+import sys
 
 import pyspark.sql.functions as F
 import pytest
 
+from word_sense_disambiguation_spark.operators.profiling import table_checksum
 from word_sense_disambiguation_spark.plans.checkpoint import (
+    ER_BUCKETS,
     StageRunner,
     er_binding,
     run_er_pipeline,
 )
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_stage_commit_and_skip(spark, tmp_path):
@@ -216,3 +223,136 @@ def test_run_dir_binding(spark, sworld, tmp_path):
     out = run_er_pipeline(spark, spark.read.parquet(pages_dir), senses, run_dir)
     assert os.path.getmtime(manifest) == mtime
     assert out["clusters"].count() > 0
+
+
+# A driver process that runs the ER job and SIGKILLs itself at one commit
+# point. The wrappers live only in this process; the package has no hook.
+_KILL_DRIVER = r"""
+import os, signal, sys
+
+from word_sense_disambiguation_spark.plans import checkpoint
+from word_sense_disambiguation_spark.session import get_spark
+
+pages_dir, senses_dir, run_dir, point = sys.argv[1:5]
+write, commit = checkpoint._atomic_write, checkpoint.StageRunner._commit
+edges_manifest = os.path.join(run_dir, "edges", checkpoint.MANIFEST)
+
+
+def die():
+    os.kill(os.getpid(), signal.SIGKILL)
+
+
+def atomic_write(path, data):
+    if point == "before_edges_manifest" and path == edges_manifest:
+        # the manifest's tmp file is written; the replace never happens
+        tmp = os.path.join(os.path.dirname(path), "." + checkpoint.MANIFEST + ".tmp")
+        with open(tmp, "wb") as f:
+            f.write(data)
+        die()
+    write(path, data)
+    if point == "after_edges_counters" and path.endswith(
+        os.path.join("metrics", "edges.parquet")
+    ):
+        die()
+    if point == "between_mention_buckets" and path.endswith("_DONE_BUCKETS.json"):
+        die()
+
+
+def commit_then(self, name, *args):
+    if point == "after_edges_data" and name == "edges":
+        die()
+    return commit(self, name, *args)
+
+
+checkpoint._atomic_write = atomic_write
+checkpoint.StageRunner._commit = commit_then
+spark = get_spark(app_name="kill_driver", master="local[2]")
+checkpoint.run_er_pipeline(
+    spark, spark.read.parquet(pages_dir), spark.read.parquet(senses_dir), run_dir,
+    run_id="killed",
+)
+sys.exit(3)  # every kill point lies on the job's path
+"""
+
+KILL_POINTS = (
+    "after_edges_data",
+    "after_edges_counters",
+    "before_edges_manifest",
+    "between_mention_buckets",
+)
+
+
+def _checksum(df):
+    return tuple(table_checksum(df, df.columns).collect()[0])
+
+
+@pytest.fixture(scope="module")
+def parquet_world(spark, sworld, tmp_path_factory):
+    """Parquet copies of the test world (a separate driver process reads
+    them) and the clusters checksum of an uninterrupted ER run."""
+    d = tmp_path_factory.mktemp("kill_world")
+    pages_dir, senses_dir = str(d / "pages"), str(d / "senses")
+    sworld["pages"].write.parquet(pages_dir)
+    sworld["senses"].write.parquet(senses_dir)
+    out = run_er_pipeline(
+        spark, spark.read.parquet(pages_dir), spark.read.parquet(senses_dir),
+        str(d / "uninterrupted"),
+    )
+    return pages_dir, senses_dir, _checksum(out["clusters"])
+
+
+@pytest.mark.slow
+@pytest.mark.parametrize("point", KILL_POINTS)
+def test_sigkill_and_resume(spark, parquet_world, tmp_path, point):
+    """A driver SIGKILLed at a commit point resumes, in another process,
+    to the uninterrupted run's clusters; each stage's counters are in
+    metrics/ exactly once, and stages committed before the kill are
+    skipped (their manifests are not rewritten)."""
+    pages_dir, senses_dir, expected = parquet_world
+    run_dir = str(tmp_path / "er")
+    log = tmp_path / "driver.log"
+    with open(log, "w") as err:
+        proc = subprocess.Popen(
+            [sys.executable, "-c", _KILL_DRIVER, pages_dir, senses_dir, run_dir, point],
+            cwd=REPO,
+            env={**os.environ, "WSD_SPARK_DRIVER_MEM": "1g"},
+            stdout=subprocess.DEVNULL,
+            stderr=err,
+            start_new_session=True,
+        )
+        try:
+            proc.wait(timeout=900)
+        finally:
+            try:  # the driver's JVM goes down with it
+                os.killpg(proc.pid, signal.SIGKILL)
+            except ProcessLookupError:
+                pass
+    assert proc.returncode == -signal.SIGKILL, log.read_text()[-3000:]
+
+    manifests = {s: os.path.join(run_dir, s, "_MANIFEST.json") for s in ER_STAGES}
+    committed = {
+        s: os.stat(p).st_mtime_ns for s, p in manifests.items() if os.path.exists(p)
+    }
+    if point == "between_mention_buckets":
+        assert committed == {}
+    else:
+        assert tuple(committed) == ("mentions", "assignments", "pairs")
+
+    out = run_er_pipeline(
+        spark, spark.read.parquet(pages_dir), spark.read.parquet(senses_dir), run_dir,
+        run_id="resumed",
+    )
+    r = out["runner"]
+    assert {s: os.stat(manifests[s]).st_mtime_ns for s in committed} == committed
+    assert _checksum(out["clusters"]) == expected
+    assert sorted(os.listdir(r.metrics_dir())) == sorted(f"{s}.parquet" for s in ER_STAGES)
+    met = r.metrics()
+    for s in ER_STAGES:
+        rows = met.filter(F.col("stage") == s).collect()
+        parts = [x.partition_id for x in rows]
+        assert len(parts) == len(set(parts)), s
+        assert {x.run_id for x in rows} == {"killed" if s in committed else "resumed"}, s
+        assert sum(x.rows for x in rows) == r.manifest(s)["rows"], s
+    if point == "between_mention_buckets":
+        # the buckets the killed driver recorded were kept, not rewritten
+        assert 0 < len(r.manifest("mentions")["resumed_buckets"]) < ER_BUCKETS

@@ -1,6 +1,5 @@
-"""Sorted-neighborhood blocking + golden-record fusion: brute-force
-identities, pinned tie-breaks, and plan-shape guards for the two-level
-rank construction."""
+"""Sorted-neighborhood blocking: brute-force identities and plan-shape
+guards for the two-level rank construction."""
 
 from __future__ import annotations
 
@@ -10,7 +9,6 @@ import pytest
 from word_sense_disambiguation_spark.operators.blocking import (
     sorted_neighborhood_pairs,
 )
-from word_sense_disambiguation_spark.operators.fusion import golden_record
 
 
 def _brute_pairs(rows, window):
@@ -80,176 +78,3 @@ def test_snb_plan_has_no_global_row_window_and_no_cartesian(spark):
 def test_snb_rejects_degenerate_window():
     with pytest.raises(ValueError):
         sorted_neighborhood_pairs(None, "id", "k", window=1)
-
-
-GR_ROWS = [
-    # cluster 1: mode tie between "en" and "fr" (1 each) -> smallest wins;
-    # argmax length tie between ids 11 and 12 -> largest id wins
-    (11, 1, "en", "s1", 40),
-    (12, 1, "fr", "s2", 40),
-    # cluster 2: clear mode, distinct lengths
-    (21, 2, "de", "s1", 10),
-    (22, 2, "de", "s1", 30),
-    (23, 2, "es", "s3", 20),
-]
-
-
-def test_golden_record_rules_and_tiebreaks(spark):
-    df = spark.createDataFrame(
-        GR_ROWS, "doc_id long, cluster_id long, lang string, source string, n_chars long"
-    )
-    out = {
-        r.cluster_id: r
-        for r in golden_record(
-            df,
-            "cluster_id",
-            {
-                "n_members": ("count",),
-                "rep_doc": ("min", "doc_id"),
-                "longest_doc": ("argmax", "doc_id", "n_chars"),
-                "shortest_doc": ("argmin", "doc_id", "n_chars"),
-                "total_chars": ("sum", "n_chars"),
-                "lang_mode": ("mode", "lang"),
-                "source_mode": ("mode", "source"),
-            },
-        ).collect()
-    }
-    c1, c2 = out[1], out[2]
-    assert (c1.n_members, c1.rep_doc, c1.total_chars) == (2, 11, 80)
-    assert c1.longest_doc == 12  # equal n_chars -> largest value wins
-    assert c1.shortest_doc == 11  # equal n_chars -> smallest value wins
-    assert c1.lang_mode == "en"  # 1-1 tie -> smallest value
-    assert (c2.n_members, c2.rep_doc, c2.total_chars) == (3, 21, 60)
-    assert c2.longest_doc == 22 and c2.shortest_doc == 21
-    assert c2.lang_mode == "de" and c2.source_mode == "s1"
-
-
-def test_golden_record_is_aggregate_not_window(spark):
-    """Every survivorship rule must compile to aggregates with map-side
-    partial combine (two-phase *Aggregate pairs), never a per-cluster sort
-    window — the assign_senses scale invariant: a hot crawl cluster ships
-    one buffer per map partition, not every member row."""
-    df = spark.createDataFrame(
-        GR_ROWS, "doc_id long, cluster_id long, lang string, source string, n_chars long"
-    )
-    out = golden_record(
-        df,
-        "cluster_id",
-        {
-            "n_members": ("count",),
-            "longest_doc": ("argmax", "doc_id", "n_chars"),
-            "lang_mode": ("mode", "lang"),
-        },
-    )
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Window" not in plan
-    assert "partial_" in plan  # map-side combine present
-
-
-def test_golden_record_rejects_unknown_rule(spark):
-    df = spark.createDataFrame([(1, 1)], "doc_id long, cluster_id long")
-    with pytest.raises(ValueError):
-        golden_record(df, "cluster_id", {"x": ("median", "doc_id")})
-    with pytest.raises(ValueError):
-        golden_record(df, "cluster_id", {})
-
-
-def _td_replay(claims, iterations=2):
-    """Exact python replay of the truth-discovery integer recurrence."""
-    from collections import defaultdict
-
-    c = sorted({t for t in claims if all(x is not None for x in t)})
-    sources = sorted({s for _, _, s in c})
-    trust = {s: 1 for s in sources}
-    consensus = {}
-    for _ in range(iterations):
-        score = defaultdict(int)
-        for e, v, s in c:
-            score[(e, v)] += trust[s]
-        ents = sorted({e for e, _, _ in c})
-        consensus = {
-            e: min(
-                ((v, sc) for (ee, v), sc in score.items() if ee == e),
-                key=lambda t: (-t[1], t[0]),
-            )
-            for e in ents
-        }
-        trust = {s: 0 for s in sources}
-        for e, v, s in c:
-            if consensus[e][0] == v:
-                trust[s] += 1
-    return consensus, trust
-
-
-def test_truth_discovery_matches_replay_and_reweights(spark):
-    """Three sources over four entities: s1 always true, s2/s3 corrupt
-    different slices. Round 1 is majority vote; round 2's reweighted
-    vote lets the reliable source win the three-way-split entity the
-    majority round left to the alphabetical tie — the distributed
-    output equals the python replay bit-for-bit, consensus AND trust."""
-    from word_sense_disambiguation_spark.operators.fusion import truth_discovery
-
-    truth = {1: "AUTO", 2: "BUILDING", 3: "FURNITURE", 4: "HOUSEHOLD"}
-    claims = []
-    for e, v in truth.items():
-        claims.append((e, v, "s1"))
-        claims.append((e, "ZUNK" if e % 2 == 0 else v, "s2"))
-        claims.append((e, "QBAD" if e % 2 == 1 else v, "s3"))
-    # entity 5: three-way split — round 1 ties at score 1 (alphabetical
-    # pick), round 2 belongs to the most reliable source
-    claims += [(5, "MID", "s1"), (5, "AAA", "s2"), (5, "ZZZ", "s3")]
-    df = spark.createDataFrame(claims, "entity_id long, value string, source string")
-    consensus, trust = truth_discovery(df, materialize=False)
-    got_c = {r.entity_id: (r.value, r.score) for r in consensus.collect()}
-    got_t = {r.source: r.trust for r in trust.collect()}
-    want_c, want_t = _td_replay(claims)
-    assert got_c == want_c
-    assert got_t == want_t
-    assert got_c[5][0] == "MID"  # reliability beats the alphabetical tie
-    assert got_t["s1"] > got_t["s2"] and got_t["s1"] > got_t["s3"]
-    # single round = plain majority: the split entity goes alphabetical
-    c1, _ = truth_discovery(df, iterations=1, materialize=False)
-    assert {r.entity_id: r.value for r in c1.collect()}[5] == "AAA"
-
-
-def test_truth_discovery_invariance_and_edges(spark):
-    """Partitioning/materialization invariance; duplicate assertions
-    dedupe; NULL fields drop; empty input -> empty both."""
-    from word_sense_disambiguation_spark.operators.fusion import truth_discovery
-
-    claims = [(1, "A", "s1"), (1, "A", "s1"), (1, "B", "s2"),
-              (None, "A", "s1"), (1, None, "s2"), (1, "A", None)]
-    df = spark.createDataFrame(claims, "entity_id long, value string, source string")
-    c_one, t_one = truth_discovery(df.coalesce(1), materialize=False)
-    c_many, t_many = truth_discovery(df.repartition(5), materialize=True)
-    a = (sorted(c_one.collect()), sorted(t_one.collect()))
-    b = (sorted(c_many.collect()), sorted(t_many.collect()))
-    assert a == b
-    got_c, got_t = _td_replay(claims)
-    assert {r.entity_id: (r.value, r.score) for r in c_one.collect()} == got_c
-    # the duplicated (1, A, s1) assertion counts once: A wins on the
-    # round-2 trust revote 1-1 tie? no — dedup makes round 1 a 1-1 tie,
-    # alphabetical A; s1 then holds trust 1, s2 trust 0
-    assert got_c[1] == ("A", 1)
-    empty = spark.createDataFrame([], "entity_id long, value string, source string")
-    ec, et = truth_discovery(empty, materialize=False)
-    assert ec.count() == 0 and et.count() == 0
-
-
-def test_truth_discovery_plan_aggregate_not_window(spark):
-    """Scale contract: vote scores and the per-entity argmax are
-    partial-combined aggregates (min_by over (-score, value)); no
-    window, no cartesian product."""
-    from word_sense_disambiguation_spark.operators.fusion import truth_discovery
-    import pyspark.sql.functions as F
-
-    df = spark.range(0, 4000).select(
-        (F.col("id") % 100).alias("entity_id"),
-        (F.col("id") % 7).cast("string").alias("value"),
-        (F.col("id") % 5).cast("string").alias("source"),
-    )
-    consensus, _ = truth_discovery(df, materialize=False)
-    plan = consensus._jdf.queryExecution().executedPlan().toString()
-    assert "min_by" in plan or "MinBy" in plan, plan[:2000]
-    assert "Window" not in plan, plan[:2000]
-    assert "CartesianProduct" not in plan, plan[:2000]

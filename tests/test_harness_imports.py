@@ -1,7 +1,10 @@
-"""Import guard for the harnesses no test runs (``bench.py``,
-``scripts/*.py``): every name they import from the package must resolve,
-so renaming or deleting a public name breaks a test instead of silently
-breaking a harness."""
+"""Import guards.
+
+* The harnesses no test runs (``scripts/*.py``): every name they import
+  from the package must resolve, so renaming or deleting a public name
+  breaks a test instead of silently breaking a harness.
+* Every package module is imported by some non-test file, so a module
+  that only its own tests reach cannot come back unnoticed."""
 
 from __future__ import annotations
 
@@ -13,7 +16,7 @@ import pytest
 
 PKG = "word_sense_disambiguation_spark"
 ROOT = Path(__file__).resolve().parent.parent
-HARNESSES = [ROOT / "bench.py", *sorted((ROOT / "scripts").glob("*.py"))]
+HARNESSES = sorted((ROOT / "scripts").glob("*.py"))
 
 
 def _package_imports(path: Path) -> list[tuple[str, str | None]]:
@@ -51,4 +54,36 @@ def test_harness_package_imports_resolve(path):
 def test_guard_sees_the_harness_imports():
     # the guard is vacuous if the walker stops finding imports
     assert ("word_sense_disambiguation_spark.operators.blocking",
-            "er_candidate_pairs") in _package_imports(ROOT / "bench.py")
+            "er_candidate_pairs") in _package_imports(
+        ROOT / "scripts" / "_flagship_run.py"
+    )
+
+
+def _imported_modules(path: Path) -> set[str]:
+    """Package modules ``path`` imports, counting ``from pkg.sub import
+    mod`` as an import of ``pkg.sub.mod`` when that is a module."""
+    out = set()
+    for module, name in _package_imports(path):
+        out.add(module)
+        if name is not None:
+            out.add(f"{module}.{name}")
+    return out
+
+
+def test_every_package_module_has_a_non_test_importer():
+    modules = {
+        p: ".".join(p.relative_to(ROOT).with_suffix("").parts)
+        for p in (ROOT / PKG).rglob("*.py")
+        if p.name != "__init__.py"
+    }
+    importers = [
+        *modules,
+        *(ROOT / "perfbench").glob("*.py"),
+        *HARNESSES,
+        ROOT / "__spark_entry__.py",
+    ]
+    reached = set()
+    for path in importers:
+        reached |= _imported_modules(path) - {modules.get(path)}
+    orphans = sorted(set(modules.values()) - reached)
+    assert not orphans, f"imported only by tests (or by nothing): {orphans}"

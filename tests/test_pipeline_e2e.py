@@ -114,7 +114,6 @@ def test_long_document_sentence_ids_linear(spark):
     pass. Also asserts the ids themselves are right on the same page."""
     import time
 
-    from word_sense_disambiguation_spark.operators.entities import candidate_spans
     from word_sense_disambiguation_spark.operators.tokenize import (
         mentions_from_pages_sql,
     )
@@ -132,9 +131,6 @@ def test_long_document_sentence_ids_linear(spark):
     assert rows == n_sents  # every sentence contributes >=1 mention
     last = m.agg(F.max("sentence_id")).collect()[0][0]
     assert last == n_sents - 1
-    t0 = time.monotonic()
-    assert candidate_spans(big, "url", "text", max_span=2).count() > 0
-    assert time.monotonic() - t0 < 60
 
 
 def test_accuracy_and_f1_gate(assignments, sworld):

@@ -1,60 +1,9 @@
-"""Planted-skew correctness (SURVEY §7 hard part b) and physical-plan
-regression checks (broadcast where expected, pruned scans, bounded
-exchanges)."""
+"""Physical-plan regression checks (broadcast where expected, pruned
+scans, bounded exchanges)."""
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-import pytest
-
-from word_sense_disambiguation_spark.operators.skew import (
-    salt_explode_small,
-    salted_group_count,
-)
-
-
-@pytest.fixture(scope="module")
-def skewed(spark):
-    # hot key 'the' carries 50k rows; 100 cold keys carry 100 each
-    hot = spark.range(50_000).select(
-        F.lit("the").alias("key"), F.col("id").alias("rid"), F.lit(1.0).alias("v")
-    )
-    cold = spark.range(10_000).select(
-        F.concat(F.lit("k"), (F.col("id") % 100).cast("string")).alias("key"),
-        (F.col("id") + 100_000).alias("rid"),
-        F.lit(2.0).alias("v"),
-    )
-    return hot.union(cold)
-
-
-def test_salted_group_count_matches_plain(spark, skewed):
-    plain = {
-        (r.key): (r.n, r.sv)
-        for r in skewed.groupBy("key")
-        .agg(F.count("*").alias("n"), F.sum("v").alias("sv"))
-        .collect()
-    }
-    salted = {
-        (r.key): (r.n, r.sv)
-        for r in salted_group_count(
-            skewed, ["key"], "rid", buckets=16, agg_exprs={"v": "sv"}
-        ).collect()
-    }
-    assert salted == plain
-    assert salted["the"] == (50_000, 50_000.0)
-
-
-def test_salted_join_matches_plain(spark, skewed):
-    dim = spark.createDataFrame(
-        [("the", "stop"), ("k1", "cold"), ("k2", "cold")], "key string, tag string"
-    )
-    plain = skewed.join(dim, on="key").groupBy("key", "tag").count()
-    salted = salt_explode_small(skewed, dim, "key", "rid", buckets=8).groupBy(
-        "key", "tag"
-    ).count()
-    a = {(r.key, r.tag): r["count"] for r in plain.collect()}
-    b = {(r.key, r.tag): r["count"] for r in salted.collect()}
-    assert a == b and a[("the", "stop")] == 50_000
 
 
 def test_flagship_plan_shape(spark, sworld, tmp_path):
@@ -78,41 +27,6 @@ def test_flagship_plan_shape(spark, sworld, tmp_path):
     assert "html" not in joined, joined
 
 
-def test_bucketed_join_is_shuffle_free(spark, sworld):
-    """Bucketed tables joined on the bucket key need no exchange on either
-    side — the repeated-join scale path (SURVEY §4 physical strategies)."""
-    from word_sense_disambiguation_spark.operators.tokenize import (
-        mentions_from_pages_sql,
-    )
-    from word_sense_disambiguation_spark.sources.bucketed import (
-        read_bucketed,
-        write_bucketed,
-    )
-
-    m = mentions_from_pages_sql(sworld["pages"]).select(
-        "mention_id", "lemma", "pos", "n_context"
-    )
-    write_bucketed(m, "mentions_a", "lemma", buckets=8)
-    write_bucketed(m, "mentions_b", "lemma", buckets=8)
-    a = read_bucketed(spark, "mentions_a")
-    b = read_bucketed(spark, "mentions_b").selectExpr(
-        "mention_id as mid_b", "lemma", "n_context as nc_b"
-    )
-    # disable broadcast so the join must co-locate — the case bucketing is
-    # for (both sides too big to broadcast at production scale)
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = a.join(b, on="lemma")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan
-        assert "Exchange hashpartitioning" not in plan, plan[:1500]
-        assert "Bucketed: true" in plan
-        assert joined.count() > 0
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-
-
 def test_candidate_filter_pushdown(spark, sworld, tmp_path):
     """A lang filter over parquet pages must reach the scan as a pushed
     filter (Catalyst predicate pushdown survives our operators)."""
@@ -121,34 +35,6 @@ def test_candidate_filter_pushdown(spark, sworld, tmp_path):
     pages = spark.read.parquet(p).filter(F.col("lang") == "en")
     plan = pages.select("url")._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters" in plan and "lang" in plan
-
-def test_entity_linking_plan_shape(spark, sworld, tmp_path):
-    """Entity linking's 100 TB contract: the KB alias join must broadcast
-    (never sort-merge the span stream), the pages scan must prune html, and
-    the only hash exchange is the per-page regroup of MATCHED spans."""
-    from word_sense_disambiguation_spark.operators.entities import linked_entities
-
-    p = str(tmp_path / "pages_ent")
-    sworld["pages"].write.parquet(p)
-    pages = spark.read.parquet(p)
-    plan = (
-        linked_entities(pages, sworld["entities"])
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-    # exactly two hash exchanges are legitimate: the per-page regroup of
-    # matched spans (small), and the alias-dedup distinct on the KB dim
-    # (constant-size, pre-broadcast). The span stream itself must never
-    # exchange before the join.
-    assert plan.count("Exchange hashpartitioning") <= 2, plan[:2000]
-    scan_lines = [
-        ln for ln in plan.splitlines() if "Scan parquet" in ln or "ReadSchema" in ln
-    ]
-    joined = "\n".join(scan_lines) or plan
-    assert "html" not in joined, joined
 
 
 def test_capped_candidate_join_plan_shapes(spark):
@@ -219,64 +105,3 @@ def test_sense_only_pair_weights_are_pure_jvm(spark):
     default = score_mention_pairs(pairs, asg)
     dplan = default._jdf.queryExecution().executedPlan().toString()
     assert dplan.count("ArrowEvalPython") >= 1  # jw + cosine present
-
-
-# ---------------------------------------------------------------------------
-# key_skew_report: exact tied-rank Gini via the histogram contraction
-# ---------------------------------------------------------------------------
-
-
-def _py_gini(counts):
-    xs = sorted(counts)
-    n, t = len(xs), sum(xs)
-    s1 = sum((i + 1) * x for i, x in enumerate(xs))
-    return 2 * s1 - (n + 1) * t, n * t
-
-
-def test_key_skew_report_matches_direct_gini(spark):
-    from word_sense_disambiguation_spark.operators.skew import key_skew_report
-
-    rows = []
-    # slice "hot": key 0 has 50 rows, keys 1..9 one each (heavy skew)
-    rows += [("hot", 0)] * 50 + [("hot", k) for k in range(1, 10)]
-    # slice "flat": 6 keys x 4 rows (gini 0)
-    rows += [("flat", k) for k in range(6) for _ in range(4)]
-    # slice "tie": two keys tied at max count -> max_key = larger key
-    rows += [("tie", 3)] * 5 + [("tie", 8)] * 5 + [("tie", 1)] * 2
-    df = spark.createDataFrame(rows, "slice string, key long")
-    got = {r.slice: r for r in key_skew_report(df, ["slice"], "key").collect()}
-
-    num, den = _py_gini([50] + [1] * 9)
-    assert (got["hot"].gini_num, got["hot"].gini_den) == (num, den)
-    assert got["hot"].gini == num / den
-    assert (got["hot"].max_key, got["hot"].max_count) == (0, 50)
-    assert (got["hot"].n_rows, got["hot"].n_keys) == (59, 10)
-
-    assert got["flat"].gini_num == 0 and got["flat"].gini == 0.0
-    assert got["tie"].max_key == 8  # tie on count -> larger key wins
-    num_t, den_t = _py_gini([5, 5, 2])
-    assert (got["tie"].gini_num, got["tie"].gini_den) == (num_t, den_t)
-
-
-def test_key_skew_report_plan_histogram_contraction(spark):
-    """The window must run over the counts-of-counts histogram, never a
-    global rank over keys: two hash aggregates BELOW the window, window
-    partitioned by the slice columns (no empty partitionBy)."""
-    from word_sense_disambiguation_spark.operators.skew import key_skew_report
-
-    df = spark.createDataFrame(
-        [("s", i % 7) for i in range(100)], "slice string, key long"
-    )
-    rep = key_skew_report(df, ["slice"], "key")
-    plan = rep._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
-    assert "Window" in plan
-    # the window's partition spec carries the slice column — an
-    # unpartitioned global-rank window would print "Window [..], [..ASC..]"
-    # with an empty partition list; cheap proxy: slice appears in the
-    # Window line.
-    window_lines = [ln for ln in plan.splitlines() if "Window" in ln]
-    assert any("slice" in ln for ln in window_lines)
-    assert "EvalPython" not in plan
-    a = key_skew_report(df.coalesce(1), ["slice"], "key").collect()
-    b = key_skew_report(df.repartition(11), ["slice"], "key").collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))

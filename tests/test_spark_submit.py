@@ -1,6 +1,7 @@
 """The north rule's launch shape: spark-submit --py-files <pkg.zip>
 scripts/run_pipeline.py actually runs the checkpointed pipeline end-to-end
-in a separate JVM, and a second submit resumes from the committed stages."""
+in a separate JVM, and a second submit resumes from the committed stages.
+The session's default driver heap fits the host."""
 
 from __future__ import annotations
 
@@ -81,3 +82,15 @@ def test_spark_submit_pipeline_and_resume(spark, world, tmp_path):
     )["rows"]
     assert rows2 == rows
     assert os.path.getmtime(os.path.join(run_dir, "mentions", "_MANIFEST.json")) == mtime
+
+
+def test_default_driver_heap_fits_the_host(spark):
+    """Without an override the session's driver heap is at most half of
+    the host's MemTotal (a larger heap lets the suite's JVM grow until
+    the kernel kills it)."""
+    with open("/proc/meminfo") as fp:
+        mem_kb = next(int(ln.split()[1]) for ln in fp if ln.startswith("MemTotal:"))
+    heap = spark.sparkContext.getConf().get("spark.driver.memory")
+    units = {"k": 1, "m": 1024, "g": 1024**2, "t": 1024**3}
+    heap_kb = int(heap[:-1]) * units[heap[-1].lower()]
+    assert heap_kb <= mem_kb // 2, (heap, mem_kb)

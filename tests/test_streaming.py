@@ -40,36 +40,6 @@ def test_stream_batch_parity_windowed_counts(spark, tmp_path):
     assert batch.exceptAll(s).count() == 0
 
 
-def test_stateful_stream_dedup(spark, world, tmp_path):
-    """applyInPandasWithState dedup: duplicates are flagged within a batch
-    AND across micro-batch restarts (state survives via checkpoint)."""
-    from word_sense_disambiguation_spark.datagen import PAGES_SCHEMA, world_to_spark
-    from word_sense_disambiguation_spark.streaming.stateful import stream_exact_dedup
-
-    sw = world_to_spark(spark, world)
-    pages_dir = str(tmp_path / "pages")
-    ck = str(tmp_path / "ck")
-    out = str(tmp_path / "out")
-
-    half = sw["pages"].filter(
-        F.col("url") < "https://synthetic.example/0000/page-0000060"
-    )
-    half.write.mode("append").parquet(pages_dir)
-    r1 = stream_exact_dedup(spark, pages_dir, PAGES_SCHEMA, ck, out)
-    n1 = r1.count()
-    assert n1 == half.count()
-    assert r1.filter("first_seen").count() == half.select("text").distinct().count()
-
-    # second round: re-append the SAME pages under new urls -> all dups
-    half.withColumn("url", F.concat(F.col("url"), F.lit("-copy"))).write.mode(
-        "append"
-    ).parquet(pages_dir)
-    r2 = stream_exact_dedup(spark, pages_dir, PAGES_SCHEMA, ck, out)
-    copies = r2.filter(F.col("url").endswith("-copy"))
-    assert copies.count() == half.count()
-    assert copies.filter("first_seen").count() == 0  # state remembered all
-
-
 def test_incremental_sense_pipeline_resumes(spark, world, tmp_path):
     """Two micro-batch rounds: new files only are processed on round 2
     (checkpointed offsets), and the union equals the batch run."""
@@ -96,60 +66,6 @@ def test_incremental_sense_pipeline_resumes(spark, world, tmp_path):
     cols = ["mention_id", "decision", "pred_sense_id"]
     assert streamed.select(cols).exceptAll(batch.select(cols)).count() == 0
     assert batch.select(cols).exceptAll(streamed.select(cols)).count() == 0
-
-
-def test_stateful_dedup_ttl_readmits(spark, tmp_path):
-    """With a processing-time TTL, a hash idle past the window is evicted:
-    its next arrival is first_seen again (bounded state on endless crawls).
-    Within the window it still dedups."""
-    import time
-
-    from word_sense_disambiguation_spark.datagen import PAGES_SCHEMA
-    from word_sense_disambiguation_spark.streaming.stateful import stream_exact_dedup
-
-    pages_dir = str(tmp_path / "pages")
-    ck = str(tmp_path / "ck")
-    out = str(tmp_path / "out")
-
-    def page(url, text):
-        return (url, None, None, text, "en")
-
-    def write(rows):
-        spark.createDataFrame(rows, schema=PAGES_SCHEMA).write.mode(
-            "append"
-        ).parquet(pages_dir)
-
-    # window A: TTL far longer than any drain/restart latency, so the
-    # dedup-within-window behavior cannot be raced by wakeup batches
-    ttl_long = 120_000
-    write([page("a1", "text x"), page("a2", "text x"), page("b1", "text y")])
-    r1 = stream_exact_dedup(spark, pages_dir, PAGES_SCHEMA, ck, out, ttl_ms=ttl_long)
-    f1 = {r.url: r.first_seen for r in r1.collect()}
-    assert f1 == {"a1": True, "a2": False, "b1": True}
-    write([page("a3", "text x")])
-    r2 = stream_exact_dedup(spark, pages_dir, PAGES_SCHEMA, ck, out, ttl_ms=ttl_long)
-    assert {r.url: r.first_seen for r in r2.collect()}["a3"] is False
-
-    # window B (separate stream): short TTL; whether the eviction fires on
-    # the tick batch or on a post-drain wakeup, the re-sent key must
-    # re-admit as first_seen — that's the property under test
-    p2, ck2, out2 = str(tmp_path / "p2"), str(tmp_path / "ck2"), str(tmp_path / "o2")
-
-    def write2(rows):
-        spark.createDataFrame(rows, schema=PAGES_SCHEMA).write.mode(
-            "append"
-        ).parquet(p2)
-
-    ttl = 1500
-    write2([page("q1", "text q")])
-    r3 = stream_exact_dedup(spark, p2, PAGES_SCHEMA, ck2, out2, ttl_ms=ttl)
-    assert {r.url: r.first_seen for r in r3.collect()}["q1"] is True
-    time.sleep(3.0)
-    write2([page("r1", "text r")])  # tick: fires the expired timeout
-    stream_exact_dedup(spark, p2, PAGES_SCHEMA, ck2, out2, ttl_ms=ttl)
-    write2([page("q2", "text q")])
-    r5 = stream_exact_dedup(spark, p2, PAGES_SCHEMA, ck2, out2, ttl_ms=ttl)
-    assert {r.url: r.first_seen for r in r5.collect()}["q2"] is True
 
 
 def test_stream_attach_to_clusters_parity(spark, tmp_path):
@@ -286,76 +202,3 @@ def test_stream_curate_increment_parity(spark, tmp_path):
     assert streamed[102][1] == "novel"
     assert streamed[103] == (False, None, None)
     corpus.unpersist()
-
-
-def test_stream_session_watermark_finalization(spark, tmp_path):
-    """Append-mode session_window: sessions emit exactly once, when the
-    watermark passes their end (driven here by a far-future flush
-    event); the emitted finals equal the batch operator on the same
-    input — the one-expression-two-modes contract."""
-    import datetime as dt
-
-    import pandas as pd
-
-    from word_sense_disambiguation_spark.operators.temporal import (
-        session_window_stats,
-    )
-    from word_sense_disambiguation_spark.streaming.ingest import (
-        stream_session_stats,
-    )
-
-    base = dt.datetime(2024, 1, 1, 12, 0, 0)
-    ev = pd.DataFrame(
-        {
-            "event_id": [1, 2, 3, 4],
-            "ts": [
-                base,
-                base + dt.timedelta(seconds=1800),   # exact gap: merges
-                base + dt.timedelta(seconds=3601),   # splits
-                base + dt.timedelta(seconds=10),
-            ],
-            "user_id": [1, 1, 1, 2],
-            "event_type": ["a"] * 4,
-            "value": [0.0] * 4,
-            "props": [""] * 4,
-        }
-    )
-    ev["ts"] = ev["ts"].astype("datetime64[us]")
-    d = tmp_path / "evstream"
-    d.mkdir()
-    ev.to_parquet(d / "part1.parquet", index=False)
-    schema = ("event_id long, ts timestamp, user_id long, "
-              "event_type string, value double, props string")
-    q, name = stream_session_stats(
-        spark, str(d), schema, gap="30 minutes", watermark="1 hour"
-    )
-    try:
-        q.processAllAvailable()
-        n_before = spark.table(name).count()   # watermark hasn't passed
-        flush = pd.DataFrame(
-            {
-                "event_id": [99],
-                "ts": [base + dt.timedelta(days=30)],
-                "user_id": [999],
-                "event_type": ["a"],
-                "value": [0.0],
-                "props": [""],
-            }
-        )
-        flush["ts"] = flush["ts"].astype("datetime64[us]")
-        flush.to_parquet(d / "part2.parquet", index=False)
-        q.processAllAvailable()
-        streamed = [
-            tuple(r)
-            for r in spark.table(name).filter("user_id != 999").collect()
-        ]
-    finally:
-        q.stop()
-    assert n_before == 0
-    sev = spark.createDataFrame(ev)
-    batch = [
-        tuple(r)
-        for r in session_window_stats(sev, "user_id", "ts", "event_id").collect()
-    ]
-    assert sorted(streamed) == sorted(batch)
-    assert len(batch) == 3

@@ -1,17 +1,21 @@
 """PySpark-native entity-resolution / word-sense-disambiguation engine.
 
 A from-scratch Spark re-expression of the semantics of the reference
-``sign/word-sense-disambiguation`` service (see SURVEY.md): a three-stage
-record-linkage pipeline over Common-Crawl-style web-page tables —
+``sign/word-sense-disambiguation`` service (see SURVEY.md): pages become
+mentions, each mention gets a sense (the columnar Lesk + cosine path or
+the prompted 128-way path), and a three-stage record-linkage pipeline
+resolves the mentions to entities —
 
-1. **blocking**   — normalized surface-form keys + MinHash-LSH banding,
-2. **scoring**    — vectorized (Arrow) pairwise scoring: Lesk gloss overlap,
-   Jaro-Winkler / Levenshtein / embedding cosine,
+1. **blocking**   — normalized (surface, POS) keys, pruned to the pairs the
+   scorer can match (``operators.blocking.er_candidate_pairs``),
+2. **scoring**    — vectorized (Arrow) pairwise scoring: sense agreement,
+   Jaro-Winkler and context cosine,
 3. **clustering** — iterative large-star/small-star connected components
    assigning canonical entity ids,
 
-plus the training-data-pipeline operators a 100 TB corpus needs (dedup,
-similarity search, text quality analysis).
+with each stage committed by ``plans.checkpoint.run_er_pipeline`` so a
+killed run resumes, and ``streaming.ingest`` attaching new crawl
+increments to a frozen cluster snapshot.
 
 Everything is DataFrame-first: built-in ``pyspark.sql.functions`` on the hot
 path, Arrow-batched pandas UDFs only where Spark has no native operator.

@@ -9,8 +9,8 @@ Spark has no named operator for:
   rewrite (the audited sf0.01 plan: two parquet scans — one per
   distinct-vs-plain aggregate family — and partial-combined exchanges of
   1-row partials; no row ever reaches the driver). At 10^12 rows swap
-  exact distincts for the engine's ``sketches.hll_distinct`` per column,
-  same output shape. Output is long-form (one row per column, via one
+  exact distincts for ``approx_count_distinct`` per column, same output
+  shape. Output is long-form (one row per column, via one
   explode — never a per-column union, which would re-plan the aggregate
   subtree per column) so a new column never changes the schema of the
   profile table downstream jobs read.

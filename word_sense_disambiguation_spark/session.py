@@ -9,6 +9,10 @@ contract all run with identical physics:
 * ``spark.sql.shuffle.partitions`` sized to cores for local runs; a real
   cluster deployment overrides via ``spark-submit --conf``.
 * UTC session timezone so results hash-compare against the DuckDB oracle.
+* Driver heap: ``$WSD_SPARK_DRIVER_MEM`` if set, else half of the host's
+  ``MemTotal`` capped at 24g (24g when ``/proc/meminfo`` is unreadable) —
+  a heap larger than the host lets a long-lived JVM grow until the kernel
+  kills it.
 """
 
 from __future__ import annotations
@@ -29,7 +33,7 @@ def get_spark(
     """Create (or fetch) a SparkSession configured for this engine.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (falling back to
-    ``local[*]``) so the same entry point serves tests, bench.py, and the
+    ``local[*]``) so the same entry point serves tests, perfbench, and the
     driver harness. On a real cluster, ``spark-submit`` supplies the master
     and these local-mode settings are inert.
     """
@@ -38,6 +42,14 @@ def get_spark(
         master = f"local[{cpus}]" if cpus else "local[*]"
     if shuffle_partitions is None:
         shuffle_partitions = DEFAULT_SHUFFLE_PARTITIONS
+    driver_mem = os.environ.get("WSD_SPARK_DRIVER_MEM")
+    if driver_mem is None:
+        try:
+            with open("/proc/meminfo") as fp:
+                kb = next(int(ln.split()[1]) for ln in fp if ln.startswith("MemTotal:"))
+            driver_mem = f"{min(24 * 1024, kb // 2048)}m"
+        except (OSError, StopIteration, ValueError, IndexError):
+            driver_mem = "24g"
 
     builder = (
         SparkSession.builder.master(master)
@@ -51,7 +63,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # Shuffle/scan sizing for the local sandbox; cluster deploys override.
         .config("spark.sql.files.maxPartitionBytes", "134217728")
-        .config("spark.driver.memory", os.environ.get("WSD_SPARK_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

@@ -1,1 +1,1 @@
-"""Table sources/sinks: driver testdata catalog + pages table IO."""
+"""Table sources: pages-table constructors."""

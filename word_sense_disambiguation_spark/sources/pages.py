@@ -4,8 +4,9 @@
 into the canonical ``pages(url, warc_ts, html, text, lang)`` shape of
 BASELINE.json's ``input_hint`` — deterministic url/warc_ts derivation, html
 wrapper via :func:`wrap_html` so the extraction invariant holds for every
-generated row. Used by bench.py so throughput numbers are measured on the
-exact input schema the north rule names.
+generated row. ``perfbench``'s ``wsd_prompted`` workload and the
+driver-contract ``entry`` use it, so their inputs have the exact schema
+the pipeline reads.
 """
 
 from __future__ import annotations
