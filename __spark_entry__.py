@@ -35,6 +35,7 @@ _FUNC_WORDS_SQL = ", ".join(f"'{w}'" for w in sorted(FUNCTION_WORDS))
 # Python, no tokenizer: default codepoint probe). None of the symbols is a
 # single quote, so plain quoting is safe.
 _LETTERS_SQL = "[" + ", ".join("'" + c + "'" for c in build_letters().letters) + "]"
+_BPE_RE = r"[A-Za-z0-9]+|[^A-Za-z0-9 \t\n\r\f\x0B]"
 # Explicit ASCII whitespace class for every Spark expression mirrored into
 # a DuckDB oracle: Java \s includes U+000B, RE2 \s does not — spelled out
 # on BOTH sides (functions.text.WS_CLASS invariant).
@@ -46,6 +47,17 @@ _WS = r"[ \t\n\r\f\x0B]"
 from word_sense_disambiguation_spark.functions.phonetic import soundex_sql
 
 _SDX_DOC = soundex_sql("split_part(text, ' ', 1)", dialect="duckdb")
+
+# Morton key of the two 8-bit min-max ranks, DuckDB dialect — same
+# template the Spark side evaluates (operators/zorder.py).
+from word_sense_disambiguation_spark.operators.zorder import zorder_sql
+
+_ZORDER_DUCK = zorder_sql(["r0", "r1"], 8, dialect="duckdb")
+_WORD_RE = r"[A-Za-z0-9]+"
+_EN = r"\b(the|and|of|to|is)\b"
+_FR = r"\b(le|la|les|et|est)\b"
+_ES = r"\b(el|los|las|es|una)\b"
+_DE = r"\b(der|die|das|und|ist)\b"
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -228,6 +240,16 @@ def _q_disjoint_split(spark, sf_dir):
     )
 
 
+def _q_langid_accuracy(spark, sf_dir):
+    from word_sense_disambiguation_spark.operators.textstats import lang_id
+
+    docs = _t(spark, sf_dir, "documents")
+    return docs.select(lang_id(F.col("text")).alias("pred"), "lang").agg(
+        F.count("*").alias("n"),
+        F.sum((F.col("pred") == F.col("lang")).cast("long")).alias("n_match"),
+    )
+
+
 def _q_mark_first(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     p = F.instr(F.col("text"), " the ")
@@ -241,6 +263,18 @@ def _q_mark_first(spark, sf_dir):
                 F.expr("substring(text, instr(text, ' the ') + 4)"),
             ).alias("marked"),
         )
+    )
+
+
+def _q_text_profile(spark, sf_dir):
+    from word_sense_disambiguation_spark.operators.textstats import text_profile
+
+    docs = _t(spark, sf_dir, "documents")
+    prof = text_profile(docs, "doc_id", "text")
+    # quality is a chain of IEEE ops on integer counts — identical in
+    # DuckDB; keep it but round for safety at hash boundaries.
+    return prof.select(
+        "doc_id", "ws_tokens", "bpe_tokens", "pred_lang", F.round("quality", 6).alias("quality")
     )
 
 
@@ -983,6 +1017,8 @@ def _q_pr_sweep(spark, sf_dir):
     return pr_threshold_sweep(labeled, "score", "is_match")
 
 
+
+
 def _q_threshold_curve(spark, sf_dir):
     """Cluster-shape-vs-threshold curve over the FS corrupted-customer
     world: four candidate cutoffs (0/1500/3000/4500 milli) each run the
@@ -1059,6 +1095,83 @@ def _q_incremental_er_attach(spark, sf_dir):
     )
 
 
+def _q_resize_metadata(spark, sf_dir):
+    from word_sense_disambiguation_spark.operators.multimodal import resize_metadata
+    from word_sense_disambiguation_spark.sources.pages import pages_from_documents
+
+    docs = _t(spark, sf_dir, "documents")
+    return resize_metadata(pages_from_documents(docs), "url", "html")
+
+
+def _q_payload_histogram(spark, sf_dir):
+    from word_sense_disambiguation_spark.operators.multimodal import (
+        payload_byte_histogram,
+    )
+    from word_sense_disambiguation_spark.sources.pages import pages_from_documents
+
+    docs = _t(spark, sf_dir, "documents")
+    return payload_byte_histogram(pages_from_documents(docs), "url", "html")
+
+
+def _q_frame_sample(spark, sf_dir):
+    """Frame-sampling plumbing over the fake decoder: every 8th frame of
+    each payload's n_frames (a template constant, see media_metadata)."""
+    from word_sense_disambiguation_spark.operators.multimodal import frame_sample
+    from word_sense_disambiguation_spark.sources.pages import pages_from_documents
+
+    docs = _t(spark, sf_dir, "documents")
+    return frame_sample(pages_from_documents(docs), "url", "html", every_n=8)
+
+
+
+
+
+
+def _q_media_metadata(spark, sf_dir):
+    from word_sense_disambiguation_spark.operators.multimodal import media_metadata
+    from word_sense_disambiguation_spark.sources.pages import pages_from_documents
+
+    docs = _t(spark, sf_dir, "documents")
+    return media_metadata(pages_from_documents(docs), "url", "html", "image")
+
+
+def _q_image_header_dims(spark, sf_dir):
+    """REAL image decode under the hash gate: synthesize VALID PNG/JPEG
+    byte layouts per doc (dims are deterministic doc_id formulas), then
+    let media_metadata's pure-Python header parser read the dimensions
+    back out of the actual bytes. The oracle computes the same fields from
+    the planting formulas — a parser that misreads any byte mismatches."""
+    import pandas as pd
+
+    from word_sense_disambiguation_spark.datagen import synth_jpeg, synth_png
+    from word_sense_disambiguation_spark.operators.multimodal import media_metadata
+
+    docs = _t(spark, sf_dir, "documents").select("doc_id")
+
+    def build(batches):
+        for pdf in batches:
+            payloads = []
+            for d in pdf["doc_id"]:
+                d = int(d)
+                w = 16 + (d * 7) % 1000
+                h = 16 + (d * 13) % 1000
+                payloads.append(
+                    synth_png(w, h, filler=d % 7)
+                    if d % 2 == 0
+                    else synth_jpeg(w, h, filler=d % 7)
+                )
+            yield pd.DataFrame(
+                {"url": pdf["doc_id"].astype("int64").astype(str), "payload": payloads}
+            )
+
+    media = docs.mapInPandas(build, schema="url string, payload binary")
+    meta = media_metadata(media, "url", "payload", media_type="image")
+    return meta.select(
+        F.col("url").cast("long").alias("doc_id"),
+        "media_type", "n_bytes", "width", "height", "n_frames",
+    )
+
+
 def _q_site_quota_sample(spark, sf_dir):
     """Per-site quota sampling (CCNet-style corpus curation): keep the 7
     deterministically-hash-smallest pages per site via the salted
@@ -1129,6 +1242,18 @@ def _q_url_canonicalize(spark, sf_dir):
     )
 
 
+def _q_repetition_stats(spark, sf_dir):
+    """Gopher-family within-document repetition signals: top-2-gram and
+    duplicate-5-gram character fractions, linear explode+groupBy shape
+    (never a per-doc O(G^2) lambda scan)."""
+    from word_sense_disambiguation_spark.operators.textstats import (
+        repetition_stats,
+    )
+
+    docs = _t(spark, sf_dir, "documents")
+    return repetition_stats(docs, "doc_id", "text")
+
+
 def _q_pii_redaction(spark, sf_dir):
     """Rule-based PII scrub over deterministically planted addresses:
     every doc gets an email, an IPv4 and an international phone (every
@@ -1192,6 +1317,45 @@ def _q_substring_span_dedup(spark, sf_dir):
     )
 
     return duplicate_span_stats(_t(spark, sf_dir, "documents"), n=8)
+
+
+def _q_ccnet_buckets(spark, sf_dir):
+    """CCNet-style head/middle/tail assignment: the fastText-architecture
+    quality score (exact BIGINT logits, one IEEE division) bucketed into
+    per-language EXACT tertiles via rank_buckets — cut points are type-1
+    order statistics (integer ceil-rank arithmetic), assignment is a
+    broadcast join + codegen CASE, ties at a cut stay low. Labels
+    ascend with quality: tail < middle < head."""
+    from word_sense_disambiguation_spark.operators.quantiles import (
+        rank_buckets,
+    )
+    from word_sense_disambiguation_spark.operators.webfilters import (
+        quality_classifier_scores,
+    )
+
+    docs = _t(spark, sf_dir, "documents")
+    scored = quality_classifier_scores(docs).join(
+        docs.select("doc_id", "lang"), on="doc_id"
+    ).select("doc_id", "lang", "score")
+    return rank_buckets(
+        scored, ["lang"], "score", n_buckets=3,
+        labels=("tail", "middle", "head"),
+    )
+
+
+def _q_length_outliers(spark, sf_dir):
+    """Robust corpus anomaly gate: per (lang, source) slice, flag
+    documents whose n_chars sits more than 3.5 MADs from the slice
+    median — both order statistics exact type-1 ranks, the threshold an
+    integer cross-multiply, zero floats."""
+    from word_sense_disambiguation_spark.operators.quantiles import (
+        mad_outliers,
+    )
+
+    docs = _t(spark, sf_dir, "documents").select(
+        "doc_id", "lang", "source", "n_chars"
+    )
+    return mad_outliers(docs, ["lang", "source"], "n_chars")
 
 
 def _q_rrf_hybrid(spark, sf_dir):
@@ -1295,6 +1459,59 @@ def _fs_customer_pairs(spark, sf_dir):
         {"name": "code", "left": "code_a", "right": "code_b", "close": 2, "w": (2500, 1000, -2000)},
     ]
     return pairs, comps
+
+
+def _q_token_diversity(spark, sf_dir):
+    """Simpson token diversity per document — the log-free entropy
+    analogue (exact integers until one IEEE division); empty docs keep
+    a NULL-diversity row."""
+    from word_sense_disambiguation_spark.operators.textstats import (
+        token_diversity,
+    )
+
+    return token_diversity(_t(spark, sf_dir, "documents"), "doc_id", "text")
+
+
+def _q_cooccurrence(spark, sf_dir):
+    """Skip-gram co-occurrence (window 2, min_count 5) over documents
+    with the exp-PMI association ratio — exact BIGINT counts, honest
+    pre-floor totals, one fixed IEEE tree for the ratio (log-free on
+    purpose: rank on the ratio IS ranking on PMI)."""
+    from word_sense_disambiguation_spark.operators.textstats import (
+        cooccurrence_counts,
+    )
+
+    return cooccurrence_counts(
+        _t(spark, sf_dir, "documents"), "doc_id", "text",
+        window=2, min_count=5,
+    )
+
+
+def _q_vocabulary(spark, sf_dir):
+    """Corpus vocabulary over documents: min_count=5 floor, top-500 by
+    (count DESC, token ASC), contiguous 1-based ranks. The top-N is
+    TakeOrderedAndProject (bounded heaps, no full sort shuffle); the
+    rank window runs over the already-limited 500 rows."""
+    from word_sense_disambiguation_spark.operators.textstats import (
+        build_vocabulary,
+    )
+
+    return build_vocabulary(
+        _t(spark, sf_dir, "documents"), "doc_id", "text",
+        min_count=5, top_n=500,
+    )
+
+
+def _q_script_profile(spark, sf_dir):
+    """Per-document Unicode script composition over documents — literal
+    BMP range classes (never \\p{Script}: Java and RE2 disagree on
+    property classes), codepoint-deletion counts, fixed-priority
+    dominant pick, one IEEE division for the ratio."""
+    from word_sense_disambiguation_spark.operators.textstats import (
+        script_profile,
+    )
+
+    return script_profile(_t(spark, sf_dir, "documents"), "doc_id", "text")
 
 
 def _q_blocking_cost(spark, sf_dir):
@@ -1570,6 +1787,99 @@ def _q_blocking_quality(spark, sf_dir):
     return blocking_quality(cand, gold, docs)
 
 
+def _q_asof_join(spark, sf_dir):
+    """Point-in-time join: each view event attaches the most recent
+    click by the same user at-or-before it (inclusive, largest-event-id
+    tie rule). Union + one shuffle + a running last(ignoreNulls) frame
+    — never the O(|L_k|*|R_k|) inequality join."""
+    from word_sense_disambiguation_spark.operators.temporal import asof_join
+
+    ev = _t(spark, sf_dir, "events")
+    L = ev.filter(F.col("event_type") == "view").select(
+        "event_id", "user_id", "ts", "value"
+    )
+    R = ev.filter(F.col("event_type") == "click").select(
+        "event_id", "user_id", "ts", "value"
+    )
+    return asof_join(
+        L, R, on="user_id", left_ts="ts",
+        right_cols=["event_id", "value"], tie_col="event_id",
+    )
+
+
+def _q_range_join(spark, sf_dir):
+    """Interval containment join: view-event values against same-user
+    [click value, click value + 5] intervals, as the bucketized
+    equi-join (one bucket per point, exploded interval buckets, exact
+    re-check) — never a BroadcastNestedLoop inequality join."""
+    from word_sense_disambiguation_spark.operators.temporal import range_join
+
+    ev = _t(spark, sf_dir, "events")
+    p = ev.filter(F.col("event_type") == "view").select(
+        F.col("event_id").alias("p_id"), "user_id", F.col("value").alias("v")
+    )
+    iv = ev.filter(F.col("event_type") == "click").select(
+        F.col("event_id").alias("i_id"),
+        "user_id",
+        F.col("value").alias("lo"),
+        (F.col("value") + F.lit(5.0)).alias("hi"),
+    )
+    pairs, _oversized = range_join(
+        p, iv, "v", "lo", "hi", keys=["user_id"], bucket_width=4.0
+    )
+    return pairs.select("p_id", "i_id", "user_id", "v", "lo", "hi")
+
+
+def _q_time_rollup(spark, sf_dir):
+    """Hypertable continuous-aggregate rollup: minute/hour/day buckets
+    per event_type from ONE scan (grouping sets -> one Expand, one
+    shuffle), exact aggregates only (count, order-free min/max, BIGINT
+    scaled sum)."""
+    from word_sense_disambiguation_spark.operators.temporal import (
+        time_bucket_rollup,
+    )
+
+    ev = _t(spark, sf_dir, "events")
+    return time_bucket_rollup(
+        ev, "ts", ["event_type"], "value",
+        granularities=("minute", "hour", "day"), int_scale=100,
+    )
+
+
+
+
+def _q_group_quantiles(spark, sf_dir):
+    """Exact per-source p50/p90/p99 of document length: type-1 (lower
+    discrete) quantile at rank ceil(p*n), computed in PURE INTEGER rank
+    arithmetic (p as a rational — no float multiply to diverge between
+    engines). Partial-combined count + broadcast join + one rank
+    window; see operators/quantiles.py for the scale notes."""
+    from word_sense_disambiguation_spark.operators.quantiles import (
+        group_quantiles,
+    )
+
+    docs = _t(spark, sf_dir, "documents")
+    return group_quantiles(docs, ["source"], "n_chars")
+
+
+def _q_sampled_quantiles(spark, sf_dir):
+    """The scale path for group_quantiles made concrete: deterministic
+    1-in-4 md5 Bernoulli sample of documents (pure function of doc_id —
+    no rand()), then the same exact integer-rank order statistic on the
+    sample. The hot key's sort task shrinks 4x; the oracle replays the
+    sample predicate and ranks bit-for-bit."""
+    from word_sense_disambiguation_spark.operators.quantiles import (
+        sampled_group_quantiles,
+    )
+
+    docs = _t(spark, sf_dir, "documents")
+    return sampled_group_quantiles(
+        docs, ["source"], "n_chars", "doc_id", rate_den=4
+    )
+
+
+
+
 def _q_phonetic_blocking(spark, sf_dir):
     """Soundex phonetic blocking over the leading word of each document:
     spelling-variant candidate pairs (id_a < id_b) within capped blocks.
@@ -1609,6 +1919,8 @@ def _q_sorted_neighborhood(spark, sf_dir):
     )
 
 
+
+
 def _q_cluster_split(spark, sf_dir):
     """Leakage-free corpus split: near-duplicate documents must never
     straddle a train/val/test boundary (or the held-out set leaks into
@@ -1628,6 +1940,79 @@ def _q_cluster_split(spark, sf_dir):
         docs, "doc_id", "text", threshold=0.7
     )
     return disjoint_split(clusters, key="cluster_id", n_buckets=10, seed=42)
+
+
+
+
+def _q_zorder_layout(spark, sf_dir):
+    """Z-order layout audit: documents min-max-ranked on (doc_id,
+    n_chars) at 8 bits each, Morton-interleaved (pure-codegen bit
+    shuffle), keyed into 64 equal Z-ranges; per chunk the row count and
+    each dimension's min/max span. Tight spans on BOTH dimensions are
+    the file-skipping evidence a single-column layout cannot give. No
+    global sort anywhere — the chunk id is row-local arithmetic and the
+    stats a partial-combined groupBy."""
+    from word_sense_disambiguation_spark.operators.zorder import (
+        minmax_rank_exprs,
+        zorder_chunk_stats,
+    )
+
+    docs = _t(spark, sf_dir, "documents")
+    ranks = minmax_rank_exprs(docs, ["doc_id", "n_chars"], bits=8)
+    return zorder_chunk_stats(docs, ranks, bits=8, n_chunks=64).select(
+        F.col("chunk").cast("long").alias("chunk"),
+        F.col("n").cast("long").alias("n"),
+        F.col("dim0_min").cast("long").alias("dim0_min"),
+        F.col("dim0_max").cast("long").alias("dim0_max"),
+        F.col("dim1_min").cast("long").alias("dim1_min"),
+        F.col("dim1_max").cast("long").alias("dim1_max"),
+    )
+
+
+
+
+def _q_hopping_window(spark, sf_dir):
+    """Hopping-window aggregate: 15-minute windows sliding every 5
+    minutes over events — each event expands to its 3 window memberships
+    locally (offset explode, never an inequality join against a window
+    table), then one partial-combined groupBy. Hash-exact aggregates
+    (count, min/max, scaled-BIGINT sum)."""
+    from word_sense_disambiguation_spark.operators.temporal import (
+        hopping_window_agg,
+    )
+
+    ev = _t(spark, sf_dir, "events")
+    return hopping_window_agg(
+        ev, "ts", ["event_type"], "value", length_s=900, slide_s=300
+    )
+
+
+def _q_latest_snapshot(spark, sf_dir):
+    """CDC compaction: the events changelog keyed by user_id -> each
+    user's newest event (order = ts then event_id, explicit tiebreak).
+    ONE max_by aggregate with map-side partial combine — never the
+    row_number window that funnels a hot key's whole history through a
+    single task. value rides as floor(value*100) BIGINT (hash-exact)."""
+    from word_sense_disambiguation_spark.operators.cdc import latest_snapshot
+
+    ev = (
+        _t(spark, sf_dir, "events")
+        .filter(F.col("ts").isNotNull() & F.col("user_id").isNotNull())
+        .select(
+            "user_id",
+            "ts",
+            F.col("event_id").cast("long").alias("event_id"),
+            "event_type",
+            F.expr("CAST(floor(value * 100) AS BIGINT)").alias("value_scaled"),
+        )
+    )
+    return latest_snapshot(ev, ["user_id"], "ts", "event_id").select(
+        F.col("user_id").cast("long").alias("user_id"),
+        "ts",
+        "event_id",
+        "event_type",
+        "value_scaled",
+    )
 
 
 def _q_profile_columns(spark, sf_dir):
@@ -1658,6 +2043,36 @@ def _q_table_checksum(spark, sf_dir):
     return table_checksum(
         docs, ["doc_id", "lang", "source", "n_chars"], ["source"]
     )
+
+
+def _q_chunk_documents(spark, sf_dir):
+    """Embedding/RAG prep: overlapping 32-token chunks (8 shared) per
+    document (sized so the driver testdata exercises multi-chunk docs) — row-local codegen (sequence + slice + array_join), ZERO
+    shuffle, integer-only start arithmetic; empty docs keep one empty
+    chunk (chunking is total). The oracle replays tokens, starts, spans,
+    and chunk text verbatim."""
+    from word_sense_disambiguation_spark.operators.textstats import (
+        chunk_documents,
+    )
+
+    docs = _t(spark, sf_dir, "documents")
+    return chunk_documents(
+        docs, "doc_id", "text", chunk_tokens=32, overlap_tokens=8
+    )
+
+
+def _q_distinctive_terms(spark, sf_dir):
+    """Top-3 tf-idf terms per document with the integer-exact scaled idf
+    (tf * ((N * 10^6) div df) — strictly df-decreasing while df <=
+    sqrt(N*10^6), no log/float anywhere). One (doc, token) aggregate;
+    document frequency derives from that table; the top-k window is
+    doc-bounded. Ties: score desc, tf desc, token asc."""
+    from word_sense_disambiguation_spark.operators.textstats import (
+        distinctive_terms,
+    )
+
+    docs = _t(spark, sf_dir, "documents")
+    return distinctive_terms(docs, "doc_id", "text", top_k=3)
 
 
 def _q_dedup_keep_best(spark, sf_dir):
@@ -1970,6 +2385,38 @@ def _q_training_prompts(spark, sf_dir):
     )
 
 
+def _q_fingerprints(spark, sf_dir):
+    from word_sense_disambiguation_spark.operators.textstats import fingerprints
+
+    docs = _t(spark, sf_dir, "documents")
+    return fingerprints(docs, "doc_id", "text").groupBy("id").agg(
+        F.count("*").alias("n_fp")
+    )
+
+
+
+
+def _q_scd2_history(spark, sf_dir):
+    """Type-2 entity-state history: the events changelog compacted to
+    validity intervals of each user's event_type state (consecutive
+    same-state versions collapse, ``valid_to`` = next change, open
+    interval flagged ``is_current``) — the point-in-time companion to
+    ``latest_snapshot`` and the input shape ``asof_join`` consumes.
+    Deterministic under burst timestamp ties via the event_id
+    tiebreak; one Exchange (both windows and the run aggregate share
+    the user_id clustering)."""
+    from word_sense_disambiguation_spark.operators.cdc import scd2_history
+
+    ev = _t(spark, sf_dir, "events").filter(
+        F.col("user_id").isNotNull()
+        & F.col("ts").isNotNull()
+        & F.col("event_type").isNotNull()
+    ).select("user_id", "ts", "event_id", "event_type")
+    return scd2_history(
+        ev, ["user_id"], "ts", "event_id", ["event_type"]
+    )
+
+
 def _q_constrained_clusters(spark, sf_dir):
     """ER cluster repair under cannot-link constraints: a deterministic
     match graph over user ids (chains u-(u+1) for u%3=0, triangles
@@ -2032,6 +2479,62 @@ def _q_kcore(spark, sf_dir):
     return kcore_peel(_click_edges(spark, sf_dir), k=15, rounds=6)
 
 
+def _q_interval_merge(spark, sf_dir):
+    """Gaps-and-islands coverage merge: deterministic integer fetch
+    windows derived from events (start = event_id % 997, length
+    1 + user_id % 7, heavy collisions by construction) coalesced into
+    maximal disjoint spans per event_type — one key-partitioned
+    Exchange, running-max frame (incremental, never a full-partition
+    buffer)."""
+    from word_sense_disambiguation_spark.operators.temporal import (
+        interval_coalesce,
+    )
+
+    ev = _t(spark, sf_dir, "events").filter(
+        F.col("event_type").isNotNull()
+        & F.col("user_id").isNotNull()
+        & F.col("event_id").isNotNull()
+    )
+    iv = ev.select(
+        "event_type",
+        (F.col("event_id") % 997).cast("long").alias("s"),
+        (F.col("event_id") % 997 + 1 + F.col("user_id") % 7)
+        .cast("long")
+        .alias("e"),
+        F.col("event_id").cast("long").alias("eid"),
+    )
+    return interval_coalesce(
+        iv, ["event_type"], "s", "e", tiebreak_cols=["eid"]
+    ).select(
+        "event_type",
+        F.col("start"),
+        F.col("end"),
+        "n_intervals",
+    )
+
+
+def _q_funnel_counts(spark, sf_dir):
+    """Ordered view -> click -> purchase conversion funnel: step i
+    counts users whose earliest step-(i-1) completion STRICTLY precedes
+    (by the full (ts, event_id) struct — burst-tie deterministic) some
+    step-i event. One partial-combined groupBy per step on the user
+    clustering; the only driver traffic is one scalar count per step."""
+    from word_sense_disambiguation_spark.operators.temporal import (
+        funnel_counts,
+    )
+
+    ev = _t(spark, sf_dir, "events").filter(
+        F.col("user_id").isNotNull()
+        & F.col("ts").isNotNull()
+        & F.col("event_id").isNotNull()
+        & F.col("event_type").isNotNull()
+    )
+    return funnel_counts(
+        ev, "user_id", "ts", "event_type",
+        ["view", "click", "purchase"], "event_id",
+    )
+
+
 def _q_snapshot_diff(spark, sf_dir):
     """Merkle-style anti-entropy diff between the documents table and a
     deterministically perturbed replica (doc_id%41 deleted, doc_id%37
@@ -2065,6 +2568,69 @@ def _q_snapshot_diff(spark, sf_dir):
     )
 
 
+def _q_overlap_join(spark, sf_dir):
+    """Interval x interval OVERLAP join (fetch windows vs outage
+    windows, derived deterministically from events) as a bucketized
+    equi-join with the exactly-once overlap-start-bucket rule — the
+    third temporal-join family next to asof (latest-before) and
+    range_join (point containment). The oracle replays it as the plain
+    inequality join: bucketing affects cost only, never rows."""
+    from word_sense_disambiguation_spark.operators.temporal import (
+        interval_overlap_join,
+    )
+
+    ev = _t(spark, sf_dir, "events").filter(
+        F.col("event_type").isNotNull()
+        & F.col("user_id").isNotNull()
+        & F.col("event_id").isNotNull()
+    )
+    left = ev.filter(F.col("event_id") % 11 == 0).select(
+        "event_type",
+        F.col("event_id").cast("long").alias("la"),
+        (F.col("event_id") % 997).cast("double").alias("a_lo"),
+        (F.col("event_id") % 997 + 1 + F.col("user_id") % 5)
+        .cast("double")
+        .alias("a_hi"),
+    )
+    right = ev.filter(F.col("event_id") % 13 == 0).select(
+        F.col("event_type").alias("event_type_r"),
+        F.col("event_id").cast("long").alias("rb"),
+        ((F.col("event_id") * 7) % 991).cast("double").alias("b_lo"),
+        ((F.col("event_id") * 7) % 991 + 1 + F.col("user_id") % 3)
+        .cast("double")
+        .alias("b_hi"),
+    ).withColumnRenamed("event_type_r", "event_type")
+    pairs, _oversized = interval_overlap_join(
+        left, right, "a_lo", "a_hi", "b_lo", "b_hi",
+        keys=["event_type"], bucket_width=8.0, max_buckets=64,
+    )
+    return pairs.select(
+        "event_type",
+        "la",
+        F.col("a_lo").cast("long").alias("a_lo"),
+        F.col("a_hi").cast("long").alias("a_hi"),
+        "rb",
+        F.col("b_lo").cast("long").alias("b_lo"),
+        F.col("b_hi").cast("long").alias("b_hi"),
+    )
+
+
+def _q_compaction_plan(spark, sf_dir):
+    """Small-file compaction planner over (lang, source) slices of the
+    documents table (n_chars as the byte proxy, 4 KiB target so sf0.01
+    exercises multi-file splits): files/rows-per-file via pure integer
+    ceil-DIV — Spark's `/` is IEEE and loses integers past 2^53, real
+    at crawl-scale byte totals."""
+    from word_sense_disambiguation_spark.operators.zorder import (
+        compaction_plan,
+    )
+
+    docs = _t(spark, sf_dir, "documents")
+    return compaction_plan(
+        docs, ["lang", "source"], "n_chars", target_file_bytes=4096
+    )
+
+
 def _q_covisitation(spark, sf_dir):
     """Bipartite co-visitation projection of the clickstream (items =
     the same event_type:floor(value) page proxies as the transition
@@ -2093,6 +2659,20 @@ def _q_covisitation(spark, sf_dir):
         ui, "user_id", "item", max_items_per_user=100, min_weight=5
     )
     return edges
+
+
+def _q_markov_transitions(spark, sf_dir):
+    """First-order Markov transition table over the SAME clickstream
+    transition graph as ``clickstream_rank`` (see ``_click_edges``):
+    exact BIGINT counts, per-source outflow totals, and transition
+    probabilities as scaled integers ``(n * 1e6) DIV out_total`` — the
+    click-model training weights, bit-for-bit replayable (one integer
+    DIV per row, no float sums)."""
+    from word_sense_disambiguation_spark.operators.temporal import (
+        transition_model,
+    )
+
+    return transition_model(_click_edges(spark, sf_dir), scale=1_000_000)
 
 
 def _q_referential_integrity(spark, sf_dir):
@@ -2148,6 +2728,20 @@ def _q_bfs_reach(spark, sf_dir):
     )
 
 
+def _q_retention_cohorts(spark, sf_dir):
+    """Daily retention triangle over the events table: users cohorted
+    by first-active day (UTC epoch-day via unix_timestamp DIV — the
+    floor(epoch) oracle idiom), exact distinct-user counts per
+    (cohort_period, periods_since). All BIGINT."""
+    from word_sense_disambiguation_spark.operators.temporal import (
+        retention_cohorts,
+    )
+
+    return retention_cohorts(
+        _t(spark, sf_dir, "events"), "user_id", "ts", period_s=86_400
+    )
+
+
 def _q_distribution_drift(spark, sf_dir):
     """Categorical TV-distance drift between the even- and odd-event_id
     halves of the events table (a deterministic snapshot split), per
@@ -2199,6 +2793,21 @@ def _q_path_rollup(spark, sf_dir):
     return path_rollup(
         docs.select(url.alias("url"), "n_chars"), "url", "n_chars",
         max_depth=3,
+    )
+
+
+def _q_session_rollup(spark, sf_dir):
+    """Per-user sessions via the NATIVE session_window aggregate (gap
+    30 min, pinned strict-> boundary rule — exactly-gap-apart events
+    MERGE), floored-epoch bounds, BIGINT aggregates. The oracle replays
+    it as the lag-island construction on exact microseconds — proving
+    the built-in and the window machinery agree row-for-row."""
+    from word_sense_disambiguation_spark.operators.temporal import (
+        session_window_stats,
+    )
+
+    return session_window_stats(
+        _t(spark, sf_dir, "events"), "user_id", "ts", "event_id"
     )
 
 
@@ -2349,7 +2958,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "adjective_expansion": _q_adjective_expansion,
         "mode_per_group": _q_mode_per_group,
         "disjoint_split_buckets": _q_disjoint_split,
+        "langid_accuracy": _q_langid_accuracy,
         "mark_first_occurrence": _q_mark_first,
+        "text_profile": _q_text_profile,
         "token_histogram": _q_token_histogram,
         "exact_dedup": _q_exact_dedup,
         "ngram_jaccard_block": _q_ngram_jaccard,
@@ -2371,16 +2982,25 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "label_communities": _q_label_communities,
         "triangle_profile": _q_triangle_profile,
         "cluster_churn": _q_cluster_churn,
+        "media_metadata": _q_media_metadata,
+        "image_header_dims": _q_image_header_dims,
+        "frame_sample": _q_frame_sample,
+        "resize_metadata": _q_resize_metadata,
+        "payload_histogram": _q_payload_histogram,
+        "fingerprint_counts": _q_fingerprints,
         "site_quota_sample": _q_site_quota_sample,
         "quality_rule_flags": _q_quality_rule_flags,
         "url_canonicalize": _q_url_canonicalize,
         "boilerplate_dedup": _q_boilerplate_dedup,
         "pii_redaction": _q_pii_redaction,
         "doc_packing": _q_doc_packing,
+        "repetition_stats": _q_repetition_stats,
         "mixture_sample": _q_mixture_sample,
         "contamination_check": _q_contamination,
         "substring_span_dedup": _q_substring_span_dedup,
         "quality_classifier": _q_quality_classifier,
+        "ccnet_buckets": _q_ccnet_buckets,
+        "length_outliers": _q_length_outliers,
         "rrf_hybrid": _q_rrf_hybrid,
         "fellegi_sunter": _q_fellegi_sunter,
         "mutual_best_match": _q_mutual_best_match,
@@ -2394,11 +3014,25 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "fs_match_probability": _q_fs_match_probability,
         "blocking_cost": _q_blocking_cost,
         "sparsify_topk": _q_sparsify_topk,
+        "script_profile": _q_script_profile,
+        "vocabulary": _q_vocabulary,
+        "cooccurrence": _q_cooccurrence,
+        "token_diversity": _q_token_diversity,
         "blocking_quality": _q_blocking_quality,
         "metablocking_prune": _q_metablocking_prune,
+        "asof_join": _q_asof_join,
+        "range_join": _q_range_join,
+        "time_rollup": _q_time_rollup,
+        "group_quantiles": _q_group_quantiles,
+        "sampled_quantiles": _q_sampled_quantiles,
         "phonetic_blocking": _q_phonetic_blocking,
+        "zorder_layout": _q_zorder_layout,
+        "hopping_window": _q_hopping_window,
+        "latest_snapshot": _q_latest_snapshot,
         "profile_columns": _q_profile_columns,
         "table_checksum": _q_table_checksum,
+        "chunk_documents": _q_chunk_documents,
+        "distinctive_terms": _q_distinctive_terms,
         "incremental_dedup": _q_incremental_dedup,
         "blocklist_filter": _q_blocklist_filter,
         "dedup_keep_best": _q_dedup_keep_best,
@@ -2432,14 +3066,22 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "decode_probabilities": _q_decode_probabilities,
         "prompt_path_assignments": _q_prompt_path_assignments,
         "prompt_path_assignments_derived": _q_prompt_path_derived,
+        "scd2_history": _q_scd2_history,
         "constrained_clusters": _q_constrained_clusters,
         "kcore": _q_kcore,
+        "interval_merge": _q_interval_merge,
+        "funnel_counts": _q_funnel_counts,
         "snapshot_diff": _q_snapshot_diff,
+        "overlap_join": _q_overlap_join,
+        "compaction_plan": _q_compaction_plan,
         "covisitation": _q_covisitation,
+        "markov_transitions": _q_markov_transitions,
         "referential_integrity": _q_referential_integrity,
         "bfs_reach": _q_bfs_reach,
+        "retention_cohorts": _q_retention_cohorts,
         "distribution_drift": _q_distribution_drift,
         "path_rollup": _q_path_rollup,
+        "session_rollup": _q_session_rollup,
         "deletion_impact": _q_deletion_impact,
         "link_graph": _q_link_graph,
         "host_rank": _q_host_rank,
@@ -2715,11 +3357,62 @@ def oracle_sql() -> dict[str, str]:
                    count(*) AS n_orders, count(DISTINCT o_custkey) AS n_custs
             FROM orders GROUP BY 1
         """,
+        "langid_accuracy": f"""
+            SELECT count(*) AS n,
+                   CAST(sum(CASE WHEN pred = lang THEN 1 ELSE 0 END) AS BIGINT) AS n_match
+            FROM (
+              SELECT lang,
+                     CASE WHEN en > 0 AND en = g THEN 'en'
+                          WHEN fr > 0 AND fr = g THEN 'fr'
+                          WHEN es > 0 AND es = g THEN 'es'
+                          WHEN de > 0 AND de = g THEN 'de'
+                          ELSE 'und' END AS pred
+              FROM (
+                SELECT lang,
+                       len(regexp_extract_all(lower(text), '{_EN}')) AS en,
+                       len(regexp_extract_all(lower(text), '{_FR}')) AS fr,
+                       len(regexp_extract_all(lower(text), '{_ES}')) AS es,
+                       len(regexp_extract_all(lower(text), '{_DE}')) AS de,
+                       greatest(len(regexp_extract_all(lower(text), '{_EN}')),
+                                len(regexp_extract_all(lower(text), '{_FR}')),
+                                len(regexp_extract_all(lower(text), '{_ES}')),
+                                len(regexp_extract_all(lower(text), '{_DE}'))) AS g
+                FROM documents))
+        """,
         "mark_first_occurrence": """
             SELECT doc_id,
                    substr(text, 1, strpos(text, ' the ')) || '*the*'
                    || substr(text, strpos(text, ' the ') + 4) AS marked
             FROM documents WHERE strpos(text, ' the ') > 0
+        """,
+        "text_profile": f"""
+            SELECT doc_id,
+                   len(regexp_split_to_array(trim(text), '[ \t\n\r\f\x0B]+')) AS ws_tokens,
+                   len(regexp_extract_all(text, '{_BPE_RE}')) AS bpe_tokens,
+                   CASE WHEN en > 0 AND en = g THEN 'en'
+                        WHEN fr > 0 AND fr = g THEN 'fr'
+                        WHEN es > 0 AND es = g THEN 'es'
+                        WHEN de > 0 AND de = g THEN 'de'
+                        ELSE 'und' END AS pred_lang,
+                   round(
+                     0.3 * least(CAST(length(text) AS DOUBLE) / 200.0, 1.0)
+                   + 0.3 * greatest(1.0 - CAST(len(regexp_extract_all(text, '[^\\w \t\n\r\f\x0B]')) AS DOUBLE)
+                                    / CAST(greatest(len(regexp_extract_all(text, '{_WORD_RE}')), 1) AS DOUBLE), 0.0)
+                   + 0.2 * least(CAST(en AS DOUBLE) * 5.0
+                                 / CAST(greatest(len(regexp_extract_all(text, '{_WORD_RE}')), 1) AS DOUBLE), 1.0)
+                   + 0.2 * (CASE WHEN CAST(length(text) AS DOUBLE) / CAST(greatest(len(regexp_extract_all(text, '{_WORD_RE}')), 1) AS DOUBLE) BETWEEN 3.0 AND 12.0
+                            THEN 1.0 ELSE 0.5 END), 6) AS quality
+            FROM (
+              SELECT doc_id, text,
+                     len(regexp_extract_all(lower(text), '{_EN}')) AS en,
+                     len(regexp_extract_all(lower(text), '{_FR}')) AS fr,
+                     len(regexp_extract_all(lower(text), '{_ES}')) AS es,
+                     len(regexp_extract_all(lower(text), '{_DE}')) AS de,
+                     greatest(len(regexp_extract_all(lower(text), '{_EN}')),
+                              len(regexp_extract_all(lower(text), '{_FR}')),
+                              len(regexp_extract_all(lower(text), '{_ES}')),
+                              len(regexp_extract_all(lower(text), '{_DE}'))) AS g
+              FROM documents)
         """,
         "token_histogram": """
             SELECT CAST(floor(len(regexp_split_to_array(trim(text), '[ \t\n\r\f\x0B]+')) / 10) AS BIGINT) AS bucket,
@@ -2753,6 +3446,141 @@ def oracle_sql() -> dict[str, str]:
                  AND a.doc_id < b.doc_id
             WHERE CAST(len(list_filter(a.grams, x -> list_contains(b.grams, x))) AS DOUBLE)
                   / CAST(len(list_distinct(list_concat(a.grams, b.grams))) AS DOUBLE) > 0.0
+        """,
+        # Diversity replay: same counts, HUGEINT sum of squares, same
+        # 1 - c2/(n*n) tree.
+        "token_diversity": r"""
+            WITH toks AS (
+              SELECT doc_id,
+                     unnest(regexp_split_to_array(lower(trim(COALESCE(text, ''))), '[ \t\n\r\f\x0B]+')) AS token
+              FROM documents
+            ),
+            tf AS (
+              SELECT doc_id, token, CAST(count(*) AS BIGINT) AS c
+              FROM toks WHERE token <> '' GROUP BY doc_id, token
+            ),
+            pd AS (
+              SELECT doc_id,
+                     CAST(sum(c) AS BIGINT) AS n_tokens,
+                     CAST(count(*) AS BIGINT) AS n_distinct,
+                     sum(CAST(c * c AS HUGEINT)) AS c2
+              FROM tf GROUP BY doc_id
+            )
+            SELECT d.doc_id,
+                   CAST(COALESCE(pd.n_tokens, 0) AS BIGINT) AS n_tokens,
+                   CAST(COALESCE(pd.n_distinct, 0) AS BIGINT) AS n_distinct,
+                   CASE WHEN pd.n_tokens IS NULL OR pd.n_tokens = 0
+                        THEN CAST(NULL AS DOUBLE)
+                        ELSE CAST(1.0 AS DOUBLE) - CAST(pd.c2 AS DOUBLE)
+                             / (CAST(pd.n_tokens AS DOUBLE)
+                                * CAST(pd.n_tokens AS DOUBLE))
+                   END AS simpson_diversity
+            FROM documents d LEFT JOIN pd ON pd.doc_id = d.doc_id
+        """,
+        # Co-occurrence replay: same raw-index positions, same canonical
+        # least/greatest pairs, pre-floor totals, identical IEEE tree.
+        "cooccurrence": r"""
+            WITH docsplit AS (
+              SELECT doc_id,
+                     regexp_split_to_array(lower(trim(COALESCE(text, ''))), '[ \t\n\r\f\x0B]+') AS toks
+              FROM documents
+            ),
+            tp AS (
+              SELECT doc_id AS did, i AS pos, toks[i + 1] AS tok
+              FROM (SELECT doc_id, toks, unnest(range(len(toks))) AS i
+                    FROM docsplit)
+              WHERE toks[i + 1] <> ''
+            ),
+            uni AS (
+              SELECT tok AS w, CAST(count(*) AS BIGINT) AS n_w
+              FROM tp GROUP BY tok
+            ),
+            tt AS (SELECT CAST(COALESCE(sum(n_w), 0) AS BIGINT) AS t_tok FROM uni),
+            pr AS (
+              SELECT least(a.tok, b.tok) AS w1, greatest(a.tok, b.tok) AS w2
+              FROM tp a
+              JOIN tp b ON a.did = b.did
+               AND (b.pos = a.pos + 1 OR b.pos = a.pos + 2)
+            ),
+            pc AS (
+              SELECT w1, w2, CAST(count(*) AS BIGINT) AS n_pair
+              FROM pr GROUP BY w1, w2
+            ),
+            tpr AS (SELECT CAST(COALESCE(sum(n_pair), 0) AS BIGINT) AS t_pairs FROM pc)
+            SELECT pc.w1, pc.w2, pc.n_pair,
+                   (CAST(pc.n_pair AS DOUBLE) * (CAST(tt.t_tok AS DOUBLE)
+                                                 * CAST(tt.t_tok AS DOUBLE)))
+                   / ((CAST(tpr.t_pairs AS DOUBLE) * CAST(u1.n_w AS DOUBLE))
+                      * CAST(u2.n_w AS DOUBLE)) AS assoc_ratio
+            FROM pc
+            JOIN uni u1 ON u1.w = pc.w1
+            JOIN uni u2 ON u2.w = pc.w2
+            CROSS JOIN tt CROSS JOIN tpr
+            WHERE pc.n_pair >= 5
+        """,
+        # Vocabulary replay: same token counts, same total order, same
+        # floor and limit, row_number ranks.
+        "vocabulary": r"""
+            WITH toks AS (
+              SELECT unnest(regexp_split_to_array(lower(trim(COALESCE(text, ''))), '[ \t\n\r\f\x0B]+')) AS token
+              FROM documents
+            ),
+            c AS (
+              SELECT token, CAST(count(*) AS BIGINT) AS count
+              FROM toks WHERE token <> ''
+              GROUP BY token HAVING count(*) >= 5
+            ),
+            r AS (
+              SELECT token, count,
+                     row_number() OVER (ORDER BY count DESC, token ASC)
+                       AS rank
+              FROM c
+            )
+            SELECT CAST(rank AS BIGINT) AS rank, token, count
+            FROM r WHERE rank <= 500
+        """,
+        # Script-composition replay: identical literal BMP ranges in RE2
+        # \x{...} syntax, global-flag regexp_replace deletion counts,
+        # same fixed-priority dominant CASE, one IEEE division.
+        "script_profile": r"""
+            WITH t AS (
+              SELECT doc_id, COALESCE(text, '') AS s FROM documents
+            ),
+            c AS (
+              SELECT doc_id,
+                     CAST(length(s) AS BIGINT) AS n_chars,
+                     CAST(length(s) - length(regexp_replace(s,
+                       '[A-Za-z\x{00C0}-\x{00D6}\x{00D8}-\x{00F6}\x{00F8}-\x{024F}]', '', 'g'))
+                       AS BIGINT) AS n_latin,
+                     CAST(length(s) - length(regexp_replace(s,
+                       '[\x{0400}-\x{04FF}]', '', 'g')) AS BIGINT) AS n_cyrillic,
+                     CAST(length(s) - length(regexp_replace(s,
+                       '[\x{0370}-\x{03FF}]', '', 'g')) AS BIGINT) AS n_greek,
+                     CAST(length(s) - length(regexp_replace(s,
+                       '[\x{0600}-\x{06FF}]', '', 'g')) AS BIGINT) AS n_arabic,
+                     CAST(length(s) - length(regexp_replace(s,
+                       '[\x{4E00}-\x{9FFF}\x{3040}-\x{30FF}\x{AC00}-\x{D7A3}]', '', 'g'))
+                       AS BIGINT) AS n_cjk
+              FROM t
+            )
+            SELECT doc_id, n_chars, n_latin, n_cyrillic, n_greek, n_arabic,
+                   n_cjk,
+                   CASE WHEN greatest(n_latin, n_cyrillic, n_greek, n_arabic, n_cjk) = 0
+                          THEN 'none'
+                        WHEN n_latin = greatest(n_latin, n_cyrillic, n_greek, n_arabic, n_cjk)
+                          THEN 'latin'
+                        WHEN n_cyrillic = greatest(n_latin, n_cyrillic, n_greek, n_arabic, n_cjk)
+                          THEN 'cyrillic'
+                        WHEN n_greek = greatest(n_latin, n_cyrillic, n_greek, n_arabic, n_cjk)
+                          THEN 'greek'
+                        WHEN n_arabic = greatest(n_latin, n_cyrillic, n_greek, n_arabic, n_cjk)
+                          THEN 'arabic'
+                        ELSE 'cjk' END AS dominant_script,
+                   CASE WHEN n_chars = 0 THEN CAST(NULL AS DOUBLE)
+                        ELSE CAST(greatest(n_latin, n_cyrillic, n_greek, n_arabic, n_cjk) AS DOUBLE)
+                             / CAST(n_chars AS DOUBLE)
+                   END AS dominant_ratio
+            FROM c
         """,
         # Blocking-cost replay: one size aggregate, HUGEINT doubled sums
         # (Spark sums DECIMAL(38,0)), one IEEE division for the share.
@@ -3428,6 +4256,86 @@ def oracle_sql() -> dict[str, str]:
             GROUP BY p.id_a, p.id_b
             HAVING sum(CASE WHEN a.m <> b.m THEN 1 ELSE 0 END) <= 3
         """,
+        # Winnowing 0-mod-8 sampling: keep window-grams whose little-endian
+        # md5-u64 is 0 mod 8 — i.e. the low 3 bits of digest byte 0 (hex
+        # chars 1..2) are zero.
+        "fingerprint_counts": """
+            WITH s AS (
+              SELECT doc_id,
+                     trim(regexp_replace(lower(text), '[ \t\n\r\f\x0B]+', ' ', 'g')) AS s
+              FROM documents
+            ),
+            kept AS (
+              SELECT doc_id
+              FROM (SELECT doc_id, s, unnest(range(0, length(s) - 15)) AS i
+                    FROM s WHERE length(s) >= 16)
+              WHERE CAST(('0x' || substr(md5('fp:' || substr(s, i + 1, 16)), 1, 2))
+                         AS INTEGER) % 8 = 0
+              UNION ALL
+              SELECT doc_id FROM s WHERE length(s) > 0 AND length(s) < 16
+            )
+            SELECT doc_id AS id, count(*) AS n_fp FROM kept GROUP BY doc_id
+        """,
+        # width/height are template constants (first bytes of the html
+        # wrapper, see media_metadata); scales are single IEEE divisions.
+        "resize_metadata": """
+            SELECT 'https://crawl.example/' || source || '/doc-'
+                     || lpad(CAST(doc_id AS VARCHAR), 9, '0') AS url,
+                   2109 AS width, 3445 AS height,
+                   224 AS target_w, 224 AS target_h,
+                   CAST(224 AS DOUBLE) / 2109 AS scale_x,
+                   CAST(224 AS DOUBLE) / 3445 AS scale_y
+            FROM documents
+        """,
+        # 16-bin high-nibble histogram of the first 256 html bytes; the
+        # html string is reconstructed from the wrapper template (escape
+        # '&' first, then '<' and '>', matching html.escape), and fractions
+        # are exact count/len doubles.
+        "payload_histogram": """
+            WITH built AS (
+              SELECT 'https://crawl.example/' || source || '/doc-'
+                       || lpad(CAST(doc_id AS VARCHAR), 9, '0') AS url,
+                     '<html><head><meta charset="utf-8"><title>'
+                       || 'https://crawl.example/' || source || '/doc-'
+                       || lpad(CAST(doc_id AS VARCHAR), 9, '0')
+                       || '</title></head><body><article>'
+                       || replace(replace(replace(text, '&', '&amp;'),
+                                          '<', '&lt;'), '>', '&gt;')
+                       || '</article></body></html>' AS html_str
+              FROM documents
+            ),
+            -- BYTES of the UTF-8 payload, not characters: the operator
+            -- histograms the binary head, and ord(char)//16 only
+            -- coincides with byte>>4 on ASCII (fuzz-found; testdata
+            -- html is ASCII after entity escaping)
+            h AS (SELECT url,
+                         substr(hex(encode(html_str)), 1, 512) AS hx
+                  FROM built),
+            b AS (
+              SELECT url,
+                     CAST(('0x' || substr(hx, 2 * i + 1, 2)) AS INTEGER) // 16
+                       AS bin
+              FROM (SELECT url, hx, unnest(range(len(hx) // 2)) AS i FROM h)
+            ),
+            grid AS (
+              SELECT url, greatest(len(hx) // 2, 1) AS n,
+                     unnest(range(16)) AS bin
+              FROM h
+            ),
+            counts AS (SELECT url, bin, count(*) AS c FROM b GROUP BY url, bin)
+            SELECT g.url, CAST(g.bin AS INT) AS bin,
+                   CAST(COALESCE(c.c, 0) AS DOUBLE) / g.n AS frac
+            FROM grid g LEFT JOIN counts c ON g.url = c.url AND g.bin = c.bin
+        """,
+        # every_n=8 over the template-constant n_frames=45 (see the
+        # media_metadata oracle's derivation): frames 0,8,...,40 per url.
+        "frame_sample": """
+            SELECT 'https://crawl.example/' || source || '/doc-'
+                     || lpad(CAST(doc_id AS VARCHAR), 9, '0') AS url,
+                   CAST(f.f AS INT) AS frame_no
+            FROM documents
+            CROSS JOIN (SELECT unnest([0, 8, 16, 24, 32, 40]) AS f) f
+        """,
         # Corpus-curation filters. site_quota_sample: the salted two-level
         # top-K equals a global per-site top-K (the K smallest of a set
         # are among the K smallest of each part), so the oracle is the
@@ -3842,6 +4750,91 @@ def oracle_sql() -> dict[str, str]:
             SELECT query, item, fused_milli, fused_rank
             FROM ranked WHERE fused_rank <= 10
         """,
+        # MAD replay: exact type-1 medians via row_number + ceil-rank
+        # (greatest(1,(n+1)//2)), deviation median the same way, flag as
+        # the identical integer cross-multiply (k_milli=3500).
+        "length_outliers": r"""
+            WITH v AS (SELECT doc_id, lang, source, n_chars FROM documents),
+            c1 AS (SELECT lang, source, CAST(count(*) AS BIGINT) AS n
+                   FROM v WHERE n_chars IS NOT NULL GROUP BY 1, 2),
+            r1 AS (SELECT lang, source, n_chars,
+                          row_number() OVER (PARTITION BY lang, source
+                                             ORDER BY n_chars) AS r
+                   FROM v WHERE n_chars IS NOT NULL),
+            med AS (SELECT r1.lang, r1.source,
+                           CAST(MAX(CASE WHEN r = greatest(1, (n + 1) // 2)
+                                         THEN n_chars END) AS BIGINT)
+                             AS group_median
+                    FROM r1 JOIN c1 USING (lang, source) GROUP BY 1, 2),
+            d AS (SELECT v.lang, v.source,
+                         abs(v.n_chars - m.group_median) AS dev
+                  FROM v JOIN med m USING (lang, source)
+                  WHERE v.n_chars IS NOT NULL),
+            c2 AS (SELECT lang, source, CAST(count(*) AS BIGINT) AS n
+                   FROM d GROUP BY 1, 2),
+            r2 AS (SELECT lang, source, dev,
+                          row_number() OVER (PARTITION BY lang, source
+                                             ORDER BY dev) AS r
+                   FROM d),
+            mad AS (SELECT r2.lang, r2.source,
+                           CAST(MAX(CASE WHEN r = greatest(1, (n + 1) // 2)
+                                         THEN dev END) AS BIGINT) AS group_mad
+                    FROM r2 JOIN c2 USING (lang, source) GROUP BY 1, 2)
+            SELECT v.doc_id, v.lang, v.source, v.n_chars,
+                   m.group_median, d2.group_mad,
+                   CASE WHEN v.n_chars IS NULL THEN CAST(NULL AS BOOLEAN)
+                        ELSE abs(v.n_chars - m.group_median) * 1000
+                             > 3500 * d2.group_mad END AS is_outlier
+            FROM v
+            LEFT JOIN med m ON m.lang = v.lang AND m.source = v.source
+            LEFT JOIN mad d2 ON d2.lang = v.lang AND d2.source = v.source
+        """,
+        # CCNet-bucket replay: the classifier score CTE, per-lang counts,
+        # row_number ranks, type-1 cuts at ceil(i*n/3) (integer DIV), then
+        # the same strict-> indicator sum and ascending labels.
+        "ccnet_buckets": r"""
+            WITH toks AS (
+              SELECT doc_id,
+                     regexp_split_to_array(lower(trim(COALESCE(text, ''))), '[ \t\n\r\f\x0B]+') AS t
+              FROM documents
+            ),
+            s AS (
+              SELECT doc_id,
+                     CAST(len(t) AS BIGINT) AS n_tokens,
+                     CAST(list_sum(list_transform(t,
+                       tok -> (CAST(('0x' || substr(md5(tok), 1, 15)) AS BIGINT) % 2001) - 1000
+                     )) AS BIGINT) AS logit_milli
+              FROM toks
+            ),
+            sc AS (
+              SELECT s.doc_id, d.lang,
+                     CAST(logit_milli AS DOUBLE)
+                       / (1000.0 * CAST(n_tokens AS DOUBLE)) AS score
+              FROM s JOIN documents d USING (doc_id)
+            ),
+            cnt AS (SELECT lang, CAST(count(*) AS BIGINT) AS n
+                    FROM sc WHERE score IS NOT NULL GROUP BY lang),
+            rk AS (
+              SELECT lang, score,
+                     row_number() OVER (PARTITION BY lang ORDER BY score) AS r
+              FROM sc WHERE score IS NOT NULL
+            ),
+            cuts AS (
+              SELECT rk.lang,
+                     MAX(CASE WHEN r = greatest(1, (1 * n + 2) // 3)
+                              THEN score END) AS c1,
+                     MAX(CASE WHEN r = greatest(1, (2 * n + 2) // 3)
+                              THEN score END) AS c2
+              FROM rk JOIN cnt USING (lang) GROUP BY rk.lang
+            )
+            SELECT sc.doc_id, sc.lang, sc.score,
+                   CASE WHEN sc.score IS NULL THEN CAST(NULL AS VARCHAR)
+                        ELSE CASE (CASE WHEN sc.score > c.c1 THEN 1 ELSE 0 END)
+                                + (CASE WHEN sc.score > c.c2 THEN 1 ELSE 0 END)
+                             WHEN 0 THEN 'tail' WHEN 1 THEN 'middle'
+                             ELSE 'head' END END AS bucket
+            FROM sc LEFT JOIN cuts c ON c.lang = sc.lang
+        """,
         # Curation-composition replay: the quality keep-conjunction, the
         # certified minhash closure RESTRICTED to survivors, the keep-best
         # row_number pick (n_chars DESC, id ASC), and the packing window
@@ -4152,6 +5145,60 @@ def oracle_sql() -> dict[str, str]:
                    CAST(CAST(('0x' || substr(md5('42:' || CAST(cluster_id AS VARCHAR)), 1, 8)) AS BIGINT) % 10 AS INT) AS bucket
             FROM clusters
         """,
+        # Same gram construction (concat_ws of token slices), same
+        # (count desc, gram asc) argmax, same overlap-naive char-coverage
+        # formulas, single IEEE division each.
+        "repetition_stats": r"""
+            WITH base AS (
+              SELECT doc_id, length(text) AS chars,
+                     CASE WHEN trim(text) = '' THEN []
+                          ELSE regexp_split_to_array(trim(text), '[ \t\n\r\f\x0B]+')
+                     END AS toks
+              FROM documents
+            ),
+            g2 AS (
+              SELECT doc_id, gram, count(*) AS cnt,
+                     count(*) * length(gram) AS covered
+              FROM (
+                SELECT doc_id,
+                       array_to_string(list_slice(toks, i + 1, i + 2), ' ') AS gram
+                FROM (SELECT doc_id, toks,
+                             unnest(range(len(toks) - 1)) AS i
+                      FROM base WHERE len(toks) >= 2))
+              GROUP BY doc_id, gram
+            ),
+            top2 AS (
+              SELECT doc_id, covered AS top_covered FROM (
+                SELECT doc_id, covered,
+                       row_number() OVER (PARTITION BY doc_id
+                                          ORDER BY cnt DESC, gram ASC) AS rn
+                FROM g2)
+              WHERE rn = 1
+            ),
+            g5 AS (
+              SELECT doc_id, gram, count(*) AS cnt,
+                     count(*) * length(gram) AS covered
+              FROM (
+                SELECT doc_id,
+                       array_to_string(list_slice(toks, i + 1, i + 5), ' ') AS gram
+                FROM (SELECT doc_id, toks,
+                             unnest(range(len(toks) - 4)) AS i
+                      FROM base WHERE len(toks) >= 5))
+              GROUP BY doc_id, gram
+            ),
+            dup5 AS (
+              SELECT doc_id, SUM(covered) AS dup_covered
+              FROM g5 WHERE cnt > 1 GROUP BY doc_id
+            )
+            SELECT b.doc_id,
+                   CAST(COALESCE(t.top_covered, 0) AS DOUBLE)
+                     / greatest(b.chars, 1) AS top_ngram_char_frac,
+                   CAST(COALESCE(d.dup_covered, 0) AS DOUBLE)
+                     / greatest(b.chars, 1) AS dup_ngram_char_frac
+            FROM base b
+            LEFT JOIN top2 t ON b.doc_id = t.doc_id
+            LEFT JOIN dup5 d ON b.doc_id = d.doc_id
+        """,
         # Ordered replace-and-count replay over the same planted PII; the
         # patterns use explicit ASCII classes and no lookaround, the
         # regimes where Java regex and RE2 agree exactly (counts are over
@@ -4289,6 +5336,96 @@ def oracle_sql() -> dict[str, str]:
                         ELSE 0.0 END AS dup_fraction
             FROM base b LEFT JOIN perdoc p USING (doc_id)
         """,
+        # As-of replay: explicit argmax window (rn=1 over ts DESC,
+        # event_id DESC among right rows <= left ts) rather than native
+        # ASOF JOIN, so the inclusive bound and the tie rule are pinned
+        # in SQL, not in an engine default.
+        "asof_join": """
+            WITH l AS (
+              SELECT event_id, user_id, ts, value
+              FROM events WHERE event_type = 'view'
+            ),
+            r AS (
+              SELECT event_id, user_id, ts, value
+              FROM events WHERE event_type = 'click' AND ts IS NOT NULL
+            ),
+            j AS (
+              SELECT l.event_id AS levt,
+                     r.ts AS r_ts, r.event_id AS r_id, r.value AS r_value,
+                     row_number() OVER (PARTITION BY l.event_id
+                       ORDER BY r.ts DESC, r.event_id DESC) AS rn
+              FROM l JOIN r ON l.user_id = r.user_id AND r.ts <= l.ts
+            )
+            SELECT l.event_id, l.user_id, l.ts, l.value,
+                   j.r_ts AS asof_ts, j.r_id AS asof_event_id,
+                   j.r_value AS asof_value
+            FROM l LEFT JOIN (SELECT * FROM j WHERE rn = 1) j
+              ON l.event_id = j.levt
+        """,
+        # Exact-quantile replay: the same type-1 order statistic —
+        # row_number over the sorted group, target rank in PURE INTEGER
+        # arithmetic (ceil(num*n/den) = (num*n + den - 1) // den; a
+        # float ceil(p*n) diverges from the true rank — IEEE
+        # ceil(0.14 * 100) is 15, not 14). Ties make row identity
+        # ambiguous but the VALUE at every rank is deterministic, and
+        # value is all that's emitted.
+        "group_quantiles": """
+            WITH v AS (
+              SELECT source, n_chars FROM documents WHERE n_chars IS NOT NULL
+            ),
+            r AS (
+              SELECT source, n_chars,
+                     CAST(row_number() OVER (
+                       PARTITION BY source ORDER BY n_chars
+                     ) AS BIGINT) AS rr
+              FROM v
+            ),
+            n AS (
+              SELECT source, CAST(count(*) AS BIGINT) AS n
+              FROM v GROUP BY source
+            ),
+            t(quantile, num, den) AS (
+              VALUES ('p50', 1, 2), ('p90', 9, 10), ('p99', 99, 100)
+            )
+            SELECT r.source, t.quantile,
+                   CAST(greatest(1, (t.num * n.n + t.den - 1) // t.den)
+                        AS BIGINT) AS q_rank,
+                   CAST(r.n_chars AS BIGINT) AS q_value
+            FROM r
+            JOIN n ON r.source = n.source
+            JOIN t ON r.rr = greatest(1, (t.num * n.n + t.den - 1) // t.den)
+        """,
+        # Sampled-quantile replay: the SAME deterministic md5 Bernoulli
+        # predicate, then the exact integer-rank replay on the sample.
+        "sampled_quantiles": """
+            WITH v AS (
+              SELECT source, n_chars FROM documents
+              WHERE n_chars IS NOT NULL
+                AND CAST(('0x' || substr(md5('qs:' || CAST(doc_id AS VARCHAR)),
+                    1, 15)) AS BIGINT) % 4 = 0
+            ),
+            r AS (
+              SELECT source, n_chars,
+                     CAST(row_number() OVER (
+                       PARTITION BY source ORDER BY n_chars
+                     ) AS BIGINT) AS rr
+              FROM v
+            ),
+            n AS (
+              SELECT source, CAST(count(*) AS BIGINT) AS n
+              FROM v GROUP BY source
+            ),
+            t(quantile, num, den) AS (
+              VALUES ('p50', 1, 2), ('p90', 9, 10), ('p99', 99, 100)
+            )
+            SELECT r.source, t.quantile,
+                   CAST(greatest(1, (t.num * n.n + t.den - 1) // t.den)
+                        AS BIGINT) AS q_rank,
+                   CAST(r.n_chars AS BIGINT) AS q_value
+            FROM r
+            JOIN n ON r.source = n.source
+            JOIN t ON r.rr = greatest(1, (t.num * n.n + t.den - 1) // t.den)
+        """,
         # Soundex blocking replay: the phonetic key comes from the SAME
         # SQL template both engines evaluate (functions/phonetic.py);
         # capped blocks (> 24) are excluded exactly as the operator's
@@ -4309,6 +5446,67 @@ def oracle_sql() -> dict[str, str]:
             FROM keyed a
             JOIN keyed b ON a.phonetic_key = b.phonetic_key AND a.id < b.id
             JOIN ok ON ok.phonetic_key = a.phonetic_key
+        """,
+        # Z-order replay: identical min-max integer ranks (BIGINT div),
+        # the SAME Morton template rendered for DuckDB (<<|>> operators
+        # instead of shiftleft/shiftright — functions/zorder dialect
+        # knob), same ceil(2^16/64)=1024 chunk width.
+        "zorder_layout": f"""
+            WITH b AS (
+              SELECT CAST(min(doc_id) AS BIGINT) AS mn0,
+                     CAST(max(doc_id) AS BIGINT) AS mx0,
+                     CAST(min(n_chars) AS BIGINT) AS mn1,
+                     CAST(max(n_chars) AS BIGINT) AS mx1
+              FROM documents
+            ),
+            k AS (
+              SELECT ((CAST(doc_id AS BIGINT) - mn0) * 255 // (mx0 - mn0)) AS r0,
+                     ((CAST(n_chars AS BIGINT) - mn1) * 255 // (mx1 - mn1)) AS r1
+              FROM documents, b
+            )
+            SELECT CAST({_ZORDER_DUCK} // 1024 AS BIGINT) AS chunk,
+                   CAST(count(*) AS BIGINT) AS n,
+                   CAST(min(r0) AS BIGINT) AS dim0_min,
+                   CAST(max(r0) AS BIGINT) AS dim0_max,
+                   CAST(min(r1) AS BIGINT) AS dim1_min,
+                   CAST(max(r1) AS BIGINT) AS dim1_max
+            FROM k GROUP BY 1
+        """,
+        # Hopping replay: the same window_start arithmetic
+        # (floor(epoch/S)*S - i*S, UTC, floored seconds) with the offsets
+        # as a 3-row VALUES table; to_timestamp cast back to naive.
+        "hopping_window": """
+            SELECT event_type,
+                   CAST(to_timestamp(
+                     (CAST(floor(epoch(ts)) AS BIGINT) // 300) * 300
+                     - i.i * 300
+                   ) AS TIMESTAMP) AS window_start,
+                   CAST(count(*) AS BIGINT) AS n,
+                   min(value) AS min_value,
+                   max(value) AS max_value,
+                   CAST(sum(CAST(floor(value * 100) AS BIGINT)) AS BIGINT)
+                     AS sum_scaled
+            FROM events, (VALUES (0), (1), (2)) AS i(i)
+            WHERE ts IS NOT NULL
+            GROUP BY event_type, 2
+        """,
+        # Snapshot replay: row_number is FINE in the oracle (DuckDB runs
+        # once, no skew contract) — ORDER BY ts DESC, event_id DESC is
+        # exactly the engine's (ts, tiebreak) struct order.
+        "latest_snapshot": """
+            SELECT CAST(user_id AS BIGINT) AS user_id,
+                   ts,
+                   CAST(event_id AS BIGINT) AS event_id,
+                   event_type,
+                   CAST(floor(value * 100) AS BIGINT) AS value_scaled
+            FROM (
+              SELECT *, row_number() OVER (
+                PARTITION BY user_id ORDER BY ts DESC, event_id DESC
+              ) AS rn
+              FROM events
+              WHERE ts IS NOT NULL AND user_id IS NOT NULL
+            )
+            WHERE rn = 1
         """,
         # Profile replay: per-column UNION ALL of one-row aggregates
         # (the union is the SPEC; the engine's single-statement Expand
@@ -4354,6 +5552,110 @@ def oracle_sql() -> dict[str, str]:
                      AS checksum
             FROM documents
             GROUP BY source
+        """,
+        # Chunk replay: same explicit-class token split (never \\s), same
+        # integer stride arithmetic (floor vs trunc div agree after the
+        # greatest(0,..) clamp), 1-based inclusive list_slice.
+        "chunk_documents": """
+            WITH d AS (
+              SELECT doc_id,
+                     CASE WHEN trim(coalesce(text, '')) = ''
+                          THEN CAST([] AS VARCHAR[])
+                          ELSE regexp_split_to_array(
+                            trim(coalesce(text, '')), '[ \t\n\r\f\x0B]+')
+                     END AS toks
+              FROM documents
+            ),
+            n AS (SELECT doc_id, toks, CAST(len(toks) AS BIGINT) AS n FROM d),
+            s AS (
+              SELECT doc_id, toks, n,
+                     CAST(unnest(generate_series(
+                       0, greatest(0, ((n - 8 - 1) // 24) * 24), 24
+                     )) AS BIGINT) AS st
+              FROM n
+            )
+            SELECT doc_id,
+                   CAST(st // 24 AS BIGINT) AS chunk_id,
+                   CAST(st AS BIGINT) AS token_start,
+                   CAST(least(st + 32, n) AS BIGINT) AS token_end,
+                   COALESCE(array_to_string(
+                     list_slice(toks, CAST(st + 1 AS BIGINT),
+                                CAST(st + 32 AS BIGINT)), ' '), '') AS chunk_text
+            FROM s
+        """,
+        # tf-idf replay: same token split, same BIGINT scaled-idf
+        # arithmetic, same (score desc, tf desc, token asc) window.
+        "distinctive_terms": """
+            WITH toks AS (
+              SELECT doc_id,
+                     unnest(regexp_split_to_array(
+                       lower(trim(coalesce(text, ''))), '[ \t\n\r\f\x0B]+'
+                     )) AS token
+              FROM documents
+            ),
+            tf AS (
+              SELECT doc_id, token, CAST(count(*) AS BIGINT) AS tf
+              FROM toks WHERE token <> '' GROUP BY doc_id, token
+            ),
+            dfq AS (
+              SELECT token, CAST(count(*) AS BIGINT) AS df
+              FROM tf GROUP BY token
+            ),
+            nd AS (SELECT CAST(count(*) AS BIGINT) AS n_docs FROM documents),
+            ranked AS (
+              SELECT tf.doc_id, tf.token, tf.tf, dfq.df,
+                     CAST(tf.tf * ((nd.n_docs * 1000000) // dfq.df)
+                          AS BIGINT) AS score_scaled,
+                     row_number() OVER (
+                       PARTITION BY tf.doc_id
+                       ORDER BY tf.tf * ((nd.n_docs * 1000000) // dfq.df)
+                                DESC, tf.tf DESC, tf.token ASC
+                     ) AS rank
+              FROM tf JOIN dfq USING (token), nd
+            )
+            SELECT doc_id, CAST(rank AS BIGINT) AS rank, token, tf, df,
+                   score_scaled
+            FROM ranked WHERE rank <= 3
+        """,
+        # Rollup replay: the UNION ALL of per-granularity aggregations
+        # IS the spec — grouping sets is the one-scan cost construction.
+        # Aggregates are hash-exact: count, order-free min/max, and a
+        # floor(value*100) BIGINT sum (never a raw double sum).
+        "time_rollup": """
+            SELECT event_type, 'minute' AS granularity,
+                   date_trunc('minute', ts) AS bucket_start,
+                   CAST(count(*) AS BIGINT) AS n,
+                   min(value) AS min_value, max(value) AS max_value,
+                   CAST(sum(CAST(floor(value * 100) AS BIGINT)) AS BIGINT) AS sum_scaled
+            FROM events WHERE ts IS NOT NULL
+            GROUP BY event_type, date_trunc('minute', ts)
+            UNION ALL
+            SELECT event_type, 'hour', date_trunc('hour', ts),
+                   CAST(count(*) AS BIGINT),
+                   min(value), max(value),
+                   CAST(sum(CAST(floor(value * 100) AS BIGINT)) AS BIGINT)
+            FROM events WHERE ts IS NOT NULL
+            GROUP BY event_type, date_trunc('hour', ts)
+            UNION ALL
+            SELECT event_type, 'day', date_trunc('day', ts),
+                   CAST(count(*) AS BIGINT),
+                   min(value), max(value),
+                   CAST(sum(CAST(floor(value * 100) AS BIGINT)) AS BIGINT)
+            FROM events WHERE ts IS NOT NULL
+            GROUP BY event_type, date_trunc('day', ts)
+        """,
+        # Range-join replay: the plain inequality join IS the spec (the
+        # bucketization is a cost construction only; containment is
+        # re-checked on raw IEEE bounds, so the results are identical).
+        "range_join": """
+            SELECT p.event_id AS p_id, i.event_id AS i_id, p.user_id,
+                   p.value AS v, i.lo, i.hi
+            FROM (SELECT event_id, user_id, value
+                  FROM events WHERE event_type = 'view') p
+            JOIN (SELECT event_id, user_id, value AS lo, value + 5.0 AS hi
+                  FROM events WHERE event_type = 'click') i
+              ON p.user_id = i.user_id
+             AND p.value >= i.lo AND p.value <= i.hi
         """,
         # Blocking-audit replay: the simhash_candidates CTE chain
         # verbatim (candidates), the minhash oracle's exact all-pairs
@@ -5620,6 +6922,101 @@ def oracle_sql() -> dict[str, str]:
                      CAST(NULL AS DOUBLE) AS best_score
               FROM rreach GROUP BY a)
         """,
+        # The parser reads dimensions out of REAL synthesized PNG/JPEG
+        # bytes; the oracle recomputes every field from the planting
+        # formulas (png: 33 + filler bytes; jpeg: 41 + filler; dims are
+        # doc_id affine maps). A parser that misreads any header byte
+        # hash-mismatches.
+        "image_header_dims": """
+            SELECT doc_id,
+                   CASE WHEN doc_id % 2 = 0 THEN 'png' ELSE 'jpeg' END
+                     AS media_type,
+                   CAST(CASE WHEN doc_id % 2 = 0 THEN 33 ELSE 41 END
+                        + doc_id % 7 AS BIGINT) AS n_bytes,
+                   CAST(16 + (doc_id * 7) % 1000 AS INT) AS width,
+                   CAST(16 + (doc_id * 13) % 1000 AS INT) AS height,
+                   1 AS n_frames
+            FROM documents
+        """,
+        # pages_from_documents wraps text in a fixed html template
+        # (prefix 41B + escaped title + 30B + escaped body + 24B); the fake
+        # decoder reads the first bytes of that template, so width/height/
+        # n_frames are template constants and sample_hash is the little-
+        # endian md5-u64 of the first 64 bytes (prefix + url head) with the
+        # sign bit cleared. html.escape(quote=False) grows '&' by 4 and
+        # '<'/'>' by 3 bytes each.
+        "media_metadata": """
+            WITH base AS (
+              SELECT 'https://crawl.example/' || source || '/doc-'
+                       || lpad(CAST(doc_id AS VARCHAR), 9, '0') AS url,
+                     text
+              FROM documents
+            ),
+            m AS (
+              SELECT url,
+                     md5(substr('<html><head><meta charset="utf-8"><title>' || url,
+                                1, 64)) AS hx,
+                     41 + strlen(url) + 30 + strlen(text)
+                       + 4 * (strlen(text) - strlen(replace(text, '&', '')))
+                       + 3 * (strlen(text) - strlen(replace(text, '<', '')))
+                       + 3 * (strlen(text) - strlen(replace(text, '>', '')))
+                       + 24 AS n_bytes
+              FROM base
+            )
+            SELECT url, 'image' AS media_type, CAST(n_bytes AS BIGINT) AS n_bytes,
+                   2109 AS width, 3445 AS height, 45 AS n_frames,
+                   CAST(
+                     CAST(('0x' || substr(hx, 1, 2)) AS BIGINT)
+                   + CAST(('0x' || substr(hx, 3, 2)) AS BIGINT) * 256
+                   + CAST(('0x' || substr(hx, 5, 2)) AS BIGINT) * 65536
+                   + CAST(('0x' || substr(hx, 7, 2)) AS BIGINT) * 16777216
+                   + CAST(('0x' || substr(hx, 9, 2)) AS BIGINT) * 4294967296
+                   + CAST(('0x' || substr(hx, 11, 2)) AS BIGINT) * 1099511627776
+                   + CAST(('0x' || substr(hx, 13, 2)) AS BIGINT) * 281474976710656
+                   + (CAST(('0x' || substr(hx, 15, 2)) AS BIGINT) & 127)
+                       * 72057594037927936
+                   AS BIGINT) AS sample_hash
+            FROM m
+        """,
+        # SCD2 replay: the change predicate is IS DISTINCT FROM against
+        # the lagged state (first row's NULL lag opens an interval — the
+        # query filters NULL event_type, so lag-NULL is unambiguous);
+        # within a run every state is identical by construction, so
+        # max(event_type) is THE state.
+        "scd2_history": """
+            WITH base AS (
+              SELECT user_id, ts, event_id, event_type
+              FROM events
+              WHERE user_id IS NOT NULL AND ts IS NOT NULL
+                AND event_type IS NOT NULL
+            ),
+            chg AS (
+              SELECT user_id, ts, event_id, event_type,
+                     CASE WHEN lag(event_type) OVER (PARTITION BY user_id
+                               ORDER BY ts, event_id)
+                               IS DISTINCT FROM event_type
+                          THEN 1 ELSE 0 END AS c
+              FROM base
+            ),
+            ver AS (
+              SELECT *, CAST(SUM(c) OVER (PARTITION BY user_id
+                        ORDER BY ts, event_id
+                        ROWS UNBOUNDED PRECEDING) AS BIGINT) AS v
+              FROM chg
+            ),
+            runs AS (
+              SELECT user_id, v, max(event_type) AS event_type,
+                     min(ts) AS valid_from,
+                     CAST(count(*) AS BIGINT) AS n_versions
+              FROM ver GROUP BY 1, 2
+            )
+            SELECT user_id, event_type, valid_from,
+                   lead(valid_from) OVER w AS valid_to,
+                   lead(valid_from) OVER w IS NULL AS is_current,
+                   n_versions
+            FROM runs
+            WINDOW w AS (PARTITION BY user_id ORDER BY v)
+        """,
         # Constrained CC replay: identical deterministic fixture graph,
         # anti-join constraint removal, recursive-CTE reachability over
         # the kept symmetric edges, min-id components over the ORIGINAL
@@ -5675,6 +7072,91 @@ def oracle_sql() -> dict[str, str]:
             FROM comp c LEFT JOIN viol v ON c.component = v.component
         """,
         "kcore": _KCORE_SQL,
+        # Gaps-and-islands replay. The ordering is TOTAL (s, e, eid):
+        # the construction is two window passes (running max -> flag ->
+        # running sum), and DuckDB sorts each pass independently — under
+        # a non-total order, tied rows can sort differently per pass and
+        # a flag computed in one order cumulated in another invents
+        # phantom islands (caught live at sf0.01).
+        "interval_merge": """
+            WITH iv AS (
+              SELECT event_type,
+                     CAST(event_id % 997 AS BIGINT) AS s,
+                     CAST(event_id % 997 + 1 + user_id % 7 AS BIGINT) AS e,
+                     CAST(event_id AS BIGINT) AS eid
+              FROM events
+              WHERE event_type IS NOT NULL AND user_id IS NOT NULL
+                AND event_id IS NOT NULL
+            ),
+            m AS (
+              SELECT event_type, s, e, eid,
+                     max(e) OVER (PARTITION BY event_type
+                                  ORDER BY s, e, eid
+                                  ROWS BETWEEN UNBOUNDED PRECEDING
+                                  AND 1 PRECEDING) AS pme
+              FROM iv
+            ),
+            f AS (
+              SELECT *, CASE WHEN pme IS NOT NULL AND s <= pme
+                        THEN 0 ELSE 1 END AS nw
+              FROM m
+            ),
+            isl AS (
+              SELECT *, SUM(nw) OVER (PARTITION BY event_type
+                        ORDER BY s, e, eid ROWS UNBOUNDED PRECEDING)
+                          AS island
+              FROM f
+            )
+            SELECT event_type, CAST(min(s) AS BIGINT) AS "start",
+                   CAST(max(e) AS BIGINT) AS "end",
+                   CAST(count(*) AS BIGINT) AS n_intervals
+            FROM isl GROUP BY event_type, island
+        """,
+        # Funnel replay: each step's completion is the row_number()=1
+        # row under (ts, event_id) among events strictly after the
+        # previous step's completion struct — the tie rule spelled out.
+        "funnel_counts": """
+            WITH base AS (
+              SELECT user_id, ts, event_id, event_type FROM events
+              WHERE user_id IS NOT NULL AND ts IS NOT NULL
+                AND event_id IS NOT NULL AND event_type IS NOT NULL
+            ),
+            s0 AS (
+              SELECT user_id, ts, event_id FROM (
+                SELECT user_id, ts, event_id,
+                       row_number() OVER (PARTITION BY user_id
+                         ORDER BY ts, event_id) rn
+                FROM base WHERE event_type = 'view') WHERE rn = 1
+            ),
+            s1 AS (
+              SELECT user_id, ts, event_id FROM (
+                SELECT b.user_id, b.ts, b.event_id,
+                       row_number() OVER (PARTITION BY b.user_id
+                         ORDER BY b.ts, b.event_id) rn
+                FROM base b JOIN s0 ON b.user_id = s0.user_id
+                WHERE b.event_type = 'click'
+                  AND (b.ts > s0.ts
+                       OR (b.ts = s0.ts AND b.event_id > s0.event_id))
+              ) WHERE rn = 1
+            ),
+            s2 AS (
+              SELECT user_id FROM (
+                SELECT b.user_id,
+                       row_number() OVER (PARTITION BY b.user_id
+                         ORDER BY b.ts, b.event_id) rn
+                FROM base b JOIN s1 ON b.user_id = s1.user_id
+                WHERE b.event_type = 'purchase'
+                  AND (b.ts > s1.ts
+                       OR (b.ts = s1.ts AND b.event_id > s1.event_id))
+              ) WHERE rn = 1
+            )
+            SELECT 0 AS step_index, 'view' AS step,
+                   CAST((SELECT count(*) FROM s0) AS BIGINT) AS n_users
+            UNION ALL SELECT 1, 'click',
+                   CAST((SELECT count(*) FROM s1) AS BIGINT)
+            UNION ALL SELECT 2, 'purchase',
+                   CAST((SELECT count(*) FROM s2) AS BIGINT)
+        """,
         # Anti-entropy replay: same perturbed replica, same portable
         # 60-bit md5 row hashes (keys inside the content hash), same
         # key-hash bucketing and mod-2^62 checksum fold.
@@ -5735,6 +7217,52 @@ def oracle_sql() -> dict[str, str]:
                         ELSE 'mismatch' END AS status
             FROM la FULL OUTER JOIN ra ON la.bucket = ra.bucket
         """,
+        # Overlap-join replay: the plain closed-bound inequality join —
+        # the engine's bucketization + overlap-start-bucket dedup rule
+        # must be invisible in the rows.
+        "overlap_join": """
+            WITH ev AS (
+              SELECT event_type, event_id, user_id FROM events
+              WHERE event_type IS NOT NULL AND user_id IS NOT NULL
+                AND event_id IS NOT NULL
+            ),
+            l AS (
+              SELECT event_type, CAST(event_id AS BIGINT) AS la,
+                     CAST(event_id % 997 AS BIGINT) AS a_lo,
+                     CAST(event_id % 997 + 1 + user_id % 5 AS BIGINT) AS a_hi
+              FROM ev WHERE event_id % 11 = 0
+            ),
+            r AS (
+              SELECT event_type, CAST(event_id AS BIGINT) AS rb,
+                     CAST((event_id * 7) % 991 AS BIGINT) AS b_lo,
+                     CAST((event_id * 7) % 991 + 1 + user_id % 3 AS BIGINT)
+                       AS b_hi
+              FROM ev WHERE event_id % 13 = 0
+            )
+            SELECT l.event_type, l.la, l.a_lo, l.a_hi, r.rb, r.b_lo, r.b_hi
+            FROM l JOIN r ON l.event_type = r.event_type
+                         AND l.a_lo <= r.b_hi AND r.b_lo <= l.a_hi
+        """,
+        # Compaction-plan replay: identical integer ceil-DIV arithmetic
+        # (DuckDB // is floor division on exact integers).
+        "compaction_plan": """
+            WITH agg AS (
+              SELECT lang, source,
+                     CAST(count(*) AS BIGINT) AS n_rows,
+                     CAST(sum(n_chars) AS BIGINT) AS total_bytes
+              FROM documents GROUP BY 1, 2
+            ),
+            f AS (
+              SELECT *, CAST(greatest(1, (total_bytes + 4095) // 4096)
+                        AS BIGINT) AS n_files
+              FROM agg
+            )
+            SELECT lang, source, n_rows, total_bytes, n_files,
+                   CAST((n_rows + n_files - 1) // n_files AS BIGINT)
+                     AS rows_per_file,
+                   (total_bytes < 512) AS needs_compaction
+            FROM f
+        """,
         # Co-visitation replay: distinct (user, item), same 100-item
         # user cap (vacuous at this sf, mirrored anyway), ordered
         # self-join, exact HAVING-count weights.
@@ -5758,6 +7286,37 @@ def oracle_sql() -> dict[str, str]:
             FROM ok a JOIN ok b
               ON a.user_id = b.user_id AND a.item < b.item
             GROUP BY 1, 2 HAVING count(*) >= 5
+        """,
+        # Markov transition replay: same lag-built transition stream as
+        # clickstream_rank; counts BIGINT, probability is one integer
+        # floor-division per row (// on exact integers == Spark DIV).
+        "markov_transitions": """
+            WITH ev AS (
+              SELECT user_id, ts, event_id,
+                     event_type || ':' ||
+                       CAST(CAST(FLOOR(value) AS BIGINT) AS VARCHAR) AS node
+              FROM events
+              WHERE user_id IS NOT NULL AND event_type IS NOT NULL
+                AND value IS NOT NULL
+            ),
+            seq AS (
+              SELECT node, lag(node) OVER (PARTITION BY user_id
+                           ORDER BY ts, event_id) AS prev
+              FROM ev
+            ),
+            e AS (
+              SELECT prev AS src, node AS dst,
+                     CAST(count(*) AS BIGINT) AS n_transitions
+              FROM seq WHERE prev IS NOT NULL GROUP BY 1, 2
+            ),
+            t AS (
+              SELECT src, CAST(sum(n_transitions) AS BIGINT) AS out_total
+              FROM e GROUP BY 1
+            )
+            SELECT e.src, e.dst, e.n_transitions, t.out_total,
+                   CAST((e.n_transitions * 1000000) // t.out_total
+                        AS BIGINT) AS p_scaled
+            FROM e JOIN t ON e.src = t.src
         """,
         # FK-audit replay: per relation, child contracted to (fk, cnt),
         # parent to distinct keys, one left join + filtered sums. NULL
@@ -5852,6 +7411,21 @@ def oracle_sql() -> dict[str, str]:
             SELECT seed, hop, CAST(count(*) AS BIGINT) AS n_nodes
             FROM m GROUP BY 1, 2
         """,
+        # Retention replay: floor(epoch) (CAST alone ROUNDS — the
+        # hopping_window idiom), BIGINT floor-division period index,
+        # count(*) over the deduped (user, period) activity.
+        "retention_cohorts": """
+            WITH act AS (
+              SELECT DISTINCT user_id AS u,
+                     CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS p
+              FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL
+            ),
+            f AS (SELECT u, min(p) AS c FROM act GROUP BY 1)
+            SELECT CAST(c AS BIGINT) AS cohort_period,
+                   CAST(p - c AS BIGINT) AS periods_since,
+                   CAST(count(*) AS BIGINT) AS n_users
+            FROM act JOIN f USING (u) GROUP BY 1, 2
+        """,
         # Drift replay: identical scaled-DIV fraction arithmetic per
         # category (// on exact integers == Spark DIV), HUGEINT
         # deviation sum, integer halving; empty side -> NULL.
@@ -5938,6 +7512,38 @@ def oracle_sql() -> dict[str, str]:
                    CAST(count(*) AS BIGINT) AS n_docs,
                    CAST(sum(n_chars) AS BIGINT) AS sum_n_chars
             FROM e GROUP BY 1, 2, 3
+        """,
+        # Native-session replay: lag-island construction on EXACT
+        # microseconds with the pinned strict-> gap rule (exactly-gap
+        # events merge, measured); the two window passes share one
+        # TOTAL order (tus, event_id) — the phantom-island trap.
+        # end = last_ts + gap, bounds floored to epoch seconds.
+        "session_rollup": """
+            WITH ev AS (
+              SELECT user_id, epoch_us(ts) AS tus, event_id
+              FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL
+            ),
+            m AS (
+              SELECT user_id, tus, event_id,
+                     CASE WHEN tus - lag(tus) OVER (
+                            PARTITION BY user_id ORDER BY tus, event_id)
+                          > 1800000000 THEN 1 ELSE 0 END AS nw
+              FROM ev
+            ),
+            isl AS (
+              SELECT *, SUM(nw) OVER (PARTITION BY user_id
+                          ORDER BY tus, event_id
+                          ROWS UNBOUNDED PRECEDING) AS sess
+              FROM m
+            )
+            SELECT user_id,
+                   CAST(min(tus) // 1000000 AS BIGINT) AS session_start_s,
+                   CAST((max(tus) + 1800000000) // 1000000 AS BIGINT)
+                     AS session_end_s,
+                   CAST(count(*) AS BIGINT) AS n_events,
+                   CAST(min(event_id) AS BIGINT) AS first_event_id,
+                   CAST(max(event_id) AS BIGINT) AS last_event_id
+            FROM isl GROUP BY user_id, sess
         """,
         # Cascade-audit replay: plain IN-subquery semi-joins; NULL FKs
         # never match; lineitem keys come from the AFFECTED orders.

@@ -46,6 +46,24 @@ def main() -> None:
         phonetic_key_pairs,
         sorted_neighborhood_pairs,
     )
+    from word_sense_disambiguation_spark.operators.cdc import latest_snapshot
+    from word_sense_disambiguation_spark.operators.zorder import (
+        minmax_rank_exprs,
+        zorder_chunk_stats,
+    )
+    from word_sense_disambiguation_spark.operators.quantiles import (
+        group_quantiles,
+        rank_buckets,
+    )
+    from word_sense_disambiguation_spark.operators.temporal import (
+        asof_join,
+        hopping_window_agg,
+        interval_coalesce,
+        interval_overlap_join,
+        range_join,
+        time_bucket_rollup,
+    )
+    from word_sense_disambiguation_spark.operators.cdc import scd2_history
     from word_sense_disambiguation_spark.operators.clustering import (
         cluster_cohesion,
         cluster_churn,
@@ -59,6 +77,9 @@ def main() -> None:
     )
     from word_sense_disambiguation_spark.operators.profiling import (
         checksum_diff,
+    )
+    from word_sense_disambiguation_spark.operators.zorder import (
+        compaction_plan,
     )
     from word_sense_disambiguation_spark.operators.dedup import (
         tfidf_cosine_pairs,
@@ -80,6 +101,13 @@ def main() -> None:
         ivf_topk,
         lsh_index,
         lsh_topk,
+    )
+    from word_sense_disambiguation_spark.operators.textstats import (
+        build_vocabulary,
+        cooccurrence_counts,
+        script_profile,
+        text_profile,
+        token_diversity,
     )
     from word_sense_disambiguation_spark.operators.webfilters import (
         pack_documents,
@@ -208,6 +236,12 @@ def main() -> None:
             lsh_topk(emb, qvecs, k=5, index=lsh),
         ),
         (
+            "text_profile",
+            "Single scan, whole-stage codegen end-to-end: zero shuffles, "
+            "zero Python.",
+            text_profile(docs, "doc_id", "text"),
+        ),
+        (
             "site_quota_sample",
             "Two salted row_number windows (spill-safe buffers; level-2 "
             "group hard-bounded at salts*quota) — no collect_list "
@@ -244,6 +278,83 @@ def main() -> None:
             quality_classifier_scores(docs),
         ),
         (
+            "asof_join (point-in-time)",
+            "Union of both sides, ONE hash exchange (the key "
+            "partitioning), running last(ignoreNulls) frame — "
+            "O(|L_k|+|R_k|) per key, never an inequality join. Tests: "
+            "test_asof_plan_single_exchange.",
+            asof_join(
+                docs.select(F.col("doc_id").alias("event_id"),
+                            (F.col("doc_id") % 50).alias("user_id"),
+                            F.col("n_chars").cast("timestamp").alias("ts")),
+                docs.select((F.col("doc_id") + 1000).alias("event_id"),
+                            (F.col("doc_id") % 50).alias("user_id"),
+                            (F.col("n_chars") + 3).cast("timestamp").alias("ts")),
+                on="user_id", right_cols=["event_id"], tie_col="event_id",
+            ),
+        ),
+        (
+            "range_join (interval containment)",
+            "Bucketized EQUI-join (hash/SMJ on keys+bucket) with exact "
+            "re-check — never BroadcastNestedLoop/cartesian; exactly-"
+            "once pairs by construction, oversized intervals in a side "
+            "table. Tests: test_range_join_plan_is_equi_join.",
+            range_join(
+                docs.select("doc_id", (F.col("doc_id") % 50).alias("k"),
+                            F.col("n_chars").cast("double").alias("v")),
+                docs.select((F.col("doc_id") + 1000).alias("i_id"),
+                            (F.col("doc_id") % 50).alias("k"),
+                            F.col("n_chars").cast("double").alias("lo"),
+                            (F.col("n_chars") + 40.0).alias("hi")),
+                "v", "lo", "hi", keys=["k"], bucket_width=32.0,
+            )[0],
+        ),
+        (
+            "time_rollup (hypertable continuous aggregate)",
+            "ONE scan feeds every granularity: Expand (grouping sets) "
+            "-> one partial+final aggregation -> ONE exchange. Tests: "
+            "test_time_bucket_rollup_one_scan_one_shuffle.",
+            time_bucket_rollup(
+                docs.select(F.col("source").alias("event_type"),
+                            F.col("doc_id").cast("timestamp").alias("ts"),
+                            F.col("n_chars").cast("double").alias("value")),
+                "ts", ["event_type"], "value",
+            ),
+        ),
+        (
+            "latest_snapshot (CDC compaction)",
+            "max_by over an explicit (ts, tiebreak) order struct: two "
+            "HashAggregates around ONE exchange (map-side partial "
+            "combine — a hot re-crawled key contributes one row per map "
+            "partition), never the row_number window that buffers the "
+            "key's full history in one task. Tests: "
+            "test_plan_is_aggregate_not_window.",
+            latest_snapshot(
+                docs.select(
+                    F.col("source").alias("key"),
+                    F.col("doc_id").cast("timestamp").alias("ts"),
+                    F.col("doc_id").alias("seq"),
+                    F.col("n_chars").alias("payload"),
+                ),
+                ["key"], "ts", "seq",
+            ),
+        ),
+        (
+            "hopping_window (sliding aggregate)",
+            "Offset explode (Generate) creates each row's L/S window "
+            "memberships locally, then ONE partial-combined groupBy — "
+            "no inequality join against a window table, no Join node "
+            "at all. Tests: test_hopping_window_guard_and_plan.",
+            hopping_window_agg(
+                docs.select(
+                    F.col("source").alias("event_type"),
+                    F.col("doc_id").cast("timestamp").alias("ts"),
+                    F.col("n_chars").cast("double").alias("value"),
+                ),
+                "ts", ["event_type"], "value", length_s=900, slide_s=300,
+            ),
+        ),
+        (
             "phonetic_blocking (Soundex candidate pairs)",
             "Pure-codegen key (translate/regexp chains — no EvalPython "
             "anywhere), skew-capped pairing: partial-combined block "
@@ -256,6 +367,31 @@ def main() -> None:
                 docs, "doc_id", "element_at(split(text, ' '), 1)",
                 max_block_size=24,
             )[0],
+        ),
+        (
+            "zorder_layout (Morton chunk audit)",
+            "The Morton key is straight-line BIGINT bit arithmetic "
+            "inside the scan projection (no UDF), the chunk id a "
+            "row-local div, the stats ONE partial-combined groupBy — "
+            "no global sort, no window, a single exchange carrying "
+            "<= n_chunks rows per map partition. Tests: "
+            "test_guards_and_codegen (Exchange count == 1).",
+            zorder_chunk_stats(
+                docs,
+                minmax_rank_exprs(docs, ["doc_id", "n_chars"], bits=8),
+                bits=8,
+                n_chunks=64,
+            ),
+        ),
+        (
+            "group_quantiles (exact order statistics)",
+            "Group sizes from a partial-combined groupBy (never a "
+            "count-over-full-partition window), broadcast back; ONE "
+            "row_number window — the irreducible cost of an EXACT rank "
+            "selection (document the percentile_approx trade at scales "
+            "where a hot key's sort task is unacceptable). Integer-only "
+            "rank arithmetic. Tests: test_quantiles_plan_shape.",
+            group_quantiles(docs, ["source"], "n_chars"),
         ),
         (
             "sorted_neighborhood (merge/purge blocking)",
@@ -477,6 +613,18 @@ def main() -> None:
             )[0],
         ),
         (
+            "ccnet_buckets (exact rank bucketing)",
+            "Cuts from group_quantiles contract to n_buckets-1 rows per "
+            "group and broadcast back; the per-row assignment is a "
+            "codegen CASE over strict-> indicators — the data side never "
+            "sorts or windows. Tests: test_quantiles."
+            "test_rank_buckets_invariance_and_plan.",
+            rank_buckets(
+                docs.select("doc_id", "lang", (F.col("doc_id") % 97).alias("score")),
+                ["lang"], "score", n_buckets=3,
+            ),
+        ),
+        (
             "pr_sweep (threshold-calibration curve)",
             "ONE partial-combined groupBy(score) contracts the pair "
             "table to the distinct-score histogram; the cumulative "
@@ -491,6 +639,40 @@ def main() -> None:
                     (F.col("doc_id") % 4 == 0).alias("is_match"),
                 )
             ),
+        ),
+        (
+            "token_diversity (Simpson index)",
+            "Explode -> two partial-combined groupBys -> left join back "
+            "(empty docs keep NULL rows); DECIMAL-exact sum of squares, "
+            "one IEEE division. No window.",
+            token_diversity(docs, "doc_id", "text"),
+        ),
+        (
+            "script_profile (Unicode script composition)",
+            "Pure codegen, one scan, zero shuffle: literal BMP range "
+            "deletion counts, fixed-priority dominant CASE, one IEEE "
+            "division. Tests: "
+            "test_similarity_textstats.test_script_profile_plan_no_shuffle.",
+            script_profile(docs, "doc_id", "text"),
+        ),
+        (
+            "vocabulary (corpus top-N token table)",
+            "One partial-combined token-count groupBy; the global top-N "
+            "is TakeOrderedAndProject (bounded per-partition heaps, "
+            "never a full sort shuffle); the contiguous rank window runs "
+            "over the already-limited N rows. Tests: "
+            "test_similarity_textstats.test_build_vocabulary_plan_take_ordered.",
+            build_vocabulary(docs, "doc_id", "text", min_count=5, top_n=500),
+        ),
+        (
+            "cooccurrence (skip-gram pairs + exp-PMI ratio)",
+            "Window membership is an offset explode + ONE equi-join on "
+            "(doc, pos+k) — the hopping_window move, never an inequality "
+            "join; pair/unigram counts partial-combine; corpus totals "
+            "ride broadcast one-row joins; the ratio is one fixed IEEE "
+            "tree. Tests: "
+            "test_similarity_textstats.test_cooccurrence_invariance_and_plan.",
+            cooccurrence_counts(docs, "doc_id", "text", window=2, min_count=5),
         ),
         (
             "cluster_cohesion (CC over-merge audit)",
@@ -511,6 +693,66 @@ def main() -> None:
                     (F.col("doc_id") % 3 != 0).alias("is_match"),
                 ),
             ),
+        ),
+        (
+            "scd2_history (changelog -> validity intervals)",
+            "Both windows and the run aggregate share ONE key-partitioned "
+            "Exchange; run collapse is a null-safe lag struct compare. "
+            "Tests: test_cdc.test_scd2_parallelism_invariance_and_one_exchange.",
+            scd2_history(
+                docs.select(
+                    "lang",
+                    F.col("doc_id").alias("seq"),
+                    (F.col("doc_id") % 7).alias("state"),
+                ),
+                ["lang"],
+                "seq",
+                "seq",
+                ["state"],
+            ),
+        ),
+        (
+            "interval_merge (gaps-and-islands coalesce)",
+            "Running max(end) over the incremental UNBOUNDED..-1 frame + "
+            "island running sum, one key Exchange; ordering is TOTAL "
+            "(tiebreak col) for oracle parity. Tests: "
+            "test_temporal.test_interval_coalesce_invariance_and_plan.",
+            interval_coalesce(
+                docs.select(
+                    "lang",
+                    (F.col("doc_id") % 97).alias("s"),
+                    (F.col("doc_id") % 97 + 3).alias("e"),
+                    F.col("doc_id").alias("tb"),
+                ),
+                ["lang"],
+                "s",
+                "e",
+                ["tb"],
+            ),
+        ),
+        (
+            "overlap_join (interval x interval)",
+            "Bucketized equi-join; exactly-once via the overlap-start-"
+            "bucket predicate (no dedup shuffle); oversized intervals "
+            "excluded into a side table. Tests: "
+            "test_temporal.test_interval_overlap_join_matches_bruteforce_exactly_once.",
+            interval_overlap_join(
+                docs.select(
+                    "lang",
+                    (F.col("doc_id") % 97).cast("double").alias("a_lo"),
+                    (F.col("doc_id") % 97 + 3).cast("double").alias("a_hi"),
+                ),
+                docs.select(
+                    F.col("lang").alias("lang_r"),
+                    ((F.col("doc_id") * 3) % 89).cast("double").alias("b_lo"),
+                    ((F.col("doc_id") * 3) % 89 + 2).cast("double").alias("b_hi"),
+                ).withColumnRenamed("lang_r", "lang"),
+                "a_lo",
+                "a_hi",
+                "b_lo",
+                "b_hi",
+                keys=["lang"],
+            )[0],
         ),
         (
             "snapshot_diff (merkle anti-entropy buckets)",
@@ -539,6 +781,26 @@ def main() -> None:
                 "u",
                 "i",
             )[0],
+        ),
+        (
+            "markov_transitions (first-order transition model)",
+            "ONE map-side-combined groupBy(src, dst) is the only shuffle "
+            "that sees input cardinality; outflow totals re-aggregate the "
+            "contracted pair table and join back on src (compile-time "
+            "plan shows two derivations; at runtime AQE substitutes a "
+            "ReusedExchange, so the input is scanned once — verified on "
+            "the executed plan); the probability is one integer DIV per "
+            "row — no window, no float sums (a sum-over-src window would "
+            "buffer a hub source's full dst fan-out in one task). "
+            "Tests: test_temporal.test_transition_model_exact_probabilities.",
+            __import__(
+                "word_sense_disambiguation_spark.operators.temporal",
+                fromlist=["transition_model"],
+            ).transition_model(
+                docs.select(
+                    F.col("lang").alias("src"), F.col("source").alias("dst")
+                )
+            ),
         ),
         (
             "referential_integrity (FK orphan audit)",
@@ -581,6 +843,29 @@ def main() -> None:
             ),
         ),
         (
+            "retention_cohorts (cohort retention triangle)",
+            "ONE repartition on the user key is the only "
+            "input-cardinality shuffle: the (user, period) distinct and "
+            "the per-user min both run inside that clustering with no "
+            "further exchange (key-prefix partitioning satisfies the "
+            "aggregates' distribution); the executed plan substitutes a "
+            "ReusedExchange for the second branch derivation (verified), "
+            "and the final (cohort, k) rollup partial-combines with NO "
+            "count-distinct Expand (each user is at most one row per "
+            "period by construction). Tests: "
+            "test_temporal.test_retention_cohorts_semantics.",
+            __import__(
+                "word_sense_disambiguation_spark.operators.temporal",
+                fromlist=["retention_cohorts"],
+            ).retention_cohorts(
+                docs.select(
+                    (F.col("doc_id") % 50).alias("u"),
+                    (F.col("doc_id") * 3600).cast("timestamp").alias("ts"),
+                ),
+                "u", "ts", period_s=86_400,
+            ),
+        ),
+        (
             "distribution_drift (categorical TV distance)",
             "Each snapshot contracts to (slice, category, count) via ONE "
             "map-side-combined groupBy — the only input-cardinality "
@@ -620,6 +905,30 @@ def main() -> None:
                     "n_chars",
                 ),
                 "url", "n_chars", max_depth=3,
+            ),
+        ),
+        (
+            "session_rollup (native session_window aggregate)",
+            "Partial HashAggregate BELOW the exchange collapses "
+            "duplicate-timestamp rows map-side (the crawl burst case); "
+            "the shuffle carries one row per DISTINCT candidate window "
+            "and the post-shuffle sorted MergingSessions welds them — "
+            "never a window function buffering a hot user's raw events; "
+            "the SAME expression streams under a watermark "
+            "(stream_session_stats). Pinned strict-> gap boundary "
+            "(exactly-gap events merge). Tests: "
+            "test_temporal.test_session_window_stats_gap_boundary_pinned, "
+            "test_streaming.test_stream_session_watermark_finalization.",
+            __import__(
+                "word_sense_disambiguation_spark.operators.temporal",
+                fromlist=["session_window_stats"],
+            ).session_window_stats(
+                docs.select(
+                    F.col("doc_id").alias("event_id"),
+                    (F.col("doc_id") % 50).alias("u"),
+                    (F.col("doc_id") * 600).cast("timestamp").alias("ts"),
+                ),
+                "u", "ts", "event_id",
             ),
         ),
         (
@@ -697,6 +1006,13 @@ def main() -> None:
                 ),
                 "url", "html",
             ),
+        ),
+        (
+            "compaction_plan (integer file sizing)",
+            "One map-side-combined aggregate; ceil via integer DIV, never "
+            "IEEE division (precision past 2^53). Tests: "
+            "test_zorder.test_compaction_plan_div_precision_past_double.",
+            compaction_plan(docs, ["lang", "source"], "n_chars"),
         ),
     ]
 

@@ -1,6 +1,6 @@
 """Batch-fuzz engine parity: seeded adversarial Unicode corpora run
-through the driver-contract queries on Spark AND through their oracle SQL
-on DuckDB in one shot, compared cell-exact. This is the oracle gate's
+through the textstats operators on Spark AND through their oracle SQL on
+DuckDB in one shot, compared cell-exact. This is the oracle gate's
 hardening layer — testdata is ASCII-ish; these corpora are not.
 
 Also pins the ONE case-mapping divergence the fuzz sweep surfaced:
@@ -21,6 +21,11 @@ import pyspark.sql.functions as F
 import pytest
 
 import __spark_entry__ as entrymod
+from word_sense_disambiguation_spark.operators.textstats import (
+    build_vocabulary,
+    script_profile,
+    token_diversity,
+)
 
 _POOLS = [
     "abcdefghij ",
@@ -35,6 +40,17 @@ _POOLS = [
     " \t\n\r\x0b\x0c",                        # whitespace zoo
     "0123!@# ",
 ]
+
+
+def _corpus():
+    rng = random.Random(42)
+    rows = []
+    for i in range(250):
+        n = rng.randint(0, 60)
+        rows.append((i, "".join(rng.choice(rng.choice(_POOLS)) for _ in range(n))))
+    rows += [(250, ""), (251, None), (252, "straße STRASSE ssss"),
+             (253, "é é e")]
+    return pd.DataFrame(rows, columns=["doc_id", "text"])
 
 
 def _compare(spark_df, sql, pdf):
@@ -57,6 +73,40 @@ def _compare(spark_df, sql, pdf):
         for i in range(len(sp)):
             a, b = norm(sp[c].iloc[i]), norm(du[c].iloc[i])
             assert a == b, (c, i, a, b)
+
+
+def _sdf(spark, pdf):
+    return spark.createDataFrame(
+        pdf.astype(object).where(pd.notnull(pdf), None),
+        "doc_id long, text string",
+    )
+
+
+def test_fuzz_script_profile_parity(spark):
+    pdf = _corpus()
+    _compare(
+        script_profile(_sdf(spark, pdf), "doc_id", "text"),
+        entrymod.oracle_sql()["script_profile"],
+        pdf,
+    )
+
+
+def test_fuzz_token_diversity_parity(spark):
+    pdf = _corpus()
+    _compare(
+        token_diversity(_sdf(spark, pdf), "doc_id", "text"),
+        entrymod.oracle_sql()["token_diversity"],
+        pdf,
+    )
+
+
+def test_fuzz_vocabulary_parity(spark):
+    pdf = _corpus()
+    _compare(
+        build_vocabulary(_sdf(spark, pdf), "doc_id", "text", min_count=5, top_n=500),
+        entrymod.oracle_sql()["vocabulary"],
+        pdf,
+    )
 
 
 def test_dotted_capital_i_divergence_pinned(spark):
@@ -83,6 +133,10 @@ _DOCQ = [
     "quality_rule_flags",
     "pii_redaction",
     "url_canonicalize",
+    "text_profile",
+    "repetition_stats",
+    "fingerprint_counts",
+    "chunk_documents",
     "token_histogram",
     "exact_dedup",
     "dedup_impact",
@@ -92,14 +146,20 @@ _DOCQ = [
     "ngram_containment",
     "similarity_join",
     "curation_pipeline",
+    "distinctive_terms",
     "substring_span_dedup",
     "quality_classifier",
+    "ccnet_buckets",
+    "length_outliers",
     "rrf_hybrid",
     "tfidf_cosine",
     "metablocking_prune",
+    "cooccurrence",
+    "langid_accuracy",
     # anti-entropy diff: adversarial unicode text rides INSIDE the
     # portable md5 row hash — byte-level engine agreement is the test
     "snapshot_diff",
+    "compaction_plan",
     # blocker-audit composite (simhash blocks vs exact-Jaccard gold)
     # on the adversarial corpus — the counts must replay exactly
     "blocking_quality",
@@ -222,25 +282,50 @@ def test_fuzz_customer_queries_parity(spark, fuzz_customers, qname):
 _EVQ = [
     "sessionization",
     "running_sum",
+    "asof_join",
+    "range_join",
+    "time_rollup",
+    "hopping_window",
+    "latest_snapshot",
+    "group_quantiles",
+    "sampled_quantiles",
     "clickstream_rank",
     "label_communities",
     "triangle_profile",
     "table_checksum",
     "profile_columns",
-    # r5 scale-ops additions: the tiny id range stresses the
-    # constrained-CC fixture arithmetic, and kcore's
+    # r5 scale-ops additions: the burst second stresses the SCD2
+    # tiebreak, the tiny id range
+    # stresses the constrained-CC fixture arithmetic, and kcore's
     # exact-R semantics must hold even where the fuzz graph's peel
     # behaves differently than testdata's.
+    "scd2_history",
     "constrained_clusters",
     "kcore",
+    # the burst second makes duplicate (s, e) interval ties and
+    # same-instant funnel steps — the total-order tiebreak is what's
+    # under test
+    "interval_merge",
+    "funnel_counts",
+    "overlap_join",
     "covisitation",
-    # cycles + the hot user stress BFS's min-hop
+    # the burst second produces massive timestamp ties in the lag-built
+    # transition graph (the per-user (ts, event_id) total order is
+    # what's under test), cycles + the hot user stress BFS's min-hop
     # dedup, and the fuzz FK worlds are full of genuine orphans/NULLs
+    "markov_transitions",
     "bfs_reach",
     "referential_integrity",
-    # the even/odd split of the burst second stresses the drift
-    # full-outer category pairing
+    # microsecond-edge timestamps (0, 1, 999999) sit right on period
+    # boundaries — the floor(epoch) vs CAST(epoch) rounding divergence
+    # is what's under test; the even/odd split of the burst second
+    # stresses the drift full-outer category pairing
+    "retention_cohorts",
     "distribution_drift",
+    # the burst second piles exact-duplicate timestamps into one
+    # session and the µs-edge events sit on floored-second boundaries —
+    # native session_window vs the lag-island replay must still agree
+    "session_rollup",
     # the fuzz orders table points at customer keys 0..299 with hot
     # duplicates — the cascade's contract-then-probe counts must match
     # the plain IN-subquery replay exactly
@@ -255,7 +340,7 @@ _EVQ = [
 @pytest.fixture(scope="module")
 def fuzz_events_world(tmp_path_factory, fuzz_world, fuzz_customers):
     """Adversarial temporal world: EXACT duplicate timestamps (the tie
-    case every sessionize bug hides in), one hot user, a
+    case every as-of/latest/sessionize bug hides in), one hot user, a
     burst second, out-of-order event_ids, dyadic values (the engine's
     oracle float discipline: sums must replay). Reuses the fuzz
     documents and customers, adds events + orders."""
@@ -409,12 +494,18 @@ _DERIVEDQ = [
     "er_size_stats",
     "incremental_er_attach",
     "prompt_path_assignments_derived",
+    "media_metadata",
+    "image_header_dims",
+    "frame_sample",
+    "resize_metadata",
+    "payload_histogram",
     "mixture_sample",
     "incremental_dedup",
     "blocklist_filter",
     "sorted_neighborhood",
     "cluster_split",
     "phonetic_blocking",
+    "zorder_layout",
     "pos_normalize",
     "blocking_join",
     "pricing_summary",

@@ -89,6 +89,25 @@ def test_simhash_hamming_bounds(tokens):
     assert hamming64(h, ~h & ((1 << 64) - 1)) == 64
 
 
+@settings(max_examples=200, deadline=None)
+@given(st.binary(min_size=0, max_size=200))
+def test_parse_image_dims_never_raises_on_garbage(payload):
+    """Crawl payloads are adversarial by default: the header parser must
+    return a tuple or None on ANY byte string, never raise — malformed
+    input falls through to the fake decoder. Also fuzzes prefixes that
+    start like real formats (PNG signature / JPEG SOI) but truncate."""
+    from word_sense_disambiguation_spark.operators.multimodal import (
+        parse_image_dims,
+    )
+
+    for p in (payload, b"\x89PNG\r\n\x1a\n" + payload, b"\xff\xd8" + payload):
+        out = parse_image_dims(p)
+        assert out is None or (
+            len(out) == 3 and out[0] in ("png", "jpeg")
+            and out[1] >= 0 and out[2] >= 0
+        )
+
+
 @settings(max_examples=30, deadline=None)
 @given(
     st.lists(
@@ -337,6 +356,18 @@ def test_prefix_filter_completeness_lemma(x, y, tq, order):
         return set(sorted(s, key=lambda t: rank[t])[:plen])
 
     assert prefix(x) & prefix(y), (sorted(x), sorted(y), tq)
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    st.integers(min_value=-10**12, max_value=10**12),
+    st.integers(min_value=0, max_value=10**12),
+)
+def test_mad_cross_multiply_equals_float_hampel(dev, mad):
+    """mad_outliers' integer test |dev|*1000 > 3500*mad is EXACTLY
+    Hampel's |dev| > 3.5*MAD (3.5 is dyadic; 2|dev| > 7*mad is the
+    common exact form) — no boundary drift anywhere in range."""
+    assert (abs(dev) * 1000 > 3500 * mad) == (2 * abs(dev) > 7 * mad)
 
 
 @settings(max_examples=100, deadline=None)

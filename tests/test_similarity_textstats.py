@@ -1,5 +1,5 @@
-"""ANN search (brute force, LSH and IVF recall) on the driver embeddings
-table, and reciprocal-rank fusion."""
+"""ANN search (brute force + LSH recall) on the driver embeddings table,
+textstats operators on documents, multimodal plumbing on pages."""
 
 from __future__ import annotations
 
@@ -10,6 +10,10 @@ import pytest
 from word_sense_disambiguation_spark.operators.similarity_search import (
     brute_force_topk,
     lsh_topk,
+)
+from word_sense_disambiguation_spark.operators.textstats import (
+    fingerprints,
+    text_profile,
 )
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -64,6 +68,91 @@ def test_lsh_topk_recall(embeddings, queries):
         assert (qid, qid) in a
 
 
+def test_text_profile(spark):
+    df = spark.createDataFrame(
+        [
+            (1, "The quick brown fox jumps over the lazy dog and runs to the river."),
+            (2, "le chat est sur la table et les livres sont ici"),
+            (3, "???!!! ... ---"),
+        ],
+        schema="doc_id long, text string",
+    )
+    out = {r.doc_id: r for r in text_profile(df, "doc_id", "text").collect()}
+    assert out[1].pred_lang == "en"
+    assert out[2].pred_lang == "fr"
+    assert out[3].pred_lang == "und"
+    assert out[1].ws_tokens == 14
+    assert out[1].bpe_tokens == 15  # 14 words + final period
+    assert out[1].quality > out[3].quality
+
+
+def test_text_profile_on_documents(spark):
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    prof = text_profile(docs, "doc_id", "text")
+    assert prof.count() == docs.count()
+    assert prof.filter(F.col("quality") < 0).count() == 0
+    assert prof.filter(F.col("quality") > 1).count() == 0
+
+
+def test_fingerprints_detect_containment(spark):
+    a = "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 5
+    b = "prefix words here " + a + " suffix words there"
+    c = "totally different content with no shared windows at all whatsoever"
+    df = spark.createDataFrame(
+        [(1, a), (2, b), (3, c)], schema="doc_id long, text string"
+    )
+    fp = fingerprints(df, "doc_id", "text")
+    f1 = {r.fp for r in fp.filter("id = 1").collect()}
+    f2 = {r.fp for r in fp.filter("id = 2").collect()}
+    f3 = {r.fp for r in fp.filter("id = 3").collect()}
+    assert len(f1 & f2) / max(len(f1), 1) > 0.8  # containment
+    assert len(f1 & f3) == 0
+
+
+def test_multimodal_plumbing(sworld):
+    from word_sense_disambiguation_spark.operators.multimodal import (
+        frame_sample,
+        media_metadata,
+    )
+
+    meta = media_metadata(sworld["pages"], "url", "html", media_type="image")
+    rows = meta.limit(10).collect()
+    assert rows
+    for r in rows:
+        assert r.n_bytes > 0 and 1 <= r.width <= 4096 and r.n_frames >= 1
+    fs = frame_sample(sworld["pages"].limit(5), "url", "html", every_n=4)
+    assert fs.count() >= 5
+
+
+def test_real_decode_is_stubbed():
+    from word_sense_disambiguation_spark.operators.multimodal import real_decode
+
+    with pytest.raises(NotImplementedError):
+        real_decode(b"\x00" * 16)
+
+
+def test_parse_image_dims_roundtrip():
+    """The header parser must read back the exact dimensions written into
+    valid PNG/JPEG byte layouts, and refuse everything else."""
+    from word_sense_disambiguation_spark.datagen import synth_jpeg, synth_png
+    from word_sense_disambiguation_spark.operators.multimodal import (
+        parse_image_dims,
+    )
+
+    for w, h in [(1, 1), (16, 9000), (65535, 2), (640, 480)]:
+        assert parse_image_dims(synth_png(w, h, filler=3)) == ("png", w, h)
+        if w <= 65535 and h <= 65535:
+            assert parse_image_dims(synth_jpeg(w, h)) == ("jpeg", w, h)
+    # non-images fall through to the fake decoder
+    assert parse_image_dims(b"<html><body>nope</body></html>") is None
+    assert parse_image_dims(b"") is None
+    assert parse_image_dims(b"\xff\xd8\xff\xd9") is None  # JPEG with no SOF
+    assert parse_image_dims(synth_png(3, 4)[:20]) is None  # truncated PNG
+    # a SOF behind a skippable segment is still found (the segment walk)
+    jp = synth_jpeg(123, 77)
+    assert parse_image_dims(jp) == ("jpeg", 123, 77)
+
+
 def test_ivf_exhaustive_probe_equals_exact(embeddings, queries):
     """Probing every list degrades IVF to the exact search: same top-k set
     as brute force (tie-tolerant on set membership, not order)."""
@@ -116,6 +205,28 @@ def test_ivf_index_is_materialized(embeddings):
     assert "ExistingRDD" in plan or "LogicalRDD" in plan or "Scan" in plan
 
 
+def test_parse_image_dims_jpeg_fill_bytes():
+    """0xFF fill bytes before a marker are legal padding (ITU T.81
+    B.1.1.2) and common in real JPEGs; the segment walk must skip them
+    instead of misreading a fill byte as a length-bearing marker and
+    silently falling back to the fake decoder (ADVICE r3)."""
+    from word_sense_disambiguation_spark.datagen import synth_jpeg
+    from word_sense_disambiguation_spark.operators.multimodal import (
+        parse_image_dims,
+    )
+
+    plain = synth_jpeg(321, 123)
+    assert parse_image_dims(plain) == ("jpeg", 321, 123)
+    # fill run between APP0 and SOF0 (SOI 2 + APP0 18 = offset 20)
+    padded = plain[:20] + b"\xff" * 5 + plain[20:]
+    assert parse_image_dims(padded) == ("jpeg", 321, 123)
+    # fill run immediately after SOI
+    padded2 = plain[:2] + b"\xff" * 3 + plain[2:]
+    assert parse_image_dims(padded2) == ("jpeg", 321, 123)
+    # a payload that is nothing but SOI + fills stays a clean None
+    assert parse_image_dims(b"\xff\xd8" + b"\xff" * 16) is None
+
+
 def test_lsh_prebuilt_index_identity(spark, embeddings, queries):
     """lsh_topk with a prebuilt (persisted) signature table must equal the
     build-inline form — the amortized-index contract the bench times."""
@@ -132,6 +243,348 @@ def test_lsh_prebuilt_index_identity(spark, embeddings, queries):
         assert a == b and len(a) > 0
     finally:
         idx.unpersist()
+
+
+def test_repetition_stats(spark):
+    from word_sense_disambiguation_spark.operators.textstats import (
+        repetition_stats,
+    )
+
+    rows = [
+        # "a b" occurs 3x (covered 3*3=9), no 5-gram repeats
+        (0, "a b a b a b x"),
+        # every token distinct: top 2-gram count 1, dup5 = 0
+        (1, "one two three four five six"),
+        # a repeated 5-gram: "p q r s t" twice (covered 2*9=18)
+        (2, "p q r s t p q r s t"),
+        (3, "tiny"),   # < 2 tokens: both fractions 0 over len 4... top needs >=2
+        (4, ""),       # empty: 0.0 / 0.0
+    ]
+    docs = spark.createDataFrame(rows, schema="doc_id long, text string")
+    out = {r.doc_id: r for r in repetition_stats(docs, "doc_id", "text").collect()}
+    assert len(out) == 5
+    assert abs(out[0].top_ngram_char_frac - 9 / 13) < 1e-12
+    assert out[0].dup_ngram_char_frac == 0.0
+    # doc 1: all 2-grams unique -> top covered = 1 * len(smallest-by-order
+    # tie-break gram with cnt 1) ... deterministic: (cnt desc, gram asc)
+    assert out[1].top_ngram_char_frac > 0.0
+    assert out[1].dup_ngram_char_frac == 0.0
+    assert abs(out[2].dup_ngram_char_frac - 18 / 19) < 1e-12
+    assert out[3].top_ngram_char_frac == 0.0 and out[3].dup_ngram_char_frac == 0.0
+    assert out[4].top_ngram_char_frac == 0.0 and out[4].dup_ngram_char_frac == 0.0
+
+
+def test_chunk_documents_coverage_and_overlap(spark):
+    from word_sense_disambiguation_spark.operators.textstats import (
+        chunk_documents,
+    )
+
+    df = spark.createDataFrame(
+        [
+            (1, " ".join(f"t{i}" for i in range(300))),
+            (2, "a b c"),
+            (3, ""),
+            (4, None),
+        ],
+        "doc_id long, text string",
+    )
+    out = chunk_documents(df, "doc_id", "text", chunk_tokens=128, overlap_tokens=32)
+    rows = sorted(
+        ((r.doc_id, r.chunk_id, r.token_start, r.token_end) for r in out.collect())
+    )
+    assert rows == [
+        (1, 0, 0, 128),
+        (1, 1, 96, 224),
+        (1, 2, 192, 300),
+        (2, 0, 0, 3),
+        (3, 0, 0, 0),  # chunking is total: empty/null docs keep one row
+        (4, 0, 0, 0),
+    ]
+    got = {(r.doc_id, r.chunk_id): r.chunk_text for r in out.collect()}
+    # neighbouring chunks share exactly overlap_tokens tokens
+    a, b = got[(1, 0)].split(), got[(1, 1)].split()
+    assert a[96:] == b[:32]
+    assert got[(1, 2)].split()[-1] == "t299"  # tail covered
+    assert got[(3, 0)] == "" and got[(4, 0)] == ""
+
+    plan = out._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
+    assert "Exchange" not in plan and "EvalPython" not in plan
+
+    import pytest as _pytest
+
+    with _pytest.raises(ValueError):
+        chunk_documents(df, "doc_id", "text", chunk_tokens=32, overlap_tokens=32)
+
+
+def test_distinctive_terms_ranking_and_determinism(spark):
+    from word_sense_disambiguation_spark.operators.textstats import (
+        distinctive_terms,
+    )
+
+    df = spark.createDataFrame(
+        [
+            (1, "apple banana apple cherry"),
+            (2, "banana banana dog"),
+            (3, "apple dog dog zebra"),
+        ],
+        "doc_id long, text string",
+    )
+    out = distinctive_terms(df, "doc_id", "text", top_k=2)
+    got = sorted(map(tuple, out.collect()))
+    # rare terms beat common ones; ties (equal score) break tf desc then token asc
+    assert (1, 1, "apple", 2, 2, 3000000) in got      # tf=2 wins the 3e6 tie
+    assert (1, 2, "cherry", 1, 1, 3000000) in got     # df=1 most distinctive
+    assert (2, 2, "dog", 1, 2, 1500000) in got        # df=2 halves the idf
+    assert len(got) == 6
+    # parallelism invariance
+    out2 = distinctive_terms(df.repartition(7), "doc_id", "text", top_k=2)
+    assert sorted(map(tuple, out2.collect())) == got
+
+
+def test_script_profile_hand_example(spark):
+    """Known multi-script strings count exactly per codepoint range;
+    dominant pick follows the fixed priority; mixed-majority, tie, and
+    empty cases all pinned."""
+    from word_sense_disambiguation_spark.operators.textstats import (
+        script_profile,
+    )
+
+    rows = [
+        (1, "hello мир"),          # 5 latin + 3 cyrillic (space uncounted)
+        (2, "русский текст тут"),  # cyrillic dominant
+        (3, "日本語テスト"),         # cjk only
+        (4, "abc где"),            # 3 vs 3 tie -> latin (priority)
+        (5, ""),                   # empty
+        (6, "1234 !!"),            # chars but no script chars
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    out = {r.doc_id: r for r in script_profile(df, "doc_id", "text").collect()}
+    r1 = out[1]
+    assert (r1.n_latin, r1.n_cyrillic, r1.n_chars) == (5, 3, 9)
+    assert r1.dominant_script == "latin"
+    assert r1.dominant_ratio == 5.0 / 9.0
+    assert out[2].dominant_script == "cyrillic"
+    r3 = out[3]
+    assert r3.n_cjk == 6 and r3.dominant_script == "cjk"
+    assert r3.dominant_ratio == 1.0
+    assert out[4].dominant_script == "latin"  # the tie rule
+    r5 = out[5]
+    assert r5.n_chars == 0 and r5.dominant_script == "none"
+    assert r5.dominant_ratio is None
+    r6 = out[6]
+    assert r6.dominant_script == "none" and r6.dominant_ratio == 0.0
+
+
+def test_script_profile_mislabeled_page_signal(spark):
+    """The routing use case: a page whose body is majority-CJK flags
+    cjk-dominant even when a wrapper sprinkles ASCII — the char-level
+    catch for token-level langid mislabels."""
+    from word_sense_disambiguation_spark.operators.textstats import (
+        script_profile,
+    )
+
+    body = "这是一个测试页面的正文内容很长" * 5
+    page = "<div id=x>" + body + "</div>"
+    df = spark.createDataFrame([(1, page)], "doc_id long, text string")
+    r = script_profile(df, "doc_id", "text").collect()[0]
+    assert r.dominant_script == "cjk"
+    assert r.dominant_ratio > 0.7
+
+
+def test_script_profile_plan_no_shuffle(spark):
+    """One scan, pure codegen: no Exchange, no Python."""
+    from word_sense_disambiguation_spark.operators.textstats import (
+        script_profile,
+    )
+
+    df = spark.createDataFrame([(1, "x")], "doc_id long, text string")
+    plan = (
+        script_profile(df, "doc_id", "text")
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert "Exchange" not in plan
+    assert "Python" not in plan
+
+
+def test_build_vocabulary_semantics(spark):
+    """Exact counts, min-count floor, (count DESC, token ASC) total
+    order with contiguous ranks, boundary-tie determinism, and
+    partitioning invariance."""
+    from word_sense_disambiguation_spark.operators.textstats import (
+        build_vocabulary,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, "aa bb aa cc"), (2, "aa bb dd dd"), (3, "aa cc dd")],
+        "doc_id long, text string",
+    )
+    out = [
+        (r["rank"], r["token"], r["count"])
+        for r in build_vocabulary(
+            docs, "doc_id", "text", min_count=2, top_n=3
+        ).collect()
+    ]
+    # counts: aa 4, dd 3, bb 2, cc 2 -> top 3 cuts at the bb/cc tie,
+    # token ASC keeps bb
+    assert out == [(1, "aa", 4), (2, "dd", 3), (3, "bb", 2)]
+    many = [
+        (r["rank"], r["token"], r["count"])
+        for r in build_vocabulary(
+            docs.repartition(7), "doc_id", "text", min_count=2, top_n=3
+        ).collect()
+    ]
+    assert many == out
+
+
+def test_build_vocabulary_plan_take_ordered(spark):
+    """The global top-N must be TakeOrderedAndProject (bounded heaps),
+    never a full Sort shuffle over the count table."""
+    from word_sense_disambiguation_spark.operators.textstats import (
+        build_vocabulary,
+    )
+
+    docs = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
+    plan = (
+        build_vocabulary(docs, "doc_id", "text", min_count=1, top_n=10)
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert "TakeOrderedAndProject" in plan, plan[:1500]
+
+
+def test_cooccurrence_hand_example(spark):
+    """'a b a b' with window 2: pairs (a,b) x3, (a,a), (b,b) — exact
+    counts, canonical orientation, and the exp-PMI ratio's exact
+    arithmetic (T_tok=4, T_pairs=5)."""
+    from word_sense_disambiguation_spark.operators.textstats import (
+        cooccurrence_counts,
+    )
+
+    docs = spark.createDataFrame([(1, "a b a b")], "doc_id long, text string")
+    out = {
+        (r.w1, r.w2): r
+        for r in cooccurrence_counts(
+            docs, "doc_id", "text", window=2, min_count=1
+        ).collect()
+    }
+    assert out[("a", "b")].n_pair == 3
+    assert out[("a", "a")].n_pair == 1
+    assert out[("b", "b")].n_pair == 1
+    r = out[("a", "b")]
+    assert r.assoc_ratio == (3.0 * (4.0 * 4.0)) / ((5.0 * 2.0) * 2.0)
+
+
+def test_cooccurrence_window_and_floor(spark):
+    """Window 1 sees only adjacent pairs; min_count floors output pairs
+    but the totals stay pre-floor (the rare pair's ratio is unchanged by
+    flooring OTHER pairs out)."""
+    from word_sense_disambiguation_spark.operators.textstats import (
+        cooccurrence_counts,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, "x y z x y")], "doc_id long, text string"
+    )
+    w1 = {
+        (r.w1, r.w2): r.n_pair
+        for r in cooccurrence_counts(
+            docs, "doc_id", "text", window=1, min_count=1
+        ).collect()
+    }
+    assert w1 == {("x", "y"): 2, ("y", "z"): 1, ("x", "z"): 1}
+    floored = cooccurrence_counts(
+        docs, "doc_id", "text", window=1, min_count=2
+    ).collect()
+    assert len(floored) == 1 and floored[0].n_pair == 2
+    # same pair's ratio with and without the floor: totals are pre-floor
+    unfloored = {
+        (r.w1, r.w2): r.assoc_ratio
+        for r in cooccurrence_counts(
+            docs, "doc_id", "text", window=1, min_count=1
+        ).collect()
+    }
+    assert floored[0].assoc_ratio == unfloored[("x", "y")]
+
+
+def test_cooccurrence_invariance_and_plan(spark):
+    from word_sense_disambiguation_spark.operators.textstats import (
+        cooccurrence_counts,
+    )
+
+    docs = spark.createDataFrame(
+        [(i, "t%d u%d v w" % (i % 5, i % 3)) for i in range(40)],
+        "doc_id long, text string",
+    )
+    one = sorted(map(tuple, cooccurrence_counts(
+        docs.coalesce(1), "doc_id", "text", min_count=2
+    ).collect()))
+    many = sorted(map(tuple, cooccurrence_counts(
+        docs.repartition(7), "doc_id", "text", min_count=2
+    ).collect()))
+    assert one == many
+    plan = (
+        cooccurrence_counts(docs, "doc_id", "text")
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert "Window" not in plan
+    assert "CartesianProduct" not in plan
+
+
+def test_token_diversity_semantics(spark):
+    """Degenerate single-token spam scores 0, all-distinct scores
+    1 - 1/T, mixed case exact; empty/null docs keep NULL rows."""
+    from word_sense_disambiguation_spark.operators.textstats import (
+        token_diversity,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, "spam spam spam spam"), (2, "a b c d"),
+         (3, "x x y"), (4, ""), (5, None)],
+        "doc_id long, text string",
+    )
+    out = {r.doc_id: r for r in token_diversity(docs, "doc_id", "text").collect()}
+    assert out[1].simpson_diversity == 0.0
+    assert out[2].simpson_diversity == 1.0 - (4.0 / 16.0)
+    assert out[3].simpson_diversity == 1.0 - 5.0 / 9.0
+    assert (out[3].n_tokens, out[3].n_distinct) == (3, 2)
+    for d in (4, 5):
+        assert out[d].n_tokens == 0
+        assert out[d].simpson_diversity is None
+    # the ranking claim: flat-histogram spam scores strictly below prose
+    assert out[1].simpson_diversity < out[3].simpson_diversity < out[2].simpson_diversity
+
+
+def test_cooccurrence_harmonic_weights_exact(spark):
+    """GloVe 1/d weighting in integer form: with scale=lcm(1..16), a
+    pair at offset k contributes exactly scale/k; 'a b _ a' (window 3)
+    gives (a,b) at offsets 1 and 2 -> w = scale + scale/2; the default
+    unweighted schema is unchanged."""
+    from word_sense_disambiguation_spark.operators.textstats import (
+        cooccurrence_counts,
+    )
+
+    S = 720720
+    docs = spark.createDataFrame([(1, "a b c a")], "doc_id long, text string")
+    out = {
+        (r.w1, r.w2): r
+        for r in cooccurrence_counts(
+            docs, "doc_id", "text", window=3, min_count=1, harmonic_scale=S
+        ).collect()
+    }
+    ab = out[("a", "b")]  # offsets 1 (a->b) and 2 (b->a at pos 1->3)
+    assert ab.n_pair == 2
+    assert ab.w_pair == S + S // 2
+    aa = out[("a", "a")]  # offset 3
+    assert aa.w_pair == S // 3
+    plain = cooccurrence_counts(
+        docs, "doc_id", "text", window=3, min_count=1
+    )
+    assert "w_pair" not in plain.columns
 
 
 def test_rrf_fuse_hand_example(spark):

@@ -202,3 +202,76 @@ def test_stream_curate_increment_parity(spark, tmp_path):
     assert streamed[102][1] == "novel"
     assert streamed[103] == (False, None, None)
     corpus.unpersist()
+
+
+def test_stream_session_watermark_finalization(spark, tmp_path):
+    """Append-mode session_window: sessions emit exactly once, when the
+    watermark passes their end (driven here by a far-future flush
+    event); the emitted finals equal the batch operator on the same
+    input — the one-expression-two-modes contract."""
+    import datetime as dt
+
+    import pandas as pd
+
+    from word_sense_disambiguation_spark.operators.temporal import (
+        session_window_stats,
+    )
+    from word_sense_disambiguation_spark.streaming.ingest import (
+        stream_session_stats,
+    )
+
+    base = dt.datetime(2024, 1, 1, 12, 0, 0)
+    ev = pd.DataFrame(
+        {
+            "event_id": [1, 2, 3, 4],
+            "ts": [
+                base,
+                base + dt.timedelta(seconds=1800),   # exact gap: merges
+                base + dt.timedelta(seconds=3601),   # splits
+                base + dt.timedelta(seconds=10),
+            ],
+            "user_id": [1, 1, 1, 2],
+            "event_type": ["a"] * 4,
+            "value": [0.0] * 4,
+            "props": [""] * 4,
+        }
+    )
+    ev["ts"] = ev["ts"].astype("datetime64[us]")
+    d = tmp_path / "evstream"
+    d.mkdir()
+    ev.to_parquet(d / "part1.parquet", index=False)
+    schema = ("event_id long, ts timestamp, user_id long, "
+              "event_type string, value double, props string")
+    q, name = stream_session_stats(
+        spark, str(d), schema, gap="30 minutes", watermark="1 hour"
+    )
+    try:
+        q.processAllAvailable()
+        n_before = spark.table(name).count()   # watermark hasn't passed
+        flush = pd.DataFrame(
+            {
+                "event_id": [99],
+                "ts": [base + dt.timedelta(days=30)],
+                "user_id": [999],
+                "event_type": ["a"],
+                "value": [0.0],
+                "props": [""],
+            }
+        )
+        flush["ts"] = flush["ts"].astype("datetime64[us]")
+        flush.to_parquet(d / "part2.parquet", index=False)
+        q.processAllAvailable()
+        streamed = [
+            tuple(r)
+            for r in spark.table(name).filter("user_id != 999").collect()
+        ]
+    finally:
+        q.stop()
+    assert n_before == 0
+    sev = spark.createDataFrame(ev)
+    batch = [
+        tuple(r)
+        for r in session_window_stats(sev, "user_id", "ts", "event_id").collect()
+    ]
+    assert sorted(streamed) == sorted(batch)
+    assert len(batch) == 3

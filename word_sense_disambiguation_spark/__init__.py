@@ -15,7 +15,9 @@ resolves the mentions to entities —
 
 with each stage committed by ``plans.checkpoint.run_er_pipeline`` so a
 killed run resumes, and ``streaming.ingest`` attaching new crawl
-increments to a frozen cluster snapshot.
+increments to a frozen cluster snapshot. The corpus-analysis operators
+(text statistics, quantiles, temporal joins, CDC, Z-order layout, media
+headers) serve the driver-contract queries, not the pipeline.
 
 Everything is DataFrame-first: built-in ``pyspark.sql.functions`` on the hot
 path, Arrow-batched pandas UDFs only where Spark has no native operator.

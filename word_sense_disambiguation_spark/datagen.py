@@ -461,3 +461,53 @@ def world_to_spark(spark, world: dict[str, pd.DataFrame]) -> dict:
 def pages_for_scale(sf: float) -> int:
     """Page count for a TESTDATA-style scale factor (sf0.1 ≈ 20k pages)."""
     return max(64, int(sf * 200_000))
+
+
+# ---------------------------------------------------------------------------
+# Valid image-header fixtures: REAL PNG/JPEG byte layouts (the header parser
+# in operators.multimodal must read dimensions back out of these), with
+# deterministic sizes so the driver oracle can predict every field in SQL.
+# ---------------------------------------------------------------------------
+
+
+def synth_png(width: int, height: int, filler: int = 0) -> bytes:
+    """A minimal VALID PNG prefix: 8-byte signature + a well-formed IHDR
+    chunk (correct length, type, fields, and CRC), padded with ``filler``
+    zero bytes. Total length = 33 + filler."""
+    import zlib as _zlib
+
+    ihdr = (
+        width.to_bytes(4, "big")
+        + height.to_bytes(4, "big")
+        + bytes([8, 2, 0, 0, 0])  # bit depth 8, truecolor, default methods
+    )
+    chunk = (
+        (13).to_bytes(4, "big")
+        + b"IHDR"
+        + ihdr
+        + _zlib.crc32(b"IHDR" + ihdr).to_bytes(4, "big")
+    )
+    return b"\x89PNG\r\n\x1a\n" + chunk + b"\x00" * filler
+
+
+def synth_jpeg(width: int, height: int, filler: int = 0) -> bytes:
+    """A minimal VALID JPEG: SOI + JFIF APP0 + SOF0 frame header (with the
+    dimensions) + EOI, padded with ``filler`` zero bytes after EOI. Total
+    length = 41 + filler (2 + 18 + 19 + 2 + filler)."""
+    app0 = (
+        b"\xff\xe0"
+        + (16).to_bytes(2, "big")
+        + b"JFIF\x00"
+        # version(2) units(1) xdensity(2) ydensity(2) thumb(2) = 9 bytes;
+        # with JFIF\0 (5) + the length field (2) that is exactly 16
+        + bytes([1, 1, 0, 0, 1, 0, 1, 0, 0])
+    )
+    sof0 = (
+        b"\xff\xc0"
+        + (17).to_bytes(2, "big")
+        + bytes([8])  # precision
+        + height.to_bytes(2, "big")
+        + width.to_bytes(2, "big")
+        + bytes([3, 1, 0x11, 0, 2, 0x11, 1, 3, 0x11, 1])  # 3 components
+    )
+    return b"\xff\xd8" + app0 + sof0 + b"\xff\xd9" + b"\x00" * filler

@@ -859,8 +859,8 @@ def quality_classifier_scores(
     - ``weights is None`` (default): the engine's deterministic stand-in
       — token weight = (60-bit md5 prefix mod 2001) - 1000, i.e. a
       seeded hash-projection in [-1000, 1000], the same
-      plumbing-real/model-fake discipline as the gloss-overlap MLM
-      stand-in. ZERO shuffle: one codegen'd
+      plumbing-real/model-fake discipline as the multimodal decoder and
+      the gloss-overlap MLM stand-in. ZERO shuffle: one codegen'd
       higher-order aggregate per row, no explode, nothing leaves the
       scan stage. This is the 100 TB shape — a model whose weights are
       a pure function of the token needs no weight table at all.

@@ -1,4 +1,4 @@
-"""Structured Streaming: incremental page ingest, attach and curation.
+"""Structured Streaming: incremental page ingest and windowed event stats.
 
 The reference is request/response-only (no stream surface, SURVEY §2), but
 a web-scale crawl pipeline ingests incrementally, so the engine exposes:
@@ -12,10 +12,6 @@ a web-scale crawl pipeline ingests incrementally, so the engine exposes:
   the flagship pipeline: each micro-batch of pages runs the same
   pages->assignments DAG and appends to a parquet sink (exactly-once via
   checkpointLocation), demonstrating mid-stream resumability.
-* :func:`stream_attach_to_clusters` — the same micro-batch DAG, then
-  ``attach_mentions_to_clusters`` against a frozen cluster snapshot.
-* :func:`stream_curate_increment` — quality gates plus dedup of each new
-  document batch against a frozen corpus.
 """
 
 from __future__ import annotations
@@ -62,6 +58,69 @@ def stream_windowed_event_counts(
     finally:
         q.stop()
     return spark.table(name)
+
+
+def stream_session_stats(
+    spark: SparkSession,
+    events_path: str,
+    schema: str,
+    gap: str = "30 minutes",
+    watermark: str = "2 hours",
+    user_col: str = "user_id",
+    ts_col: str = "ts",
+    id_col: str = "event_id",
+):
+    """Streaming per-user sessionization with the NATIVE
+    ``session_window`` aggregate in APPEND mode: a session row is
+    emitted exactly once, when the watermark passes its end — the
+    correct unbounded-stream shape (complete mode would hold every
+    session ever seen in state forever; the lag-window construction
+    cannot stream at all). State per key is the open-session fragments
+    (duplicate-timestamp rows collapse in the pre-shuffle partial
+    aggregate; candidates weld in the sorted MergingSessions pass);
+    late events inside the watermark re-open nothing
+    (they merge before emission), later ones are dropped by the
+    watermark contract.
+
+    Returns ``(query, table_name)`` — the caller drives the input
+    directory (append files, ``processAllAvailable()``) and reads
+    emitted FINAL sessions from the memory sink; finalization requires
+    the watermark to advance, i.e. newer events must arrive (the test
+    appends a far-future flush event — the standard finite-input
+    idiom). Same output schema as the batch
+    :func:`operators.temporal.session_window_stats`, whose pinned
+    ``> gap`` boundary rule this inherits (one expression, two
+    execution modes).
+    """
+    name = "stream_sessions_" + uuid.uuid4().hex[:8]
+    u = F.col(user_col)
+    stream = (
+        spark.readStream.schema(schema)
+        .parquet(events_path)
+        .filter(u.isNotNull() & F.col(ts_col).isNotNull())
+        .withWatermark(ts_col, watermark)
+        .groupBy(F.session_window(F.col(ts_col), gap).alias("_w"), u)
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_events"),
+            F.min(id_col).cast("long").alias("first_event_id"),
+            F.max(id_col).cast("long").alias("last_event_id"),
+        )
+        .select(
+            u,
+            F.unix_timestamp(F.col("_w.start")).alias("session_start_s"),
+            F.unix_timestamp(F.col("_w.end")).alias("session_end_s"),
+            "n_events",
+            "first_event_id",
+            "last_event_id",
+        )
+    )
+    q = (
+        stream.writeStream.outputMode("append")
+        .format("memory")
+        .queryName(name)
+        .start()
+    )
+    return q, name
 
 
 def stream_sense_assignments(
