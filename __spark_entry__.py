@@ -775,30 +775,16 @@ def _q_triangle_profile(spark, sf_dir):
 
 def _q_er_clusters_synthetic(spark, sf_dir):
     from word_sense_disambiguation_spark.datagen import build_world, world_to_spark
-    from word_sense_disambiguation_spark.operators.blocking import (
-        er_candidate_pairs,
-    )
-    from word_sense_disambiguation_spark.operators.clustering import cluster_mentions
-    from word_sense_disambiguation_spark.operators.pairs import score_mention_pairs
-    from word_sense_disambiguation_spark.operators.tokenize import (
-        mentions_from_pages_sql,
-    )
+    from word_sense_disambiguation_spark.operators.blocking import er_scored_edges
+    from word_sense_disambiguation_spark.operators.clustering import block_clusters
     from word_sense_disambiguation_spark.plans.pipeline import sense_assignments
 
     sw = world_to_spark(spark, build_world(n_pages=150, seed=42))
-    # materialize once: assignments (carries the Arrow scoring UDF) feed
-    # both scorer sides + the oversized-canopy recovery, and mentions feed
-    # four blocking subtrees — uncheckpointed, Catalyst re-runs each DAG
-    # per consumer.
     assignments = sense_assignments(sw["pages"], sw["senses"]).select(
         "mention_id", "lemma", "pos", "norm_surface", "surface",
         "context_words", "pred_sense_id", "decision",
-    ).localCheckpoint(eager=True)
-    mentions = mentions_from_pages_sql(sw["pages"]).select(
-        "mention_id", "norm_surface", "pos"
-    ).localCheckpoint(eager=True)
-    edges = score_mention_pairs(er_candidate_pairs(mentions, assignments), assignments)
-    return cluster_mentions(edges)
+    )
+    return block_clusters(er_scored_edges(assignments))
 
 
 def _derived_er_corpus(spark, sf_dir, parity=None):
@@ -868,23 +854,18 @@ def _derived_er_corpus(spark, sf_dir, parity=None):
     return mentions, assignments
 
 
-def _derived_er_cluster(mentions, assignments):
+def _derived_er_cluster(assignments):
     """Derived-world snapshot build: surface-key blocking (block cap 40,
-    oversized-star recovery) -> sense-only pair scoring -> adaptive CC."""
-    from word_sense_disambiguation_spark.operators.blocking import (
-        er_candidate_pairs,
-    )
-    from word_sense_disambiguation_spark.operators.clustering import cluster_mentions
-    from word_sense_disambiguation_spark.operators.pairs import score_mention_pairs
+    oversized-star recovery) + sense-only pair scoring -> block-local
+    clustering."""
+    from word_sense_disambiguation_spark.operators.blocking import er_scored_edges
+    from word_sense_disambiguation_spark.operators.clustering import block_clusters
 
-    edges = score_mention_pairs(
-        er_candidate_pairs(mentions, assignments, max_block_size=40),
-        assignments,
-        w_jw=0.0,
-        w_cos=0.0,
-        w_sense=1.0,
+    return block_clusters(
+        er_scored_edges(
+            assignments, max_block_size=40, w_jw=0.0, w_cos=0.0, w_sense=1.0
+        )
     )
-    return cluster_mentions(edges)
 
 
 def _q_er_clusters_derived(spark, sf_dir):
@@ -892,8 +873,9 @@ def _q_er_clusters_derived(spark, sf_dir):
     one remaining verification gap): derived mentions -> REAL broadcast
     candidate join -> REAL Lesk-only scoring -> REAL assign_senses
     (hash-agg max_by, tau reject, tie-break by sense_rank) -> REAL
-    surface-key blocking with oversized-star recovery -> REAL pair scorer
-    (sense-only weights) -> REAL adaptive connected components.
+    surface-key blocking with oversized-star recovery and REAL pair
+    scoring (sense-only weights, ``er_scored_edges``) -> REAL block-local
+    clustering (``block_clusters``).
 
     The corpus is SQL-derivable: mentions are every 23rd alphabetic >3-char
     token of ``documents`` (inventory lemmas from the same derived-sense
@@ -909,8 +891,8 @@ def _q_er_clusters_derived(spark, sf_dir):
     without a float anywhere. Reference lifecycle anchor:
     /root/reference/wsd/word_sense_disambiguation.py:375-403 + the
     prediction-equality match rule of wsd/benchmark.py:126."""
-    mentions, assignments = _derived_er_corpus(spark, sf_dir)
-    return _derived_er_cluster(mentions, assignments)
+    _mentions, assignments = _derived_er_corpus(spark, sf_dir)
+    return _derived_er_cluster(assignments)
 
 
 def _q_er_eval_pairwise(spark, sf_dir):
@@ -942,7 +924,7 @@ def _derived_er_labeled(spark, sf_dir):
     output, own id for unclustered) vs the planted generative identity
     — shared by the pairwise and B-cubed evaluation queries."""
     mentions, assignments = _derived_er_corpus(spark, sf_dir)
-    cc = _derived_er_cluster(mentions, assignments)
+    cc = _derived_er_cluster(assignments)
     slot = F.col("url").cast("long") + F.col("position")
     base_tok = F.when(
         slot % 13 == 0, F.expr("substring(surface, 1, length(surface) - 1)")
@@ -1058,8 +1040,8 @@ def _q_incremental_er_attach(spark, sf_dir):
     into a frozen base (even doc_ids, clustered with the REAL snapshot
     stack) and a batch (odd doc_ids) resolved against it with the REAL
     ``attach_mentions_to_clusters`` — per-(key, entity) representative
-    aggregation, best-entity max_by attach, and residual blocking ->
-    scoring -> CC mint, all sense-only so DuckDB replays base closure,
+    aggregation, best-entity max_by attach, and residual blocking +
+    scoring -> block-local clustering mint, all sense-only so DuckDB replays base closure,
     attach argmax, and residual closure exactly (two recursive CTEs).
     Frozen-base semantics: a batch mention can join a base entity but
     never merge two — the bounded-work-per-increment contract a 10^12-row
@@ -1071,7 +1053,7 @@ def _q_incremental_er_attach(spark, sf_dir):
 
     base_m, base_a = _derived_er_corpus(spark, sf_dir, parity=0)
     batch_m, batch_a = _derived_er_corpus(spark, sf_dir, parity=1)
-    cc = _derived_er_cluster(base_m, base_a)
+    cc = _derived_er_cluster(base_a)
     # the snapshot contract: EVERY base mention has a canonical id
     base_clusters = (
         base_m.select("mention_id")

@@ -21,14 +21,8 @@ def main() -> None:
     mode = sys.argv[4] if len(sys.argv) > 4 else "flagship"
 
     from word_sense_disambiguation_spark.datagen import build_world, world_to_spark
-    from word_sense_disambiguation_spark.operators.blocking import (
-        er_candidate_pairs,
-    )
-    from word_sense_disambiguation_spark.operators.clustering import cluster_mentions
-    from word_sense_disambiguation_spark.operators.pairs import score_mention_pairs
-    from word_sense_disambiguation_spark.operators.tokenize import (
-        mentions_from_pages_sql,
-    )
+    from word_sense_disambiguation_spark.operators.blocking import er_scored_edges
+    from word_sense_disambiguation_spark.operators.clustering import block_clusters
     from word_sense_disambiguation_spark.plans.pipeline import sense_assignments
     from word_sense_disambiguation_spark.session import get_spark
 
@@ -52,8 +46,9 @@ def main() -> None:
         _materialize(sense_assignments(pages, senses))
 
     def run_full() -> None:
-        # all three north-rule stages end-to-end: blocking
-        # (blocking.er_candidate_pairs), pair scoring, connected components.
+        # all three north-rule stages end-to-end: blocking and pair
+        # scoring (blocking.er_scored_edges), then clustering
+        # (clustering.block_clusters).
         # ER only pairs mentions with inventory evidence — no_definitions
         # mentions are guaranteed singletons (their surface blocks are
         # stop-word-sized and capped anyway), so they are pruned before the
@@ -72,8 +67,7 @@ def main() -> None:
             )
             .localCheckpoint(eager=True)
         )
-        edges = score_mention_pairs(er_candidate_pairs(a, a), a)
-        _materialize(cluster_mentions(edges))
+        _materialize(block_clusters(er_scored_edges(a)))
 
     from scripts._hoststat import bandwidth_probe, cpu_sample, steal_pct
 

@@ -32,9 +32,7 @@ def main() -> None:
     import pyspark.sql.functions as F
 
     from word_sense_disambiguation_spark.datagen import build_world, world_to_spark
-    from word_sense_disambiguation_spark.operators.blocking import (
-        er_candidate_pairs,
-    )
+    from word_sense_disambiguation_spark.operators.blocking import er_scored_edges
     from word_sense_disambiguation_spark.operators.dedup import (
         duplicate_span_stats,
         minhash_near_duplicate_clusters,
@@ -93,7 +91,6 @@ def main() -> None:
         fs_agreement_patterns,
         fs_match_probability,
         mutual_best_match,
-        score_mention_pairs,
     )
     from word_sense_disambiguation_spark.operators.similarity_search import (
         brute_force_topk,
@@ -152,7 +149,7 @@ def main() -> None:
         "mention_id", "lemma", "pos", "norm_surface", "surface",
         "context_words", "pred_sense_id", "decision",
     )
-    er_edges = score_mention_pairs(er_candidate_pairs(a, a), a)
+    er_edges = er_scored_edges(a)
     qvecs = [(int(r.vec_id), list(r.embedding)) for r in emb.orderBy("vec_id").limit(2).collect()]
     ivf = ivf_index(emb, n_lists=8, lloyd_iters=1)
     lsh = lsh_index(emb)
@@ -196,15 +193,15 @@ def main() -> None:
         ),
         (
             "er_cluster edges (blocking -> pair scoring)",
-            "blocking.er_candidate_pairs: blocks counted once; blocks "
-            "within the cap go through one shuffle on the block key into "
-            "one MapInPandas pass that emits only the scorer-reachable "
-            "pairs (hub star, same sense, same context direction); "
-            "canopy-aware star recovery of oversized blocks is unioned "
-            "without a distinct; two hash joins back to mention "
-            "attributes; JW + cosine as Arrow UDFs with the equality fast "
-            "path in the python loop. Oversized blocks degrade to linear "
-            "star edges — no silent caps.",
+            "blocking.er_scored_edges: ONE shuffle of the assignments on "
+            "the block key into one MapInPandas pass that enumerates each "
+            "block's candidate pairs (within the cap: hub star, same "
+            "sense, same context direction; over it: canopy-aware stars "
+            "— linear, no silent caps) and scores them in numpy (JW, "
+            "cosine over one embedding per member, sense agreement); no "
+            "join back to mention attributes, no distinct. "
+            "clustering.block_clusters then needs one shuffle on "
+            "block_id.",
             er_edges,
         ),
         (

@@ -48,7 +48,7 @@ def main() -> None:
     )
     summary = {
         name: out[name].count()
-        for name in ("mentions", "assignments", "pairs", "edges", "clusters")
+        for name in ("mentions", "assignments", "edges", "clusters")
     }
     print(json.dumps({"run_id": args.run_id, "rows": summary}))
     spark.stop()

@@ -10,7 +10,6 @@ from word_sense_disambiguation_spark.functions.hashing import (
     minhash_signature,
 )
 from word_sense_disambiguation_spark.functions.similarity import (
-    jaccard_sets,
     jaro_winkler,
     levenshtein,
 )
@@ -303,18 +302,25 @@ def _hand_blocks(spark):
     ).select(*_ASG_COLS)
 
 
-def test_er_candidate_pairs_is_exact_for_the_scorer(spark, sworld):
-    """er_candidate_pairs' scorer-aware pruning is exact: every pair it
-    emits is in the historical candidate set (capped small-block all-pairs
-    ∪ canopy-aware oversized-star recovery), unique and oriented id_a <
-    id_b, and under the default and the sense-only scorer configs the
-    matched edges ``(id_a, id_b, score)`` and the ``cluster_mentions`` rows
-    equal those of the historical set — on the test world at cap 256 and
-    16 (oversized blocks present) and on hand-built edge-case blocks."""
+def test_er_scored_edges_is_exact_for_the_scorer(spark, sworld):
+    """er_scored_edges' scorer-aware pruning and in-pass scoring are exact:
+    every pair it emits is in the historical candidate set (capped
+    small-block all-pairs ∪ canopy-aware oversized-star recovery), unique
+    and oriented id_a < id_b; every edge row ``(id_a, id_b, score,
+    is_match)`` equals ``score_mention_pairs`` on the same pairs; and under
+    the default and the sense-only scorer configs the matched edges
+    ``(id_a, id_b, score)`` and the ``block_clusters`` rows equal those of
+    the historical set through ``cluster_mentions`` — on the test world at
+    cap 256 and 16 (oversized blocks present) and on hand-built edge-case
+    blocks."""
     from word_sense_disambiguation_spark.operators.blocking import (
-        er_candidate_pairs,
+        er_scored_edges,
         oversized_star_pairs,
     )
+    from word_sense_disambiguation_spark.operators.clustering import block_clusters
+
+    def rows(df, *cols):
+        return sorted(tuple(r) for r in df.select(*cols).collect())
 
     world = (
         sense_assignments(sworld["pages"], sworld["senses"])
@@ -330,32 +336,31 @@ def test_er_candidate_pairs_is_exact_for_the_scorer(spark, sworld):
             .distinct()
             .localCheckpoint(eager=True)
         )
-        new = er_candidate_pairs(a, a, cap).localCheckpoint(eager=True)
-        got = [(r.id_a, r.id_b) for r in new.collect()]
-        assert len(got) == len(set(got))
-        assert all(x < y for x, y in got)
-        assert set(got) <= {(r.id_a, r.id_b) for r in old.collect()}
+        reference = set(rows(old, "id_a", "id_b"))
         for kw in _SCORER_CONFIGS:
+            new = er_scored_edges(a, cap, **kw).localCheckpoint(eager=True)
+            got = [(r.id_a, r.id_b) for r in new.collect()]
+            assert len(got) == len(set(got))
+            assert all(x < y for x, y in got)
+            assert set(got) <= reference
+            assert new.filter("lev_norm != 0").count() == 0
+            cols = ("id_a", "id_b", "score", "is_match")
+            rescored = score_mention_pairs(new.select("id_a", "id_b"), a, **kw)
+            assert rows(new, *cols) == rows(rescored, *cols), (cap, kw)
+
             e_old = score_mention_pairs(old, a, **kw)
-            e_new = score_mention_pairs(new, a, **kw)
-
-            def matched(e):
-                return sorted(
-                    tuple(r) for r in
-                    e.filter("is_match").select("id_a", "id_b", "score").collect()
-                )
-
-            assert matched(e_new) == matched(e_old), (cap, kw)
+            matched = ("id_a", "id_b", "score")
+            assert rows(new.filter("is_match"), *matched) == rows(
+                e_old.filter("is_match"), *matched
+            ), (cap, kw)
             c_old = sorted(tuple(r) for r in cluster_mentions(e_old).collect())
-            c_new = sorted(tuple(r) for r in cluster_mentions(e_new).collect())
+            c_new = sorted(tuple(r) for r in block_clusters(new).collect())
             assert c_new == c_old, (cap, kw)
     # the hand blocks exercise what they claim: the parallel pair, the
     # hash-colliding pair, the case-variant same-sense pair and the
     # long-context pair all match
     hand_matches = {
-        (r.id_a, r.id_b)
-        for r in score_mention_pairs(er_candidate_pairs(hand, hand), hand)
-        .filter("is_match").collect()
+        (r.id_a, r.id_b) for r in er_scored_edges(hand).filter("is_match").collect()
     }
     assert {("h03", "h04"), ("h20", "h21"), ("h01", "h02"), ("h40", "h41")} <= hand_matches
     assert ("h20", "h22") not in hand_matches
@@ -388,7 +393,7 @@ def test_default_scorer_is_covered_by_the_pruning():
 
 
 def test_cosine_float32_error_within_blocking_margin():
-    """The margin er_candidate_pairs' exactness proof relies on: for
+    """The margin er_scored_edges' exactness proof relies on: for
     non-parallel integer count vectors of at most 24 tokens, the float32
     ``cosine_batch`` of their normalized embeddings stays below 1.0 and
     within the proof's error bound E of the exact cosine. Exhaustive over

@@ -14,7 +14,7 @@ import pytest
 
 from word_sense_disambiguation_spark.operators.profiling import table_checksum
 from word_sense_disambiguation_spark.plans.checkpoint import (
-    ER_BUCKETS,
+    MANIFEST,
     StageRunner,
     er_binding,
     run_er_pipeline,
@@ -122,8 +122,9 @@ def test_mid_stage_bucket_resume(spark, sworld, tmp_path):
 
 
 def test_kill_and_resume_mid_pipeline(spark, sworld, tmp_path):
-    """Simulate a crash after stage 2 of 5; resume must not recompute
-    committed stages and must produce identical final clusters."""
+    """Simulate a crash after the first of the ER job's four stages;
+    resume must not recompute committed stages and must produce identical
+    final clusters."""
     run_dir = str(tmp_path / "er")
     pages, senses = sworld["pages"], sworld["senses"]
 
@@ -153,7 +154,7 @@ def test_kill_and_resume_mid_pipeline(spark, sworld, tmp_path):
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 
-ER_STAGES = ("mentions", "assignments", "pairs", "edges", "clusters")
+ER_STAGES = ("mentions", "assignments", "edges", "clusters")
 
 
 def _next_job_id(spark) -> int:
@@ -166,30 +167,35 @@ def _next_job_id(spark) -> int:
     return i
 
 
-def test_er_job_counts_and_counters_once(spark, sworld, tmp_path):
+@pytest.mark.parametrize("cap", (256, 16))
+def test_er_job_counts_and_counters_once(spark, sworld, tmp_path, cap):
     """Each stage manifest records its Spark jobs (job group + status
-    tracker, no extra job): they sum to the jobs the tracker saw, 25 or
-    fewer for the whole ER job, and the edges manifest records its match
-    count. A crash after the data and counters were written but before
-    the manifests (simulated by deleting them) re-runs every stage and
-    leaves each stage's counters exactly once, with identical clusters."""
+    tracker, no extra job): they sum to the jobs the tracker saw, 10 or
+    fewer for the whole ER job at the default cap and at a cap small
+    enough to leave oversized blocks, and the edges manifest records its
+    match count. A crash after the data and counters were written but
+    before the manifests (simulated by deleting them) re-runs every stage
+    and leaves each stage's counters exactly once, with identical
+    clusters."""
     run_dir = str(tmp_path / "er")
     pages, senses = sworld["pages"], sworld["senses"]
     j0 = _next_job_id(spark)
-    out = run_er_pipeline(spark, pages, senses, run_dir)
+    out = run_er_pipeline(spark, pages, senses, run_dir, max_block_size=cap)
     n_jobs = _next_job_id(spark) - j0
     r = out["runner"]
     manifests = {name: r.manifest(name) for name in ER_STAGES}
     per_stage = {name: m["spark_jobs"] for name, m in manifests.items()}
     assert sum(per_stage.values()) == n_jobs, per_stage
-    assert n_jobs <= 25, per_stage
+    assert n_jobs <= 10, per_stage
     assert all(v >= 1 for v in per_stage.values()), per_stage
     assert manifests["edges"]["matches"] == out["edges"].filter("is_match").count()
     clusters = sorted(tuple(x) for x in out["clusters"].collect())
 
     for name in ER_STAGES:
         os.remove(os.path.join(run_dir, name, "_MANIFEST.json"))
-    again = run_er_pipeline(spark, pages, senses, run_dir, run_id="again")
+    again = run_er_pipeline(
+        spark, pages, senses, run_dir, run_id="again", max_block_size=cap
+    )
     met = again["runner"].metrics()
     for name in ER_STAGES:
         rows = met.filter(F.col("stage") == name).collect()
@@ -201,9 +207,11 @@ def test_er_job_counts_and_counters_once(spark, sworld, tmp_path):
 
 
 def test_run_dir_binding(spark, sworld, tmp_path):
-    """A run dir is bound to its parameters and inputs: re-using it with
-    another block cap or other pages raises ValueError naming the stage
-    and the field; an identical re-run skips every committed stage."""
+    """A run dir is bound to its parameters, its inputs and the engine
+    version: re-using it with another block cap, other pages or a
+    manifest written by another engine version raises ValueError naming
+    the stage and the field; an identical re-run skips every committed
+    stage."""
     urls = [x.url for x in sworld["pages"].select("url").orderBy("url").limit(31).collect()]
     pages_dir, other_dir = str(tmp_path / "pages"), str(tmp_path / "other")
     base = sworld["pages"].filter(F.col("url").isin(urls[:30]))
@@ -223,6 +231,16 @@ def test_run_dir_binding(spark, sworld, tmp_path):
     out = run_er_pipeline(spark, spark.read.parquet(pages_dir), senses, run_dir)
     assert os.path.getmtime(manifest) == mtime
     assert out["clusters"].count() > 0
+
+    # a run dir of an older engine (another stage layout) is not resumed
+    path = os.path.join(run_dir, "mentions", MANIFEST)
+    with open(path) as f:
+        old = json.load(f)
+    old["binding"]["engine_version"] = "0.1.0"
+    with open(path, "w") as f:
+        json.dump(old, f)
+    with pytest.raises(ValueError, match="'mentions'.*engine_version"):
+        run_er_pipeline(spark, spark.read.parquet(pages_dir), senses, run_dir)
 
 
 # A driver process that runs the ER job and SIGKILLs itself at one commit
@@ -254,12 +272,10 @@ def atomic_write(path, data):
         os.path.join("metrics", "edges.parquet")
     ):
         die()
-    if point == "between_mention_buckets" and path.endswith("_DONE_BUCKETS.json"):
-        die()
 
 
 def commit_then(self, name, *args):
-    if point == "after_edges_data" and name == "edges":
+    if (point, name) in (("after_edges_data", "edges"), ("after_clusters_data", "clusters")):
         die()
     return commit(self, name, *args)
 
@@ -278,7 +294,7 @@ KILL_POINTS = (
     "after_edges_data",
     "after_edges_counters",
     "before_edges_manifest",
-    "between_mention_buckets",
+    "after_clusters_data",
 )
 
 
@@ -333,10 +349,10 @@ def test_sigkill_and_resume(spark, parquet_world, tmp_path, point):
     committed = {
         s: os.stat(p).st_mtime_ns for s, p in manifests.items() if os.path.exists(p)
     }
-    if point == "between_mention_buckets":
-        assert committed == {}
+    if point == "after_clusters_data":
+        assert tuple(committed) == ("mentions", "assignments", "edges")
     else:
-        assert tuple(committed) == ("mentions", "assignments", "pairs")
+        assert tuple(committed) == ("mentions", "assignments")
 
     out = run_er_pipeline(
         spark, spark.read.parquet(pages_dir), spark.read.parquet(senses_dir), run_dir,
@@ -353,6 +369,3 @@ def test_sigkill_and_resume(spark, parquet_world, tmp_path, point):
         assert len(parts) == len(set(parts)), s
         assert {x.run_id for x in rows} == {"killed" if s in committed else "resumed"}, s
         assert sum(x.rows for x in rows) == r.manifest(s)["rows"], s
-    if point == "between_mention_buckets":
-        # the buckets the killed driver recorded were kept, not rewritten
-        assert 0 < len(r.manifest("mentions")["resumed_buckets"]) < ER_BUCKETS

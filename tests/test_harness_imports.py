@@ -54,7 +54,7 @@ def test_harness_package_imports_resolve(path):
 def test_guard_sees_the_harness_imports():
     # the guard is vacuous if the walker stops finding imports
     assert ("word_sense_disambiguation_spark.operators.blocking",
-            "er_candidate_pairs") in _package_imports(
+            "er_scored_edges") in _package_imports(
         ROOT / "scripts" / "_flagship_run.py"
     )
 

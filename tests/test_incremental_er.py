@@ -9,7 +9,6 @@ base entity or mint new ids via residual clustering.
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from word_sense_disambiguation_spark.operators.incremental_er import (
     attach_mentions_to_clusters,
@@ -156,15 +155,8 @@ def test_residual_blocks_under_the_er_job_cap(spark):
     all-pairs there, so two NOTA duplicates whose context differs from the
     block hub's still find each other (a 64 cap would star the block over
     its hub and strand them as singletons)."""
-    from word_sense_disambiguation_spark.operators.blocking import (
-        er_candidate_pairs,
-    )
-    from word_sense_disambiguation_spark.operators.clustering import (
-        cluster_mentions,
-    )
-    from word_sense_disambiguation_spark.operators.pairs import (
-        score_mention_pairs,
-    )
+    from word_sense_disambiguation_spark.operators.blocking import er_scored_edges
+    from word_sense_disambiguation_spark.operators.clustering import block_clusters
 
     twins = {"m050", "m051"}
     rows = []
@@ -186,9 +178,7 @@ def test_residual_blocks_under_the_er_job_cap(spark):
     got = {r.mention_id: r.entity_id for r in out.collect()}
     cc = {
         r.mention_id: r.entity_id
-        for r in cluster_mentions(
-            score_mention_pairs(er_candidate_pairs(batch, batch), batch)
-        ).collect()
+        for r in block_clusters(er_scored_edges(batch)).collect()
     }
     assert got == {m: cc.get(m, m) for m in got}
     assert got["m050"] == got["m051"] == "m050"
@@ -197,9 +187,9 @@ def test_residual_blocks_under_the_er_job_cap(spark):
 
 def test_attach_rejects_scorer_configs_the_pruning_misses(spark):
     """The attach forwards its weights to the residual's scorer-aware
-    pairs (er_candidate_pairs): a config under which a dropped pair could
-    match raises ValueError before any Spark work; the defaults and the
-    sense-only config are accepted."""
+    pairs (er_scored_edges): a config under which a dropped pair could
+    match raises ValueError; the defaults and the sense-only config are
+    accepted."""
     a = _asg(spark, [("b1", "apple", "apple-s1", "assigned")])
     c = spark.createDataFrame([("b1", "b1")], "mention_id string, entity_id string")
     for kw in ({"w_cos": 0.5}, {"w_jw": 0.6, "w_cos": 0.0}, {"w_jw": -0.1}):

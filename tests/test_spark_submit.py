@@ -9,7 +9,6 @@ import json
 import os
 import shutil
 import subprocess
-import sys
 import zipfile
 
 import pytest

@@ -7,11 +7,13 @@ the prompted 128-way path), and a three-stage record-linkage pipeline
 resolves the mentions to entities —
 
 1. **blocking**   — normalized (surface, POS) keys, pruned to the pairs the
-   scorer can match (``operators.blocking.er_candidate_pairs``),
-2. **scoring**    — vectorized (Arrow) pairwise scoring: sense agreement,
-   Jaro-Winkler and context cosine,
-3. **clustering** — iterative large-star/small-star connected components
-   assigning canonical entity ids,
+   scorer can match,
+2. **scoring**    — vectorized pairwise scoring of each block's pairs:
+   sense agreement, Jaro-Winkler and context cosine (blocking and scoring
+   are one keyed pass, ``operators.blocking.er_scored_edges``),
+3. **clustering** — connected components per block (no edge crosses a
+   block), canonical entity id = minimum member
+   (``operators.clustering.block_clusters``),
 
 with each stage committed by ``plans.checkpoint.run_er_pipeline`` so a
 killed run resumes, and ``streaming.ingest`` attaching new crawl
@@ -23,4 +25,4 @@ Everything is DataFrame-first: built-in ``pyspark.sql.functions`` on the hot
 path, Arrow-batched pandas UDFs only where Spark has no native operator.
 """
 
-__version__ = "0.1.0"
+__version__ = "0.2.0"

@@ -29,7 +29,6 @@ import datetime as dt
 import hashlib
 import random
 
-import numpy as np
 import pandas as pd
 
 from word_sense_disambiguation_spark.functions.text import (

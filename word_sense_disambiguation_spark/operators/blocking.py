@@ -17,14 +17,14 @@ of this discipline is its length-bucketed batching
 (``wsd/masked_language_model.py:113-126``) — bounding worst-case work per
 unit, never dropping silently (it warns, ``training/train.py:374-396``).
 
-The ER job composes its candidate pairs in ONE place,
-:func:`er_candidate_pairs`: scorer-aware pairs inside small surface blocks
-(only the pairs the default pair scorer can match, plus one hub star per
-block that keeps every member in the clustered node set), plus linear
-canopy-aware star edges for every block over the cap. ``run_er_pipeline``,
-the incremental attach residual, the driver-contract ER queries and the
-bench/scaling harnesses all call it, so every ER job runs the same blocking
-policy under the same cap (:data:`ER_MAX_BLOCK`).
+The ER job blocks and scores in ONE place, :func:`er_scored_edges`: one
+shuffle on the surface key, then per block the scorer-aware pairs (only
+the pairs the pair scorer can match, plus one hub star per block that
+keeps every member in the clustered node set) or, for a block over the
+cap, linear canopy-aware star edges — scored in the same pass.
+``run_er_pipeline``, the incremental attach residual, the driver-contract
+ER queries and the scaling harness all call it, so every ER job runs the
+same blocking policy under the same cap (:data:`ER_MAX_BLOCK`).
 """
 
 from __future__ import annotations
@@ -40,6 +40,13 @@ from word_sense_disambiguation_spark.functions.hashing import (
     char_shingles,
     lsh_bands,
     minhash_signature,
+)
+from word_sense_disambiguation_spark.operators.pairs import (
+    MATCH_THRESHOLD,
+    W_COS,
+    W_JW,
+    W_SENSE,
+    pruning_covers,
 )
 
 DEFAULT_NUM_PERM = 128
@@ -176,9 +183,10 @@ def _runs(sorted_codes: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
 
 
 def _hub_pairs(group: np.ndarray, rank: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """Row pairs (first, other): each group's lowest-rank row to every
-    other row of the group."""
-    o = np.lexsort((rank, group))
+    """Row pairs (hub, other): each group's lowest-rank row to every other
+    row of the group; rows of group -1 take no part."""
+    rows = np.flatnonzero(group >= 0)
+    o = rows[np.lexsort((rank[rows], group[rows]))]
     starts, sizes = _runs(group[o])
     hub = np.repeat(starts, sizes)
     other = np.arange(len(o)) != hub
@@ -198,13 +206,89 @@ def _all_pairs(group: np.ndarray, rank: np.ndarray) -> tuple[np.ndarray, np.ndar
     return o[i], o[j]
 
 
-def _scorer_pairs_run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Per-partition pass of :func:`er_candidate_pairs` over whole small
-    blocks (the partition holds every member of each of its blocks):
-    hub stars, same-sense pairs, same-direction context pairs, and all
-    pairs of any block past the float-margin bound."""
+def _sql_and(terms: list[tuple[np.ndarray, np.ndarray]]) -> np.ndarray:
+    """SQL three-valued AND of ``(value, is_null)`` terms as a float column:
+    0.0 if any term is false, else NaN (Spark NULL) if any is null, else
+    1.0 — ``CAST(a AND b AND c AS DOUBLE)``."""
+    false = np.zeros(len(terms[0][0]), dtype=bool)
+    null = np.zeros_like(false)
+    for value, is_null in terms:
+        false |= ~value & ~is_null
+        null |= is_null
+    return np.where(false, 0.0, np.where(null, np.nan, 1.0))
+
+
+def _block_pairs(
+    pdf: pd.DataFrame, block: np.ndarray, rank: np.ndarray, max_block_size: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """Row pairs (i, j), id order, of the ER candidate set over whole
+    blocks: the scorer-aware pairs of blocks within the cap and the
+    oversized-star edges of blocks over it (see :func:`er_scored_edges`)."""
     from word_sense_disambiguation_spark.functions.hashing import (
         signed_count_matrix,
+    )
+
+    over = (np.bincount(block) > max_block_size)[block]
+    assigned = (pdf["decision"] == "assigned").to_numpy()
+
+    M = signed_count_matrix(pdf["context_words"]).astype(np.int64)
+    sq = (M * M).sum(axis=1).astype(np.float64)
+    # the cosine margin proof holds in a block with 4*R*S*eps*1.001 < 1,
+    # R = max |v|^2 (nnz + 3) and S = max |v|^2 over its members
+    r_max = pd.Series(sq * ((M != 0).sum(axis=1) + 3)).groupby(block).transform("max")
+    s_max = pd.Series(sq).groupby(block).transform("max")
+    wide = (4.0 * r_max * s_max * _F32_EPS * 1.001 >= 1.0).to_numpy() & ~over
+
+    g = np.gcd.reduce(np.abs(M), axis=1)
+    has_vec = (g > 0) & ~wide & ~over
+    direction = M // np.maximum(g, 1)[:, None]
+    vec_group = np.unique(
+        np.column_stack([block, direction]), axis=0, return_inverse=True
+    )[1].reshape(-1)
+
+    same_sense = assigned & pdf["pred_sense_id"].notna().to_numpy() & ~wide & ~over
+    keyed = pdf.assign(_b=block)
+    sense_group = keyed.groupby(
+        ["_b", "pred_sense_id"], sort=False, dropna=False
+    ).ngroup().to_numpy()
+    # oversized blocks: groupBy semantics, NULL lemma / sense is a value
+    canopy = keyed.groupby(
+        ["_b", "lemma", "pred_sense_id"], sort=False, dropna=False
+    ).ngroup().to_numpy()
+
+    found = [
+        _hub_pairs(np.where(over, -1, block), rank),
+        _all_pairs(np.where(wide, block, -1), rank),
+        _all_pairs(np.where(same_sense, sense_group, -1), rank),
+        _all_pairs(np.where(has_vec, vec_group, -1), rank),
+        _hub_pairs(np.where(over & assigned, canopy, -1), rank),
+        _hub_pairs(np.where(over & ~assigned, block, -1), rank),
+    ]
+    i = np.concatenate([f[0] for f in found])
+    j = np.concatenate([f[1] for f in found])
+    n = np.int64(len(pdf))
+    code = np.unique(rank[i].astype(np.int64) * n + rank[j])
+    row = np.empty(len(pdf), dtype=np.int64)
+    row[rank] = np.arange(len(pdf))
+    return row[code // n], row[code % n]
+
+
+def _block_edges_run(
+    batches: Iterator[pd.DataFrame],
+    max_block_size: int,
+    threshold: float,
+    w_jw: float,
+    w_cos: float,
+    w_sense: float,
+) -> Iterator[pd.DataFrame]:
+    """Per-partition pass of :func:`er_scored_edges` over whole blocks (the
+    partition holds every member of each of its blocks): enumerate the
+    candidate pairs, then score them with ``score_mention_pairs``' kernels
+    in its float order."""
+    from word_sense_disambiguation_spark.functions.hashing import embed_token_bags
+    from word_sense_disambiguation_spark.functions.similarity import (
+        cosine_batch,
+        jaro_winkler_batch,
     )
 
     parts = [b for b in batches if len(b)]
@@ -214,82 +298,96 @@ def _scorer_pairs_run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]
     rank, uniq = pd.factorize(pdf["mention_id"], sort=True)  # rank order == id order
     uniq = np.asarray(uniq)
     block = pdf.groupby(["norm_surface", "pos"], sort=False).ngroup().to_numpy()
-
-    M = signed_count_matrix(pdf["context_words"]).astype(np.int64)
-    sq = (M * M).sum(axis=1).astype(np.float64)
-    # the cosine margin proof holds in a block with 4*R*S*eps*1.001 < 1,
-    # R = max |v|^2 (nnz + 3) and S = max |v|^2 over its members
-    r_max = pd.Series(sq * ((M != 0).sum(axis=1) + 3)).groupby(block).transform("max")
-    s_max = pd.Series(sq).groupby(block).transform("max")
-    wide = (4.0 * r_max * s_max * _F32_EPS * 1.001 >= 1.0).to_numpy()
-
-    g = np.gcd.reduce(np.abs(M), axis=1)
-    has_vec = (g > 0) & ~wide
-    direction = M // np.maximum(g, 1)[:, None]
-    vec_group = np.unique(
-        np.column_stack([block, direction]), axis=0, return_inverse=True
-    )[1].reshape(-1)
-
-    assigned = (pdf["decision"] == "assigned").to_numpy() & ~wide
-    sense_group = (
-        pdf.assign(_b=block)
-        .groupby(["_b", "pred_sense_id"], sort=False, dropna=False)
-        .ngroup()
-        .to_numpy()
-    )
-    assigned &= pdf["pred_sense_id"].notna().to_numpy()
-
-    found = [
-        _hub_pairs(block, rank),
-        _all_pairs(np.where(wide, block, -1), rank),
-        _all_pairs(np.where(assigned, sense_group, -1), rank),
-        _all_pairs(np.where(has_vec, vec_group, -1), rank),
-    ]
-    i = np.concatenate([f[0] for f in found])
-    j = np.concatenate([f[1] for f in found])
+    i, j = _block_pairs(pdf, block, rank, max_block_size)
     if not len(i):
         return
-    n = np.int64(len(pdf))
-    code = np.unique(rank[i].astype(np.int64) * n + rank[j])
-    yield pd.DataFrame({"id_a": uniq[code // n], "id_b": uniq[code % n]})
+
+    score = np.zeros(len(i))
+    if w_jw != 0.0:
+        surface = pdf["surface"].to_numpy(dtype=object)
+        score = score + w_jw * jaro_winkler_batch(surface[i], surface[j])
+    if w_cos != 0.0:
+        E = embed_token_bags(pdf["context_words"])  # once per member
+        cos = cosine_batch(E[i], E[j]).astype(np.float64)
+        score = score + w_cos * np.maximum(cos, 0.0)
+    decision, sense = pdf["decision"], pdf["pred_sense_id"]
+    d_val = (decision == "assigned").to_numpy()
+    d_null = decision.isna().to_numpy()
+    s_val = sense.to_numpy(dtype=object)
+    s_null = sense.isna().to_numpy()
+    same = _sql_and([
+        (d_val[i], d_null[i]),
+        (d_val[j], d_null[j]),
+        (s_val[i] == s_val[j], s_null[i] | s_null[j]),
+    ])
+    score = score + w_sense * same
+    is_match = score >= threshold
+    if np.isnan(score).any():  # a NULL score compares to NULL
+        is_match = np.where(np.isnan(score), None, is_match)
+
+    first = np.full(block.max() + 1, len(pdf))
+    np.minimum.at(first, block, rank)
+    yield pd.DataFrame({
+        "id_a": uniq[rank[i]],
+        "id_b": uniq[rank[j]],
+        "lev_norm": np.zeros(len(i), dtype=np.int32),
+        "score": score,
+        "is_match": is_match,
+        "block_id": uniq[first[block[i]]],
+    })
 
 
-def er_candidate_pairs(
-    mentions: DataFrame,
+def er_scored_edges(
     assignments: DataFrame,
     max_block_size: int = ER_MAX_BLOCK,
+    threshold: float = MATCH_THRESHOLD,
+    w_jw: float = W_JW,
+    w_cos: float = W_COS,
+    w_sense: float = W_SENSE,
 ) -> DataFrame:
-    """The ER job's blocking stage -> unique ``(id_a < id_b)`` pairs.
+    """The ER job's blocking and pair scoring in one keyed pass ->
+    ``(id_a, id_b, lev_norm, score, is_match, block_id)``.
 
-    ``mentions`` needs ``mention_id`` (unique) and the surface key
-    ``(norm_surface, pos)``; ``assignments`` needs ``mention_id, decision,
-    pred_sense_id, context_words`` (and ``lemma`` for the oversized path)
-    — the attributes :func:`pairs.score_mention_pairs` scores. Blocks are
-    counted once. Blocks over ``max_block_size`` keep the skew-safe
-    :func:`oversized_star_pairs` recovery (no silent caps: a hot block
-    degrades to linear star edges, never to zero edges). Blocks of size
-    2..cap go through ONE shuffle on the block key and one vectorized
-    per-partition pass that emits only
+    ``assignments`` needs ``mention_id`` (unique), the surface key
+    ``(norm_surface, pos)`` and the attributes the scorer reads
+    (``surface, lemma, decision, pred_sense_id, context_words``). Rows with
+    a NULL key never pair. ONE shuffle on the block key brings every
+    member of a block into one partition, and one vectorized per-partition
+    pass enumerates the block's candidate pairs and scores them.
+
+    **Pairs.** Blocks over ``max_block_size`` get
+    :func:`oversized_star_pairs`' linear stars (no silent caps: a hot block
+    degrades to O(B) star edges, never to zero): assigned members star to
+    the minimum id of their ``(key, lemma, pred_sense_id)`` canopy, all
+    other members to the block's minimum id. Blocks of 2..cap emit only
 
     (a) hub edges from the block's minimum id to every other member, so
-        every member stays in the node set ``cluster_mentions`` derives
-        from the scored pairs;
+        every member stays in the clustered node set;
     (b) all pairs of ``assigned`` members sharing a ``pred_sense_id``;
     (c) all pairs whose primitive signed-count context vectors are equal
         — the hashed embedding before normalization
         (:func:`hashing.signed_count_matrix`) divided by the gcd of its
         entries. An all-zero vector never pairs.
 
-    Every emitted pair is a pair of the full small-block all-pairs
-    (``surface_key_pairs``), so the union with the oversized recovery is a
-    subset of the historical candidate set and needs no ``distinct``.
+    Every pair is a pair of ``surface_key_pairs`` ∪ ``oversized_star_pairs``
+    (the historical candidate set), and each is emitted once.
+
+    **Scores.** Bit-equal to :func:`pairs.score_mention_pairs` on the same
+    pairs: ``jaro_winkler_batch`` on the surfaces, ``embed_token_bags``
+    once per member then ``cosine_batch``, summed as
+    ``((0.0 + w_jw·jw) + w_cos·max(cos, 0)) + w_sense·same`` with SQL NULL
+    semantics for ``same``; a term whose weight is 0 is not computed.
+    ``lev_norm`` is 0 by construction (both sides share ``norm_surface``).
+    ``block_id`` is the block's minimum mention id: every edge lies inside
+    one block, so :func:`clustering.block_clusters` clusters per block.
 
     **Exactness.** Every pair of the historical set that the pair scorer
     can match is emitted, for any weights with ``w_jw, w_cos >= 0`` and
     ``w_jw + w_cos <= threshold`` (``w_cos > 0`` when equal) —
-    :func:`pairs.pruning_covers`; the defaults 0.2 + 0.4 = 0.6 and the
-    sense-only config qualify. The node set is unchanged by (a), so
-    matched edges and clusters are identical. Proof: a pair that is not
+    :func:`pairs.pruning_covers`, checked here (``ValueError`` otherwise);
+    the defaults 0.2 + 0.4 = 0.6 and the sense-only config qualify. The
+    node set is unchanged by (a), so matched edges and clusters are
+    identical. Proof: a pair that is not
     same-sense (b) scores ``w_jw*jw + w_cos*max(c, 0)`` with ``jw <= 1``;
     it can reach the threshold only if the float32 cosine ``c`` of
     ``cosine_batch`` is >= 1.0, and ``c >= 1.0`` needs parallel integer
@@ -311,25 +409,36 @@ def er_candidate_pairs(
     score stays below the threshold by >= ``w_cos·2^-24``. A block whose
     vectors break that bound (longer contexts) keeps all its pairs, so the
     pruning is exact for any input.
+
+    **Trade-off.** A block over the cap is handled inside one task: O(B)
+    rows and O(B) star edges, never O(B²), but not spread over tasks.
+    Sharding hot blocks is left to an exact sub-blocking on the two match
+    classes (same sense, equal primitive vector).
     """
+    if not pruning_covers(w_jw, w_cos, threshold):
+        raise ValueError(
+            f"scorer config w_jw={w_jw}, w_cos={w_cos}, threshold={threshold}: "
+            "the ER pair pruning is exact only for w_jw, w_cos >= 0 "
+            "and w_jw + w_cos <= threshold (w_cos > 0 at equality); see "
+            "pairs.pruning_covers"
+        )
     key = ["norm_surface", "pos"]
-    keyed = mentions.select("mention_id", *key).filter(
-        F.col("norm_surface").isNotNull() & F.col("pos").isNotNull()
+    id_type = dict(assignments.dtypes)["mention_id"]
+    members = assignments.select(
+        "mention_id", *key, "surface", "lemma", "decision", "pred_sense_id",
+        "context_words",
+    ).filter(F.col("norm_surface").isNotNull() & F.col("pos").isNotNull())
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        return _block_edges_run(
+            batches, max_block_size, threshold, w_jw, w_cos, w_sense
+        )
+
+    return members.repartition(*key).mapInPandas(
+        run,
+        schema=f"id_a {id_type}, id_b {id_type}, lev_norm int, score double, "
+        f"is_match boolean, block_id {id_type}",
     )
-    oversized = keyed.groupBy(*key).agg(F.count("*").alias("block_size")).filter(
-        F.col("block_size") > max_block_size
-    )
-    members = keyed.join(
-        F.broadcast(oversized.select(*key)), on=key, how="left_anti"
-    ).join(
-        assignments.select("mention_id", "decision", "pred_sense_id", "context_words"),
-        on="mention_id",
-    )
-    id_type = dict(mentions.dtypes)["mention_id"]
-    small = members.repartition(*key).mapInPandas(
-        _scorer_pairs_run, schema=f"id_a {id_type}, id_b {id_type}"
-    )
-    return small.unionByName(oversized_star_pairs(mentions, oversized, assignments))
 
 
 def minhash_bands(

@@ -35,6 +35,12 @@ that stay huge even contracted. All paths produce identical
 (node, min-member) output (tested against each other and a union-find
 oracle).
 
+The ER job itself needs none of that machinery: its edges never cross a
+``(norm_surface, pos)`` block, so :func:`block_clusters` solves each
+block's components with the same NumPy kernel after one shuffle on the
+block id. ``connected_components`` serves graphs whose edges may cross
+blocks (``cluster_mentions``, ``dedup``).
+
 No reference analogue exists (the reference never clusters across
 requests); semantics are anchored in the paper, tests in a brute-force
 union-find oracle.
@@ -86,11 +92,26 @@ def _checksum(edges: DataFrame) -> tuple[int, int]:
     return int(row["n"]), int(row["h"])
 
 
+def _min_labels(n: int, a, b):
+    """Component label of each of ``n`` nodes under the edges (a[k], b[k]):
+    the smallest node index reachable — min-label propagation with pointer
+    jumping until nothing changes."""
+    import numpy as np
+
+    lab = np.arange(n, dtype=np.int64)
+    while True:
+        old = lab.copy()
+        np.minimum.at(lab, a, lab[b])
+        np.minimum.at(lab, b, lab[a])
+        np.minimum(lab, lab[lab], out=lab)  # pointer jumping
+        if np.array_equal(lab, old):
+            return lab
+
+
 def _cc_kernel_run(batches):
     """NumPy min-label CC over whatever edge batches this task receives:
-    sorted factorization + min-propagation with pointer jumping. Emits one
+    sorted factorization + :func:`_min_labels`. Emits one
     (node, component=min reachable member) row per distinct id seen."""
-    import numpy as np
     import pandas as pd
 
     srcs, dsts = [], []
@@ -104,15 +125,7 @@ def _cc_kernel_run(batches):
     d = pd.concat(dsts, ignore_index=True)
     codes, uniques = pd.factorize(pd.concat([s, d], ignore_index=True), sort=True)
     n = len(s)
-    a, b = codes[:n], codes[n:]
-    lab = np.arange(len(uniques), dtype=np.int64)
-    while True:
-        old = lab.copy()
-        np.minimum.at(lab, a, lab[b])
-        np.minimum.at(lab, b, lab[a])
-        np.minimum(lab, lab[lab], out=lab)  # pointer jumping
-        if np.array_equal(lab, old):
-            break
+    lab = _min_labels(len(uniques), codes[:n], codes[n:])
     yield pd.DataFrame({"node": uniques, "component": uniques[lab]})
 
 
@@ -510,10 +523,11 @@ def bfs_reach(
     )
 
 
-def cluster_mentions(
-    match_edges: DataFrame, match_count: int | None = None
-) -> DataFrame:
+def cluster_mentions(match_edges: DataFrame) -> DataFrame:
     """Match edges (id_a, id_b, is_match) -> (mention_id, entity_id).
+
+    The general form, for edges that may cross blocks; the ER job's edges
+    never do, and :func:`block_clusters` clusters them in one keyed pass.
 
     Non-matching pair members still get singleton clusters so every mention
     that entered pairing receives a canonical id — but singletons NEVER
@@ -525,36 +539,25 @@ def cluster_mentions(
     Instead: CC over real match edges only, then one left join assigns
     ``coalesce(component, own_id)``.
 
-    ``match_count`` — the number of ``is_match`` rows, known to a caller
-    whose ``match_edges`` is already materialized (``run_er_pipeline``
-    passes the count its edges commit observed, over the committed
-    parquet). Then no action runs here: the result is a lazy plan, and the
-    caller's one write computes it.
-
-    Without ``match_count``, CACHE OWNERSHIP (r4 ADVICE): the operator
-    persists the scored edge table internally (the fused materialize+count
-    below); that block must not outlive the call — lingering blocks are
-    exactly the block-manager pressure the r4 bench measured (149s wall vs
-    80s phase-sum until the harness gc'd between windows), and a library
-    must not rely on harness hygiene. So the RESULT is materialized into
-    its own cache (one extra driver round that the first consumer action
-    would have spent computing the join anyway) and the edge cache is
-    released before returning. The returned DataFrame is persisted and
-    fully materialized; the caller owns it and may ``.unpersist()`` it when
-    done — after that the only remaining blocks are connected_components'
-    internal localCheckpoints on the big-graph path (lineage cuts, freed by
-    ContextCleaner).
+    CACHE OWNERSHIP (r4 ADVICE): the operator persists the scored edge
+    table internally (the fused materialize+count below); that block must
+    not outlive the call — lingering blocks are exactly the block-manager
+    pressure the r4 bench measured (149s wall vs 80s phase-sum until the
+    harness gc'd between windows), and a library must not rely on harness
+    hygiene. So the RESULT is materialized into its own cache (one extra
+    driver round that the first consumer action would have spent computing
+    the join anyway) and the edge cache is released before returning. The
+    returned DataFrame is persisted and fully materialized; the caller owns
+    it and may ``.unpersist()`` it when done — after that the only
+    remaining blocks are connected_components' internal localCheckpoints
+    on the big-graph path (lineage cuts, freed by ContextCleaner).
     """
-    me = match_edges.select("id_a", "id_b", "is_match")
-    if match_count is None:
-        # ONE action materializes the (possibly UDF-heavy) edge-scoring
-        # DAG into the cache AND returns the match count the CC strategy
-        # pick needs — fused, where checkpoint-then-count cost two serial
-        # driver rounds (r3 verdict nit: the parallelism-independent tail).
-        me = me.persist()
-        n_match = me.filter(F.col("is_match")).count()
-    else:
-        n_match = match_count
+    # ONE action materializes the (possibly UDF-heavy) edge-scoring DAG
+    # into the cache AND returns the match count the CC strategy pick
+    # needs — fused, where checkpoint-then-count cost two serial driver
+    # rounds (r3 verdict nit: the parallelism-independent tail).
+    me = match_edges.select("id_a", "id_b", "is_match").persist()
+    n_match = me.filter(F.col("is_match")).count()
     matches = me.filter(F.col("is_match")).select(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     )
@@ -570,12 +573,48 @@ def cluster_mentions(
         F.col("node").alias("mention_id"),
         F.coalesce(F.col("component"), F.col("node")).alias("entity_id"),
     )
-    if match_count is not None:
-        return out
     out = out.persist()
     out.count()  # materialize the result, then release the edge cache
     me.unpersist(blocking=False)
     return out
+
+
+def _block_cc_run(batches):
+    """Per-partition pass of :func:`block_clusters`: the partition holds
+    every edge of each of its blocks, so its components are complete."""
+    import pandas as pd
+
+    parts = [b for b in batches if len(b)]
+    if not parts:
+        return
+    pdf = pd.concat(parts, ignore_index=True)
+    n = len(pdf)
+    codes, uniques = pd.factorize(
+        pd.concat([pdf["id_a"], pdf["id_b"]], ignore_index=True), sort=True
+    )
+    m = pdf["is_match"].eq(True).to_numpy()  # a NULL is_match never merges
+    lab = _min_labels(len(uniques), codes[:n][m], codes[n:][m])
+    yield pd.DataFrame({"mention_id": uniques, "entity_id": uniques[lab]})
+
+
+def block_clusters(edges: DataFrame) -> DataFrame:
+    """Block-local clustering of scored edges (id_a, id_b, is_match,
+    block_id) -> (mention_id, entity_id), for edges that never cross a
+    block (``blocking.er_scored_edges``' output).
+
+    ONE shuffle on ``block_id`` and one NumPy pass per partition
+    (:func:`_min_labels` over the matched edges) — no global connected
+    components, no ``distinct``, no driver action. Every id that appears in
+    an edge gets exactly one row, and its ``entity_id`` is the minimum id
+    of its matched component: the rows of :func:`cluster_mentions` on the
+    same edges.
+    """
+    id_type = edges.schema["id_a"].dataType.simpleString()
+    return (
+        edges.select("id_a", "id_b", "is_match", "block_id")
+        .repartition("block_id")
+        .mapInPandas(_block_cc_run, schema=f"mention_id {id_type}, entity_id {id_type}")
+    )
 
 
 def cluster_cohesion(

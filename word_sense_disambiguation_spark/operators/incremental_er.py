@@ -2,7 +2,7 @@
 cluster snapshot; mint ids for the residual.
 
 The production shape of the north rule's clustering stage: the corpus is
-clustered ONCE (``cluster_mentions`` over the full pair graph), then each
+clustered ONCE (``run_er_pipeline``'s block-local clustering), then each
 crawl increment is resolved against the frozen snapshot without re-running
 corpus-wide connected components. Semantics ("frozen base, attach-or-mint"):
 
@@ -15,8 +15,8 @@ corpus-wide connected components. Semantics ("frozen base, attach-or-mint"):
   over an ordering struct, the same aggregate-not-window discipline as
   ``assign_senses``);
 * mentions that attach to nothing are clustered among THEMSELVES (the same
-  blocking -> pair scoring -> adaptive CC stack as the snapshot build, on
-  the residual only) and receive minted ids, so duplicate new mentions
+  keyed blocking + pair scoring pass and block-local clustering as the
+  snapshot build, on the residual only) and receive minted ids, so duplicate new mentions
   share one new entity instead of minting twice.
 
 Scale plan, in order:
@@ -58,15 +58,14 @@ from pyspark.sql import functions as F
 
 from word_sense_disambiguation_spark.operators.blocking import (
     ER_MAX_BLOCK,
-    er_candidate_pairs,
+    er_scored_edges,
 )
-from word_sense_disambiguation_spark.operators.clustering import cluster_mentions
+from word_sense_disambiguation_spark.operators.clustering import block_clusters
 from word_sense_disambiguation_spark.operators.pairs import (
     MATCH_THRESHOLD,
     W_COS,
     W_JW,
     W_SENSE,
-    pruning_covers,
     score_mention_pairs,
 )
 
@@ -80,7 +79,7 @@ _ATTR_COLS = (
     "decision",
 )
 
-# the surface blocking key er_candidate_pairs blocks the snapshot on
+# the surface blocking key er_scored_edges blocks the snapshot on
 _KEY_COLS = ("norm_surface", "pos")
 
 DEFAULT_MAX_REPS_PER_KEY = 64
@@ -102,8 +101,8 @@ def attach_mentions_to_clusters(
     ``batch_assignments`` / ``base_assignments``: the standard assignment
     projection (``mention_id, lemma, pos, norm_surface, surface,
     context_words, pred_sense_id, decision``). ``base_clusters``:
-    ``(mention_id, entity_id)`` from a previous ``cluster_mentions`` run
-    over the base corpus.
+    ``(mention_id, entity_id)`` from a previous ER run over the base
+    corpus (``run_er_pipeline``'s clusters).
 
     Returns ``(resolved, oversized_keys)``:
 
@@ -115,25 +114,19 @@ def attach_mentions_to_clusters(
     * ``oversized_keys`` — blocking keys whose base side held more than
       ``max_reps_per_key`` distinct entities, excluded from attach.
 
-    The residual is blocked by ``er_candidate_pairs``, whose pruning is
+    The residual is blocked, scored and clustered like the snapshot
+    build (``er_scored_edges`` + ``block_clusters``), whose pruning is
     exact only for the scorer configs ``pairs.pruning_covers`` accepts;
     any other config raises ``ValueError``.
     """
-    if not pruning_covers(w_jw, w_cos, threshold):
-        raise ValueError(
-            f"scorer config w_jw={w_jw}, w_cos={w_cos}, threshold={threshold}: "
-            "er_candidate_pairs' pruning is exact only for w_jw, w_cos >= 0 "
-            "and w_jw + w_cos <= threshold (w_cos > 0 at equality); see "
-            "pairs.pruning_covers"
-        )
     keys = list(_KEY_COLS)
     attrs = list(_ATTR_COLS)
 
     # 0. materialize the batch ONCE. The operator fans this input out to
     #    many consumers (keys, candidate side, scorer attribute union,
-    #    residual anti-join -> blocking -> scorer -> CC), and several of
-    #    them sit under separate internal actions (cluster_mentions'
-    #    fused materialize+count) — an unmaterialized expensive upstream
+    #    residual anti-join -> blocking + scoring -> clustering), and
+    #    some of them sit under a separate internal action (the `matched`
+    #    checkpoint below) — an unmaterialized expensive upstream
     #    DAG (e.g. the full pages->assignments pipeline) would re-execute
     #    per consumer (measured 312s -> ~30s on a 12-page increment).
     #    localCheckpoint, NEVER persist: persisted plans get CacheManager-
@@ -202,28 +195,22 @@ def attach_mentions_to_clusters(
             F.max("score").alias("best_score"),
         )
     )
-    # Same fan-out rule for the attach result: the residual anti-join and
-    # every consumer downstream of it (self-join blocking, scorer, CC —
-    # each with its own internal actions) would otherwise re-run the
-    # scorer DAG behind `best` once apiece.
+    # Same fan-out rule for the attach result: the attached rows and the
+    # residual anti-join (and the residual's blocking, scoring and
+    # clustering behind it) would otherwise re-run the scorer DAG behind
+    # `best` once apiece.
     matched = best.select(
         F.col("id_a").alias("mention_id"), "entity_id", "best_score"
     ).localCheckpoint(eager=True)
 
     # 6. residual: batch mentions with no base attachment cluster among
-    #    themselves with the SAME stack that built the snapshot.
+    #    themselves with the SAME functions that built the snapshot.
     residual = batch_assignments.join(
         matched.select("mention_id"), on="mention_id", how="left_anti"
     )
-    r_edges = score_mention_pairs(
-        er_candidate_pairs(residual, residual, max_block_size),
-        residual.select(*attrs),
-        threshold=threshold,
-        w_jw=w_jw,
-        w_cos=w_cos,
-        w_sense=w_sense,
+    r_clusters = block_clusters(
+        er_scored_edges(residual, max_block_size, threshold, w_jw, w_cos, w_sense)
     )
-    r_clusters = cluster_mentions(r_edges)
     minted = (
         residual.select("mention_id")
         .join(r_clusters, on="mention_id", how="left")

@@ -39,7 +39,7 @@ W_SENSE = 0.4
 
 
 def pruning_covers(w_jw: float, w_cos: float, threshold: float) -> bool:
-    """True iff ``blocking.er_candidate_pairs``' scorer-aware pruning keeps
+    """True iff ``blocking.er_scored_edges``' scorer-aware pruning keeps
     every pair this scorer config can match. A pair the pruning drops is
     not same-sense and has a float32 cosine ``c <= 1 - 2^-24``, so (with
     ``jw <= 1`` and rounding monotone) it scores at most
