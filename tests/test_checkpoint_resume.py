@@ -172,11 +172,13 @@ def test_er_job_counts_and_counters_once(spark, sworld, tmp_path, cap):
     """Each stage manifest records its Spark jobs (job group + status
     tracker, no extra job): they sum to the jobs the tracker saw, 10 or
     fewer for the whole ER job at the default cap and at a cap small
-    enough to leave oversized blocks, and the edges manifest records its
-    match count. A crash after the data and counters were written but
-    before the manifests (simulated by deleting them) re-runs every stage
-    and leaves each stage's counters exactly once, with identical
-    clusters."""
+    enough to leave oversized blocks; it also records the tasks those
+    jobs ran (at least one per job) and the driver time spent building
+    the plan (within the stage's wall time), and the edges manifest
+    records its match count. A crash after the data and counters were
+    written but before the manifests (simulated by deleting them) re-runs
+    every stage and leaves each stage's counters exactly once, with
+    identical clusters."""
     run_dir = str(tmp_path / "er")
     pages, senses = sworld["pages"], sworld["senses"]
     j0 = _next_job_id(spark)
@@ -188,6 +190,9 @@ def test_er_job_counts_and_counters_once(spark, sworld, tmp_path, cap):
     assert sum(per_stage.values()) == n_jobs, per_stage
     assert n_jobs <= 10, per_stage
     assert all(v >= 1 for v in per_stage.values()), per_stage
+    for name, m in manifests.items():
+        assert m["spark_tasks"] >= m["spark_jobs"], (name, m)
+        assert 0 <= m["plan_ms"] <= m["wall_ms"], (name, m)
     assert manifests["edges"]["matches"] == out["edges"].filter("is_match").count()
     clusters = sorted(tuple(x) for x in out["clusters"].collect())
 

@@ -87,3 +87,11 @@ def test_every_package_module_has_a_non_test_importer():
         reached |= _imported_modules(path) - {modules.get(path)}
     orphans = sorted(set(modules.values()) - reached)
     assert not orphans, f"imported only by tests (or by nothing): {orphans}"
+
+
+def test_pyproject_version_is_the_engine_version():
+    # every manifest binds __version__; the distribution must not claim another
+    from word_sense_disambiguation_spark import __version__
+
+    text = (ROOT / "pyproject.toml").read_text()
+    assert f'\nversion = "{__version__}"\n' in text

@@ -36,46 +36,22 @@ def prepare_senses(senses: DataFrame) -> DataFrame:
     func_words = F.split(F.lit(" ".join(sorted(FUNCTION_WORDS))), " ")
     profile = F.array_except(F.array_distinct(words), func_words)
     profile = F.filter(profile, lambda w: (w != F.col("lemma")) & (w != F.lit("")))
-    from word_sense_disambiguation_spark.operators.scoring import _emb_vec_sql
-
     # a NULL sense_id is not a sense: dropping the row here gives the
     # columnar and the prompted path one answer for it (no_definitions)
-    prepared = (
-        senses.filter(F.col("sense_id").isNotNull())
-        .withColumn(
-            "join_pos", F.when(F.col("pos") == "s", F.lit("a")).otherwise(F.col("pos"))
-        )
-        .withColumn("profile_words", profile)
-        # gloss embedding precomputed ONCE per inventory row (the dim is
-        # tiny and broadcast); per-candidate scoring then only embeds the
-        # context side
-        .withColumn("profile_vec", _emb_vec_sql(F.col("profile_words")))
-        .withColumn(
-            "profile_norm",
-            F.sqrt(
-                F.aggregate(
-                    F.col("profile_vec"), F.lit(0.0), lambda a, x: a + x * x
-                )
-            ),
-        )
-    )
-    return (
-        prepared
-        .select(
-            F.col("lemma").alias("s_lemma"),
-            "join_pos",
-            "sense_id",
-            # the displayed gloss carries both inventory definitions — the
-            # same token set as profile_words, so the prompt path and the
-            # columnar Lesk path see identical evidence
-            F.concat_ws(
-                " — ", "source_definition", "alternative_definition"
-            ).alias("sense_definition"),
-            "sense_rank",
-            "profile_words",
-            "profile_vec",
-            "profile_norm",
-        )
+    return senses.filter(F.col("sense_id").isNotNull()).select(
+        F.col("lemma").alias("s_lemma"),
+        F.when(F.col("pos") == "s", F.lit("a"))
+        .otherwise(F.col("pos"))
+        .alias("join_pos"),
+        "sense_id",
+        # the displayed gloss carries both inventory definitions — the
+        # same token set as profile_words, so the prompt path and the
+        # columnar Lesk path see identical evidence
+        F.concat_ws(" — ", "source_definition", "alternative_definition").alias(
+            "sense_definition"
+        ),
+        "sense_rank",
+        profile.alias("profile_words"),
     )
 
 

@@ -27,7 +27,7 @@ Decision rules preserved 1:1:
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -41,66 +41,6 @@ NONE_OF_THE_ABOVE = "none of the above"
 # role of the reference's fixed NOTA letter probability.
 TAU = 0.35
 COSINE_WEIGHT = 0.25
-
-
-EMBED_DIM = 64
-
-
-def _emb_pairs_sql(col) -> "F.Column":
-    """(idx, sgn) per token — the sparse form of the hashed-bag embedding.
-    Two md5 evaluations per token; same values as
-    :func:`functions.hashing.emb_hash`.
-
-    WARNING — measured pitfall: referencing the result inside another
-    higher-order lambda re-evaluates this whole expression per lambda
-    iteration (lambda scoping defeats common-subexpression elimination);
-    the dense 64-slot build below costs 64x the md5 work. Use these only on
-    tiny dims or already-materialized columns; the hot path embeds via the
-    Arrow UDF (30x faster end-to-end, measured at 40k pages: 2.7s vs 81.5s).
-    """
-    h = lambda w: F.conv(  # noqa: E731
-        F.substring(F.md5(F.concat(F.lit("emb:"), w)), 1, 15), 16, 10
-    ).cast("long")
-    return F.transform(
-        col,
-        lambda w: F.struct(
-            F.pmod(h(w), F.lit(EMBED_DIM)).cast("int").alias("idx"),
-            F.when(
-                F.pmod(F.shiftright(h(w), 32), F.lit(2)) == 1, F.lit(1.0)
-            ).otherwise(F.lit(-1.0)).alias("sgn"),
-        ),
-    )
-
-
-def _emb_vec_sql(col) -> "F.Column":
-    """Hashed-bag embedding as a pure JVM expression: array<double>[64].
-
-    Dense form built slot-by-slot (``transform(sequence, i -> aggregate)``)
-    rather than folding a 64-wide array per token — the fold formulation
-    allocates one array per token and GC dominates at 10^8 rows; this one
-    is allocation-free scalar arithmetic inside codegen.
-    """
-    pairs = _emb_pairs_sql(col)
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(EMBED_DIM - 1)),
-        lambda i: F.aggregate(
-            pairs,
-            F.lit(0.0),
-            lambda acc, p: acc + F.when(p["idx"] == i, p["sgn"]).otherwise(F.lit(0.0)),
-        ),
-    )
-
-
-def context_gloss_cosine_sql(ctx_col, profile_col) -> "F.Column":
-    """Cosine of the two hashed-bag embeddings — zero Python anywhere."""
-    a = _emb_vec_sql(ctx_col)
-    b = _emb_vec_sql(profile_col)
-    dot = F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-    sq = lambda v: F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x * x)  # noqa: E731
-    denom = F.sqrt(sq(a)) * F.sqrt(sq(b))
-    return F.when(denom > 0, dot / denom).otherwise(F.lit(0.0))
 
 
 @F.pandas_udf(T.DoubleType())
@@ -154,8 +94,10 @@ def score_candidates(candidates: DataFrame, use_cosine: bool = True) -> DataFram
             "score", F.when(F.col("sense_id").isNotNull(), lesk)
         )
     # Arrow-batched cosine: one md5 per *unique* token (executor-lifetime
-    # memo) + one NumPy GEMM-style batch — measured 30x faster than the
-    # all-JVM higher-order-function form (see _emb_pairs_sql warning).
+    # memo) + one NumPy GEMM-style batch — measured 30x faster end-to-end
+    # than an all-JVM higher-order-function form (40k pages: 2.7 s vs
+    # 81.5 s), whose md5 work lambda scoping multiplies by the 64 slots
+    # because CSE does not cross a lambda.
     # The UDF runs unsplit on every row (ArrowEvalPython is
     # unconditional). r6 measured and REJECTED two "optimizations" here,
     # in windowed A/Bs — do not reintroduce either without re-measuring:

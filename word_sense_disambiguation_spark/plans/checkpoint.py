@@ -17,10 +17,12 @@ jars; on a cluster, point ``_write``/``_read`` at an Iceberg catalog):
   before the manifest and a re-run leave each stage's counters exactly
   once;
 * then ``_MANIFEST.json`` commits atomically (rows, wall_ms, spark_jobs,
-  schema, observed counters and the run's *binding*: engine version,
-  stage parameters and an input fingerprint) — a stage is *done* iff its
-  manifest exists, and a manifest whose binding differs from the
-  re-run's raises ``ValueError`` instead of serving a stale stage;
+  spark_tasks, plan_ms = the driver time ``build`` took before the write
+  started, schema, observed counters and the run's *binding*: engine
+  version, stage parameters and an input fingerprint) — a stage is
+  *done* iff its manifest exists, and a manifest whose binding differs
+  from the re-run's raises ``ValueError`` instead of serving a stale
+  stage;
 * a re-run **skips** any committed stage and reads its parquet back with
   the recorded schema (no schema-inference job) — the
   anti-join-on-done-keys resume pattern of the reference's generator
@@ -163,8 +165,10 @@ class StageRunner:
     @contextmanager
     def _job_group(self, name: str) -> Iterator[dict]:
         """Run the body in a fresh job group; afterwards ``jobs`` holds the
-        number of Spark jobs it ran (status tracker, no extra job). The
-        caller's job group, if any, is restored."""
+        number of Spark jobs it ran and ``tasks`` the sum of ``numTasks``
+        over the stages those jobs ran (status tracker, no extra job; a
+        stage skipped because its shuffle output was reused runs no task).
+        The caller's job group, if any, is restored."""
         sc = self.spark.sparkContext
         prev = {k: sc.getLocalProperty(k) for k in _JOB_GROUP_PROPS}
         group = f"{self.run_id}/{name}/{uuid.uuid4().hex}"
@@ -177,7 +181,14 @@ class StageRunner:
                 sc.setLocalProperty(k, v)
         # job-start events reach the status store through the listener bus
         sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
-        counts["jobs"] = len(sc.statusTracker().getJobIdsForGroup(group))
+        tracker = sc.statusTracker()
+        job_ids = tracker.getJobIdsForGroup(group)
+        stage_ids = {s for j in job_ids for s in tracker.getJobInfo(j).stageIds}
+        counts["jobs"] = len(job_ids)
+        stages = [tracker.getStageInfo(s) for s in stage_ids]
+        counts["tasks"] = sum(
+            st.numTasks for st in stages if st is not None and st.numCompletedTasks
+        )
 
     def _commit(
         self,
@@ -239,6 +250,7 @@ class StageRunner:
         with self._job_group(name) as jobs:
             t0 = time.monotonic()
             df = build()
+            plan_ms = int((time.monotonic() - t0) * 1000)
             obs = None
             if observe:
                 obs = Observation()
@@ -249,7 +261,12 @@ class StageRunner:
         files = sorted(glob.glob(os.path.join(data_dir, "*.parquet")))
         part_rows = {i: pq.read_metadata(f).num_rows for i, f in enumerate(files)}
         self._commit(
-            name, wall_ms, jobs["jobs"], part_rows, _written_schema(files, df), observed
+            name,
+            wall_ms,
+            jobs["jobs"],
+            part_rows,
+            _written_schema(files, df),
+            {"spark_tasks": jobs["tasks"], "plan_ms": plan_ms, **observed},
         )
         return self.read(name)
 
@@ -357,7 +374,11 @@ class StageRunner:
             jobs["jobs"],
             dict(sorted(part_rows.items())),
             schema,
-            {"n_buckets": n_buckets, "resumed_buckets": resumed},
+            {
+                "spark_tasks": jobs["tasks"],
+                "n_buckets": n_buckets,
+                "resumed_buckets": resumed,
+            },
         )
         return self.read(name)
 
