@@ -41,13 +41,6 @@ _BPE_RE = r"[A-Za-z0-9]+|[^A-Za-z0-9 \t\n\r\f\x0B]"
 # on BOTH sides (functions.text.WS_CLASS invariant).
 _WS = r"[ \t\n\r\f\x0B]"
 
-# Soundex of the first space-separated word of `text`, DuckDB dialect —
-# generated from the SAME template Spark evaluates (functions/phonetic.py;
-# the one dialect knob is DuckDB's 'g' regexp_replace flag).
-from word_sense_disambiguation_spark.functions.phonetic import soundex_sql
-
-_SDX_DOC = soundex_sql("split_part(text, ' ', 1)", dialect="duckdb")
-
 # Morton key of the two 8-bit min-max ranks, DuckDB dialect — same
 # template the Spark side evaluates (operators/zorder.py).
 from word_sense_disambiguation_spark.operators.zorder import zorder_sql
@@ -686,11 +679,11 @@ def _q_connected_components(spark, sf_dir):
 
 
 def _click_edges(spark, sf_dir):
-    """The clickstream transition graph shared by ``clickstream_rank``
-    and ``label_communities``: node = event_type:floor(value) page
-    proxy, one directed edge per consecutive event pair of one user
-    ((ts, event_id) order — deterministic under burst timestamp ties),
-    multiplicities preserved."""
+    """The clickstream transition graph ``markov_transitions`` reads:
+    node = event_type:floor(value) page proxy, one directed edge per
+    consecutive event pair of one user ((ts, event_id) order —
+    deterministic under burst timestamp ties), multiplicities
+    preserved."""
     from pyspark.sql import Window
 
     ev = _t(spark, sf_dir, "events").filter(
@@ -708,69 +701,6 @@ def _click_edges(spark, sf_dir):
     return seq.filter(F.col("prev").isNotNull()).select(
         F.col("prev").alias("src"), F.col("node").alias("dst")
     )
-
-
-def _q_clickstream_rank(spark, sf_dir):
-    """Integer-exact 3-iteration PageRank over the clickstream
-    transition graph (see ``_click_edges``). The recurrence is pure
-    BIGINT (scaled-DIV contributions, addition-only aggregation) so
-    DuckDB replays the ranks bit-for-bit through three unrolled CTE
-    rounds."""
-    from word_sense_disambiguation_spark.operators.clustering import pagerank
-
-    return pagerank(_click_edges(spark, sf_dir), iterations=3).select(
-        "node", F.col("rank").cast("long").alias("rank")
-    )
-
-
-def _q_label_communities(spark, sf_dir):
-    """Synchronous label propagation (3 rounds, pinned (count DESC,
-    label ASC) tie rule) over the SAME clickstream transition graph —
-    the density-community view next to ``clickstream_rank``'s authority
-    view and ``connected_components``' reachability view. Labels are
-    node strings, votes exact BIGINT edge multiplicities; fully
-    SQL-replayable."""
-    from word_sense_disambiguation_spark.operators.clustering import (
-        label_propagation,
-    )
-
-    return label_propagation(_click_edges(spark, sf_dir), iterations=3)
-
-
-def _q_cluster_churn(spark, sf_dir):
-    """The dedup-policy-upgrade audit: previous snapshot = exact
-    content-hash clusters, current snapshot = the REAL MinHash near-dup
-    clustering (same config as ``minhash_dedup_clusters``) — per
-    current cluster, exactly how the fuzzy policy rearranged the exact
-    groups (stable/grown/split/merged/new, pinned CASE over BIGINT
-    contingency counts from ONE partial-combined groupBy)."""
-    from word_sense_disambiguation_spark.operators.clustering import (
-        cluster_churn,
-    )
-    from word_sense_disambiguation_spark.operators.dedup import (
-        exact_duplicates,
-        minhash_near_duplicate_clusters,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    prev = exact_duplicates(docs, "doc_id", "text").select(
-        "doc_id", F.col("canonical_id").alias("cluster_id")
-    )
-    curr = minhash_near_duplicate_clusters(docs, "doc_id", "text", threshold=0.7)
-    report, _dissolved = cluster_churn(prev, curr)
-    return report
-
-
-def _q_triangle_profile(spark, sf_dir):
-    """Per-node triangle counts + local clustering coefficient over the
-    clickstream transition graph (undirected view of ``_click_edges``):
-    degree-ordered orientation bounds every wedge fan-out by sqrt(2m)
-    regardless of hub skew; exact BIGINT counts, one IEEE division."""
-    from word_sense_disambiguation_spark.operators.clustering import (
-        triangle_stats,
-    )
-
-    return triangle_stats(_click_edges(spark, sf_dir))
 
 
 def _q_er_clusters_synthetic(spark, sf_dir):
@@ -1496,21 +1426,6 @@ def _q_script_profile(spark, sf_dir):
     return script_profile(_t(spark, sf_dir, "documents"), "doc_id", "text")
 
 
-def _q_blocking_cost(spark, sf_dir):
-    """Pre-flight blocking cost audit of the (nation, segment) key over
-    customer: exact pair bill sum C(n,2), block skew facts, and the
-    oversized share a 64-cap would divert — the one-aggregate estimate
-    you run BEFORE materializing 10^12 candidate pairs."""
-    from word_sense_disambiguation_spark.operators.blocking import (
-        blocking_cost_estimate,
-    )
-
-    cust = _t(spark, sf_dir, "customer")
-    return blocking_cost_estimate(
-        cust, ["c_nationkey", "c_mktsegment"], max_block_size=64
-    )
-
-
 def _q_sparsify_topk(spark, sf_dir):
     """kNN sparsification over the close-key customer edge world with
     keyed integer scores: keep edges in either endpoint's top-2 by
@@ -1713,27 +1628,6 @@ def _q_fs_pattern_counts(spark, sf_dir):
     return fs_agreement_patterns(pairs, comps)
 
 
-def _q_metablocking_prune(spark, sf_dir):
-    """Token blocking + CBS meta-blocking with Weighted Edge Pruning
-    over documents: every shared token (len >= 2, block cap 256) is a
-    block, pair weight = number of shared blocks, pairs below the
-    global mean weight pruned — with the mean test spelled as the exact
-    integer cross-multiply cbs * P >= S (ties keep), so the kept edge
-    set is bit-deterministic and fully SQL-replayable."""
-    from word_sense_disambiguation_spark.operators.blocking import (
-        meta_blocking_prune,
-    )
-
-    kept, _oversized = meta_blocking_prune(
-        _t(spark, sf_dir, "documents"),
-        "doc_id",
-        "text",
-        max_block_size=256,
-        min_token_len=2,
-    )
-    return kept
-
-
 def _q_blocking_quality(spark, sf_dir):
     """Blocking audit: pair completeness + reduction ratio of the
     SimHash@3 blocker against exact all-pairs 3-gram Jaccard >= 0.7
@@ -1857,47 +1751,6 @@ def _q_sampled_quantiles(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     return sampled_group_quantiles(
         docs, ["source"], "n_chars", "doc_id", rate_den=4
-    )
-
-
-
-
-def _q_phonetic_blocking(spark, sf_dir):
-    """Soundex phonetic blocking over the leading word of each document:
-    spelling-variant candidate pairs (id_a < id_b) within capped blocks.
-    The key is the archival American Soundex built from ONE portable SQL
-    template (functions/phonetic.py) that both engines evaluate — pure
-    codegen, no UDF; blocks larger than 24 are excluded (and surfaced via
-    the operator's oversized side table), never silently truncated."""
-    from word_sense_disambiguation_spark.operators.blocking import (
-        phonetic_key_pairs,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    pairs, _oversized = phonetic_key_pairs(
-        docs, "doc_id", "element_at(split(text, ' '), 1)", max_block_size=24
-    )
-    return pairs.select(
-        F.col("id_a").cast("long").alias("id_a"),
-        F.col("id_b").cast("long").alias("id_b"),
-        "phonetic_key",
-    )
-
-
-def _q_sorted_neighborhood(spark, sf_dir):
-    """Sorted-neighborhood (merge/purge) blocking over part names: each
-    part pairs with its next 3 neighbors in (p_name, p_partkey) order.
-    The Spark side builds the global rank WITHOUT a single-task window
-    (two-level: one-row-per-bucket running offsets + per-bucket
-    row_number — exact, not approximate), then pairs via a chunked
-    equi-join; the oracle's single global row_number replays it exactly."""
-    from word_sense_disambiguation_spark.operators.blocking import (
-        sorted_neighborhood_pairs,
-    )
-
-    part = _t(spark, sf_dir, "part")
-    return sorted_neighborhood_pairs(
-        part, "p_partkey", "p_name", window=4, bucket_len=2
     )
 
 
@@ -2449,18 +2302,6 @@ def _q_constrained_clusters(spark, sf_dir):
     return constrained_components(e, cl, src="s", dst="d", cl_a="s", cl_b="d")
 
 
-def _q_kcore(spark, sf_dir):
-    """The 15-core of the clickstream transition graph (6 synchronous
-    peel rounds — converged at this scale, and the exact-R semantics
-    keep the hash gate valid even where a fuzz world does not
-    converge): the dense-substructure skeleton next to
-    ``clickstream_rank``'s authority view. All-integer degrees; the
-    oracle unrolls the identical rounds as materialized CTEs."""
-    from word_sense_disambiguation_spark.operators.clustering import kcore_peel
-
-    return kcore_peel(_click_edges(spark, sf_dir), k=15, rounds=6)
-
-
 def _q_interval_merge(spark, sf_dir):
     """Gaps-and-islands coverage merge: deterministic integer fetch
     windows derived from events (start = event_id % 997, length
@@ -2613,43 +2454,13 @@ def _q_compaction_plan(spark, sf_dir):
     )
 
 
-def _q_covisitation(spark, sf_dir):
-    """Bipartite co-visitation projection of the clickstream (items =
-    the same event_type:floor(value) page proxies as the transition
-    graph): exact distinct-user co-visit weights >= 5, hot users above
-    100 distinct items excluded into the oversized side table (the
-    quadratic-fan-out bot cap — none at this sf, so the driver row set
-    is the full projection)."""
-    from word_sense_disambiguation_spark.operators.clustering import (
-        covisitation_edges,
-    )
-
-    ev = _t(spark, sf_dir, "events").filter(
-        F.col("user_id").isNotNull()
-        & F.col("event_type").isNotNull()
-        & F.col("value").isNotNull()
-    )
-    ui = ev.select(
-        "user_id",
-        F.concat(
-            F.col("event_type"),
-            F.lit(":"),
-            F.floor(F.col("value")).cast("long").cast("string"),
-        ).alias("item"),
-    )
-    edges, _oversized = covisitation_edges(
-        ui, "user_id", "item", max_items_per_user=100, min_weight=5
-    )
-    return edges
-
-
 def _q_markov_transitions(spark, sf_dir):
-    """First-order Markov transition table over the SAME clickstream
-    transition graph as ``clickstream_rank`` (see ``_click_edges``):
-    exact BIGINT counts, per-source outflow totals, and transition
-    probabilities as scaled integers ``(n * 1e6) DIV out_total`` — the
-    click-model training weights, bit-for-bit replayable (one integer
-    DIV per row, no float sums)."""
+    """First-order Markov transition table over the clickstream
+    transition graph (see ``_click_edges``): exact BIGINT counts,
+    per-source outflow totals, and transition probabilities as scaled
+    integers ``(n * 1e6) DIV out_total`` — the click-model training
+    weights, bit-for-bit replayable (one integer DIV per row, no float
+    sums)."""
     from word_sense_disambiguation_spark.operators.temporal import (
         transition_model,
     )
@@ -2688,25 +2499,6 @@ def _q_referential_integrity(spark, sf_dir):
             ),
             ("events.user_id->customer", ev, "user_id", cu, "c_custkey"),
         ]
-    )
-
-
-def _q_bfs_reach(spark, sf_dir):
-    """Bounded 3-hop BFS impact radius from every ``signup:*`` node of
-    the clickstream transition graph (see ``_click_edges``): per seed
-    and hop, how many nodes are FIRST reached at that hop. Level-
-    synchronous frontier joins, eagerly checkpointed per round; the
-    oracle replays it as a hop-bounded recursive CTE with a min-hop
-    contraction."""
-    from word_sense_disambiguation_spark.operators.clustering import bfs_reach
-
-    e = _click_edges(spark, sf_dir)
-    nodes = e.select(F.col("src").alias("seed")).union(
-        e.select(F.col("dst").alias("seed"))
-    ).distinct()
-    seeds = nodes.filter(F.col("seed").startswith("signup:"))
-    return bfs_reach(e, seeds, max_hops=3).select(
-        "seed", F.col("hop").cast("int").alias("hop"), "n_nodes"
     )
 
 
@@ -2863,25 +2655,6 @@ def _q_link_graph(spark, sf_dir):
     )
 
 
-def _q_host_rank(spark, sf_dir):
-    """End-to-end crawl→graph→authority composite: the REAL
-    extract_links over the planted html of ``link_graph``, aggregated
-    to the host graph, ranked by the integer-exact 2-iteration
-    PageRank. The oracle derives the EDGES from the planting formulas
-    (never the regex) and unrolls the same BIGINT recurrence — so a
-    hash match proves extraction, graph contraction, and rank agree
-    end-to-end."""
-    from word_sense_disambiguation_spark.operators.clustering import pagerank
-
-    links = _q_link_graph(spark, sf_dir)
-    edges = links.select(
-        F.col("src_host").alias("src"), F.col("dst_host").alias("dst")
-    )
-    return pagerank(edges, iterations=2).select(
-        "node", F.col("rank").cast("long").alias("rank")
-    )
-
-
 def _q_anchor_signal(spark, sf_dir):
     """Inlink anchor-text profiles over planted html (doc_id%3 varies:
     two named anchors / one attr-laden anchor + a whitespace-only
@@ -2960,10 +2733,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "streaming_window_counts": _q_streaming_window_counts,
         "simhash_candidates": _q_simhash_candidates,
         "connected_components": _q_connected_components,
-        "clickstream_rank": _q_clickstream_rank,
-        "label_communities": _q_label_communities,
-        "triangle_profile": _q_triangle_profile,
-        "cluster_churn": _q_cluster_churn,
         "media_metadata": _q_media_metadata,
         "image_header_dims": _q_image_header_dims,
         "frame_sample": _q_frame_sample,
@@ -2994,20 +2763,17 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ngram_containment": _q_ngram_containment,
         "degree_pruned_edges": _q_degree_pruned_edges,
         "fs_match_probability": _q_fs_match_probability,
-        "blocking_cost": _q_blocking_cost,
         "sparsify_topk": _q_sparsify_topk,
         "script_profile": _q_script_profile,
         "vocabulary": _q_vocabulary,
         "cooccurrence": _q_cooccurrence,
         "token_diversity": _q_token_diversity,
         "blocking_quality": _q_blocking_quality,
-        "metablocking_prune": _q_metablocking_prune,
         "asof_join": _q_asof_join,
         "range_join": _q_range_join,
         "time_rollup": _q_time_rollup,
         "group_quantiles": _q_group_quantiles,
         "sampled_quantiles": _q_sampled_quantiles,
-        "phonetic_blocking": _q_phonetic_blocking,
         "zorder_layout": _q_zorder_layout,
         "hopping_window": _q_hopping_window,
         "latest_snapshot": _q_latest_snapshot,
@@ -3035,7 +2801,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_impact": _q_dedup_impact,
         "similarity_join": _q_similarity_join,
         "curation_pipeline": _q_curation_pipeline,
-        "sorted_neighborhood": _q_sorted_neighborhood,
         "cluster_split": _q_cluster_split,
         "er_clusters_synthetic": _q_er_clusters_synthetic,
         "er_clusters_derived": _q_er_clusters_derived,
@@ -3050,83 +2815,21 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "prompt_path_assignments_derived": _q_prompt_path_derived,
         "scd2_history": _q_scd2_history,
         "constrained_clusters": _q_constrained_clusters,
-        "kcore": _q_kcore,
         "interval_merge": _q_interval_merge,
         "funnel_counts": _q_funnel_counts,
         "snapshot_diff": _q_snapshot_diff,
         "overlap_join": _q_overlap_join,
         "compaction_plan": _q_compaction_plan,
-        "covisitation": _q_covisitation,
         "markov_transitions": _q_markov_transitions,
         "referential_integrity": _q_referential_integrity,
-        "bfs_reach": _q_bfs_reach,
         "retention_cohorts": _q_retention_cohorts,
         "distribution_drift": _q_distribution_drift,
         "path_rollup": _q_path_rollup,
         "session_rollup": _q_session_rollup,
         "deletion_impact": _q_deletion_impact,
         "link_graph": _q_link_graph,
-        "host_rank": _q_host_rank,
         "anchor_signal": _q_anchor_signal,
     }
-
-
-def _kcore_sql(k: int, rounds: int) -> str:
-    """Unroll the exact-R synchronous k-core peel as MATERIALIZED CTE
-    rounds (inlined CTEs would re-expand the round-over-round
-    references exponentially — the SQL mirror of why the Spark operator
-    eagerly localCheckpoints each round). Same clickstream transition
-    graph as ``label_communities``/``clickstream_rank``."""
-    parts = [
-        """
-            WITH ev AS MATERIALIZED (
-              SELECT user_id, ts, event_id,
-                     event_type || ':' ||
-                       CAST(CAST(FLOOR(value) AS BIGINT) AS VARCHAR) AS node
-              FROM events
-              WHERE user_id IS NOT NULL AND event_type IS NOT NULL
-                AND value IS NOT NULL
-            ),
-            seq AS (
-              SELECT node, lag(node) OVER (PARTITION BY user_id
-                           ORDER BY ts, event_id) AS prev
-              FROM ev
-            ),
-            e0 AS MATERIALIZED (
-              SELECT DISTINCT least(prev, node) AS a, greatest(prev, node) AS b
-              FROM seq WHERE prev IS NOT NULL AND prev <> node
-            )"""
-    ]
-    for r in range(rounds):
-        parts.append(
-            f""",
-            d{r} AS MATERIALIZED (
-              SELECT n AS node, CAST(count(*) AS BIGINT) AS deg FROM (
-                SELECT a AS n FROM e{r} UNION ALL SELECT b FROM e{r}
-              ) GROUP BY 1
-            ),
-            e{r + 1} AS MATERIALIZED (
-              SELECT a, b FROM e{r}
-              WHERE a IN (SELECT node FROM d{r} WHERE deg >= {k})
-                AND b IN (SELECT node FROM d{r} WHERE deg >= {k})
-            )"""
-        )
-    parts.append(
-        f""",
-            dfin AS MATERIALIZED (
-              SELECT n AS node, CAST(count(*) AS BIGINT) AS deg FROM (
-                SELECT a AS n FROM e{rounds} UNION ALL SELECT b FROM e{rounds}
-              ) GROUP BY 1
-            )
-            SELECT node, deg AS degree,
-                   (SELECT coalesce(bool_and(deg >= {k}), true) FROM dfin)
-                     AS converged
-            FROM dfin"""
-    )
-    return "".join(parts)
-
-
-_KCORE_SQL = _kcore_sql(k=15, rounds=6)
 
 
 _ER_DERIVED_CC_SQL = r"""
@@ -3564,32 +3267,6 @@ def oracle_sql() -> dict[str, str]:
                    END AS dominant_ratio
             FROM c
         """,
-        # Blocking-cost replay: one size aggregate, HUGEINT doubled sums
-        # (Spark sums DECIMAL(38,0)), one IEEE division for the share.
-        "blocking_cost": r"""
-            WITH sizes AS (
-              SELECT c_nationkey, c_mktsegment, CAST(count(*) AS BIGINT) AS n
-              FROM customer GROUP BY c_nationkey, c_mktsegment
-            ),
-            agg AS (
-              SELECT CAST(COALESCE(sum(n), 0) AS BIGINT) AS n_records,
-                     CAST(count(*) AS BIGINT) AS n_blocks,
-                     CAST(COALESCE(max(n), 0) AS BIGINT) AS max_block_size_obs,
-                     CAST(COALESCE(sum(CASE WHEN n > 64 THEN 1 ELSE 0 END), 0) AS BIGINT)
-                       AS n_oversized_blocks,
-                     sum(CASE WHEN n > 64 THEN CAST(n * (n - 1) AS HUGEINT)
-                              ELSE CAST(0 AS HUGEINT) END) AS over2,
-                     sum(CAST(n * (n - 1) AS HUGEINT)) AS all2
-              FROM sizes
-            )
-            SELECT n_records, n_blocks,
-                   CAST(COALESCE(all2, 0) // 2 AS BIGINT) AS candidate_pairs,
-                   max_block_size_obs, n_oversized_blocks,
-                   CASE WHEN all2 IS NULL OR all2 = 0 THEN CAST(NULL AS DOUBLE)
-                        ELSE CAST(COALESCE(over2, 0) AS DOUBLE)
-                             / CAST(all2 AS DOUBLE) END AS oversized_pair_share
-            FROM agg
-        """,
         # FS posterior replay: same agreement levels, identical literal
         # products (left-associated) and one ratio; computing pm/pu in a
         # CTE column changes nothing — values, not plans, are hashed.
@@ -3883,301 +3560,6 @@ def oracle_sql() -> dict[str, str]:
               SELECT r.a, s.dst FROM reach r JOIN sym s ON r.b = s.src
             )
             SELECT a AS node, min(b) AS component FROM reach GROUP BY a
-        """,
-        # LPA replay: same transition graph, symmetrized BIGINT edge
-        # multiplicities, three unrolled synchronous rounds with the argmax
-        # spelled as a row_number window (fine in the skew-free oracle; the
-        # operator uses a partial-combined max_by aggregate) under the
-        # identical (count DESC, label ASC) tie rule.
-        "label_communities": """
-            WITH ev AS (
-              SELECT user_id, ts, event_id,
-                     event_type || ':' ||
-                       CAST(CAST(FLOOR(value) AS BIGINT) AS VARCHAR) AS node
-              FROM events
-              WHERE user_id IS NOT NULL AND event_type IS NOT NULL
-                AND value IS NOT NULL
-            ),
-            seq AS (
-              SELECT node,
-                     lag(node) OVER (PARTITION BY user_id
-                                     ORDER BY ts, event_id) AS prev
-              FROM ev
-            ),
-            t AS (
-              SELECT prev AS src, node AS dst
-              FROM seq WHERE prev IS NOT NULL
-            ),
-            nodes AS (SELECT src AS node FROM t UNION SELECT dst FROM t),
-            sym AS (
-              SELECT src, dst, CAST(count(*) AS BIGINT) AS w FROM (
-                SELECT src, dst FROM t WHERE src <> dst
-                UNION ALL
-                SELECT dst AS src, src AS dst FROM t WHERE src <> dst
-              ) GROUP BY 1, 2
-            ),
-            l0 AS (SELECT node, node AS community FROM nodes),
-            v1 AS (
-              SELECT s.dst AS node, l.community, CAST(SUM(s.w) AS BIGINT) AS cnt
-              FROM sym s JOIN l0 l ON l.node = s.src
-              GROUP BY 1, 2
-            ),
-            w1 AS (
-              SELECT node, community FROM (
-                SELECT node, community,
-                       row_number() OVER (PARTITION BY node
-                                          ORDER BY cnt DESC, community ASC) AS rn
-                FROM v1) WHERE rn = 1
-            ),
-            l1 AS (
-              SELECT n.node, COALESCE(w.community, n.node) AS community
-              FROM nodes n LEFT JOIN w1 w USING (node)
-            ),
-            v2 AS (
-              SELECT s.dst AS node, l.community, CAST(SUM(s.w) AS BIGINT) AS cnt
-              FROM sym s JOIN l1 l ON l.node = s.src
-              GROUP BY 1, 2
-            ),
-            w2 AS (
-              SELECT node, community FROM (
-                SELECT node, community,
-                       row_number() OVER (PARTITION BY node
-                                          ORDER BY cnt DESC, community ASC) AS rn
-                FROM v2) WHERE rn = 1
-            ),
-            l2 AS (
-              SELECT n.node, COALESCE(w.community, n.node) AS community
-              FROM nodes n LEFT JOIN w2 w USING (node)
-            ),
-            v3 AS (
-              SELECT s.dst AS node, l.community, CAST(SUM(s.w) AS BIGINT) AS cnt
-              FROM sym s JOIN l2 l ON l.node = s.src
-              GROUP BY 1, 2
-            ),
-            w3 AS (
-              SELECT node, community FROM (
-                SELECT node, community,
-                       row_number() OVER (PARTITION BY node
-                                          ORDER BY cnt DESC, community ASC) AS rn
-                FROM v3) WHERE rn = 1
-            ),
-            l3 AS (
-              SELECT n.node, COALESCE(w.community, n.node) AS community
-              FROM nodes n LEFT JOIN w3 w USING (node)
-            )
-            SELECT node, community FROM l3
-        """,
-        # Churn replay: prev = exact groups by text (JOIN on equality, so
-        # the NULL-text rows drop exactly like Spark's join on the NULL
-        # hash), curr = the certified minhash clustering CTE, then the same
-        # contingency contraction, max_by tie order (n DESC, c1 DESC) and
-        # pinned status CASE.
-        "cluster_churn": r"""
-            WITH RECURSIVE g AS (
-              SELECT doc_id,
-                     CASE WHEN len(toks) >= 3
-                          THEN list_distinct(list_transform(
-                                 range(0, len(toks) - 2),
-                                 i -> array_to_string(list_slice(toks, i + 1, i + 3), ' ')))
-                          ELSE [array_to_string(toks, ' ')] END AS grams
-              FROM (SELECT doc_id,
-                           regexp_split_to_array(lower(trim(text)), '[ \t\n\r\f\x0B]+') AS toks
-                    FROM documents)
-            ),
-            e AS (
-              SELECT a.doc_id AS src, b.doc_id AS dst
-              FROM g a JOIN g b ON a.doc_id < b.doc_id
-              WHERE CAST(len(list_filter(a.grams, x -> list_contains(b.grams, x))) AS DOUBLE)
-                    / greatest(CAST(len(list_distinct(list_concat(a.grams, b.grams))) AS DOUBLE), 1.0)
-                    >= 0.7
-            ),
-            sym AS (SELECT src, dst FROM e
-                    UNION SELECT dst AS src, src AS dst FROM e),
-            nodes AS (SELECT doc_id AS n FROM documents),
-            reach(a, b) AS (
-              SELECT n, n FROM nodes
-              UNION
-              SELECT r.a, s.dst FROM reach r JOIN sym s ON r.b = s.src
-            ),
-            clusters AS (
-              SELECT a AS doc_id, CAST(min(b) AS BIGINT) AS cluster_id
-              FROM reach GROUP BY a
-            ),
-            prevc AS (
-              SELECT d.doc_id, CAST(m.canon AS BIGINT) AS c1
-              FROM documents d
-              JOIN (SELECT text, min(doc_id) AS canon
-                    FROM documents GROUP BY text) m
-                ON m.text = d.text
-            ),
-            j AS (
-              SELECT c.doc_id, c.cluster_id AS c2, p.c1
-              FROM clusters c LEFT JOIN prevc p ON p.doc_id = c.doc_id
-            ),
-            cells AS (
-              SELECT c1, c2, CAST(count(*) AS BIGINT) AS n
-              FROM j GROUP BY 1, 2
-            ),
-            prevsz AS (
-              SELECT c1, CAST(count(*) AS BIGINT) AS ps
-              FROM prevc GROUP BY c1
-            ),
-            percurr AS (
-              SELECT c2,
-                     CAST(SUM(n) AS BIGINT) AS n_members,
-                     CAST(SUM(CASE WHEN c1 IS NOT NULL THEN n ELSE 0 END) AS BIGINT) AS n_carried,
-                     CAST(SUM(CASE WHEN c1 IS NULL THEN n ELSE 0 END) AS BIGINT) AS n_new,
-                     CAST(SUM(CASE WHEN c1 IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_prev_clusters,
-                     CAST(COALESCE(MAX(CASE WHEN c1 IS NOT NULL THEN n END), 0) AS BIGINT) AS max_prev_overlap
-              FROM cells GROUP BY c2
-            ),
-            whole AS (
-              SELECT c2, (n = ps) AS src_whole FROM (
-                SELECT c.c2, c.n, z.ps,
-                       row_number() OVER (PARTITION BY c.c2
-                                          ORDER BY c.n DESC, c.c1 DESC) AS rn
-                FROM cells c JOIN prevsz z USING (c1)
-                WHERE c.c1 IS NOT NULL) WHERE rn = 1
-            )
-            SELECT p.c2 AS cluster_id, p.n_members, p.n_carried, p.n_new,
-                   p.n_prev_clusters, p.max_prev_overlap,
-                   CASE WHEN p.n_carried = 0 THEN 'new'
-                        WHEN p.n_prev_clusters >= 2 THEN 'merged'
-                        WHEN NOT w.src_whole THEN 'split'
-                        WHEN p.n_new > 0 THEN 'grown'
-                        ELSE 'stable' END AS status
-            FROM percurr p LEFT JOIN whole w ON w.c2 = p.c2
-        """,
-        # Triangle replay: same canonical undirected edge set, same
-        # (degree, id) orientation, wedge self-join + undirected closing
-        # probe, 3-corner union counts, identical IEEE coefficient.
-        "triangle_profile": """
-            WITH ev AS (
-              SELECT user_id, ts, event_id,
-                     event_type || ':' ||
-                       CAST(CAST(FLOOR(value) AS BIGINT) AS VARCHAR) AS node
-              FROM events
-              WHERE user_id IS NOT NULL AND event_type IS NOT NULL
-                AND value IS NOT NULL
-            ),
-            seq AS (
-              SELECT node,
-                     lag(node) OVER (PARTITION BY user_id
-                                     ORDER BY ts, event_id) AS prev
-              FROM ev
-            ),
-            t AS (
-              SELECT prev AS a, node AS b
-              FROM seq WHERE prev IS NOT NULL
-            ),
-            nodes AS (SELECT a AS node FROM t UNION SELECT b FROM t),
-            und AS (
-              SELECT DISTINCT least(a, b) AS x, greatest(a, b) AS y
-              FROM t WHERE a <> b
-            ),
-            deg AS (
-              SELECT node, CAST(count(*) AS BIGINT) AS degree FROM (
-                SELECT x AS node FROM und UNION ALL SELECT y FROM und
-              ) GROUP BY node
-            ),
-            oriented AS (
-              SELECT CASE WHEN dx.degree < dy.degree
-                            OR (dx.degree = dy.degree AND u.x < u.y)
-                          THEN u.x ELSE u.y END AS u,
-                     CASE WHEN dx.degree < dy.degree
-                            OR (dx.degree = dy.degree AND u.x < u.y)
-                          THEN u.y ELSE u.x END AS v
-              FROM und u
-              JOIN deg dx ON dx.node = u.x
-              JOIN deg dy ON dy.node = u.y
-            ),
-            wedges AS (
-              SELECT l.u, l.v AS w1, r.v AS w2
-              FROM oriented l JOIN oriented r ON l.u = r.u AND l.v < r.v
-            ),
-            closing AS (
-              SELECT least(u, v) AS p, greatest(u, v) AS q FROM oriented
-            ),
-            tris AS (
-              SELECT w.u, w.w1, w.w2
-              FROM wedges w JOIN closing c
-                ON least(w.w1, w.w2) = c.p AND greatest(w.w1, w.w2) = c.q
-            ),
-            corners AS (
-              SELECT node, CAST(count(*) AS BIGINT) AS triangles FROM (
-                SELECT u AS node FROM tris
-                UNION ALL SELECT w1 FROM tris
-                UNION ALL SELECT w2 FROM tris
-              ) GROUP BY node
-            )
-            SELECT n.node,
-                   CAST(COALESCE(d.degree, 0) AS BIGINT) AS degree,
-                   CAST(COALESCE(c.triangles, 0) AS BIGINT) AS triangles,
-                   CASE WHEN COALESCE(d.degree, 0) < 2 THEN CAST(NULL AS DOUBLE)
-                        ELSE CAST(2 * COALESCE(c.triangles, 0) AS DOUBLE)
-                             / CAST(d.degree * (d.degree - 1) AS DOUBLE) END
-                     AS clustering_coefficient
-            FROM nodes n
-            LEFT JOIN deg d ON d.node = n.node
-            LEFT JOIN corners c ON c.node = n.node
-        """,
-        # PageRank replay: the integer recurrence is addition-only BIGINT
-        # (scaled-DIV edge contributions), so three unrolled rounds of the
-        # identical arithmetic replay the distributed ranks bit-for-bit.
-        "clickstream_rank": """
-            WITH ev AS (
-              SELECT user_id, ts, event_id,
-                     event_type || ':' ||
-                       CAST(CAST(FLOOR(value) AS BIGINT) AS VARCHAR) AS node
-              FROM events
-              WHERE user_id IS NOT NULL AND event_type IS NOT NULL
-                AND value IS NOT NULL
-            ),
-            seq AS (
-              SELECT node,
-                     lag(node) OVER (PARTITION BY user_id
-                                     ORDER BY ts, event_id) AS prev
-              FROM ev
-            ),
-            e AS (
-              SELECT prev AS src, node AS dst, CAST(count(*) AS BIGINT) AS w
-              FROM seq WHERE prev IS NOT NULL GROUP BY 1, 2
-            ),
-            outd AS (SELECT src, CAST(SUM(w) AS BIGINT) AS outdeg
-                     FROM e GROUP BY src),
-            nodes AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
-            r0 AS (SELECT node, CAST(1000000000 AS BIGINT) AS pr FROM nodes),
-            r1 AS (
-              SELECT n.node,
-                     CAST(150000000 + COALESCE(SUM(
-                       ((r.pr // o.outdeg) * e.w * 850) // 1000), 0) AS BIGINT) AS pr
-              FROM nodes n
-              LEFT JOIN e ON e.dst = n.node
-              LEFT JOIN outd o ON o.src = e.src
-              LEFT JOIN r0 r ON r.node = e.src
-              GROUP BY n.node
-            ),
-            r2 AS (
-              SELECT n.node,
-                     CAST(150000000 + COALESCE(SUM(
-                       ((r.pr // o.outdeg) * e.w * 850) // 1000), 0) AS BIGINT) AS pr
-              FROM nodes n
-              LEFT JOIN e ON e.dst = n.node
-              LEFT JOIN outd o ON o.src = e.src
-              LEFT JOIN r1 r ON r.node = e.src
-              GROUP BY n.node
-            ),
-            r3 AS (
-              SELECT n.node,
-                     CAST(150000000 + COALESCE(SUM(
-                       ((r.pr // o.outdeg) * e.w * 850) // 1000), 0) AS BIGINT) AS pr
-              FROM nodes n
-              LEFT JOIN e ON e.dst = n.node
-              LEFT JOIN outd o ON o.src = e.src
-              LEFT JOIN r2 r ON r.node = e.src
-              GROUP BY n.node
-            )
-            SELECT node, pr AS "rank" FROM r3
         """,
         # Recompute SimHash bit-by-bit in SQL: md5('sim:'||token) read as a
         # little-endian u64 (byte j = hex chars 2j+1..2j+2, bit i = bit i%8
@@ -5073,21 +4455,6 @@ def oracle_sql() -> dict[str, str]:
             SELECT a AS doc_id, CAST(min(b) AS BIGINT) AS cluster_id
             FROM reach GROUP BY a
         """,
-        # The Spark side's two-level rank (bucketed offsets + per-bucket
-        # row_number) equals this single global row_number by construction
-        # (prefix buckets are contiguous under lexicographic order); pairs
-        # are all (a, b) within rank distance < window. ASCII-only key, so
-        # binary collations agree on both engines.
-        "sorted_neighborhood": """
-            WITH ranked AS (
-              SELECT p_partkey AS id,
-                     row_number() OVER (ORDER BY p_name, p_partkey) AS r
-              FROM part WHERE p_name IS NOT NULL
-            )
-            SELECT a.id AS id_a, b.id AS id_b,
-                   CAST(b.r - a.r AS BIGINT) AS rank_gap
-            FROM ranked a JOIN ranked b ON b.r > a.r AND b.r <= a.r + 3
-        """,
         # Clustering replayed as in minhash_dedup_clusters, then the SAME
         # portable md5 bucket arithmetic as disjoint_split_buckets over the
         # cluster id — leakage-freedom (one bucket per cluster) holds by
@@ -5408,27 +4775,6 @@ def oracle_sql() -> dict[str, str]:
             JOIN n ON r.source = n.source
             JOIN t ON r.rr = greatest(1, (t.num * n.n + t.den - 1) // t.den)
         """,
-        # Soundex blocking replay: the phonetic key comes from the SAME
-        # SQL template both engines evaluate (functions/phonetic.py);
-        # capped blocks (> 24) are excluded exactly as the operator's
-        # oversized side table excludes them.
-        "phonetic_blocking": f"""
-            WITH keyed AS (
-              SELECT doc_id AS id, {_SDX_DOC} AS phonetic_key
-              FROM documents
-              WHERE {_SDX_DOC} IS NOT NULL
-            ),
-            ok AS (
-              SELECT phonetic_key FROM keyed
-              GROUP BY phonetic_key HAVING count(*) <= 24
-            )
-            SELECT CAST(a.id AS BIGINT) AS id_a,
-                   CAST(b.id AS BIGINT) AS id_b,
-                   a.phonetic_key
-            FROM keyed a
-            JOIN keyed b ON a.phonetic_key = b.phonetic_key AND a.id < b.id
-            JOIN ok ON ok.phonetic_key = a.phonetic_key
-        """,
         # Z-order replay: identical min-max integer ranks (BIGINT div),
         # the SAME Morton template rendered for DuckDB (<<|>> operators
         # instead of shiftleft/shiftright — functions/zorder dialect
@@ -5644,33 +4990,6 @@ def oracle_sql() -> dict[str, str]:
         # Jaccard construction (gold), three one-row aggregates
         # cross-joined; total_pairs via integer // 2 (exact), metrics
         # via one IEEE division each.
-        # Meta-blocking replay: same tokenization, DISTINCT (token, id)
-        # blocks, same 256 cap, CBS weights by within-block join, and the
-        # WEP mean threshold as the identical integer cross-multiply.
-        "metablocking_prune": r"""
-            WITH toks AS (
-              SELECT DISTINCT doc_id, tok FROM (
-                SELECT doc_id,
-                       unnest(regexp_split_to_array(lower(trim(COALESCE(text, ''))),
-                              '[ \t\n\r\f\x0B]+')) AS tok
-                FROM documents)
-              WHERE length(tok) >= 2
-            ),
-            bs AS (SELECT tok, count(*) AS block_size FROM toks GROUP BY tok),
-            ok AS (
-              SELECT t.doc_id, t.tok FROM toks t
-              JOIN bs USING (tok) WHERE block_size <= 256
-            ),
-            pw AS (
-              SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                     CAST(count(*) AS BIGINT) AS cbs
-              FROM ok a JOIN ok b ON a.tok = b.tok AND a.doc_id < b.doc_id
-              GROUP BY 1, 2
-            ),
-            tot AS (SELECT CAST(COALESCE(SUM(cbs), 0) AS BIGINT) AS s,
-                           CAST(count(*) AS BIGINT) AS p FROM pw)
-            SELECT id_a, id_b, cbs FROM pw, tot WHERE cbs * p >= s
-        """,
         "blocking_quality": """
             WITH th AS (
               SELECT doc_id, md5('sim:' || tok) AS hx
@@ -7053,7 +6372,6 @@ def oracle_sql() -> dict[str, str]:
                    (v.component IS NOT NULL) AS violated
             FROM comp c LEFT JOIN viol v ON c.component = v.component
         """,
-        "kcore": _KCORE_SQL,
         # Gaps-and-islands replay. The ordering is TOTAL (s, e, eid):
         # the construction is two window passes (running max -> flag ->
         # running sum), and DuckDB sorts each pass independently — under
@@ -7245,32 +6563,8 @@ def oracle_sql() -> dict[str, str]:
                    (total_bytes < 512) AS needs_compaction
             FROM f
         """,
-        # Co-visitation replay: distinct (user, item), same 100-item
-        # user cap (vacuous at this sf, mirrored anyway), ordered
-        # self-join, exact HAVING-count weights.
-        "covisitation": """
-            WITH ui AS (
-              SELECT DISTINCT user_id,
-                     event_type || ':' ||
-                       CAST(CAST(FLOOR(value) AS BIGINT) AS VARCHAR) AS item
-              FROM events
-              WHERE user_id IS NOT NULL AND event_type IS NOT NULL
-                AND value IS NOT NULL
-            ),
-            ok AS (
-              SELECT user_id, item FROM ui
-              WHERE user_id NOT IN (
-                SELECT user_id FROM ui GROUP BY 1 HAVING count(*) > 100
-              )
-            )
-            SELECT a.item AS item_a, b.item AS item_b,
-                   CAST(count(*) AS BIGINT) AS weight
-            FROM ok a JOIN ok b
-              ON a.user_id = b.user_id AND a.item < b.item
-            GROUP BY 1, 2 HAVING count(*) >= 5
-        """,
         # Markov transition replay: same lag-built transition stream as
-        # clickstream_rank; counts BIGINT, probability is one integer
+        # _click_edges; counts BIGINT, probability is one integer
         # floor-division per row (// on exact integers == Spark DIV).
         "markov_transitions": """
             WITH ev AS (
@@ -7352,46 +6646,6 @@ def oracle_sql() -> dict[str, str]:
             FROM keyed k LEFT JOIN pkeys p
               ON k.relation = p.relation AND k.fk = p.pk
             GROUP BY k.relation
-        """,
-        # BFS replay: hop-bounded recursive walk enumeration (UNION
-        # dedups per (seed,node,hop) level so cycles terminate), then a
-        # min-hop contraction — min over walk lengths == shortest path.
-        "bfs_reach": """
-            WITH RECURSIVE ev AS (
-              SELECT user_id, ts, event_id,
-                     event_type || ':' ||
-                       CAST(CAST(FLOOR(value) AS BIGINT) AS VARCHAR) AS node
-              FROM events
-              WHERE user_id IS NOT NULL AND event_type IS NOT NULL
-                AND value IS NOT NULL
-            ),
-            seq AS (
-              SELECT node, lag(node) OVER (PARTITION BY user_id
-                           ORDER BY ts, event_id) AS prev
-              FROM ev
-            ),
-            e AS MATERIALIZED (
-              SELECT DISTINCT prev AS src, node AS dst
-              FROM seq WHERE prev IS NOT NULL
-            ),
-            seeds AS (
-              SELECT DISTINCT node AS seed FROM (
-                SELECT src AS node FROM e UNION SELECT dst FROM e
-              ) WHERE node LIKE 'signup:%'
-            ),
-            walk AS (
-              SELECT seed, seed AS node, 0 AS hop FROM seeds
-              UNION
-              SELECT w.seed, e.dst AS node, w.hop + 1 AS hop
-              FROM walk w JOIN e ON w.node = e.src
-              WHERE w.hop < 3
-            ),
-            m AS (
-              SELECT seed, node, CAST(min(hop) AS INTEGER) AS hop
-              FROM walk GROUP BY 1, 2
-            )
-            SELECT seed, hop, CAST(count(*) AS BIGINT) AS n_nodes
-            FROM m GROUP BY 1, 2
         """,
         # Retention replay: floor(epoch) (CAST alone ROUNDS — the
         # hopping_window idiom), BIGINT floor-division period index,
@@ -7586,55 +6840,6 @@ def oracle_sql() -> dict[str, str]:
             SELECT src_url, src_host, t2,
                    lang || '.example.org', CAST(1 AS INTEGER)
             FROM d WHERE doc_id % 3 = 0
-        """,
-        # Host-rank replay: edges from the PLANTING FORMULAS (the
-        # extraction regex never appears here), then two unrolled
-        # rounds of the addition-only BIGINT PageRank recurrence — a
-        # hash match proves extraction + contraction + rank end-to-end.
-        "host_rank": """
-            WITH d AS (
-              SELECT doc_id, lang, source,
-                     source || '.example.com' AS src_host
-              FROM documents
-            ),
-            raw AS (
-              SELECT src_host AS src, 'hub.example.net' AS dst
-              FROM d WHERE doc_id % 3 IN (0, 1)
-              UNION ALL
-              SELECT src_host, lang || '.example.org'
-              FROM d WHERE doc_id % 3 = 0
-            ),
-            e AS (
-              SELECT src, dst, CAST(count(*) AS BIGINT) AS w
-              FROM raw GROUP BY 1, 2
-            ),
-            outd AS (SELECT src, CAST(SUM(w) AS BIGINT) AS outdeg
-                     FROM e GROUP BY src),
-            nodes AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
-            r0 AS (SELECT node, CAST(1000000000 AS BIGINT) AS pr FROM nodes),
-            r1 AS (
-              SELECT n.node,
-                     CAST(150000000 + COALESCE(SUM(
-                       ((r.pr // o.outdeg) * e.w * 850) // 1000), 0)
-                       AS BIGINT) AS pr
-              FROM nodes n
-              LEFT JOIN e ON e.dst = n.node
-              LEFT JOIN outd o ON o.src = e.src
-              LEFT JOIN r0 r ON r.node = e.src
-              GROUP BY n.node
-            ),
-            r2 AS (
-              SELECT n.node,
-                     CAST(150000000 + COALESCE(SUM(
-                       ((r.pr // o.outdeg) * e.w * 850) // 1000), 0)
-                       AS BIGINT) AS pr
-              FROM nodes n
-              LEFT JOIN e ON e.dst = n.node
-              LEFT JOIN outd o ON o.src = e.src
-              LEFT JOIN r1 r ON r.node = e.src
-              GROUP BY n.node
-            )
-            SELECT node, pr AS "rank" FROM r2
         """,
         # Anchor-profile ground truth from the planting formulas: per
         # target the exact inlink count (whitespace-only anchors count

@@ -38,12 +38,6 @@ def main() -> None:
         minhash_near_duplicate_clusters,
         prefix_filter_pairs,
     )
-    from word_sense_disambiguation_spark.operators.blocking import (
-        blocking_cost_estimate,
-        meta_blocking_prune,
-        phonetic_key_pairs,
-        sorted_neighborhood_pairs,
-    )
     from word_sense_disambiguation_spark.operators.cdc import latest_snapshot
     from word_sense_disambiguation_spark.operators.zorder import (
         minmax_rank_exprs,
@@ -64,12 +58,7 @@ def main() -> None:
     from word_sense_disambiguation_spark.operators.cdc import scd2_history
     from word_sense_disambiguation_spark.operators.clustering import (
         cluster_cohesion,
-        cluster_churn,
         cluster_size_stats,
-        covisitation_edges,
-        label_propagation,
-        pagerank,
-        triangle_stats,
         prune_high_degree_edges,
         sparsify_topk_edges,
     )
@@ -119,7 +108,6 @@ def main() -> None:
     spark = get_spark(app_name="plan_audit", master="local[4]")
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    part = spark.read.parquet(os.path.join(sf_dir, "part.parquet"))
     world = world_to_spark(spark, build_world(n_pages=200, seed=42))
     pages = pages_from_documents(docs).unionByName(world["pages"])
     senses = world["senses"]
@@ -352,20 +340,6 @@ def main() -> None:
             ),
         ),
         (
-            "phonetic_blocking (Soundex candidate pairs)",
-            "Pure-codegen key (translate/regexp chains — no EvalPython "
-            "anywhere), skew-capped pairing: partial-combined block "
-            "counts, broadcast ANTI-join excludes oversized blocks "
-            "(Window-free cap). At sf0.01 the self-join itself is a "
-            "broadcast hash join; above the broadcast threshold both "
-            "sides hash-partition on the key and the exchange is "
-            "reused. Tests: test_phonetic_key_is_pure_codegen.",
-            phonetic_key_pairs(
-                docs, "doc_id", "element_at(split(text, ' '), 1)",
-                max_block_size=24,
-            )[0],
-        ),
-        (
             "zorder_layout (Morton chunk audit)",
             "The Morton key is straight-line BIGINT bit arithmetic "
             "inside the scan projection (no UDF), the chunk id a "
@@ -389,17 +363,6 @@ def main() -> None:
             "where a hot key's sort task is unacceptable). Integer-only "
             "rank arithmetic. Tests: test_quantiles_plan_shape.",
             group_quantiles(docs, ["source"], "n_chars"),
-        ),
-        (
-            "sorted_neighborhood (merge/purge blocking)",
-            "Global sort-order pairing WITHOUT a single-task global "
-            "window: the only unpartitioned window runs over the "
-            "one-row-per-bucket COUNT aggregate (running offsets); the "
-            "row-data row_number is partitioned by the key-prefix bucket; "
-            "pairing is a chunked EQUI-join (explode to own+next chunk), "
-            "never a range/cartesian join — output linear at n*(w-1). "
-            "Tests: test_fusion_and_snb.test_snb_plan_has_no_global_row_window_and_no_cartesian.",
-            sorted_neighborhood_pairs(part, "p_partkey", "p_name", window=4, bucket_len=2),
         ),
         (
             "mutual_best_match (one-to-one linkage argmax)",
@@ -490,13 +453,6 @@ def main() -> None:
             ),
         ),
         (
-            "blocking_cost (pre-flight pair-bill estimate)",
-            "One partial-combined groupBy over the proposed key, one "
-            "final one-row aggregate: the full pair bill of a blocking "
-            "scheme priced WITHOUT materializing a single pair.",
-            blocking_cost_estimate(docs, ["lang", "source"], max_block_size=64),
-        ),
-        (
             "sparsify_topk (kNN-graph edge sparsification)",
             "Per-node top-k via the salted two-level window construction "
             "(level-1 partitions by (node, salt) — spill-safe on hubs; "
@@ -524,69 +480,6 @@ def main() -> None:
             ),
         ),
         (
-            "clickstream_rank (integer-exact fixed-iteration PageRank)",
-            "Weighted+outdeg edge table built once (two partial-combined "
-            "groupBys), localCheckpointed and pre-partitioned on src; "
-            "each of the 3 iterations is ONE equi-join (rank side small) "
-            "+ ONE partial-combined groupBy(dst) + a left join back for "
-            "the teleport floor. Addition-only BIGINT recurrence — "
-            "bit-identical at any partitioning. Tests: test_clustering."
-            "test_pagerank_plan_partial_combine_no_window.",
-            pagerank(
-                docs.select(
-                    (F.col("doc_id") % 40).cast("string").alias("src"),
-                    ((F.col("doc_id") * 3) % 40).cast("string").alias("dst"),
-                ),
-                iterations=2,
-                materialize=False,
-            ),
-        ),
-        (
-            "metablocking_prune (CBS meta-blocking + WEP)",
-            "Distinct (token, id) membership via one partial-combined "
-            "groupBy; hot-token blocks excluded by a broadcast anti-join "
-            "(capped, surfaced); within-block self-join co-partitioned "
-            "on the token; pair weights contract with ONE "
-            "partial-combined groupBy(id_a, id_b); the WEP mean joins "
-            "back as a broadcast 1-row cross — the threshold test is an "
-            "integer cross-multiply, no float. Tests: test_blocking_pairs."
-            "test_meta_blocking_prune_plan_shape.",
-            meta_blocking_prune(docs, "doc_id", "text", materialize=False)[0],
-        ),
-        (
-            "label_communities (synchronous LPA)",
-            "Symmetrized weighted edge table built once (partial-combined "
-            "groupBy), localCheckpointed, pre-partitioned on src; each "
-            "round ONE equi-join + ONE partial-combined vote groupBy + "
-            "ONE partial-combined min_by argmax over (-count, label) — "
-            "never a row_number window; hub votes contract map-side. "
-            "Tests: test_clustering."
-            "test_label_propagation_plan_aggregate_not_window.",
-            label_propagation(
-                docs.select(
-                    (F.col("doc_id") % 40).cast("string").alias("src"),
-                    ((F.col("doc_id") * 3) % 40).cast("string").alias("dst"),
-                ),
-                iterations=2,
-                materialize=False,
-            ),
-        ),
-        (
-            "triangle_profile (oriented triangle counting)",
-            "Degree-ordered orientation bounds every wedge fan-out by "
-            "sqrt(2m) — hub-proof with no cap parameter; wedge self-join "
-            "and closing probe are equi-joins (no cartesian), corner "
-            "counts contract map-side. Tests: test_clustering."
-            "test_triangle_stats_invariance_dups_and_plan.",
-            triangle_stats(
-                docs.select(
-                    (F.col("doc_id") % 40).alias("src"),
-                    ((F.col("doc_id") * 7) % 40).alias("dst"),
-                ),
-                materialize=False,
-            ),
-        ),
-        (
             "similarity_join (exact prefix-filter Jaccard join)",
             "Distinct membership + global rarity counts: partial-combined "
             "groupBys; rarity rank a DOC-bounded window; hot prefix-token "
@@ -595,19 +488,6 @@ def main() -> None:
             "verify — completeness-guaranteed, zero floats. Tests: "
             "test_dedup.test_prefix_filter_pairs_cap_invariance_and_plan.",
             prefix_filter_pairs(docs, "doc_id", "text", threshold_pct=70)[0],
-        ),
-        (
-            "cluster_churn (snapshot stability monitor)",
-            "ONE partial-combined contingency groupBy (one shuffled row "
-            "per record), everything downstream on the tiny cell table; "
-            "absorbed-whole via a pinned max_by; status a pure CASE. "
-            "Tests: test_clustering."
-            "test_cluster_churn_invariance_identity_and_plan.",
-            cluster_churn(
-                docs.select("doc_id", (F.col("doc_id") % 50).alias("cluster_id")),
-                docs.select("doc_id", (F.col("doc_id") % 47).alias("cluster_id")),
-                materialize=False,
-            )[0],
         ),
         (
             "ccnet_buckets (exact rank bucketing)",
@@ -766,20 +646,6 @@ def main() -> None:
             ),
         ),
         (
-            "covisitation (capped bipartite projection)",
-            "distinct (user, item) -> per-user count + broadcast anti-join "
-            "of oversized users -> co-partitioned self-join (one Exchange "
-            "reused by both sides) -> partial-combined pair count with "
-            "HAVING. Tests: test_clustering.test_covisitation_invariance_and_exactness.",
-            covisitation_edges(
-                docs.select(
-                    (F.col("doc_id") % 40).alias("u"), F.col("lang").alias("i")
-                ),
-                "u",
-                "i",
-            )[0],
-        ),
-        (
             "markov_transitions (first-order transition model)",
             "ONE map-side-combined groupBy(src, dst) is the only shuffle "
             "that sees input cardinality; outflow totals re-aggregate the "
@@ -813,30 +679,6 @@ def main() -> None:
             ).referential_integrity_audit(
                 [("docs.lang->docs", docs, "lang",
                   docs.select(F.col("lang").alias("pk")), "pk")]
-            ),
-        ),
-        (
-            "bfs_reach (bounded multi-source BFS)",
-            "Level-synchronous rounds: per hop ONE frontier->edges "
-            "equi-join, a (seed, node) distinct, and a left-anti join "
-            "against visited; every round eagerly localCheckpointed "
-            "(iterative-DAG rule), empty frontier short-circuits. The "
-            "audited plan is the final per-(seed, hop) aggregate over "
-            "the checkpointed rounds — each round is an RDD scan, not a "
-            "re-derived DAG. Tests: "
-            "test_clustering.test_bfs_reach_hops_and_first_reach.",
-            __import__(
-                "word_sense_disambiguation_spark.operators.clustering",
-                fromlist=["bfs_reach"],
-            ).bfs_reach(
-                docs.select(
-                    (F.col("doc_id") % 40).cast("string").alias("src"),
-                    ((F.col("doc_id") * 3) % 40).cast("string").alias("dst"),
-                ),
-                docs.select(
-                    (F.col("doc_id") % 5).cast("string").alias("seed")
-                ),
-                max_hops=2,
             ),
         ),
         (

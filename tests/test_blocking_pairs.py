@@ -20,6 +20,7 @@ from word_sense_disambiguation_spark.operators.blocking import (
 from word_sense_disambiguation_spark.operators.clustering import cluster_mentions
 from word_sense_disambiguation_spark.operators.pairs import score_mention_pairs
 from word_sense_disambiguation_spark.operators.tokenize import mentions_from_pages
+from word_sense_disambiguation_spark.plans.checkpoint import run_er_pipeline
 from word_sense_disambiguation_spark.plans.pipeline import sense_assignments
 
 
@@ -85,63 +86,22 @@ def test_surface_blocking_skew_cap(spark, sworld):
 
 
 @pytest.fixture(scope="module")
-def er_outputs(sworld):
-    assignments = sense_assignments(sworld["pages"], sworld["senses"]).cache()
-    mentions = mentions_from_pages(sworld["pages"])
-    pairs, _ = surface_key_pairs(mentions, max_block_size=256)
-    edges = score_mention_pairs(pairs.select("id_a", "id_b"), assignments).cache()
-    clusters = cluster_mentions(edges).cache()
-    return assignments, edges, clusters
+def er_outputs(spark, sworld, tmp_path_factory):
+    out = run_er_pipeline(
+        spark,
+        sworld["pages"],
+        sworld["senses"],
+        str(tmp_path_factory.mktemp("er_gate")),
+    )
+    return out["assignments"], out["edges"], out["clusters"]
 
 
 def test_er_pairwise_f1_gate(spark, sworld, er_outputs):
-    """The north-rule gate on the *clustered* output: pairs of labeled
-    mentions are predicted-matched iff they share a canonical entity_id."""
+    """The north-rule gate on the ER job's *clustered* output: pairs of
+    labeled mentions are predicted-matched iff they share a canonical
+    entity_id. A mention with no cluster row (it touched no edge) is its
+    own entity, the attach path's convention."""
     assignments, _edges, clusters = er_outputs
-    gold = sworld["gold_pairs"]
-    mid = assignments.select("url", "lemma", "pos", "mention_id")
-    g = (
-        gold.join(mid, on=["url", "lemma", "pos"])
-        .join(clusters, on="mention_id", how="left")
-        .select("pair_id", "lemma", "pos", "gold_sense_id", "is_nota", "entity_id")
-    )
-    a, b = g.alias("a"), g.alias("b")
-    p = a.join(
-        b,
-        (F.col("a.lemma") == F.col("b.lemma"))
-        & (F.col("a.pos") == F.col("b.pos"))
-        & (F.col("a.pair_id") < F.col("b.pair_id")),
-    )
-    gold_match = (
-        ~F.col("a.is_nota")
-        & ~F.col("b.is_nota")
-        & (F.col("a.gold_sense_id") == F.col("b.gold_sense_id"))
-    )
-    pred_match = F.col("a.entity_id") == F.col("b.entity_id")
-    r = p.agg(
-        F.sum((gold_match & pred_match).cast("long")).alias("tp"),
-        F.sum((~gold_match & pred_match).cast("long")).alias("fp"),
-        F.sum((gold_match & ~pred_match).cast("long")).alias("fn"),
-        F.count("*").alias("n"),
-    ).collect()[0]
-    f1 = 2 * r.tp / max(2 * r.tp + r.fp + r.fn, 1)
-    assert r.n > 100
-    assert f1 >= 0.99, r
-
-
-def test_star_pairs_path_preserves_f1(spark, sworld, er_outputs):
-    """The linear-size star-pair blocking (the 10^12-row path) must reach
-    the same F1 gate as exhaustive within-block pairing."""
-    from word_sense_disambiguation_spark.operators.blocking import (
-        sense_block_star_pairs,
-    )
-
-    assignments, _e, _c = er_outputs
-    star = sense_block_star_pairs(assignments)
-    assert star.filter(F.col("id_a") >= F.col("id_b")).count() == 0
-    edges = score_mention_pairs(star, assignments)
-    clusters = cluster_mentions(edges)
-
     gold = sworld["gold_pairs"]
     mid = assignments.select("url", "lemma", "pos", "mention_id")
     g = (
@@ -169,8 +129,14 @@ def test_star_pairs_path_preserves_f1(spark, sworld, er_outputs):
         F.sum((gold_match & pred_match).cast("long")).alias("tp"),
         F.sum((~gold_match & pred_match).cast("long")).alias("fp"),
         F.sum((gold_match & ~pred_match).cast("long")).alias("fn"),
+        F.sum((~gold_match & ~pred_match).cast("long")).alias("tn"),
+        F.count("*").alias("n"),
     ).collect()[0]
+    # every labeled pair lands in exactly one cell: a NULL on either side
+    # would drop it from all four without a trace
+    assert r.tp + r.fp + r.fn + r.tn == r.n, r
     f1 = 2 * r.tp / max(2 * r.tp + r.fp + r.fn, 1)
+    assert r.n > 100
     assert f1 >= 0.99, r
 
 
@@ -838,116 +804,3 @@ def test_fs_match_probability_plan_pure_codegen(spark):
     )
     assert "Exchange" not in plan, plan[:1200]
     assert "Python" not in plan, plan[:1200]
-
-
-def test_blocking_cost_estimate_hand_example(spark):
-    """Blocks {5, 3, 1, 2xNULL-keyed}: exact pair bill 10+3+0+1 = 14,
-    NULL keys group as one real block (the monster-block catch), cap 3
-    flags one oversized block carrying 20/28 of the doubled bill."""
-    from word_sense_disambiguation_spark.operators.blocking import (
-        blocking_cost_estimate,
-    )
-
-    rows = (
-        [("a",)] * 5 + [("b",)] * 3 + [("c",)] + [(None,)] * 2
-    )
-    df = spark.createDataFrame(rows, "k string")
-    r = blocking_cost_estimate(df, ["k"], max_block_size=3).collect()[0]
-    assert r.n_records == 11
-    assert r.n_blocks == 4
-    assert r.candidate_pairs == 14
-    assert r.max_block_size_obs == 5
-    assert r.n_oversized_blocks == 1
-    assert r.oversized_pair_share == 20.0 / 28.0
-
-
-def test_blocking_cost_estimate_empty_and_invariance(spark):
-    from word_sense_disambiguation_spark.operators.blocking import (
-        blocking_cost_estimate,
-    )
-
-    empty = spark.createDataFrame([], "k string")
-    r = blocking_cost_estimate(empty, ["k"]).collect()[0]
-    assert (r.n_records, r.n_blocks, r.candidate_pairs) == (0, 0, 0)
-    assert r.oversized_pair_share is None
-    df = spark.createDataFrame(
-        [("k%d" % (i % 7),) for i in range(100)], "k string"
-    )
-    one = blocking_cost_estimate(df.coalesce(1), ["k"]).collect()
-    many = blocking_cost_estimate(df.repartition(9), ["k"]).collect()
-    assert one == many
-
-
-def test_meta_blocking_prune_hand_example(spark):
-    """Blocks aa{1,2,3} bb{1,2} + singletons -> weights (1,2)=2,
-    (1,3)=1, (2,3)=1; S=4 P=3, WEP keeps cbs*3 >= 4 i.e. only (1,2).
-    Repeated tokens inside one doc count ONCE (distinct block
-    membership)."""
-    from word_sense_disambiguation_spark.operators.blocking import (
-        meta_blocking_prune,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "aa aa bb cc"), (2, "aa bb dd"), (3, "aa ee ff"), (4, "zz yy")],
-        "doc_id long, text string",
-    )
-    kept, oversized = meta_blocking_prune(docs, "doc_id", "text")
-    rows = kept.collect()
-    assert [(r.id_a, r.id_b, r.cbs) for r in rows] == [(1, 2, 2)]
-    assert oversized.count() == 0
-
-
-def test_meta_blocking_prune_cap_and_invariance(spark):
-    """A hot token over the block cap pairs nobody and lands in
-    `oversized`; results are partitioning/materialization invariant;
-    NULL/short tokens drop; empty corpus -> empty both."""
-    from word_sense_disambiguation_spark.operators.blocking import (
-        meta_blocking_prune,
-    )
-    import pyspark.sql.functions as F
-
-    docs = spark.createDataFrame(
-        [(i, f"hot uniq{i} uniq{i + 1} x") for i in range(30)],
-        "doc_id long, text string",
-    )
-    kept, oversized = meta_blocking_prune(
-        docs, "doc_id", "text", max_block_size=8
-    )
-    ov = {r.token: r.block_size for r in oversized.collect()}
-    assert ov == {"hot": 30}  # 1-char "x" never blocks; "hot" capped out
-    got = sorted((r.id_a, r.id_b, r.cbs) for r in kept.collect())
-    # consecutive docs share exactly one uniqN token -> uniform weight 1,
-    # mean 1, everything kept
-    assert got == [(i, i + 1, 1) for i in range(29)]
-    k2, _ = meta_blocking_prune(
-        docs.repartition(7), "doc_id", "text", max_block_size=8,
-        materialize=False,
-    )
-    assert sorted((r.id_a, r.id_b, r.cbs) for r in k2.collect()) == got
-    empty = spark.createDataFrame([], "doc_id long, text string")
-    ek, eo = meta_blocking_prune(empty, "doc_id", "text")
-    assert ek.count() == 0 and eo.count() == 0
-    nulls = spark.createDataFrame([(1, None), (2, "a b c")], "doc_id long, text string")
-    nk, _ = meta_blocking_prune(nulls, "doc_id", "text")
-    assert nk.count() == 0  # all tokens under min_token_len or NULL text
-
-
-def test_meta_blocking_prune_plan_shape(spark):
-    """Scale contract: the oversized-block exclusion is a broadcast
-    anti-join, the within-block self-join is co-partitioned on the
-    token, weights contract through a partial-combined HashAggregate,
-    and the mean joins back via BroadcastNestedLoopJoin (1-row side) —
-    no window, no shuffled cartesian over pairs."""
-    from word_sense_disambiguation_spark.operators.blocking import (
-        meta_blocking_prune,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, f"alpha beta w{i % 9} w{(i + 1) % 9}") for i in range(60)],
-        "doc_id long, text string",
-    )
-    kept, _ = meta_blocking_prune(docs, "doc_id", "text", materialize=False)
-    plan = kept._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan, plan[:2000]
-    assert "HashAggregate" in plan, plan[:2000]
-    assert "Window" not in plan, plan[:2000]

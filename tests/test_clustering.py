@@ -437,322 +437,6 @@ def test_sparsify_topk_plan_salted_window(spark):
     assert "CartesianProduct" not in plan
 
 
-def _pagerank_replay(edges, iterations=3, scale=10**9, damping=850):
-    """Exact python replay of the operator's integer recurrence."""
-    from collections import Counter, defaultdict
-
-    w = Counter((s, d) for s, d in edges)
-    outdeg = Counter()
-    for (s, _d), c in w.items():
-        outdeg[s] += c
-    nodes = {s for s, _ in w} | {d for _, d in w}
-    teleport = (scale * (1000 - damping)) // 1000
-    r = {n: scale for n in nodes}
-    for _ in range(iterations):
-        inflow = defaultdict(int)
-        for (s, d), c in w.items():
-            inflow[d] += ((r[s] // outdeg[s]) * c * damping) // 1000
-        r = {n: teleport + inflow[n] for n in nodes}
-    return r
-
-
-def test_pagerank_matches_exact_replay(spark):
-    """The distributed ranks equal the integer recurrence bit-for-bit on
-    a graph with parallel edges (multiplicity = weight), a dangling
-    node, a hub, and a 2-cycle."""
-    from word_sense_disambiguation_spark.operators.clustering import pagerank
-
-    edges = [("a", "b"), ("a", "b"), ("a", "c"), ("b", "a"),
-             ("c", "d"), ("e", "c"), ("e", "c"), ("e", "c")]
-    df = spark.createDataFrame(edges, "src string, dst string")
-    got = {r.node: r.rank for r in pagerank(df, materialize=False).collect()}
-    want = _pagerank_replay(edges)
-    assert got == want
-    # dangling d: pure teleport floor after round 1? no — d has inflow
-    # from c; node e (source-only) holds exactly the teleport floor
-    assert got["e"] == 150_000_000
-    # every rank holds the teleport floor, and d (sole heir of c's whole
-    # outflow) outranks c (which splits a's outflow with b)
-    assert all(v >= 150_000_000 for v in got.values())
-    assert got["d"] > got["c"]
-
-
-def test_pagerank_invariance_and_edges(spark):
-    """Partitioning/materialization invariance; iterations=0 is the
-    uniform init; NULL endpoints are dropped; empty input -> empty."""
-    from word_sense_disambiguation_spark.operators.clustering import pagerank
-
-    edges = [("a", "b"), ("b", "c"), ("c", "a"), ("a", "c"), (None, "x"), ("x", None)]
-    df = spark.createDataFrame(edges, "src string, dst string")
-    one = sorted(pagerank(df.coalesce(1), materialize=False).collect())
-    many = sorted(pagerank(df.repartition(7), materialize=False).collect())
-    mat = sorted(pagerank(df, materialize=True).collect())
-    assert one == many == mat
-    assert {r.node for r in one} == {"a", "b", "c"}  # NULL-edge endpoints gone
-    init = {r.node: r.rank for r in pagerank(df, iterations=0, materialize=False).collect()}
-    assert set(init.values()) == {10**9}
-    empty = spark.createDataFrame([], "src string, dst string")
-    assert pagerank(empty, materialize=False).count() == 0
-
-
-def test_pagerank_plan_partial_combine_no_window(spark):
-    """Scale contract: each iteration contracts in-links with a
-    partial-combined HashAggregate (a 10^8-in-link hot page combines
-    map-side) — never a Window, never a cartesian product."""
-    from word_sense_disambiguation_spark.operators.clustering import pagerank
-    import pyspark.sql.functions as F
-
-    df = spark.range(0, 5000).select(
-        (F.col("id") % 50).cast("string").alias("src"),
-        ((F.col("id") * 7) % 50).cast("string").alias("dst"),
-    )
-    out = pagerank(df, iterations=2, materialize=False)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "HashAggregate" in plan, plan[:2000]
-    assert "Window" not in plan, plan[:2000]
-    assert "CartesianProduct" not in plan, plan[:2000]
-
-
-def _lpa_replay(edges, iterations=3):
-    """Exact python replay of the synchronous LPA rule."""
-    from collections import Counter
-
-    sym = Counter()
-    for a, b in edges:
-        if a is None or b is None or a == b:
-            continue
-        sym[(a, b)] += 1
-        sym[(b, a)] += 1
-    nodes = sorted({a for a, _ in sym} | {b for _, b in sym} |
-                   {a for a, b in edges if a is not None and b is not None} |
-                   {b for a, b in edges if a is not None and b is not None})
-    lab = {n: n for n in nodes}
-    for _ in range(iterations):
-        new = {}
-        for n in nodes:
-            votes = Counter()
-            for (s, d), w in sym.items():
-                if d == n:
-                    votes[lab[s]] += w
-            if votes:
-                new[n] = min(votes, key=lambda c: (-votes[c], c))
-            else:
-                new[n] = n
-        lab = new
-    return lab
-
-
-def test_label_propagation_matches_replay_and_splits_weld(spark):
-    """Two 4-cliques joined by ONE weld edge: CC sees one component,
-    LPA sees two communities (the cluster_cohesion over-merge story);
-    the distributed labels equal the synchronous python replay
-    bit-for-bit, parallel edges count as multiplicity."""
-    from word_sense_disambiguation_spark.operators.clustering import (
-        connected_components,
-        label_propagation,
-    )
-
-    clique1 = [(a, b) for a in range(4) for b in range(4) if a < b]
-    clique2 = [(a, b) for a in range(10, 14) for b in range(10, 14) if a < b]
-    edges = clique1 + clique2 + [(3, 10)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    got = {r.node: r.community for r in label_propagation(df, materialize=False).collect()}
-    assert got == _lpa_replay(edges)
-    comms = set(got.values())
-    assert len(comms) == 2
-    assert len({got[n] for n in range(4)}) == 1
-    assert len({got[n] for n in range(10, 14)}) == 1
-    cc = connected_components(df)
-    assert cc.select("component").distinct().count() == 1  # the contrast
-
-
-def test_label_propagation_invariance_and_edges(spark):
-    """Partitioning/materialization invariance; iterations=0 keeps own
-    labels; self-loops and NULLs drop; isolated self-loop node keeps
-    itself; empty input -> empty."""
-    from word_sense_disambiguation_spark.operators.clustering import (
-        label_propagation,
-    )
-
-    edges = [(1, 2), (2, 3), (1, 2), (4, 4), (None, 1), (2, None)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    one = sorted(label_propagation(df.coalesce(1), materialize=False).collect())
-    many = sorted(label_propagation(df.repartition(5), materialize=False).collect())
-    mat = sorted(label_propagation(df, materialize=True).collect())
-    assert one == many == mat
-    got = {r.node: r.community for r in one}
-    assert got == _lpa_replay(edges)
-    assert got[4] == 4  # self-loop-only node keeps its own label
-    init = {r.node: r.community
-            for r in label_propagation(df, iterations=0, materialize=False).collect()}
-    assert all(k == v for k, v in init.items())
-    empty = spark.createDataFrame([], "src long, dst long")
-    assert label_propagation(empty, materialize=False).count() == 0
-
-
-def test_label_propagation_plan_aggregate_not_window(spark):
-    """Scale contract: the per-node argmax is a partial-combined max_by
-    AGGREGATE over (count DESC, label ASC) — never a row_number window;
-    no cartesian products."""
-    from word_sense_disambiguation_spark.operators.clustering import (
-        label_propagation,
-    )
-    import pyspark.sql.functions as F
-
-    df = spark.range(0, 3000).select(
-        (F.col("id") % 40).alias("src"), ((F.col("id") * 11) % 40).alias("dst")
-    )
-    out = label_propagation(df, iterations=2, materialize=False)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "min_by" in plan or "MinBy" in plan, plan[:2000]
-    assert "Window" not in plan, plan[:2000]
-    assert "CartesianProduct" not in plan, plan[:2000]
-
-
-def test_label_propagation_string_labels(spark):
-    """Labels are ids of ANY orderable type: the tie rule is min_by over
-    (-count, community), not numeric negation of the label (the
-    regression the numeric-only unit worlds missed: string ids)."""
-    from word_sense_disambiguation_spark.operators.clustering import (
-        label_propagation,
-    )
-
-    edges = [("a", "b"), ("b", "c"), ("a", "c"), ("x", "y")]
-    df = spark.createDataFrame(edges, "src string, dst string")
-    got = {r.node: r.community for r in label_propagation(df, materialize=False).collect()}
-    assert got == _lpa_replay(edges)
-    assert len({got["a"], got["b"], got["c"]}) == 1
-
-
-def _triangle_replay(edges):
-    """Brute-force per-node triangle counts over the simple graph."""
-    adj = {}
-    for a, b in edges:
-        if a is None or b is None or a == b:
-            continue
-        adj.setdefault(a, set()).add(b)
-        adj.setdefault(b, set()).add(a)
-    out = {}
-    for n, nb in adj.items():
-        nbl = sorted(nb)
-        t = sum(
-            1
-            for i in range(len(nbl))
-            for j in range(i + 1, len(nbl))
-            if nbl[j] in adj[nbl[i]]
-        )
-        d = len(nb)
-        cc = (2.0 * t) / (d * (d - 1)) if d >= 2 else None
-        out[n] = (d, t, cc)
-    return out
-
-
-def test_triangle_stats_matches_bruteforce(spark):
-    """4-clique + pendant + disjoint triangle + random graph: the
-    oriented-wedge count equals brute force per node, the coefficient
-    is the exact IEEE division, degree<2 rows carry NULL."""
-    from word_sense_disambiguation_spark.operators.clustering import (
-        triangle_stats,
-    )
-
-    clique = [(a, b) for a in range(4) for b in range(4) if a < b]
-    edges = clique + [(3, 99), (200, 201), (201, 202), (202, 200)]
-    rng = random.Random(13)
-    edges += [(rng.randrange(20, 50), rng.randrange(20, 50)) for _ in range(120)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    got = {
-        r.node: (r.degree, r.triangles, r.clustering_coefficient)
-        for r in triangle_stats(df, materialize=False).collect()
-    }
-    want = _triangle_replay(edges)
-    # replay skips self-loop-only/isolated ids; the operator keeps them
-    for n, (d, t, cc) in want.items():
-        assert got[n] == (d, t, cc), (n, got[n], (d, t, cc))
-    assert got[0] == (3, 3, 1.0)           # clique corner
-    assert got[99][0] == 1 and got[99][2] is None  # pendant: NULL coeff
-    assert got[200] == (2, 1, 1.0)         # disjoint triangle
-
-
-def test_triangle_stats_invariance_dups_and_plan(spark):
-    """Parallel edges/self-loops dedupe; partitioning invariance; the
-    closing probe is an equi-join (no cartesian), no window."""
-    from word_sense_disambiguation_spark.operators.clustering import (
-        triangle_stats,
-    )
-
-    edges = [(1, 2), (2, 1), (1, 2), (2, 3), (3, 1), (4, 4), (None, 5)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    one = sorted(triangle_stats(df.coalesce(1), materialize=False).collect())
-    many = sorted(triangle_stats(df.repartition(7), materialize=True).collect())
-    assert one == many
-    got = {r.node: (r.degree, r.triangles) for r in one}
-    assert got[1] == (2, 1) and got[2] == (2, 1) and got[3] == (2, 1)
-    assert got[4] == (0, 0)  # self-loop-only: kept, degree 0
-    plan = (
-        triangle_stats(df, materialize=False)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "CartesianProduct" not in plan, plan[:2000]
-    assert "BroadcastNestedLoopJoin" not in plan, plan[:2000]
-    assert "Window" not in plan, plan[:2000]
-
-
-def test_cluster_churn_hand_example(spark):
-    """Every status in one world: P1={1,2,3} P2={4,5} P3={6} P4={9}
-    P5={10,11} -> C1={1,2} split, C2={3,4,5} merged, C3={7} new,
-    C4={6,8} grown, C5={10,11} stable; P4 dissolves (id 9 gone)."""
-    from word_sense_disambiguation_spark.operators.clustering import (
-        cluster_churn,
-    )
-
-    prev = spark.createDataFrame(
-        [(1, "P1"), (2, "P1"), (3, "P1"), (4, "P2"), (5, "P2"), (6, "P3"),
-         (9, "P4"), (10, "P5"), (11, "P5")],
-        "doc_id long, cluster_id string",
-    )
-    curr = spark.createDataFrame(
-        [(1, "C1"), (2, "C1"), (3, "C2"), (4, "C2"), (5, "C2"), (7, "C3"),
-         (6, "C4"), (8, "C4"), (10, "C5"), (11, "C5")],
-        "doc_id long, cluster_id string",
-    )
-    report, dissolved = cluster_churn(prev, curr)
-    got = {r.cluster_id: r for r in report.collect()}
-    assert got["C1"].status == "split"
-    assert (got["C1"].n_members, got["C1"].n_carried, got["C1"].n_new) == (2, 2, 0)
-    assert got["C2"].status == "merged"
-    assert (got["C2"].n_prev_clusters, got["C2"].max_prev_overlap) == (2, 2)
-    assert got["C3"].status == "new" and got["C3"].n_new == 1
-    assert got["C4"].status == "grown"
-    assert got["C5"].status == "stable"
-    assert [(r.cluster_id, r.n_members) for r in dissolved.collect()] == [("P4", 1)]
-
-
-def test_cluster_churn_invariance_identity_and_plan(spark):
-    """Identical snapshots -> all stable, nothing dissolved;
-    partitioning/materialization invariance; the contingency contraction
-    is a partial-combined aggregate, no window, no pair join."""
-    from word_sense_disambiguation_spark.operators.clustering import (
-        cluster_churn,
-    )
-    import pyspark.sql.functions as F
-
-    snap = spark.range(0, 500).select(
-        F.col("id").alias("doc_id"), (F.col("id") % 50).alias("cluster_id")
-    )
-    report, dissolved = cluster_churn(snap, snap, materialize=False)
-    assert dissolved.count() == 0
-    stats = report.groupBy("status").count().collect()
-    assert {r.status: r["count"] for r in stats} == {"stable": 50}
-    r1, d1 = cluster_churn(snap.repartition(7), snap.coalesce(1), materialize=True)
-    assert sorted(r1.collect()) == sorted(report.collect())
-    plan = report._jdf.queryExecution().executedPlan().toString()
-    assert "Window" not in plan, plan[:2000]
-    assert "CartesianProduct" not in plan, plan[:2000]
-    assert "HashAggregate" in plan or "SortAggregate" in plan, plan[:2000]
-
-
 def test_threshold_cluster_curve_hand_example(spark):
     """Chain x-y(10)-z(5) plus p-q(3): at t=3 two entities {x,y,z}+{p,q};
     at t=5 one ({p,q} gone); at t=10 the chain splits to a pair; at
@@ -854,165 +538,3 @@ def test_constrained_components_no_constraints_is_plain_cc(spark):
     cons = constrained_components(edges, empty).collect()
     assert {(r.node, r.component) for r in cons} == base
     assert not any(r.violated for r in cons)
-
-
-# ---------------------------------------------------------------------------
-# kcore_peel: bounded synchronous degree peel
-# ---------------------------------------------------------------------------
-
-
-def _py_peel(edges, k, rounds):
-    """Reference peel in plain python."""
-    e = {tuple(sorted(p)) for p in edges if p[0] != p[1]}
-    for _ in range(rounds):
-        deg = {}
-        for a, b in e:
-            deg[a] = deg.get(a, 0) + 1
-            deg[b] = deg.get(b, 0) + 1
-        keep = {n for n, d in deg.items() if d >= k}
-        e = {(a, b) for a, b in e if a in keep and b in keep}
-    deg = {}
-    for a, b in e:
-        deg[a] = deg.get(a, 0) + 1
-        deg[b] = deg.get(b, 0) + 1
-    conv = all(d >= k for d in deg.values())
-    return deg, conv
-
-
-def test_kcore_peel_matches_python_reference(spark):
-    from word_sense_disambiguation_spark.operators.clustering import kcore_peel
-
-    random.seed(11)
-    raw = [(random.randrange(30), random.randrange(30)) for _ in range(120)]
-    edges = spark.createDataFrame(raw, "src long, dst long")
-    for k in (2, 3, 5):
-        want, want_conv = _py_peel(raw, k, rounds=4)
-        got = kcore_peel(edges, k=k, rounds=4).collect()
-        assert {r.node: r.degree for r in got} == want
-        assert all(r.converged == want_conv for r in got)
-
-
-def test_kcore_peel_exact_rounds_semantics(spark):
-    from word_sense_disambiguation_spark.operators.clustering import kcore_peel
-
-    # a long path peels one endpoint pair per round at k=2: after 2 of
-    # the needed rounds the result is the UNCONVERGED intermediate state,
-    # deterministically — the exact-R contract the SQL oracle relies on.
-    path = [(i, i + 1) for i in range(8)]
-    edges = spark.createDataFrame(path, "src long, dst long")
-    want, want_conv = _py_peel(path, 2, rounds=2)
-    got = kcore_peel(edges, k=2, rounds=2).collect()
-    assert {r.node: r.degree for r in got} == want
-    assert want_conv is False
-    assert all(r.converged is False for r in got)
-    # run to convergence: a pure path has an empty 2-core
-    assert kcore_peel(edges, k=2, rounds=8).count() == 0
-
-
-def test_kcore_peel_parallelism_invariance(spark):
-    from word_sense_disambiguation_spark.operators.clustering import kcore_peel
-
-    random.seed(13)
-    raw = [(random.randrange(25), random.randrange(25)) for _ in range(90)]
-    edges = spark.createDataFrame(raw, "src long, dst long")
-    a = kcore_peel(edges.coalesce(1), k=3, rounds=3).collect()
-    b = kcore_peel(edges.repartition(9), k=3, rounds=3).collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
-
-
-# ---------------------------------------------------------------------------
-# covisitation_edges: bipartite projection with hot-user cap
-# ---------------------------------------------------------------------------
-
-
-def test_covisitation_hand_example_and_cap(spark):
-    from word_sense_disambiguation_spark.operators.clustering import (
-        covisitation_edges,
-    )
-
-    rows = (
-        # u1, u2 both touch {a, b}; u1 also c; duplicates collapse
-        [(1, "a"), (1, "a"), (1, "b"), (1, "c"),
-         (2, "a"), (2, "b"),
-         # u3: bot touching 5 items with cap 4 -> excluded entirely
-         (3, "a"), (3, "b"), (3, "c"), (3, "d"), (3, "e")]
-    )
-    df = spark.createDataFrame(rows, "u long, i string")
-    edges, oversized = covisitation_edges(
-        df, "u", "i", max_items_per_user=4, min_weight=1
-    )
-    got = {(r.item_a, r.item_b): r.weight for r in edges.collect()}
-    assert got == {("a", "b"): 2, ("a", "c"): 1, ("b", "c"): 1}
-    ov = oversized.collect()
-    assert [(r.u, r.n_items) for r in ov] == [(3, 5)]
-    # min_weight prunes after the exact count
-    edges2, _ = covisitation_edges(
-        df, "u", "i", max_items_per_user=4, min_weight=2
-    )
-    assert {(r.item_a, r.item_b) for r in edges2.collect()} == {("a", "b")}
-
-
-def test_covisitation_invariance_and_exactness(spark):
-    from word_sense_disambiguation_spark.operators.clustering import (
-        covisitation_edges,
-    )
-
-    random.seed(31)
-    rows = [
-        (random.randrange(15), "i%d" % random.randrange(12))
-        for _ in range(500)
-    ]
-    df = spark.createDataFrame(rows, "u long, i string")
-    # python reference
-    per_user = {}
-    for u, i in rows:
-        per_user.setdefault(u, set()).add(i)
-    want = {}
-    for items in per_user.values():
-        if len(items) > 256:
-            continue
-        s = sorted(items)
-        for x in range(len(s)):
-            for y in range(x + 1, len(s)):
-                want[(s[x], s[y])] = want.get((s[x], s[y]), 0) + 1
-    want = {k: v for k, v in want.items() if v >= 2}
-    a, _ = covisitation_edges(df.coalesce(1), "u", "i", min_weight=2)
-    b, _ = covisitation_edges(df.repartition(9), "u", "i", min_weight=2)
-    got_a = {(r.item_a, r.item_b): r.weight for r in a.collect()}
-    got_b = {(r.item_a, r.item_b): r.weight for r in b.collect()}
-    assert got_a == want == got_b
-
-
-def test_bfs_reach_hops_and_first_reach(spark):
-    """Shortest-path semantics: a node reachable at hop 1 and hop 2 is
-    counted ONCE, at hop 1; hop 0 is the seed; directed edges only."""
-    from word_sense_disambiguation_spark.operators.clustering import bfs_reach
-
-    # a -> b -> c -> d, plus shortcut a -> c, plus a cycle d -> a,
-    # plus a reverse-only edge z -> a (must not be reached from a)
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("c", "d"), ("a", "c"), ("d", "a"),
-         ("z", "a")],
-        "src string, dst string",
-    )
-    seeds = spark.createDataFrame([("a",)], "seed string")
-    out = {(r.seed, r.hop): r.n_nodes
-           for r in bfs_reach(edges, seeds, max_hops=3).collect()}
-    # hop0: {a}; hop1: {b, c}; hop2: {d}; hop3: nothing new (a seen)
-    assert out == {("a", 0): 1, ("a", 1): 2, ("a", 2): 1}
-
-
-def test_bfs_reach_multi_seed_and_early_exit(spark):
-    from word_sense_disambiguation_spark.operators.clustering import bfs_reach
-
-    edges = spark.createDataFrame(
-        [("a", "b"), ("c", "c")], "src string, dst string"
-    )
-    seeds = spark.createDataFrame([("a",), ("c",), ("lonely",)],
-                                  "seed string")
-    out = {(r.seed, r.hop): r.n_nodes
-           for r in bfs_reach(edges, seeds, max_hops=5).collect()}
-    # per-seed state is independent; self-loop and isolated seeds stop
-    # at hop 0 and the empty-frontier early exit ends the loop
-    assert out == {("a", 0): 1, ("a", 1): 1, ("c", 0): 1,
-                   ("lonely", 0): 1}

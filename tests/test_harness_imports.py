@@ -4,7 +4,10 @@
   from the package must resolve, so renaming or deleting a public name
   breaks a test instead of silently breaking a harness.
 * Every package module is imported by some non-test file, so a module
-  that only its own tests reach cannot come back unnoticed."""
+  that only its own tests reach cannot come back unnoticed.
+* Every public function of the two operator modules the ER job imports
+  (``operators.blocking``, ``operators.clustering``) is imported by some
+  non-test file, so a test-only operator cannot come back into them."""
 
 from __future__ import annotations
 
@@ -70,22 +73,45 @@ def _imported_modules(path: Path) -> set[str]:
     return out
 
 
+def _non_test_files() -> list[Path]:
+    """Package modules (``__init__`` files do not count), perfbench, the
+    harnesses and the driver contract."""
+    return [
+        *(p for p in (ROOT / PKG).rglob("*.py") if p.name != "__init__.py"),
+        *(ROOT / "perfbench").glob("*.py"),
+        *HARNESSES,
+        ROOT / "__spark_entry__.py",
+    ]
+
+
 def test_every_package_module_has_a_non_test_importer():
     modules = {
         p: ".".join(p.relative_to(ROOT).with_suffix("").parts)
         for p in (ROOT / PKG).rglob("*.py")
         if p.name != "__init__.py"
     }
-    importers = [
-        *modules,
-        *(ROOT / "perfbench").glob("*.py"),
-        *HARNESSES,
-        ROOT / "__spark_entry__.py",
-    ]
     reached = set()
-    for path in importers:
+    for path in _non_test_files():
         reached |= _imported_modules(path) - {modules.get(path)}
     orphans = sorted(set(modules.values()) - reached)
+    assert not orphans, f"imported only by tests (or by nothing): {orphans}"
+
+
+def test_every_er_operator_function_has_a_non_test_importer():
+    imported = set()
+    for path in _non_test_files():
+        imported |= set(_package_imports(path))
+    orphans = []
+    for module in ("blocking", "clustering"):
+        path = ROOT / PKG / "operators" / f"{module}.py"
+        dotted = f"{PKG}.operators.{module}"
+        orphans += [
+            f"{module}.{node.name}"
+            for node in ast.parse(path.read_text(), filename=str(path)).body
+            if isinstance(node, ast.FunctionDef)
+            and not node.name.startswith("_")
+            and (dotted, node.name) not in imported
+        ]
     assert not orphans, f"imported only by tests (or by nothing): {orphans}"
 
 

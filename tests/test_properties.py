@@ -368,32 +368,3 @@ def test_mad_cross_multiply_equals_float_hampel(dev, mad):
     Hampel's |dev| > 3.5*MAD (3.5 is dyadic; 2|dev| > 7*mad is the
     common exact form) — no boundary drift anywhere in range."""
     assert (abs(dev) * 1000 > 3500 * mad) == (2 * abs(dev) > 7 * mad)
-
-
-@settings(max_examples=100, deadline=None)
-@given(
-    st.lists(
-        st.tuples(
-            st.integers(min_value=0, max_value=12),
-            st.integers(min_value=0, max_value=12),
-        ),
-        min_size=1,
-        max_size=40,
-    ),
-    st.integers(min_value=0, max_value=4),
-)
-def test_pagerank_replay_mass_bounds(edges, iters):
-    """The pagerank recurrence's documented invariants, on arbitrary
-    small multigraphs: every rank holds the teleport floor, no rank
-    exceeds n*scale (the overflow-bound premise), and total mass never
-    grows."""
-    from tests.test_clustering import _pagerank_replay
-
-    r = _pagerank_replay(edges, iterations=iters)
-    if not r:
-        return
-    n, scale = len(r), 10**9
-    teleport = (scale * 150) // 1000
-    assert all(v >= teleport for v in r.values())
-    assert all(v <= n * scale for v in r.values())
-    assert sum(r.values()) <= n * scale

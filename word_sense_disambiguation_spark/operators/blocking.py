@@ -1,30 +1,38 @@
 """Stage-1 blocking: candidate-pair generation without the O(n^2) cross join.
 
-Two complementary blockers, exactly as the north star prescribes:
+The ER job blocks and scores in ONE place, :func:`er_scored_edges`: one
+shuffle on the normalized surface key ``(norm_surface, pos)`` — the
+relational analogue of the reference's ``(lemma, pos)`` definition lookup
+key (``wsd/word_sense_disambiguation.py:384-387``) — then
+per block the scorer-aware pairs (only the pairs the pair scorer can
+match, plus one hub star per block that keeps every member in the
+clustered node set) or, for a block over the cap, linear canopy-aware
+star edges, scored in the same pass. ``run_er_pipeline``, the incremental
+attach residual, the driver-contract ER queries and the scaling harness
+all call it, so every ER job runs the same blocking policy under the same
+cap (:data:`ER_MAX_BLOCK`).
 
-* :func:`surface_key_pairs` — normalized-surface-form equi-blocking (the
-  relational analogue of the reference's ``(lemma, pos)`` definition lookup
-  key, ``/root/reference/wsd/word_sense_disambiguation.py:384-387``);
-* :func:`minhash_lsh_pairs` — MinHash-LSH banding over token/char shingles
-  (no reference analogue; semantics per the classic banding construction,
-  MMDS ch.3), for near-duplicate and fuzzy-mention candidates.
+The rest of the module:
 
-Both are skew-aware: hot blocks are the scale killer (a block of size B
-emits B(B-1)/2 pairs), so both blockers take ``max_block_size`` and emit a
-side table of the blocks they dropped — **no silent caps**; the caller can
-route oversized blocks to a salted/sampled path. The reference's analogue
-of this discipline is its length-bucketed batching
+* :func:`surface_key_pairs` ∪ :func:`oversized_star_pairs` — the
+  historical all-pairs-within-a-block union that ``er_scored_edges`` is
+  proven exact against (the exactness test and perfbench's traced run
+  use it as the reference);
+* :func:`minhash_bands` / :func:`minhash_lsh_pairs` — MinHash-LSH banding
+  over char shingles (no reference analogue; semantics per the classic
+  banding construction, MMDS ch.3), the candidate generator of the
+  near-duplicate dedup operators;
+* :func:`blocking_quality` — pair completeness and reduction ratio of a
+  candidate set against gold pairs.
+
+Every pair generator is skew-aware: hot blocks are the scale killer (a
+block of size B emits B(B-1)/2 pairs), so each takes ``max_block_size``.
+``surface_key_pairs`` and ``minhash_lsh_pairs`` emit a side table of the
+blocks they dropped — **no silent caps** — and ``er_scored_edges`` turns
+such blocks into linear star edges itself. The reference's
+analogue of this discipline is its length-bucketed batching
 (``wsd/masked_language_model.py:113-126``) — bounding worst-case work per
 unit, never dropping silently (it warns, ``training/train.py:374-396``).
-
-The ER job blocks and scores in ONE place, :func:`er_scored_edges`: one
-shuffle on the surface key, then per block the scorer-aware pairs (only
-the pairs the pair scorer can match, plus one hub star per block that
-keeps every member in the clustered node set) or, for a block over the
-cap, linear canopy-aware star edges — scored in the same pass.
-``run_er_pipeline``, the incremental attach residual, the driver-contract
-ER queries and the scaling harness all call it, so every ER job runs the
-same blocking policy under the same cap (:data:`ER_MAX_BLOCK`).
 """
 
 from __future__ import annotations
@@ -33,7 +41,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from word_sense_disambiguation_spark.functions.hashing import (
@@ -91,27 +99,6 @@ def surface_key_pairs(
     """Equi-blocking on the normalized surface key -> distinct id pairs."""
     keyed = mentions.select(id_col, *key_cols)
     return _pairs_within_blocks(keyed, id_col, list(key_cols), max_block_size)
-
-
-def sense_block_star_pairs(assignments: DataFrame) -> DataFrame:
-    """Linear-size pair generation for huge blocks: within each
-    ``(lemma, pos, pred_sense_id)`` canopy, pair every mention with the
-    block's minimum mention (a star), instead of enumerating all
-    B(B-1)/2 pairs.
-
-    Why this is the 10^12-row path: connected components only needs a
-    *spanning* structure per true cluster — a verified star gives exactly
-    that with O(B) edges, and the downstream pair scorer still vets every
-    edge, so a wrong canopy assignment cannot silently merge clusters.
-    This is the ER analogue of the reference's decoder pruning (compute
-    only what the decision needs, ``wsd/model_surgery.py:31-70``).
-
-    Only ``decision = 'assigned'`` mentions participate (NOTA/no-inventory
-    mentions have no canopy; small-block all-pairs still covers them).
-    Emitted pairs satisfy ``id_a < id_b`` because the hub is the minimum.
-    """
-    assigned = assignments.filter(F.col("decision") == "assigned")
-    return _star_pairs(assigned, "mention_id", ["lemma", "pos", "pred_sense_id"])
 
 
 def _star_pairs(df: DataFrame, id_col: str, part_cols: list[str]) -> DataFrame:
@@ -598,272 +585,3 @@ def blocking_quality(
             / F.greatest(total, F.lit(1)).cast("double")
         ).alias("reduction_ratio"),
     )
-
-
-def phonetic_key_pairs(
-    df: DataFrame,
-    id_col: str,
-    name_expr: str,
-    max_block_size: int = DEFAULT_MAX_BLOCK,
-) -> tuple[DataFrame, DataFrame]:
-    """Phonetic (Soundex) blocking -> (id_a < id_b) candidate pairs.
-
-    The third member of the blocking family: surface equi-keys catch
-    exact normalized matches, MinHash-LSH catches token-bag overlap, and
-    the phonetic key catches *spelling-variant* names ("Ashcraft" /
-    "Ashcroft") that share no surface key and too few shingles — the
-    classic census-linkage blocker (Fellegi-Sunter era; see
-    ``operators/pairs.py`` for the scoring stage it feeds).
-
-    ``name_expr`` is a SQL expression string (column name or derivation)
-    so the exact same text feeds :func:`soundex_sql` on the oracle side.
-    The key is pure codegen (translate/regexp chains — no UDF); the
-    pairing reuses the skew-capped ``_pairs_within_blocks`` (hot blocks
-    excluded and RETURNED, never silently dropped — a B-sized block
-    emits B(B-1)/2 pairs, so phonetic keys over web-scale name columns
-    MUST be capped: soundex collapses hard, ~26^1*7^3 possible keys).
-
-    Returns ``(pairs, oversized)``; rows whose key is NULL (no letters
-    in the name) never pair — a NULL phonetic key is a non-key, the
-    same consumer contract as ``canonical_url`` (webfilters.py).
-    """
-    from word_sense_disambiguation_spark.functions.phonetic import soundex_col
-
-    keyed = df.select(
-        F.col(id_col), soundex_col(name_expr).alias("phonetic_key")
-    ).filter(F.col("phonetic_key").isNotNull())
-    return _pairs_within_blocks(keyed, id_col, ["phonetic_key"], max_block_size)
-
-
-def sorted_neighborhood_pairs(
-    df: DataFrame,
-    id_col: str,
-    key_expr: str,
-    window: int = 4,
-    bucket_len: int = 4,
-) -> DataFrame:
-    """Sorted-neighborhood blocking (merge/purge, Hernández & Stolfo 1995):
-    sort all records by a key and pair each record with the next
-    ``window - 1`` records in global sort order — the fourth member of the
-    blocking family (equi-key / MinHash-LSH / phonetic / sorted
-    neighborhood), catching near-misses that straddle *different* equi-key
-    or phonetic blocks but sort adjacently ("Smith, J" / "Smith, Jo").
-    No reference analogue (the reference blocks only on the ``(lemma,
-    pos)`` lookup key, ``/root/reference/wsd/word_sense_disambiguation.py:384-387``);
-    semantics per the classic formulation.
-
-    Scale shape — the naive construction is a single-task global
-    ``row_number`` window (the exact plan this engine bans); this one is a
-    TWO-LEVEL rank that equals the global rank exactly:
-
-    1. bucket = the key's leading ``bucket_len`` chars — prefix grouping is
-       contiguous under lexicographic order, so ranks compose;
-    2. level 1: per-bucket counts -> running-sum offsets. The window input
-       is ONE ROW PER BUCKET (aggregate-before-the-hot-window, the
-       ``boilerplate_dedup`` discipline), never row data;
-    3. level 2: ``row_number`` partitioned by bucket (worst task = hottest
-       bucket, tuned by ``bucket_len``), ordered by ``(key, id)`` — a total
-       order, so ranks are unique and the output is parallelism-invariant
-       bit-for-bit regardless of where bucket boundaries land.
-
-    Pairing is then an equi-join on ``floor((rank-1)/g)`` chunks with the
-    probe side exploded to its own and the next chunk (``g = window - 1``;
-    a neighbor at gap <= g lives in one of exactly those two chunks, and in
-    only one, so no dedup shuffle) — output is n*(window-1) rows, linear.
-
-    Rows with a NULL sort key never pair (a NULL key is a non-key — the
-    ``phonetic_key_pairs`` / ``canonical_url`` consumer contract). The key
-    should be ASCII-normalized upstream: Spark and any UTF-8-byte-collating
-    oracle agree on binary ASCII order (the ``levenshtein`` pin,
-    CLAUDE.md). Returns ``(id_a, id_b, rank_gap)`` with ``rank_a < rank_b``.
-    """
-    if window < 2:
-        raise ValueError("window must be >= 2 (a record plus >=1 neighbor)")
-    g = window - 1
-    keyed = df.select(
-        F.col(id_col).alias("_snb_id"), F.expr(key_expr).alias("_k")
-    ).filter(F.col("_k").isNotNull())
-    keyed = keyed.withColumn("_b", F.substring(F.col("_k"), 1, bucket_len))
-
-    counts = keyed.groupBy("_b").agg(F.count("*").alias("_n"))
-    w_off = Window.orderBy("_b").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    offsets = counts.select(
-        "_b", (F.sum("_n").over(w_off) - F.col("_n")).alias("_off")
-    )
-    w_in = Window.partitionBy("_b").orderBy("_k", "_snb_id")
-    ranked = (
-        keyed.join(F.broadcast(offsets), on="_b")
-        .select(
-            "_snb_id",
-            (F.col("_off") + F.row_number().over(w_in)).alias("_r"),
-        )
-    )
-    probe = ranked.select(
-        F.col("_snb_id").alias("id_a"),
-        F.col("_r").alias("_ra"),
-        F.explode(
-            F.array(
-                F.floor((F.col("_r") - 1) / g),
-                F.floor((F.col("_r") - 1) / g) + 1,
-            )
-        ).alias("_chunk"),
-    )
-    build = ranked.select(
-        F.col("_snb_id").alias("id_b"),
-        F.col("_r").alias("_rb"),
-        F.floor((F.col("_r") - 1) / g).alias("_chunk"),
-    )
-    return (
-        probe.join(build, on="_chunk")
-        .filter(
-            (F.col("_rb") > F.col("_ra")) & (F.col("_rb") <= F.col("_ra") + g)
-        )
-        .select(
-            "id_a",
-            "id_b",
-            (F.col("_rb") - F.col("_ra")).cast("long").alias("rank_gap"),
-        )
-    )
-
-
-def blocking_cost_estimate(
-    records: DataFrame,
-    key_cols: list[str],
-    max_block_size: int = 64,
-) -> DataFrame:
-    """Pre-flight cost audit of a PROPOSED blocking key, before anyone
-    materializes a pair: one partial-combined groupBy over the key gives
-    the exact pair bill ``candidate_pairs = Σ_k C(n_k, 2)`` (the number
-    every blocked self-join will explode into), block-count/max-size
-    skew facts, and how many blocks an engine cap at ``max_block_size``
-    would divert to the oversized side table. Run it at 10^12 rows for
-    the price of one aggregate — THEN decide whether the key needs
-    another attribute, a cap, or canopies (Christen 2012 §7.2's quality/
-    cost framework, the cost half of ``blocking_quality`` above).
-
-    NULL key components count as a real block value on purpose
-    (groupBy's NULL-equality): a mostly-null proposed key shows up here
-    as one monster block — exactly the pathology the estimate exists to
-    catch (same NULL contract as ``canonical_url``'s documented
-    groupBy caveat). All BIGINT-exact doubled forms (DECIMAL(38,0) sum
-    for the pair bill: a 10^9 hot block contributes ~10^18 before the
-    halving); one row out.
-
-    Output: ``(n_records, n_blocks, candidate_pairs, max_block_size_obs,
-    n_oversized_blocks, oversized_pair_share)`` — the share is ONE IEEE
-    division of the exact doubled sums (NULL when there are no pairs).
-    """
-    sizes = records.groupBy(*[F.col(c) for c in key_cols]).agg(
-        F.count("*").cast("long").alias("n")
-    )
-    return sizes.agg(
-        F.coalesce(F.sum("n"), F.lit(0)).cast("long").alias("n_records"),
-        F.count("*").cast("long").alias("n_blocks"),
-        F.coalesce(F.max("n"), F.lit(0)).cast("long").alias(
-            "max_block_size_obs"
-        ),
-        F.coalesce(
-            F.sum(F.when(F.col("n") > int(max_block_size), 1).otherwise(0)),
-            F.lit(0),
-        ).cast("long").alias("n_oversized_blocks"),
-        F.sum(
-            F.when(
-                F.col("n") > int(max_block_size),
-                F.expr("CAST(n * (n - 1) AS DECIMAL(38,0))"),
-            ).otherwise(F.expr("CAST(0 AS DECIMAL(38,0))"))
-        ).alias("_over2"),
-        F.sum(F.expr("CAST(n * (n - 1) AS DECIMAL(38,0))")).alias("_all2"),
-    ).select(
-        "n_records",
-        "n_blocks",
-        # the doubled sum halves evenly; DIV on the exact DECIMAL stays
-        # integer-exact, then the BIGINT cast bounds output at 9.2e18
-        # pairs (an estimate that large has already made the decision)
-        F.expr("CAST(coalesce(_all2, 0) DIV 2 AS BIGINT)").alias(
-            "candidate_pairs"
-        ),
-        "max_block_size_obs",
-        "n_oversized_blocks",
-        F.expr(
-            "CASE WHEN _all2 IS NULL OR _all2 = 0 THEN CAST(NULL AS DOUBLE)"
-            " ELSE CAST(coalesce(_over2, 0) AS DOUBLE)"
-            "      / CAST(_all2 AS DOUBLE) END"
-        ).alias("oversized_pair_share"),
-    )
-
-
-def meta_blocking_prune(
-    records: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_block_size: int = 256,
-    min_token_len: int = 2,
-    materialize: bool = True,
-) -> tuple[DataFrame, DataFrame]:
-    """Token blocking + CBS meta-blocking with Weighted Edge Pruning
-    (Papadakis et al., "Comparison and generalization of blocking and
-    meta-blocking" family): every shared token is a block; a candidate
-    pair's weight is the NUMBER OF BLOCKS IT SHARES (Common Blocks
-    Scheme); pairs below the global mean weight are pruned — the
-    schema-agnostic recall-keeper that turns dirty token blocking's
-    quadratic candidate soup into a high-precision edge set before any
-    expensive pair scorer runs.
-
-    Exactness discipline: WEP's mean-weight threshold is the one place
-    this family usually goes float — here it never does. "cbs >= S/P"
-    is evaluated as the integer cross-multiply ``cbs * P >= S`` (S =
-    sum of weights, P = pair count, both BIGINT; ties at the mean KEEP
-    the pair), so the kept set is bit-deterministic on any engine.
-    Overflow bound: cbs <= blocks-per-record and P <= capped pair
-    count; cbs * P stays under 2^63 until ~10^14 candidate pairs —
-    far beyond what anyone should retain uncapped.
-
-    Scale shape: tokens contract to DISTINCT (token, id) via one
-    partial-combined groupBy; hot tokens (stopword blocks — crawl
-    reality) are excluded by the ``max_block_size`` cap and surfaced in
-    the returned ``oversized`` table (no silent drops — the
-    `_pairs_within_blocks` contract); the within-block self-join is
-    co-partitioned on the token; pair weights contract with ONE
-    partial-combined ``groupBy(id_a, id_b)``; the mean is a one-row
-    aggregate cross-joined back. ``materialize`` eagerly
-    localCheckpoints the weighted pair table before its 2-consumer
-    fan-out (mean + filter — the multi-consumer rule).
-
-    Returns ``(kept, oversized)``: kept = (id_a, id_b, cbs) with
-    id_a < id_b; oversized = (token, block_size) blocks skipped by the
-    cap. Reference parity anchor: the same compute-only-what-the-
-    decision-needs pruning the engine's canopy stars apply to its own
-    blocking (`sense_block_star_pairs`), lifted to the token-block
-    graph of a schema-free corpus.
-    """
-    from word_sense_disambiguation_spark.functions.text import WS_CLASS
-
-    t = F.lower(F.trim(F.coalesce(F.col(text_col), F.lit(""))))
-    toks = F.when(t == "", F.array()).otherwise(F.split(t, WS_CLASS + "+"))
-    keyed = (
-        records.select(F.col(id_col).alias("_mb_id"), F.explode(toks).alias("token"))
-        .filter(F.length("token") >= int(min_token_len))
-        .groupBy("token", "_mb_id")
-        .agg(F.count(F.lit(1)).alias("_dup"))
-        .select("token", "_mb_id")
-    )
-    pairs, oversized = _pairs_within_blocks(
-        keyed, "_mb_id", ["token"], max_block_size
-    )
-    weighted = pairs.groupBy("id_a", "id_b").agg(
-        F.count(F.lit(1)).cast("long").alias("cbs")
-    )
-    if materialize:
-        weighted = weighted.localCheckpoint(eager=True)
-    tot = weighted.agg(
-        F.coalesce(F.sum("cbs"), F.lit(0)).cast("long").alias("_s"),
-        F.count(F.lit(1)).cast("long").alias("_p"),
-    )
-    kept = (
-        weighted.crossJoin(F.broadcast(tot))
-        .filter(F.col("cbs") * F.col("_p") >= F.col("_s"))
-        .select("id_a", "id_b", "cbs")
-    )
-    return kept, oversized.select("token", "block_size")

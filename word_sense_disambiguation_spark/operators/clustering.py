@@ -357,172 +357,6 @@ def constrained_components(
     )
 
 
-def kcore_peel(
-    edges: DataFrame,
-    k: int = 2,
-    rounds: int = 6,
-    src: str = "src",
-    dst: str = "dst",
-) -> DataFrame:
-    """R-round synchronous degree peel toward the k-core of an undirected
-    graph — the dense-substructure extractor for ER/dedup match graphs
-    (a spam link farm or template-boilerplate clique survives peeling;
-    a chain of borderline fuzzy matches does not).
-
-    Semantics are EXACTLY ``rounds`` synchronous peels (one peel =
-    compute degrees, drop every node with ``degree < k``, drop incident
-    edges) — a deterministic function of the input regardless of whether
-    the peel has converged, which is what makes the operator
-    hash-replayable in SQL (the oracle unrolls the same R rounds as
-    CTEs). ``converged`` reports whether a further round would change
-    anything (all post-peel degrees >= k); when true the output IS the
-    k-core. Peeling is a contraction, so any extra rounds after
-    convergence are identity — callers size ``rounds`` generously and
-    check the flag.
-
-    Output: ``(node, degree, converged)`` over surviving nodes, degree
-    computed on the final surviving edge set.
-
-    Scale shape: each round is one map-side-combined degree aggregate
-    plus two semi-joins, eagerly localCheckpointed — without the
-    materialization the round-over-round DAG doubles per round (the
-    degree path and the edge filter both consume the previous round's
-    edges, and Catalyst does not share subplans), turning R rounds into
-    2^R recomputed scans. R driver rounds for an inherently synchronous
-    iteration is the same trade :func:`connected_components` makes.
-
-    Reference parity: the reference prunes its candidate space by
-    per-key support thresholds (wsd/word_sense_disambiguation.py
-    candidate filtering); the k-core is that thresholding made
-    mutually-recursive over a graph.
-    """
-    e = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("_a"),
-            F.greatest(F.col(src), F.col(dst)).alias("_b"),
-        )
-        .filter(F.col("_a") != F.col("_b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-
-    def degrees(ed: DataFrame) -> DataFrame:
-        both = ed.select(F.col("_a").alias("node")).union(
-            ed.select(F.col("_b").alias("node"))
-        )
-        return both.groupBy("node").agg(F.count("*").cast("long").alias("degree"))
-
-    # Early exit with the IDENTICAL result: peeling only removes edges,
-    # so an unchanged edge count == unchanged edge set == fixpoint, and
-    # every remaining round is the identity — the exact-R contract holds
-    # while converged inputs skip the tail shuffles (the count is one
-    # cheap action over the just-checkpointed RDD).
-    prev_n = e.count()
-    for _ in range(rounds):
-        kept = degrees(e).filter(F.col("degree") >= F.lit(k)).select("node")
-        e = (
-            e.join(kept.withColumnRenamed("node", "_a"), on="_a", how="left_semi")
-            .join(kept.withColumnRenamed("node", "_b"), on="_b", how="left_semi")
-            .select("_a", "_b")
-            .localCheckpoint(eager=True)
-        )
-        n = e.count()
-        if n == prev_n:
-            break
-        prev_n = n
-    final_deg = degrees(e)
-    conv = final_deg.agg(
-        F.coalesce(
-            F.min(F.col("degree") >= F.lit(k)), F.lit(True)
-        ).alias("converged")
-    ).withColumn("_j", F.lit(1))
-    return (
-        final_deg.withColumn("_j", F.lit(1))
-        .join(F.broadcast(conv), on="_j")
-        .select("node", "degree", "converged")
-    )
-
-
-def bfs_reach(
-    edges: DataFrame,
-    seeds: DataFrame,
-    max_hops: int = 3,
-    src: str = "src",
-    dst: str = "dst",
-    seed_col: str = "seed",
-) -> DataFrame:
-    """Bounded multi-source BFS over a directed graph: for each seed,
-    how many nodes are FIRST reached at hop 0..``max_hops`` — the
-    impact-radius / blast-radius traversal next to
-    :func:`connected_components`' unbounded reachability (which nodes
-    does this spam hub feed within 3 clicks; which records does this
-    merge decision touch within k link steps). Hop 0 is the seed
-    itself.
-
-    Semantics: classic level-synchronous BFS — ``hop(seed, v)`` is the
-    shortest directed path length from seed to v, rows exist only for
-    ``hop <= max_hops``, and the output aggregates to ``(seed, hop,
-    n_nodes)``. All counts BIGINT; no floats, no randomness — the
-    DuckDB oracle replays it as a bounded recursive CTE with a
-    min-hop contraction (walk enumeration deduped per level; min over
-    walk lengths == shortest path).
-
-    Scale shape: the frontier is (seed x newly-reached-node) pairs —
-    the state the traversal genuinely needs; per hop the plan is ONE
-    equi-join frontier->edges on the node key, a distinct on the
-    (seed, node) pair (pre-join dedup keeps the next frontier minimal),
-    and a left-anti join against the visited set on the same (seed,
-    node) clustering. Every round is eagerly localCheckpointed (the
-    iterative-DAG rule: frontier and visited both feed round k+1, and
-    Catalyst does not share subplans — unmaterialized rounds double the
-    DAG per hop), and an empty frontier short-circuits the remaining
-    rounds with the identical result. The deduped edge table is
-    checkpointed ONCE and reused by every round (multi-consumer rule).
-    Seeds are a SELECTED set (audit slice, suspect hubs): state is
-    O(sum of k-hop reach over seeds), the caller's knob — for
-    all-nodes reachability use :func:`connected_components`, not BFS.
-    """
-    if max_hops < 0:
-        raise ValueError("max_hops must be >= 0")
-    e = (
-        edges.filter(F.col(src).isNotNull() & F.col(dst).isNotNull())
-        .select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    visited = (
-        seeds.filter(F.col(seed_col).isNotNull())
-        .select(F.col(seed_col).alias("seed"))
-        .distinct()
-        .select("seed", F.col("seed").alias("node"), F.lit(0).alias("hop"))
-        .localCheckpoint(eager=True)
-    )
-    frontier = visited
-    for h in range(1, int(max_hops) + 1):
-        nxt = (
-            frontier.join(e, frontier["node"] == e["_s"])
-            .select("seed", F.col("_d").alias("node"))
-            .distinct()
-            .join(
-                visited.select("seed", "node"),
-                on=["seed", "node"],
-                how="left_anti",
-            )
-            .withColumn("hop", F.lit(h))
-            .localCheckpoint(eager=True)
-        )
-        # Empty frontier == fixpoint: every later round is the identity
-        # (same early-exit contract as kcore_peel; the count is one
-        # cheap action over the just-checkpointed RDD).
-        if nxt.count() == 0:
-            break
-        visited = visited.union(nxt).localCheckpoint(eager=True)
-        frontier = nxt
-    return visited.groupBy("seed", "hop").agg(
-        F.count("*").cast("long").alias("n_nodes")
-    )
-
-
 def cluster_mentions(match_edges: DataFrame) -> DataFrame:
     """Match edges (id_a, id_b, is_match) -> (mention_id, entity_id).
 
@@ -871,442 +705,6 @@ def sparsify_topk_edges(
     )
 
 
-def pagerank(
-    edges: DataFrame,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    iterations: int = 3,
-    scale: int = 1_000_000_000,
-    damping_milli: int = 850,
-    materialize: bool = True,
-) -> DataFrame:
-    """Fixed-iteration PageRank over a directed edge table, in EXACT
-    integer arithmetic — the crawl/click-graph authority score next to
-    ``connected_components``' reachability view (host prioritization,
-    seed selection, spam-mass style audits).
-
-    The recurrence IS the engine's defined semantics (not a float
-    approximation of one): with ``w(u,v)`` the parallel-edge
-    multiplicity and ``outdeg(u) = sum_v w(u,v)``,
-
-        r_0(v)     = scale
-        teleport   = (scale * (1000 - damping_milli)) DIV 1000
-        r_{k+1}(v) = teleport
-                     + sum_{u->v} ((r_k(u) DIV outdeg(u)) * w(u,v)
-                                   * damping_milli) DIV 1000
-
-    Every term is BIGINT; addition is the only aggregation, so the sum
-    is associative/commutative and any engine (or partitioning) replays
-    the ranks bit-for-bit — the same discipline as the scaled-DIV
-    fractions elsewhere, without even a final float division. Dangling
-    nodes keep the teleport floor (their outflow evaporates — the
-    standard simplification, documented rather than silently
-    renormalized). Truncation: each DIV floors, so ranks are a lower
-    bound within outdeg/scale per hop of the real-valued recurrence.
-
-    Overflow bound: w <= outdeg by construction, so each edge term is
-    <= r_k(u) * damping_milli and every intermediate stays under
-    ``n_nodes * scale * 1000``; the default scale 1e9 is exact to ~1e7
-    nodes — at crawl-host scale (1e10 nodes) pass scale=1e5 and keep
-    the same guarantee. Iteration count is FIXED (default 3): rank users
-    want a stable ORDERING long before convergence, and a fixed-depth
-    plan keeps the whole computation one lazy DAG.
-
-    Scale shape: the (deduped, out-degree-annotated) edge table is
-    built ONCE, eagerly localCheckpointed (multi-consumer rule: it is
-    consumed by every iteration), and pre-hash-partitioned on ``src`` so
-    each iteration's rank join lands on a stable layout; per iteration
-    the plan is one equi-join (rank table, one row per node, is the
-    small side) + ONE partial-combined ``groupBy(dst)`` — a hot page
-    with 10^8 in-links contracts map-side, never through a window — +
-    a left join back to the node set for the teleport floor.
-    ``materialize=False`` keeps everything lazy for plan composition.
-
-    Reference parity anchor: the reference has no graph-rank stage; this
-    extends its decision layer the way `connected_components` extends
-    its dedup — public-algorithm semantics (Page et al. 1999) under the
-    repo's exact-arithmetic oracle discipline.
-    """
-    if iterations < 0:
-        raise ValueError("iterations must be >= 0")
-    e = (
-        edges.filter(F.col(src_col).isNotNull() & F.col(dst_col).isNotNull())
-        .groupBy(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .agg(F.count("*").cast("long").alias("w"))
-    )
-    outd = e.groupBy("src").agg(F.sum("w").cast("long").alias("outdeg"))
-    ew = e.join(outd, on="src").repartition(F.col("src"))
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    if materialize:
-        ew = ew.localCheckpoint(eager=True)
-        nodes = nodes.localCheckpoint(eager=True)
-    teleport = (int(scale) * (1000 - int(damping_milli))) // 1000
-    r = nodes.select(
-        "node", F.lit(int(scale)).cast("long").alias("rank")
-    )
-    for _ in range(int(iterations)):
-        contrib = ew.join(
-            r.select(F.col("node").alias("src"), "rank"), on="src"
-        ).select(
-            F.col("dst").alias("node"),
-            F.expr(
-                f"((rank DIV outdeg) * w * {int(damping_milli)}L) DIV 1000L"
-            ).alias("c"),
-        )
-        inflow = contrib.groupBy("node").agg(
-            F.sum("c").cast("long").alias("inflow")
-        )
-        r = nodes.join(inflow, on="node", how="left").select(
-            "node",
-            (
-                F.lit(teleport).cast("long")
-                + F.coalesce(F.col("inflow"), F.lit(0).cast("long"))
-            ).cast("long").alias("rank"),
-        )
-    return r
-
-
-def label_propagation(
-    edges: DataFrame,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    iterations: int = 3,
-    materialize: bool = True,
-) -> DataFrame:
-    """Fixed-iteration synchronous label propagation (Raghavan et al.
-    2007) over an undirected graph with a PINNED deterministic tie rule
-    — the density-sensitive community view next to
-    ``connected_components``' pure-reachability view: CC says "these
-    records touch", LPA says "these records huddle", which is exactly
-    the split signal ``cluster_cohesion`` flags over-merged CC entities
-    for (one weld edge between two dense sub-entities keeps one CC
-    component but two LPA communities).
-
-    Semantics (the engine's defined rule, integer-exact end-to-end):
-    labels start as own node ids (numeric); each synchronous round,
-    every node adopts the most frequent label among its neighbors
-    (parallel edges count as multiplicity), ties broken by (count DESC,
-    label ASC); isolated/self-loop-only inputs keep their own label.
-    Labels are node ids, counts are BIGINTs, the argmax is a total
-    order — so any engine, partitioning, or replay produces
-    bit-identical communities. Synchronous LPA can oscillate on
-    bipartite structures; a FIXED iteration count (default 3) makes
-    that a defined, replayable output rather than a convergence race —
-    the classic asynchronous variant is order-dependent and therefore
-    un-oracle-able by construction.
-
-    Scale shape: the symmetrized weighted edge table is built once
-    (one partial-combined groupBy), eagerly localCheckpointed
-    (multi-consumer rule) and pre-partitioned on ``src``; each round is
-    ONE equi-join with the one-row-per-node label table + ONE
-    partial-combined ``groupBy(node, label)`` + ONE partial-combined
-    ``max_by`` argmax per node (the CDC ordering-struct aggregate,
-    NEVER a row_number window — a 10^8-degree hub contracts map-side).
-
-    Returns ``(node, community)``. Reference parity anchor: extends the
-    same public-graph-algorithm family as `connected_components`
-    (Kiveris et al. stars) with Raghavan et al.'s community rule under
-    the repo's exact-arithmetic discipline.
-    """
-    if iterations < 0:
-        raise ValueError("iterations must be >= 0")
-    raw = edges.filter(
-        F.col(src_col).isNotNull() & F.col(dst_col).isNotNull()
-    ).select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
-    sym = (
-        raw.filter(F.col("a") != F.col("b"))
-        .select("a", "b")
-        .union(
-            raw.filter(F.col("a") != F.col("b")).select(
-                F.col("b").alias("a"), F.col("a").alias("b")
-            )
-        )
-        .groupBy(F.col("a").alias("src"), F.col("b").alias("dst"))
-        .agg(F.count(F.lit(1)).cast("long").alias("w"))
-        .repartition(F.col("src"))
-    )
-    nodes = (
-        raw.select(F.col("a").alias("node"))
-        .union(raw.select(F.col("b").alias("node")))
-        .distinct()
-    )
-    if materialize:
-        sym = sym.localCheckpoint(eager=True)
-        nodes = nodes.localCheckpoint(eager=True)
-    lab = nodes.select("node", F.col("node").alias("community"))
-    for _ in range(int(iterations)):
-        votes = (
-            sym.join(
-                lab.select(F.col("node").alias("src"), "community"), on="src"
-            )
-            .groupBy(F.col("dst").alias("node"), "community")
-            .agg(F.sum("w").cast("long").alias("cnt"))
-        )
-        # argmax by (cnt DESC, community ASC) == min_by over the order
-        # struct (-cnt, community) — label-type-generic (string ids
-        # negate nothing): partial-combined aggregate, no window
-        winner = votes.groupBy("node").agg(
-            F.min_by(
-                F.col("community"),
-                F.struct((-F.col("cnt")).alias("_negcnt"), F.col("community")),
-            ).alias("community")
-        )
-        lab = nodes.join(winner, on="node", how="left").select(
-            "node",
-            F.coalesce(F.col("community"), F.col("node")).alias("community"),
-        )
-    return lab
-
-
-def triangle_stats(
-    edges: DataFrame,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    materialize: bool = True,
-) -> DataFrame:
-    """Per-node triangle counts + local clustering coefficient over an
-    undirected graph — the transitivity audit of a match/link graph
-    (a high-cohesion ER cluster closes its triangles; a star of
-    coincidental blocking collisions closes none — this is the
-    edge-level signal under ``cluster_cohesion``'s density ratio, and
-    the classic crawl-graph spam/community statistic).
-
-    Algorithm: degree-ordered edge ORIENTATION (Chiba-Nishizeki /
-    Schank-Wagner, the MapReduce-standard trick): each undirected edge
-    points from its lower (degree, id) endpoint to the higher, a total
-    order both engines replay. Every triangle is then counted EXACTLY
-    ONCE at its lowest-ranked vertex: wedges (u->v, u->w, rank v <
-    rank w) self-join on u and close by probing the oriented edge
-    (v, w).
-
-    Why this survives a hub: naive wedge enumeration is quadratic in
-    the hub degree (a 10^8-degree crawl hub = 10^16 wedges). Under
-    degree orientation every out-neighbor of u has rank >= u, which
-    bounds EVERY node's out-degree by sqrt(2m) regardless of skew —
-    the wedge join is at most m * sqrt(2m) rows globally, the proven
-    arboricity bound, with no cap parameter to tune and nothing
-    silently dropped.
-
-    All counts are BIGINT; the local clustering coefficient
-    ``2*triangles / (degree*(degree-1))`` is ONE fixed IEEE division of
-    exact integers (NULL when degree < 2). Parallel edges and
-    self-loops dedupe/drop first; isolated endpoints of dropped edges
-    keep a degree-0 row.
-
-    Scale shape: degrees contract with ONE partial-combined groupBy;
-    orientation is a projection; the wedge self-join and the closing
-    probe are equi-joins on node keys; per-corner triangle counts and
-    the 3-way corner union contract map-side. ``materialize`` eagerly
-    localCheckpoints the oriented edge table before its 3-consumer
-    fan-out (wedge left leg, wedge right leg, closing probe — the
-    multi-consumer rule).
-
-    Returns ``(node, degree, triangles, clustering_coefficient)``.
-    """
-    raw = edges.filter(
-        F.col(src_col).isNotNull() & F.col(dst_col).isNotNull()
-    ).select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
-    und = (
-        raw.filter(F.col("a") != F.col("b"))
-        .select(
-            F.least("a", "b").alias("x"), F.greatest("a", "b").alias("y")
-        )
-        .distinct()
-    )
-    nodes = (
-        raw.select(F.col("a").alias("node"))
-        .union(raw.select(F.col("b").alias("node")))
-        .distinct()
-    )
-    deg = (
-        und.select(F.col("x").alias("node"))
-        .union(und.select(F.col("y").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).cast("long").alias("degree"))
-    )
-    # orient x--y from the lower (degree, id) endpoint to the higher
-    dx = deg.select(F.col("node").alias("x"), F.col("degree").alias("_dx"))
-    dy = deg.select(F.col("node").alias("y"), F.col("degree").alias("_dy"))
-    oriented = (
-        und.join(dx, on="x")
-        .join(dy, on="y")
-        .select(
-            F.when(
-                (F.col("_dx") < F.col("_dy"))
-                | ((F.col("_dx") == F.col("_dy")) & (F.col("x") < F.col("y"))),
-                F.struct(F.col("x").alias("u"), F.col("y").alias("v")),
-            )
-            .otherwise(F.struct(F.col("y").alias("u"), F.col("x").alias("v")))
-            .alias("_e")
-        )
-        .select(F.col("_e.u").alias("u"), F.col("_e.v").alias("v"))
-    )
-    if materialize:
-        oriented = oriented.localCheckpoint(eager=True)
-    left = oriented.select(F.col("u"), F.col("v").alias("w1"))
-    right = oriented.select(F.col("u"), F.col("v").alias("w2"))
-    wedges = left.join(right, on="u").filter(F.col("w1") < F.col("w2"))
-    # close the wedge: the (w1, w2) edge is oriented SOME way; since both
-    # orders are possible under (degree, id) rank, probe both via the
-    # canonical undirected form
-    closing = oriented.select(
-        F.least("u", "v").alias("p"), F.greatest("u", "v").alias("q")
-    )
-    tris = wedges.join(
-        closing,
-        on=(
-            (F.least("w1", "w2") == F.col("p"))
-            & (F.greatest("w1", "w2") == F.col("q"))
-        ),
-    ).select("u", "w1", "w2")
-    corners = (
-        tris.select(F.col("u").alias("node"))
-        .union(tris.select(F.col("w1").alias("node")))
-        .union(tris.select(F.col("w2").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).cast("long").alias("triangles"))
-    )
-    return (
-        nodes.join(deg, on="node", how="left")
-        .join(corners, on="node", how="left")
-        .select(
-            "node",
-            F.coalesce(F.col("degree"), F.lit(0).cast("long")).alias("degree"),
-            F.coalesce(F.col("triangles"), F.lit(0).cast("long")).alias(
-                "triangles"
-            ),
-            F.expr(
-                "CASE WHEN coalesce(degree, 0L) < 2 THEN CAST(NULL AS DOUBLE)"
-                " ELSE CAST(2 * coalesce(triangles, 0L) AS DOUBLE)"
-                " / CAST(degree * (degree - 1) AS DOUBLE) END"
-            ).alias("clustering_coefficient"),
-        )
-    )
-
-
-def cluster_churn(
-    prev: DataFrame,
-    curr: DataFrame,
-    id_col: str = "doc_id",
-    prev_cluster_col: str = "cluster_id",
-    curr_cluster_col: str = "cluster_id",
-    materialize: bool = True,
-) -> tuple[DataFrame, DataFrame]:
-    """Snapshot-over-snapshot cluster evolution — the ER-ops stability
-    monitor: when a pipeline re-runs (new crawl increment, retuned
-    threshold, exact-dup policy upgraded to near-dup), WHICH entities
-    moved, merged, split, appeared? Production linkage treats cluster
-    churn as a release gate; this computes it exactly, without ever
-    materializing record pairs.
-
-    Per CURRENT cluster: ``n_members``; ``n_carried`` (members that
-    exist in the previous snapshot) and ``n_new``; ``n_prev_clusters``
-    (distinct previous clusters its carried members came from);
-    ``max_prev_overlap`` (its largest single-previous-cluster
-    intersection) — all BIGINT from ONE partial-combined
-    ``groupBy(prev_cluster, curr_cluster)`` contingency contraction
-    (the `pairwise_cluster_metrics` shape: shuffled volume is one row
-    per record, everything downstream runs on the tiny cell table).
-    ``status`` is a pure CASE over those counts, pinned:
-
-    * ``new``    — no carried members;
-    * ``merged`` — carried members from >= 2 previous clusters (wins
-      over split/grown when both apply: a merge is the louder event);
-    * ``split``  — one previous cluster, NOT absorbed whole (its other
-      members went elsewhere — wins over grown);
-    * ``grown``  — one previous cluster absorbed whole, plus new
-      members;
-    * ``stable`` — one previous cluster absorbed whole, nothing else.
-
-    The second return value lists DISSOLVED previous clusters (no
-    member survives into the current snapshot) with their sizes.
-    Records are matched by ``id_col``; ids present only in ``prev``
-    count toward dissolution/splits exactly like reassigned ids
-    (deletion is just reassignment to nowhere). ``materialize`` eagerly
-    localCheckpoints the contingency cells before the multi-consumer
-    fan-out.
-
-    Reference parity anchor: the skip-if-exists resume discipline of
-    /root/reference/training/data/generate.py:148-160 — this is the
-    audit of what a re-run changed, lifted to cluster granularity.
-    """
-    p = prev.select(
-        F.col(id_col).alias("_id"), F.col(prev_cluster_col).alias("_c1")
-    )
-    c = curr.select(
-        F.col(id_col).alias("_id"), F.col(curr_cluster_col).alias("_c2")
-    )
-    j = c.join(p, on="_id", how="left")
-    cells = j.groupBy("_c1", "_c2").agg(
-        F.count(F.lit(1)).cast("long").alias("n")
-    )
-    if materialize:
-        cells = cells.localCheckpoint(eager=True)
-    prev_sizes = p.groupBy("_c1").agg(
-        F.count(F.lit(1)).cast("long").alias("_prev_size")
-    )
-    carried = cells.filter(F.col("_c1").isNotNull())
-    per_curr = cells.groupBy("_c2").agg(
-        F.sum("n").cast("long").alias("n_members"),
-        F.sum(F.when(F.col("_c1").isNotNull(), F.col("n")).otherwise(0))
-        .cast("long")
-        .alias("n_carried"),
-        F.sum(F.when(F.col("_c1").isNull(), F.col("n")).otherwise(0))
-        .cast("long")
-        .alias("n_new"),
-        F.sum(F.when(F.col("_c1").isNotNull(), 1).otherwise(0))
-        .cast("long")
-        .alias("n_prev_clusters"),
-        F.coalesce(
-            F.max(F.when(F.col("_c1").isNotNull(), F.col("n"))), F.lit(0)
-        )
-        .cast("long")
-        .alias("max_prev_overlap"),
-    )
-    # was the single contributing previous cluster absorbed WHOLE?
-    single_src = (
-        carried.join(prev_sizes, on="_c1")
-        .groupBy("_c2")
-        .agg(
-            F.max_by(
-                (F.col("n") == F.col("_prev_size")), F.struct(F.col("n"), F.col("_c1"))
-            ).alias("_src_whole")
-        )
-    )
-    report = (
-        per_curr.join(single_src, on="_c2", how="left")
-        .select(
-            F.col("_c2").alias("cluster_id"),
-            "n_members",
-            "n_carried",
-            "n_new",
-            "n_prev_clusters",
-            "max_prev_overlap",
-            F.expr(
-                "CASE WHEN n_carried = 0 THEN 'new'"
-                " WHEN n_prev_clusters >= 2 THEN 'merged'"
-                " WHEN NOT _src_whole THEN 'split'"
-                " WHEN n_new > 0 THEN 'grown'"
-                " ELSE 'stable' END"
-            ).alias("status"),
-        )
-    )
-    dissolved = (
-        prev_sizes.join(
-            carried.select("_c1").distinct(), on="_c1", how="left_anti"
-        )
-        .select(
-            F.col("_c1").alias("cluster_id"),
-            F.col("_prev_size").alias("n_members"),
-        )
-    )
-    return report, dissolved
-
-
 def threshold_cluster_curve(
     scored_pairs: DataFrame,
     id_a_col: str = "id_a",
@@ -1381,61 +779,3 @@ def threshold_cluster_curve(
     for o in outs[1:]:
         out = out.unionByName(o)
     return out
-
-
-def covisitation_edges(
-    interactions: DataFrame,
-    user_col: str,
-    item_col: str,
-    max_items_per_user: int = 256,
-    min_weight: int = 2,
-) -> tuple[DataFrame, DataFrame]:
-    """Bipartite co-visitation projection: ``(item_a < item_b, weight =
-    #distinct users who touched both)`` — the item-item similarity graph
-    behind co-click recommendations, related-page mining, and
-    behavioral near-dup signals on a clickstream.
-
-    The scale trap is the projection's QUADRATIC per-user fan-out: one
-    crawler/bot user touching 10^5 items alone emits 5*10^9 pairs. The
-    engine's standard answer applies verbatim (blocking.py capped
-    blocks): users above ``max_items_per_user`` distinct items are
-    EXCLUDED from pairing and returned in an ``oversized`` side table
-    with their item counts — no silent drops; they are bots by
-    construction and a caller who disagrees routes them through a
-    sampled path. ``min_weight`` prunes the long noise tail AFTER the
-    exact count (a HAVING, not a sample).
-
-    Scale shape: distinct (user, item) -> per-user count + broadcast
-    anti-join of the few oversized users -> co-partitioned self-join on
-    the user key (one Exchange, reused by both sides) -> partial-
-    combined pair count. Weights are exact BIGINTs.
-
-    Returns ``(edges, oversized_users)``.
-
-    Reference parity: the reference mines sense co-occurrence within a
-    context window (wsd/word_sense_disambiguation.py context assembly);
-    this is the same co-occurrence projection over user sessions with
-    the hot-unit cap made explicit.
-    """
-    ui = interactions.select(
-        F.col(user_col).alias("_u"), F.col(item_col).alias("_i")
-    ).distinct()
-    cnt = ui.groupBy("_u").agg(F.count("*").cast("long").alias("n_items"))
-    oversized = cnt.filter(F.col("n_items") > max_items_per_user).select(
-        F.col("_u").alias(user_col), "n_items"
-    )
-    ok = ui.join(
-        F.broadcast(oversized.select(F.col(user_col).alias("_u"))),
-        on="_u",
-        how="left_anti",
-    )
-    a = ok.select("_u", F.col("_i").alias("item_a"))
-    b = ok.select("_u", F.col("_i").alias("item_b"))
-    edges = (
-        a.join(b, on="_u")
-        .filter(F.col("item_a") < F.col("item_b"))
-        .groupBy("item_a", "item_b")
-        .agg(F.count("*").cast("long").alias("weight"))
-        .filter(F.col("weight") >= F.lit(int(min_weight)))
-    )
-    return edges, oversized

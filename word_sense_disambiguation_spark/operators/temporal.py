@@ -568,11 +568,9 @@ def transition_model(
     the source's total outflow, and the transition probability as an
     EXACT scaled integer ``(n * scale) DIV out_total`` — the trainable
     click-model / session-model weight table next to
-    :func:`funnel_counts`' fixed-pattern view and ``covisitation``'s
-    unordered-pair view (reference parity: extends the decision layer
-    of /root/reference the way `pagerank` does — public semantics under
-    the repo's integer-oracle discipline; the reference itself has no
-    sequence-model stage).
+    :func:`funnel_counts`' fixed-pattern view (reference parity: public
+    semantics under the repo's integer-oracle discipline; the reference
+    itself has no sequence-model stage).
 
     Exactness: counts are BIGINT, the probability is one integer DIV
     per row (no float sums, no reassociation surface), so any engine

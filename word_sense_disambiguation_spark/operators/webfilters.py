@@ -322,8 +322,7 @@ def extract_links(
     html_col: str,
 ) -> DataFrame:
     """Outlink extraction from raw HTML — the operator that turns a
-    crawl table into THE web-scale graph (the input ``pagerank`` /
-    ``transition_model`` / ``covisitation_edges`` consume): one row per
+    crawl table into THE web-scale graph: one row per
     ``(src_url, src_host, dst_url, dst_host, position)`` for every
     ABSOLUTE http(s) href anchor, in document order.
 

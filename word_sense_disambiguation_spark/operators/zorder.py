@@ -15,8 +15,8 @@ key itself):
 * :func:`zorder_sql` / :func:`zorder_key_col` — the interleaved key of C
   already-integer dimension expressions at ``bits`` bits each, as ONE SQL
   template rendered for either engine (Spark ``shiftleft/shiftright``
-  functions vs DuckDB ``<<``/``>>`` operators — same dialect-knob
-  pattern as ``functions/phonetic.py``). Dimensions must be rank-like
+  functions vs DuckDB ``<<``/``>>`` operators, the only dialect
+  knob). Dimensions must be rank-like
   non-negative ints; :func:`minmax_rank_exprs` builds such ranks from raw
   numeric columns with two collected literals per column (bounded driver
   work, same class as the IVF centroid pull).
