@@ -41,6 +41,13 @@ _BPE_RE = r"[A-Za-z0-9]+|[^A-Za-z0-9 \t\n\r\f\x0B]"
 # on BOTH sides (functions.text.WS_CLASS invariant).
 _WS = r"[ \t\n\r\f\x0B]"
 
+# Soundex of the first space-separated word of `text`, DuckDB dialect —
+# generated from the SAME template Spark evaluates (functions/phonetic.py;
+# the one dialect knob is DuckDB's 'g' regexp_replace flag).
+from word_sense_disambiguation_spark.functions.phonetic import soundex_sql
+
+_SDX_DOC = soundex_sql("split_part(text, ' ', 1)", dialect="duckdb")
+
 # Morton key of the two 8-bit min-max ranks, DuckDB dialect — same
 # template the Spark side evaluates (operators/zorder.py).
 from word_sense_disambiguation_spark.operators.zorder import zorder_sql
@@ -1756,6 +1763,30 @@ def _q_sampled_quantiles(spark, sf_dir):
 
 
 
+def _q_phonetic_blocking(spark, sf_dir):
+    """Soundex phonetic blocking over the leading word of each document:
+    spelling-variant candidate pairs (id_a < id_b) within capped blocks.
+    The key is the archival American Soundex built from ONE portable SQL
+    template (functions/phonetic.py) that both engines evaluate — pure
+    codegen, no UDF; blocks larger than 24 are excluded (and surfaced via
+    the operator's oversized side table), never silently truncated."""
+    from word_sense_disambiguation_spark.operators.blocking import (
+        phonetic_key_pairs,
+    )
+
+    docs = _t(spark, sf_dir, "documents")
+    pairs, _oversized = phonetic_key_pairs(
+        docs, "doc_id", "element_at(split(text, ' '), 1)", max_block_size=24
+    )
+    return pairs.select(
+        F.col("id_a").cast("long").alias("id_a"),
+        F.col("id_b").cast("long").alias("id_b"),
+        "phonetic_key",
+    )
+
+
+
+
 def _q_cluster_split(spark, sf_dir):
     """Leakage-free corpus split: near-duplicate documents must never
     straddle a train/val/test boundary (or the held-out set leaks into
@@ -2774,6 +2805,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "time_rollup": _q_time_rollup,
         "group_quantiles": _q_group_quantiles,
         "sampled_quantiles": _q_sampled_quantiles,
+        "phonetic_blocking": _q_phonetic_blocking,
         "zorder_layout": _q_zorder_layout,
         "hopping_window": _q_hopping_window,
         "latest_snapshot": _q_latest_snapshot,
@@ -4774,6 +4806,27 @@ def oracle_sql() -> dict[str, str]:
             FROM r
             JOIN n ON r.source = n.source
             JOIN t ON r.rr = greatest(1, (t.num * n.n + t.den - 1) // t.den)
+        """,
+        # Soundex blocking replay: the phonetic key comes from the SAME
+        # SQL template both engines evaluate (functions/phonetic.py);
+        # capped blocks (> 24) are excluded exactly as the operator's
+        # oversized side table excludes them.
+        "phonetic_blocking": f"""
+            WITH keyed AS (
+              SELECT doc_id AS id, {_SDX_DOC} AS phonetic_key
+              FROM documents
+              WHERE {_SDX_DOC} IS NOT NULL
+            ),
+            ok AS (
+              SELECT phonetic_key FROM keyed
+              GROUP BY phonetic_key HAVING count(*) <= 24
+            )
+            SELECT CAST(a.id AS BIGINT) AS id_a,
+                   CAST(b.id AS BIGINT) AS id_b,
+                   a.phonetic_key
+            FROM keyed a
+            JOIN keyed b ON a.phonetic_key = b.phonetic_key AND a.id < b.id
+            JOIN ok ON ok.phonetic_key = a.phonetic_key
         """,
         # Z-order replay: identical min-max integer ranks (BIGINT div),
         # the SAME Morton template rendered for DuckDB (<<|>> operators

@@ -489,6 +489,7 @@ _DERIVEDQ = [
     "incremental_dedup",
     "blocklist_filter",
     "cluster_split",
+    "phonetic_blocking",
     "zorder_layout",
     "pos_normalize",
     "blocking_join",

@@ -22,13 +22,15 @@ The rest of the module:
   over char shingles (no reference analogue; semantics per the classic
   banding construction, MMDS ch.3), the candidate generator of the
   near-duplicate dedup operators;
+* :func:`phonetic_key_pairs` — Soundex blocking for spelling-variant
+  names that share no surface key (driver query ``phonetic_blocking``);
 * :func:`blocking_quality` — pair completeness and reduction ratio of a
   candidate set against gold pairs.
 
 Every pair generator is skew-aware: hot blocks are the scale killer (a
 block of size B emits B(B-1)/2 pairs), so each takes ``max_block_size``.
-``surface_key_pairs`` and ``minhash_lsh_pairs`` emit a side table of the
-blocks they dropped — **no silent caps** — and ``er_scored_edges`` turns
+``surface_key_pairs``, ``phonetic_key_pairs`` and ``minhash_lsh_pairs``
+emit a side table of the blocks they dropped — **no silent caps** — and ``er_scored_edges`` turns
 such blocks into linear star edges itself. The reference's
 analogue of this discipline is its length-bucketed batching
 (``wsd/masked_language_model.py:113-126``) — bounding worst-case work per
@@ -585,3 +587,39 @@ def blocking_quality(
             / F.greatest(total, F.lit(1)).cast("double")
         ).alias("reduction_ratio"),
     )
+
+
+def phonetic_key_pairs(
+    df: DataFrame,
+    id_col: str,
+    name_expr: str,
+    max_block_size: int = DEFAULT_MAX_BLOCK,
+) -> tuple[DataFrame, DataFrame]:
+    """Phonetic (Soundex) blocking -> (id_a < id_b) candidate pairs.
+
+    The third member of the blocking family: surface equi-keys catch
+    exact normalized matches, MinHash-LSH catches token-bag overlap, and
+    the phonetic key catches *spelling-variant* names ("Ashcraft" /
+    "Ashcroft") that share no surface key and too few shingles — the
+    classic census-linkage blocker (Fellegi-Sunter era; see
+    ``operators/pairs.py`` for the scoring stage it feeds).
+
+    ``name_expr`` is a SQL expression string (column name or derivation)
+    so the exact same text feeds :func:`soundex_sql` on the oracle side.
+    The key is pure codegen (translate/regexp chains — no UDF); the
+    pairing reuses the skew-capped ``_pairs_within_blocks`` (hot blocks
+    excluded and RETURNED, never silently dropped — a B-sized block
+    emits B(B-1)/2 pairs, so phonetic keys over web-scale name columns
+    MUST be capped: soundex collapses hard, ~26^1*7^3 possible keys).
+
+    Returns ``(pairs, oversized)``; rows whose key is NULL (no letters
+    in the name) never pair — a NULL phonetic key is a non-key, the
+    same consumer contract as ``canonical_url`` (webfilters.py).
+    """
+    from word_sense_disambiguation_spark.functions.phonetic import soundex_col
+
+    keyed = df.select(
+        F.col(id_col), soundex_col(name_expr).alias("phonetic_key")
+    ).filter(F.col("phonetic_key").isNotNull())
+    return _pairs_within_blocks(keyed, id_col, ["phonetic_key"], max_block_size)
+
