@@ -977,8 +977,10 @@ def _q_incremental_er_attach(spark, sf_dir):
     into a frozen base (even doc_ids, clustered with the REAL snapshot
     stack) and a batch (odd doc_ids) resolved against it with the REAL
     ``attach_mentions_to_clusters`` — per-(key, entity) representative
-    aggregation, best-entity max_by attach, and residual blocking +
-    scoring -> block-local clustering mint, all sense-only so DuckDB replays base closure,
+    aggregation, then one keyed pass that attaches each batch mention to
+    its best-scoring entity (score, then largest entity_id) and mints the
+    residual through the ER job's own block pairs, pair scores and
+    min-label components, all sense-only so DuckDB replays base closure,
     attach argmax, and residual closure exactly (two recursive CTEs).
     Frozen-base semantics: a batch mention can join a base entity but
     never merge two — the bounded-work-per-increment contract a 10^12-row
@@ -1467,8 +1469,8 @@ def _q_fs_match_probability(spark, sf_dir):
     """FS posterior decode over the corrupted-customer pair world with
     documented prior m/u literals: P(match|pattern) as one fixed
     left-associated IEEE tree of CASE-selected literals (the Splink
-    predict() layer; estimate_fs_weights supplies learned params in
-    real use). Non-dyadic literals are fine — literal parsing and each
+    predict() layer; learned params are estimated elsewhere in real
+    use). Non-dyadic literals are fine — literal parsing and each
     multiply/divide are correctly rounded on both engines as long as the
     oracle spells the identical parenthesization. Dyadic 0.5 threshold."""
     from word_sense_disambiguation_spark.operators.pairs import (
@@ -1623,10 +1625,8 @@ def _q_fs_pattern_counts(spark, sf_dir):
     """The Splink-style EM contraction under the hash gate: the FS
     customer pair world collapsed to its agreement-pattern table (one
     partial-combined groupBy over the per-field three-level vector,
-    <= 3^F rows out). This is the distributed half of
-    ``estimate_fs_weights`` — the EM itself runs driver-side on these
-    exact-integer counts (float recovery is pytest-gated on planted
-    corruption rates; the counts it consumes hash-replay here)."""
+    <= 3^F rows out) — the exact-integer counts an EM weight estimator
+    consumes, hash-replayed here."""
     from word_sense_disambiguation_spark.operators.pairs import (
         fs_agreement_patterns,
     )

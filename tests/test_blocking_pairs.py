@@ -140,6 +140,48 @@ def test_er_pairwise_f1_gate(spark, sworld, er_outputs):
     assert f1 >= 0.99, r
 
 
+def test_er_entities_merge_planted_near_duplicates(sworld, er_outputs):
+    """The ER job's clusters at the entity level. ``datagen`` plants
+    near-duplicate pages that differ in one filler token, so two mentions at
+    the same position with the same surface on the two pages of a
+    ``dup_groups`` pair are one entity. A mention with no cluster row is its
+    own entity. Every such pair with equal context bags must merge (both
+    match classes the pruning keeps admit it); a pair whose bags differ by
+    the changed filler can miss under the scorer's own threshold, so overall
+    recall is pinned at its measured floor (129 of 183 pairs)."""
+    assignments, _edges, clusters = er_outputs
+    m = assignments.join(clusters, on="mention_id", how="left").select(
+        "url", "position", "surface",
+        F.array_sort("context_words").alias("bag"),
+        F.coalesce("entity_id", "mention_id").alias("entity_id"),
+    )
+    a = m.select(*[F.col(c).alias(f"a_{c}") for c in m.columns])
+    b = m.select(*[F.col(c).alias(f"b_{c}") for c in m.columns])
+    pairs = (
+        sworld["dup_groups"]
+        .join(a, F.col("url_a") == F.col("a_url"))
+        .join(
+            b,
+            (F.col("url_b") == F.col("b_url"))
+            & (F.col("a_position") == F.col("b_position"))
+            & (F.col("a_surface") == F.col("b_surface")),
+        )
+        .select(
+            (F.col("a_bag") == F.col("b_bag")).alias("same_bag"),
+            (F.col("a_entity_id") == F.col("b_entity_id")).alias("merged"),
+        )
+    )
+    r = pairs.agg(
+        F.count("*").alias("n"),
+        F.sum(F.col("merged").cast("long")).alias("hit"),
+        F.sum(F.col("same_bag").cast("long")).alias("n_same"),
+        F.sum((F.col("merged") & F.col("same_bag")).cast("long")).alias("hit_same"),
+    ).collect()[0]
+    assert r.n_same > 100, r
+    assert r.hit_same == r.n_same, r
+    assert r.hit / r.n >= 129 / 183, r
+
+
 def test_oversized_block_star_recovery(spark):
     """A block exceeding max_block_size must still recover its clusters via
     linear star edges — no mention may lose all its ER edges. The canopy
@@ -648,72 +690,6 @@ def test_fs_agreement_patterns_hand_counts(spark):
     assert got == {(2, 2): 2, (1, 2): 1, (0, 0): 1}
 
 
-def _planted_em_world(spark):
-    """600 latent matches + 3000 latent non-matches over two fields with
-    planted agreement rates (matches: name exact 80% / close 15% / diff
-    5%, code exact 90% / diff 10%; non-matches: name exact 2% / close 8%
-    / diff 90%, code exact 5% / diff 95%) — all by index modulo, fully
-    deterministic."""
-    rows = []
-    for i in range(600):
-        nm = "match%05d" % i
-        name_b = nm if i % 20 < 16 else (nm[:-1] + "x" if i % 20 < 19 else "zz%05dyy" % i)
-        code_b = ("c%04d" % i) if i % 10 < 9 else ("x%04d" % (i + 7000))
-        rows.append((nm, name_b, "c%04d" % i, code_b))
-    for i in range(3000):
-        nm = "rand%06d" % i
-        name_b = nm if i % 50 < 1 else (nm[:-1] + "q" if i % 50 < 5 else "ww%06dvv" % i)
-        code_b = ("d%05d" % i) if i % 20 < 1 else ("y%05d" % (i + 90000))
-        rows.append((nm, name_b, "d%05d" % i, code_b))
-    df = spark.createDataFrame(
-        rows, "name_a string, name_b string, code_a string, code_b string"
-    )
-    comps = [
-        {"name": "name", "left": "name_a", "right": "name_b", "close": 1, "w": (0, 0, 0)},
-        {"name": "code", "left": "code_a", "right": "code_b", "close": 0, "w": (0, 0, 0)},
-    ]
-    return df, comps
-
-
-def test_estimate_fs_weights_recovers_planted_rates(spark):
-    """EM on the planted two-class world recovers lambda and the m/u
-    agreement rates within loose-but-meaningful tolerance, and the
-    learned milli weights separate the classes: exact-exact patterns
-    score strongly positive, diff-diff strongly negative."""
-    from word_sense_disambiguation_spark.operators.pairs import (
-        estimate_fs_weights,
-    )
-
-    df, comps = _planted_em_world(spark)
-    est = estimate_fs_weights(df, comps, iters=50)
-    assert abs(est["lambda"] - 600 / 3600) < 0.05
-    assert abs(est["m"]["name"][2] - 0.80) < 0.08
-    assert abs(est["m"]["code"][2] - 0.90) < 0.08
-    assert abs(est["u"]["name"][2] - 0.02) < 0.03
-    assert abs(est["u"]["code"][2] - 0.05) < 0.05
-    w_name, w_code = est["w"]["name"], est["w"]["code"]
-    assert w_name[0] > 0 > w_name[2]
-    assert w_code[0] > 0 > w_code[2]
-    # separation: the all-exact pattern beats match_milli=0 by a wide
-    # margin, the all-different pattern sits far below it
-    assert w_name[0] + w_code[0] > 3000
-    assert w_name[2] + w_code[2] < -3000
-
-
-def test_estimate_fs_weights_deterministic_across_partitionings(spark):
-    """The distributed half is exact-integer pattern counts; the
-    driver-side EM iterates patterns in sorted order — so the whole
-    estimate is bit-identical however the pairs were partitioned."""
-    from word_sense_disambiguation_spark.operators.pairs import (
-        estimate_fs_weights,
-    )
-
-    df, comps = _planted_em_world(spark)
-    a = estimate_fs_weights(df.coalesce(1), comps, iters=25)
-    b = estimate_fs_weights(df.repartition(13), comps, iters=25)
-    assert a == b
-
-
 def test_fs_match_probability_hand_example(spark):
     """Exact Bayes arithmetic on planted levels, mirrored in python with
     the same left-associated float tree; all-agree pattern clears 0.5,
@@ -756,33 +732,6 @@ def test_fs_match_probability_hand_example(spark):
     assert not out[2].is_match
     assert out[3].p_match == post([0.05, 0.02], [0.9, 0.95])
     assert out[3].p_match < 0.001
-
-
-def test_fs_match_probability_consumes_em_estimates(spark):
-    """The learned-slot handshake: estimate_fs_weights' m/u plug into
-    fs_match_probability and the posterior separates the planted classes
-    of the EM world (true-pair patterns high, random patterns low)."""
-    from word_sense_disambiguation_spark.operators.pairs import (
-        estimate_fs_weights,
-        fs_match_probability,
-    )
-
-    df, comps = _planted_em_world(spark)
-    est = estimate_fs_weights(df, comps, iters=40)
-    for spec in comps:
-        spec["m"] = tuple(est["m"][spec["name"]])
-        spec["u"] = tuple(est["u"][spec["name"]])
-    scored = fs_match_probability(
-        df.withColumn("id_a", F.col("name_a")).withColumn("id_b", F.col("name_b")),
-        comps,
-        lam=est["lambda"],
-    )
-    agg = scored.groupBy(
-        F.col("id_a").startswith("match").alias("is_true_pair")
-    ).agg(F.avg("p_match").alias("mean_p"))
-    means = {r.is_true_pair: r.mean_p for r in agg.collect()}
-    assert means[True] > 0.8
-    assert means[False] < 0.1
 
 
 def test_fs_match_probability_plan_pure_codegen(spark):

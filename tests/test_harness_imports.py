@@ -5,8 +5,9 @@
   breaks a test instead of silently breaking a harness.
 * Every package module is imported by some non-test file, so a module
   that only its own tests reach cannot come back unnoticed.
-* Every public function of the two operator modules the ER job imports
-  (``operators.blocking``, ``operators.clustering``) is imported by some
+* Every public function of the operator modules of the ER job and its
+  incremental attach (``operators.blocking``, ``operators.clustering``,
+  ``operators.pairs``, ``operators.incremental_er``) is imported by some
   non-test file, so a test-only operator cannot come back into them."""
 
 from __future__ import annotations
@@ -102,7 +103,7 @@ def test_every_er_operator_function_has_a_non_test_importer():
     for path in _non_test_files():
         imported |= set(_package_imports(path))
     orphans = []
-    for module in ("blocking", "clustering"):
+    for module in ("blocking", "clustering", "pairs", "incremental_er"):
         path = ROOT / PKG / "operators" / f"{module}.py"
         dotted = f"{PKG}.operators.{module}"
         orphans += [

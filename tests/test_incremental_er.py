@@ -88,8 +88,9 @@ def test_every_batch_mention_resolved_once(resolved):
 
 
 def test_no_window_in_attach_plan(resolved):
-    # reps + best-entity are AGGREGATES (map-side combinable); a window
-    # here would buffer a hot key's full membership in one task
+    # reps are an AGGREGATE (map-side combinable) and the best entity is
+    # picked inside the keyed pass; a window here would buffer a hot key's
+    # full membership in one task
     _, _, out = resolved
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Window" not in plan
@@ -186,15 +187,149 @@ def test_residual_blocks_under_the_er_job_cap(spark):
 
 
 def test_attach_rejects_scorer_configs_the_pruning_misses(spark):
-    """The attach forwards its weights to the residual's scorer-aware
-    pairs (er_scored_edges): a config under which a dropped pair could
-    match raises ValueError; the defaults and the sense-only config are
+    """The residual is clustered over the ER job's scorer-aware pairs: a
+    config under which a dropped pair could match raises ValueError before
+    any Spark job runs; the defaults and the sense-only config are
     accepted."""
     a = _asg(spark, [("b1", "apple", "apple-s1", "assigned")])
     c = spark.createDataFrame([("b1", "b1")], "mention_id string, entity_id string")
-    for kw in ({"w_cos": 0.5}, {"w_jw": 0.6, "w_cos": 0.0}, {"w_jw": -0.1}):
-        with pytest.raises(ValueError, match="pruning"):
-            attach_mentions_to_clusters(a, a, c, **kw)
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", "attach_rejects")
+    try:
+        for kw in ({"w_cos": 0.5}, {"w_jw": 0.6, "w_cos": 0.0}, {"w_jw": -0.1}):
+            with pytest.raises(ValueError, match="pruning"):
+                attach_mentions_to_clusters(a, a, c, **kw)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert not sc.statusTracker().getJobIdsForGroup("attach_rejects")
     for kw in ({}, {"w_jw": 0.0, "w_cos": 0.0, "w_sense": 1.0}):
         resolved, _ = attach_mentions_to_clusters(a, a, c, **kw)
         assert resolved.count() == 1
+
+
+@pytest.fixture(scope="module")
+def world_split(spark, sworld):
+    """The conftest world as a frozen base (first 90 pages, clustered by the
+    ER job's composition) and a batch (the other 30 pages) that carries one
+    extra row with a NULL ``norm_surface``."""
+    from pyspark.sql import functions as F
+
+    from word_sense_disambiguation_spark.operators.blocking import er_scored_edges
+    from word_sense_disambiguation_spark.operators.clustering import block_clusters
+    from word_sense_disambiguation_spark.plans.pipeline import sense_assignments
+
+    cut = sorted(r.url for r in sworld["pages"].select("url").collect())[90]
+    pages = sworld["pages"]
+    base = sense_assignments(pages.filter(F.col("url") < cut), sworld["senses"])
+    base = base.localCheckpoint(eager=True)
+    base_clusters = block_clusters(er_scored_edges(base)).localCheckpoint(eager=True)
+    batch = sense_assignments(pages.filter(F.col("url") >= cut), sworld["senses"])
+    null_row = batch.limit(1).select(
+        *[
+            F.concat(F.col(c), F.lit(":null")).alias(c) if c == "mention_id"
+            else F.lit(None).cast("string").alias(c) if c == "norm_surface"
+            else F.col(c)
+            for c in batch.columns
+        ]
+    )
+    batch = batch.unionByName(null_row).localCheckpoint(eager=True)
+    return batch, base, base_clusters
+
+
+def _reference_attach(batch, base, base_clusters, kw, max_reps_per_key, max_block_size):
+    """The attach as a composition of the public scorer and ER functions:
+    representatives per (key, entity), ``score_mention_pairs`` on batch x
+    representative pairs, best entity by ``max_by``, then
+    ``er_scored_edges`` + ``block_clusters`` on the residual."""
+    from pyspark.sql import functions as F
+
+    from word_sense_disambiguation_spark.operators.blocking import er_scored_edges
+    from word_sense_disambiguation_spark.operators.clustering import block_clusters
+    from word_sense_disambiguation_spark.operators.pairs import score_mention_pairs
+
+    keys = ["norm_surface", "pos"]
+    attrs = ["mention_id", "surface", "norm_surface", "context_words",
+             "pred_sense_id", "decision"]
+    pruned = base.join(
+        F.broadcast(batch.select(*keys).distinct()), on=keys, how="left_semi"
+    ).join(base_clusters, on="mention_id")
+    reps = pruned.groupBy(*keys, "entity_id").agg(
+        F.min_by(F.struct(*attrs), F.col("mention_id")).alias("rep")
+    )
+    counts = reps.groupBy(*keys).agg(F.count("*").alias("n_entities"))
+    oversized = counts.filter(F.col("n_entities") > max_reps_per_key)
+    ok = reps.join(oversized.select(*keys), on=keys, how="left_anti")
+    cand = batch.select(F.col("mention_id").alias("id_a"), *keys).join(
+        ok.select(*keys, F.col("rep.mention_id").alias("id_b"), "entity_id"), on=keys
+    )
+    side = batch.select(*attrs).unionByName(
+        ok.select(*[F.col(f"rep.{c}").alias(c) for c in attrs])
+    )
+    edges = score_mention_pairs(cand.select("id_a", "id_b"), side, **kw)
+    best = (
+        edges.filter("is_match")
+        .join(cand, on=["id_a", "id_b"])
+        .groupBy(F.col("id_a").alias("mention_id"))
+        .agg(
+            F.max_by("entity_id", F.struct("score", "entity_id")).alias("entity_id"),
+            F.max("score").alias("best_score"),
+        )
+    )
+    residual = batch.join(best, on="mention_id", how="left_anti")
+    minted = residual.select("mention_id").join(
+        block_clusters(er_scored_edges(residual, max_block_size, **kw)),
+        on="mention_id",
+        how="left",
+    )
+    resolved = [
+        (r.mention_id, r.entity_id, "attached", r.best_score) for r in best.collect()
+    ] + [
+        (r.mention_id, r.entity_id or r.mention_id, "minted", None)
+        for r in minted.collect()
+    ]
+    n_big = residual.groupBy(*keys).count().filter(f"count > {max_block_size}").count()
+    return sorted(resolved), sorted(map(tuple, oversized.collect())), n_big
+
+
+@pytest.mark.parametrize(
+    "kw", [{}, {"w_jw": 0.0, "w_cos": 0.0, "w_sense": 1.0}], ids=["default", "sense"]
+)
+def test_attach_equals_the_public_function_composition(world_split, kw):
+    """The one keyed pass gives the rows of the composition it replaces, with
+    a key cap and a block cap small enough that both the oversized-key path
+    and the residual's oversized-block stars run."""
+    batch, base, base_clusters = world_split
+    caps = {"max_reps_per_key": 2, "max_block_size": 16}
+    want, want_oversized, n_big = _reference_attach(
+        batch, base, base_clusters, kw, **caps
+    )
+    out, oversized = attach_mentions_to_clusters(
+        batch, base, base_clusters, **kw, **caps
+    )
+    got = sorted(map(tuple, out.collect()))
+    assert want_oversized and n_big, (want_oversized, n_big)
+    assert {s for _, _, s, _ in got} == {"attached", "minted"}
+    assert got == want
+    assert sorted(map(tuple, oversized.collect())) == want_oversized
+    lone = [r for r in got if r[0].endswith(":null")]
+    assert lone == [(lone[0][0], lone[0][0], "minted", None)]
+
+
+def test_attach_runs_at_most_eight_spark_jobs(spark, world_split):
+    """One attach, from its input to the collected rows, runs 8 Spark jobs
+    or fewer: the batch checkpoint plus the stages of one keyed pass (the
+    composition of separate scorer, best-match and residual stacks ran
+    24-27)."""
+    batch, base, base_clusters = world_split
+    n_batch = batch.count()
+    sc = spark.sparkContext
+    group = "attach_job_count"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        out, _ = attach_mentions_to_clusters(batch, base, base_clusters)
+        rows = out.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert len(rows) == n_batch
+    assert 1 <= n_jobs <= 8, n_jobs

@@ -7,10 +7,11 @@ key (``wsd/word_sense_disambiguation.py:384-387``) — then
 per block the scorer-aware pairs (only the pairs the pair scorer can
 match, plus one hub star per block that keeps every member in the
 clustered node set) or, for a block over the cap, linear canopy-aware
-star edges, scored in the same pass. ``run_er_pipeline``, the incremental
-attach residual, the driver-contract ER queries and the scaling harness
-all call it, so every ER job runs the same blocking policy under the same
-cap (:data:`ER_MAX_BLOCK`).
+star edges, scored in the same pass. ``run_er_pipeline``, the
+driver-contract ER queries and the scaling harness all call it, and the
+incremental attach runs its per-block kernels (:func:`_block_pairs`,
+:func:`_score_pairs`) in its own keyed pass, so every ER job runs the same
+blocking policy and scorer under the same cap (:data:`ER_MAX_BLOCK`).
 
 The rest of the module:
 
@@ -262,34 +263,24 @@ def _block_pairs(
     return row[code // n], row[code % n]
 
 
-def _block_edges_run(
-    batches: Iterator[pd.DataFrame],
-    max_block_size: int,
+def _score_pairs(
+    pdf: pd.DataFrame,
+    i: np.ndarray,
+    j: np.ndarray,
     threshold: float,
     w_jw: float,
     w_cos: float,
     w_sense: float,
-) -> Iterator[pd.DataFrame]:
-    """Per-partition pass of :func:`er_scored_edges` over whole blocks (the
-    partition holds every member of each of its blocks): enumerate the
-    candidate pairs, then score them with ``score_mention_pairs``' kernels
-    in its float order."""
+) -> tuple[np.ndarray, np.ndarray]:
+    """``(score, is_match)`` of the row pairs (i, j) of ``pdf``, ``i`` on
+    the ``id_a`` side: ``score_mention_pairs``' kernels in its float order,
+    with SQL NULL semantics (a NaN score is NULL, its ``is_match`` None).
+    ``pdf`` needs ``surface, context_words, decision, pred_sense_id``."""
     from word_sense_disambiguation_spark.functions.hashing import embed_token_bags
     from word_sense_disambiguation_spark.functions.similarity import (
         cosine_batch,
         jaro_winkler_batch,
     )
-
-    parts = [b for b in batches if len(b)]
-    if not parts:
-        return
-    pdf = pd.concat(parts, ignore_index=True)
-    rank, uniq = pd.factorize(pdf["mention_id"], sort=True)  # rank order == id order
-    uniq = np.asarray(uniq)
-    block = pdf.groupby(["norm_surface", "pos"], sort=False).ngroup().to_numpy()
-    i, j = _block_pairs(pdf, block, rank, max_block_size)
-    if not len(i):
-        return
 
     score = np.zeros(len(i))
     if w_jw != 0.0:
@@ -313,6 +304,31 @@ def _block_edges_run(
     is_match = score >= threshold
     if np.isnan(score).any():  # a NULL score compares to NULL
         is_match = np.where(np.isnan(score), None, is_match)
+    return score, is_match
+
+
+def _block_edges_run(
+    batches: Iterator[pd.DataFrame],
+    max_block_size: int,
+    threshold: float,
+    w_jw: float,
+    w_cos: float,
+    w_sense: float,
+) -> Iterator[pd.DataFrame]:
+    """Per-partition pass of :func:`er_scored_edges` over whole blocks (the
+    partition holds every member of each of its blocks): enumerate the
+    candidate pairs, then score them with :func:`_score_pairs`."""
+    parts = [b for b in batches if len(b)]
+    if not parts:
+        return
+    pdf = pd.concat(parts, ignore_index=True)
+    rank, uniq = pd.factorize(pdf["mention_id"], sort=True)  # rank order == id order
+    uniq = np.asarray(uniq)
+    block = pdf.groupby(["norm_surface", "pos"], sort=False).ngroup().to_numpy()
+    i, j = _block_pairs(pdf, block, rank, max_block_size)
+    if not len(i):
+        return
+    score, is_match = _score_pairs(pdf, i, j, threshold, w_jw, w_cos, w_sense)
 
     first = np.full(block.max() + 1, len(pdf))
     np.minimum.at(first, block, rank)
@@ -324,6 +340,18 @@ def _block_edges_run(
         "is_match": is_match,
         "block_id": uniq[first[block[i]]],
     })
+
+
+def _check_pruning_covers(w_jw: float, w_cos: float, threshold: float) -> None:
+    """Raise ``ValueError`` unless :func:`pairs.pruning_covers` accepts the
+    scorer config, i.e. unless the ER pair pruning is exact under it."""
+    if not pruning_covers(w_jw, w_cos, threshold):
+        raise ValueError(
+            f"scorer config w_jw={w_jw}, w_cos={w_cos}, threshold={threshold}: "
+            "the ER pair pruning is exact only for w_jw, w_cos >= 0 "
+            "and w_jw + w_cos <= threshold (w_cos > 0 at equality); see "
+            "pairs.pruning_covers"
+        )
 
 
 def er_scored_edges(
@@ -404,13 +432,7 @@ def er_scored_edges(
     Sharding hot blocks is left to an exact sub-blocking on the two match
     classes (same sense, equal primitive vector).
     """
-    if not pruning_covers(w_jw, w_cos, threshold):
-        raise ValueError(
-            f"scorer config w_jw={w_jw}, w_cos={w_cos}, threshold={threshold}: "
-            "the ER pair pruning is exact only for w_jw, w_cos >= 0 "
-            "and w_jw + w_cos <= threshold (w_cos > 0 at equality); see "
-            "pairs.pruning_covers"
-        )
+    _check_pruning_covers(w_jw, w_cos, threshold)
     key = ["norm_surface", "pos"]
     id_type = dict(assignments.dtypes)["mention_id"]
     members = assignments.select(

@@ -405,7 +405,7 @@ def pr_threshold_sweep(
     pair table to one row per DISTINCT SCORE (map-side combine ships a
     bounded number of rows per partition — for level-indexed integer
     weights the score alphabet is <= prod(levels_f) ~ 3^F, the same
-    bound that makes ``estimate_fs_weights``' driver-side EM safe); the
+    bound as ``fs_agreement_patterns``' pattern table); the
     cumulative windows then run over that tiny contracted table, never
     over pairs. Callers with genuinely continuous scores bucket first
     (the table stays exact for any bucketing). The unpartitioned window

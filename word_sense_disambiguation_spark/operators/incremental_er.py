@@ -11,13 +11,11 @@ corpus-wide connected components. Semantics ("frozen base, attach-or-mint"):
   never by the corpus; a bridge mention that matches two entities attaches
   to exactly one, deterministically);
 * each batch mention attaches to the best-scoring base entity with a match
-  edge at or above ``threshold`` (ties: largest entity_id — one ``max_by``
-  over an ordering struct, the same aggregate-not-window discipline as
-  ``assign_senses``);
+  edge at or above ``threshold`` (ties: largest entity_id);
 * mentions that attach to nothing are clustered among THEMSELVES (the same
-  keyed blocking + pair scoring pass and block-local clustering as the
-  snapshot build, on the residual only) and receive minted ids, so duplicate new mentions
-  share one new entity instead of minting twice.
+  scorer-aware block pairs, pair scores and min-label components as the
+  snapshot build, on the residual only) and receive minted ids, so
+  duplicate new mentions share one new entity instead of minting twice.
 
 Scale plan, in order:
 
@@ -29,19 +27,21 @@ Scale plan, in order:
 2. the base side collapses to ONE representative row per
    ``(key, entity_id)`` via a ``min_by`` AGGREGATE — map-side partial
    combine, so a 10^8-mention hot entity contributes one row per map
-   partition, never a buffered window group;
+   partition, never a buffered window group, and a key's rows are bounded
+   by its entities, not its mentions;
 3. keys with more than ``max_reps_per_key`` distinct base entities are
    excluded and RETURNED (no silent caps — the caller sees exactly which
    keys degraded); their batch mentions fall through to the residual path
    and mint, so no mention is ever dropped;
-4. candidate scoring reuses the stage-2 vectorized pair scorer
-   (``pairs.score_mention_pairs``) verbatim, so attach decisions are
-   consistent with the decisions that built the snapshot.
+4. the batch rows and the representatives meet in ONE shuffle on the key
+   and ONE ``mapInPandas`` pass: entities never cross a key and every
+   attach decision is local to one, so each partition resolves its keys
+   whole with the ER job's own block kernels, and attach decisions agree
+   with the decisions that built the snapshot.
 
-ID contract: mention ids must be globally unique across base and batch
-(both corpora feed one attribute table for the scorer). Minted ids are
-batch mention ids (the residual CC min-id convention), so they can never
-collide with base entity ids, which are base mention ids.
+ID contract: mention ids must be globally unique across base and batch.
+Minted ids are batch mention ids (the residual min-id convention), so they
+can never collide with base entity ids, which are base mention ids.
 
 Reference parity anchor: the reference resolves each benchmark example
 against a FIXED inventory snapshot, one example at a time
@@ -53,36 +53,87 @@ supplying the sense term of the edge score.
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from word_sense_disambiguation_spark.operators.blocking import (
     ER_MAX_BLOCK,
-    er_scored_edges,
+    _block_pairs,
+    _check_pruning_covers,
+    _score_pairs,
 )
-from word_sense_disambiguation_spark.operators.clustering import block_clusters
+from word_sense_disambiguation_spark.operators.clustering import _min_labels
 from word_sense_disambiguation_spark.operators.pairs import (
     MATCH_THRESHOLD,
     W_COS,
     W_JW,
     W_SENSE,
-    score_mention_pairs,
 )
 
-# the scorer-side attribute projection (pairs._side) plus the blocking keys
-_ATTR_COLS = (
-    "mention_id",
-    "surface",
-    "norm_surface",
-    "context_words",
-    "pred_sense_id",
-    "decision",
-)
+# the attributes the pair scorer reads (blocking._score_pairs)
+_SCORED_COLS = ("surface", "context_words", "pred_sense_id", "decision")
 
 # the surface blocking key er_scored_edges blocks the snapshot on
 _KEY_COLS = ("norm_surface", "pos")
 
 DEFAULT_MAX_REPS_PER_KEY = 64
+
+
+def _attach_run(
+    batches: Iterator[pd.DataFrame],
+    max_reps_per_key: int,
+    max_block_size: int,
+    scorer: tuple[float, float, float, float],
+) -> Iterator[pd.DataFrame]:
+    """Per-partition pass of :func:`attach_mentions_to_clusters` over whole
+    keys: the partition holds every batch row and every representative of
+    each of its keys."""
+    parts = [b for b in batches if len(b)]
+    if not parts:
+        return
+    pdf = pd.concat(parts, ignore_index=True)
+    ids, is_rep = pdf["mention_id"].to_numpy(), pdf["is_rep"].to_numpy(dtype=bool)
+    block = pdf.groupby(list(_KEY_COLS), sort=False, dropna=False).ngroup().to_numpy()
+    # a row with a NULL key never pairs: alone in its block, it mints its own id
+    null_key = pdf[list(_KEY_COLS)].isna().any(axis=1).to_numpy()
+    block = np.where(null_key, len(pdf) + np.arange(len(pdf)), block)
+
+    # every batch row x every representative of its key, unless the key
+    # holds more than max_reps_per_key entities (one rep per entity)
+    open_key = (np.bincount(block, weights=is_rep) <= max_reps_per_key)[block]
+    rows = pd.DataFrame({"block": block, "row": np.arange(len(pdf))})
+    cand = rows[~is_rep & open_key].merge(rows[is_rep & open_key], on="block")
+    i, j = cand["row_x"].to_numpy(), cand["row_y"].to_numpy()
+    score, is_match = _score_pairs(pdf, i, j, *scorer)
+    hit = pd.Series(is_match).eq(True).to_numpy()  # a NULL is_match never attaches
+    # best entity per batch row: highest score, then largest entity_id
+    entity = pdf["entity_id"].to_numpy()[j[hit]]
+    best = (
+        pd.DataFrame({"row": i[hit], "score": score[hit], "entity_id": entity})
+        .sort_values(["row", "score", "entity_id"])
+        .drop_duplicates("row", keep="last")
+    )
+    won = best["row"].to_numpy()
+
+    # the rest of the batch clusters among itself as er_scored_edges +
+    # block_clusters would: block pairs, scores, min labels on the id rank
+    residual = ~is_rep
+    residual[won] = False
+    res = pdf[residual].reset_index(drop=True)
+    rank, uniq = pd.factorize(res["mention_id"], sort=True)  # rank order == id order
+    a, b = _block_pairs(res, block[residual], rank, max_block_size)
+    m = pd.Series(_score_pairs(res, a, b, *scorer)[1]).eq(True).to_numpy()
+    minted = np.asarray(uniq)[_min_labels(len(res), rank[a[m]], rank[b[m]])[rank]]
+    yield pd.DataFrame({
+        "mention_id": np.concatenate([ids[won], ids[residual]]),
+        "entity_id": np.concatenate([best["entity_id"].to_numpy(), minted]),
+        "attach_source": ["attached"] * len(won) + ["minted"] * len(res),
+        "best_score": np.r_[best["score"].to_numpy(), np.full(len(res), np.nan)],
+    })
 
 
 def attach_mentions_to_clusters(
@@ -115,20 +166,19 @@ def attach_mentions_to_clusters(
       ``max_reps_per_key`` distinct entities, excluded from attach.
 
     The residual is blocked, scored and clustered like the snapshot
-    build (``er_scored_edges`` + ``block_clusters``), whose pruning is
-    exact only for the scorer configs ``pairs.pruning_covers`` accepts;
-    any other config raises ``ValueError``.
+    build (``er_scored_edges`` + ``block_clusters``, under
+    ``max_block_size``), whose pruning is exact only for the scorer
+    configs ``pairs.pruning_covers`` accepts; any other config raises
+    ``ValueError`` before any Spark job runs.
     """
+    _check_pruning_covers(w_jw, w_cos, threshold)
     keys = list(_KEY_COLS)
-    attrs = list(_ATTR_COLS)
+    scored = list(_SCORED_COLS)
 
-    # 0. materialize the batch ONCE. The operator fans this input out to
-    #    many consumers (keys, candidate side, scorer attribute union,
-    #    residual anti-join -> blocking + scoring -> clustering), and
-    #    some of them sit under a separate internal action (the `matched`
-    #    checkpoint below) — an unmaterialized expensive upstream
-    #    DAG (e.g. the full pages->assignments pipeline) would re-execute
-    #    per consumer (measured 312s -> ~30s on a 12-page increment).
+    # 0. materialize the batch ONCE: it feeds both the key broadcast and
+    #    the keyed pass, and an unmaterialized expensive upstream DAG (e.g.
+    #    the full pages->assignments pipeline) would re-execute per
+    #    consumer (measured 312s -> ~30s on a 12-page increment).
     #    localCheckpoint, NEVER persist: persisted plans get CacheManager-
     #    substituted into later logically-identical queries (the r4 bench
     #    artifact); the RDD-level checkpoint is invisible to CacheManager
@@ -137,100 +187,48 @@ def attach_mentions_to_clusters(
     batch_assignments = batch_assignments.localCheckpoint(eager=True)
 
     # 1. prune the base to the batch's keys (broadcast semi-join: the batch
-    #    is small by contract; at real scale this is scan-level pruning).
-    batch_keys = batch_assignments.select(*keys).distinct()
-    pruned = base_assignments.select(*attrs, *[k for k in keys if k not in attrs])
-    pruned = pruned.join(F.broadcast(batch_keys), on=keys, how="left_semi")
+    #    is small by contract, so its keys broadcast as they are, without a
+    #    distinct's shuffle; at real scale this is scan-level pruning).
+    batch_keys = F.broadcast(batch_assignments.select(*keys))
+    pruned = base_assignments.select("mention_id", *keys, *scored)
+    pruned = pruned.join(batch_keys, on=keys, how="left_semi")
     pruned = pruned.join(base_clusters, on="mention_id")
 
     # 2. one representative per (key, entity): min-mention-id's attributes,
     #    via a min_by aggregate (map-side combine; never a window).
-    payload = F.struct(*[F.col(c) for c in attrs])
+    payload = F.struct("mention_id", *scored)
     reps = pruned.groupBy(*keys, "entity_id").agg(
         F.min_by(payload, F.col("mention_id")).alias("rep")
     )
 
-    # 3. cap distinct entities per key; excluded keys are RETURNED.
-    rep_counts = reps.groupBy(*keys).agg(F.count("*").alias("n_entities"))
-    oversized = rep_counts.filter(F.col("n_entities") > max_reps_per_key)
-    ok_reps = reps.join(
-        F.broadcast(oversized.select(*keys)), on=keys, how="left_anti"
+    # 3. keys over the entity cap are RETURNED (the pass excludes them too).
+    oversized = (
+        reps.groupBy(*keys)
+        .agg(F.count("*").alias("n_entities"))
+        .filter(F.col("n_entities") > max_reps_per_key)
     )
 
-    # 4. candidate pairs (batch mention, entity representative) + the
-    #    shared attribute table the stage-2 scorer reads both sides from.
-    cand = (
-        batch_assignments.select(F.col("mention_id").alias("id_a"), *keys)
-        .join(
-            ok_reps.select(
-                *keys, F.col("rep.mention_id").alias("id_b"), "entity_id"
-            ),
-            on=keys,
-        )
-        .select("id_a", "id_b", "entity_id")
-    )
-    side_attrs = batch_assignments.select(*attrs).unionByName(
-        ok_reps.select(*[F.col(f"rep.{c}").alias(c) for c in attrs])
-    )
-    edges = score_mention_pairs(
-        cand.select("id_a", "id_b"),
-        side_attrs,
-        threshold=threshold,
-        w_jw=w_jw,
-        w_cos=w_cos,
-        w_sense=w_sense,
-    )
-
-    # 5. best base entity per batch mention: ONE max_by over an ordering
-    #    struct (score desc, then entity_id desc — deterministic ties).
-    best = (
-        edges.filter(F.col("is_match"))
-        .join(cand, on=["id_a", "id_b"])
-        .groupBy("id_a")
-        .agg(
-            F.max_by(
-                "entity_id",
-                F.struct(F.col("score").alias("s"), F.col("entity_id").alias("e")),
-            ).alias("entity_id"),
-            F.max("score").alias("best_score"),
-        )
-    )
-    # Same fan-out rule for the attach result: the attached rows and the
-    # residual anti-join (and the residual's blocking, scoring and
-    # clustering behind it) would otherwise re-run the scorer DAG behind
-    # `best` once apiece.
-    matched = best.select(
-        F.col("id_a").alias("mention_id"), "entity_id", "best_score"
-    ).localCheckpoint(eager=True)
-
-    # 6. residual: batch mentions with no base attachment cluster among
-    #    themselves with the SAME functions that built the snapshot.
-    residual = batch_assignments.join(
-        matched.select("mention_id"), on="mention_id", how="left_anti"
-    )
-    r_clusters = block_clusters(
-        er_scored_edges(residual, max_block_size, threshold, w_jw, w_cos, w_sense)
-    )
-    minted = (
-        residual.select("mention_id")
-        .join(r_clusters, on="mention_id", how="left")
-        .select(
-            "mention_id",
-            F.coalesce(F.col("entity_id"), F.col("mention_id")).alias("entity_id"),
-        )
-    )
-
-    resolved = matched.select(
-        "mention_id",
-        "entity_id",
-        F.lit("attached").alias("attach_source"),
-        F.col("best_score"),
+    # 4. batch rows + representatives, ONE shuffle on the key, one pass.
+    id_type = dict(batch_assignments.dtypes)["mention_id"]
+    entity_type = dict(base_clusters.dtypes)["entity_id"]
+    rows = batch_assignments.select(
+        "mention_id", *keys, "lemma", *scored,
+        # its own id, not NULL: a NULL would turn integer ids into floats
+        F.col("mention_id").cast(entity_type).alias("entity_id"),
+        F.lit(False).alias("is_rep"),
     ).unionByName(
-        minted.select(
-            "mention_id",
-            "entity_id",
-            F.lit("minted").alias("attach_source"),
-            F.lit(None).cast("double").alias("best_score"),
+        reps.select(
+            "rep.mention_id", *keys, F.lit(None).cast("string").alias("lemma"),
+            *[f"rep.{c}" for c in scored], "entity_id", F.lit(True).alias("is_rep"),
         )
     )
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        return _attach_run(
+            batches, max_reps_per_key, max_block_size,
+            (threshold, w_jw, w_cos, w_sense),
+        )
+
+    schema = f"mention_id {id_type}, entity_id {entity_type}, attach_source string"
+    resolved = rows.repartition(*keys).mapInPandas(run, f"{schema}, best_score double")
     return resolved, oversized

@@ -54,7 +54,7 @@ def pruning_covers(w_jw: float, w_cos: float, threshold: float) -> bool:
 
 
 @F.pandas_udf(T.DoubleType())
-def jaro_winkler_udf(s1: pd.Series, s2: pd.Series) -> pd.Series:
+def _jaro_winkler_udf(s1: pd.Series, s2: pd.Series) -> pd.Series:
     # equality fast path + symmetric unique-pair memo per Arrow batch —
     # the O(|s1||s2|) kernel runs once per DISTINCT unequal pair, not per
     # row (blocked pairs repeat few distinct surfaces); see
@@ -63,7 +63,7 @@ def jaro_winkler_udf(s1: pd.Series, s2: pd.Series) -> pd.Series:
 
 
 @F.pandas_udf(T.DoubleType())
-def context_cosine_udf(c1: pd.Series, c2: pd.Series) -> pd.Series:
+def _context_cosine_udf(c1: pd.Series, c2: pd.Series) -> pd.Series:
     # distinct-bag embedding (bit-identical): star-blocked pair batches
     # repeat the hub's context in every row, and surface-key blocks repeat
     # few distinct contexts — embed each once, gather.
@@ -126,11 +126,11 @@ def score_mention_pairs(
         # under surface-key blocking) short-circuit inside the python loop
         # itself (jaro() checks equality first), so a physical filter/union
         # split — which would double the upstream join — buys nothing.
-        e = e.withColumn("jw", jaro_winkler_udf("surface_a", "surface_b"))
+        e = e.withColumn("jw", _jaro_winkler_udf("surface_a", "surface_b"))
         score = score + F.lit(w_jw) * F.col("jw")
     if w_cos != 0.0:
         score = score + F.lit(w_cos) * F.greatest(
-            context_cosine_udf("ctx_a", "ctx_b"), F.lit(0.0)
+            _context_cosine_udf("ctx_a", "ctx_b"), F.lit(0.0)
         )
     same_sense = (
         (F.col("decision_a") == "assigned")
@@ -238,8 +238,8 @@ def fs_agreement_patterns(pairs: DataFrame, comparisons: list[dict]) -> DataFram
     partial-combined ``groupBy`` over the per-field three-level agreement
     vector -> ``(lvl_<field>..., n_pairs)``, at most ``3^F`` rows however
     many pairs went in. This contraction is the scale move that makes
-    unsupervised weight estimation tractable (Splink does exactly this):
-    EM never touches pairs, only the tiny exact-integer pattern table.
+    unsupervised weight estimation tractable (Splink's EM never touches
+    pairs, only the tiny exact-integer pattern table).
     """
     lvls = [
         _agreement_level(s).alias(f"lvl_{s['name']}") for s in comparisons
@@ -249,101 +249,6 @@ def fs_agreement_patterns(pairs: DataFrame, comparisons: list[dict]) -> DataFram
         .groupBy(*[f"lvl_{s['name']}" for s in comparisons])
         .agg(F.count("*").cast("long").alias("n_pairs"))
     )
-
-
-def estimate_fs_weights(
-    pairs: DataFrame,
-    comparisons: list[dict],
-    iters: int = 30,
-    lambda_init: float = 0.1,
-    smooth: float = 0.5,
-) -> dict:
-    """Unsupervised Fellegi-Sunter parameter estimation by EM over the
-    agreement-pattern table (Winkler 1988; the Splink
-    ``estimate_parameters_using_expectation_maximisation`` move) — fills
-    the documented 'injectable learned slot' of ``fellegi_sunter_scores``
-    with weights LEARNED from the blocked pairs themselves, no labels.
-
-    Scale shape: the only distributed work is ``fs_agreement_patterns``'s
-    one partial-combined groupBy; the pattern table (<= 3^F rows) is
-    collected — the same legitimately-tiny driver pull as the IVF
-    centroids — and EM runs driver-side in pure python over patterns
-    sorted by level tuple, so the float iteration order is total and
-    deterministic (bit-reproducible for a given pattern table; the table
-    itself is exact integers, so end-to-end determinism holds across
-    partitionings).
-
-    Model: pair is a match w.p. lambda; field levels are conditionally
-    independent given match status; ``m[f][l] = P(lvl_f = l | match)``,
-    ``u[f][l] = P(lvl_f = l | non-match)``. E-step scores each pattern,
-    M-step re-estimates (lambda, m, u) with add-``smooth`` Laplace
-    smoothing (keeps zero-count levels off the log cliff). Init: m mass
-    on agreement (0.7/0.2/0.1 for exact/close/different), u from the
-    OBSERVED marginal level frequencies (the standard 'random pairs look
-    like the corpus' prior).
-
-    Returns ``{"lambda": float, "m": {field: [p0,p1,p2]}, "u": {...},
-    "w": {field: (w_exact, w_close, w_diff)}, "n_pairs": int}`` where
-    ``w`` are INTEGER MILLI log2(m/l / u/l) weights rounded half-away-
-    from-zero — plug them straight into ``fellegi_sunter_scores``.
-    Reference parity anchor: the injectable-weights contract documented
-    at ``fellegi_sunter_scores`` above; the reference's analogous
-    learned-slot is the fine-tuned scorer behind
-    /root/reference/wsd/masked_language_model.py:39-71 (model learned
-    elsewhere, engine consumes its parameters).
-    """
-    import math
-
-    fields = [s["name"] for s in comparisons]
-    rows = fs_agreement_patterns(pairs, comparisons).collect()
-    pats = sorted(
-        (tuple(int(r[f"lvl_{f}"]) for f in fields), int(r["n_pairs"]))
-        for r in rows
-    )
-    n_total = sum(c for _, c in pats)
-    if n_total == 0:
-        raise ValueError("estimate_fs_weights: empty pair table")
-    lam = float(lambda_init)
-    # init m: fixed agreement-heavy prior; u: observed marginals
-    m = {f: [0.1, 0.2, 0.7] for f in fields}
-    u = {}
-    for i, f in enumerate(fields):
-        marg = [smooth] * 3
-        for lv, c in pats:
-            marg[lv[i]] += c
-        tot = sum(marg)
-        u[f] = [x / tot for x in marg]
-    for _ in range(int(iters)):
-        # E-step: P(match | pattern)
-        resp = []
-        for lv, c in pats:
-            pm = lam
-            pu = 1.0 - lam
-            for i, f in enumerate(fields):
-                pm *= m[f][lv[i]]
-                pu *= u[f][lv[i]]
-            denom = pm + pu
-            resp.append(pm / denom if denom > 0.0 else 0.0)
-        # M-step
-        cm = sum(c * p for (_, c), p in zip(pats, resp))
-        lam = min(max(cm / n_total, 1e-9), 1.0 - 1e-9)
-        for i, f in enumerate(fields):
-            mm = [smooth] * 3
-            uu = [smooth] * 3
-            for (lv, c), p in zip(pats, resp):
-                mm[lv[i]] += c * p
-                uu[lv[i]] += c * (1.0 - p)
-            mt, ut = sum(mm), sum(uu)
-            m[f] = [x / mt for x in mm]
-            u[f] = [x / ut for x in uu]
-    w = {}
-    for f in fields:
-        milli = []
-        for lvl in (2, 1, 0):  # (w_exact, w_close, w_diff) order
-            val = 1000.0 * math.log2(m[f][lvl] / u[f][lvl])
-            milli.append(int(math.floor(abs(val) + 0.5)) * (1 if val >= 0 else -1))
-        w[f] = tuple(milli)
-    return {"lambda": lam, "m": m, "u": u, "w": w, "n_pairs": n_total}
 
 
 def fs_match_probability(
@@ -357,8 +262,7 @@ def fs_match_probability(
     """Posterior match probability under the Fellegi-Sunter conditional-
     independence model: ``P(match | pattern) = lam*Πm / (lam*Πm +
     (1-lam)*Πu)`` — the probability decode Splink calls ``predict()``,
-    downstream of ``estimate_fs_weights`` (whose ``m``/``u``/``lambda``
-    plug in directly) or of documented priors.
+    over documented priors or ``m``/``u``/``lambda`` estimated elsewhere.
 
     Each comparison spec carries ``"m": (m_diff, m_close, m_exact)`` and
     ``"u": (u_diff, u_close, u_exact)`` probability literals indexed by

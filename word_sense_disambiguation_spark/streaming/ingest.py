@@ -177,7 +177,8 @@ def stream_attach_to_clusters(
     mint two entities (their ids are min mention_ids, globally unique,
     so they never collide); merging those belongs to the periodic batch
     re-cluster, exactly like the batch operator's own contract for
-    base-vs-base merges (``operators/incremental_er.py:60-84``). State
+    base-vs-base merges (the frozen-base semantics in the
+    ``operators.incremental_er`` module docstring). State
     is bounded by the base size — the stream itself keeps NO growing
     state, which is what lets it run indefinitely.
 
