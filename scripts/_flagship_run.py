@@ -21,8 +21,10 @@ def main() -> None:
     mode = sys.argv[4] if len(sys.argv) > 4 else "flagship"
 
     from word_sense_disambiguation_spark.datagen import build_world, world_to_spark
-    from word_sense_disambiguation_spark.operators.blocking import er_scored_edges
-    from word_sense_disambiguation_spark.operators.clustering import block_clusters
+    from word_sense_disambiguation_spark.operators.blocking import (
+        er_clusters,
+        er_scored_edges,
+    )
     from word_sense_disambiguation_spark.plans.pipeline import sense_assignments
     from word_sense_disambiguation_spark.session import get_spark
 
@@ -46,9 +48,9 @@ def main() -> None:
         _materialize(sense_assignments(pages, senses))
 
     def run_full() -> None:
-        # all three north-rule stages end-to-end: blocking and pair
-        # scoring (blocking.er_scored_edges), then clustering
-        # (clustering.block_clusters).
+        # all three north-rule stages end-to-end: blocking, pair scoring
+        # and per-block clustering (blocking.er_scored_edges), projected
+        # to the clusters (blocking.er_clusters).
         # ER only pairs mentions with inventory evidence — no_definitions
         # mentions are guaranteed singletons (their surface blocks are
         # stop-word-sized and capped anyway), so they are pruned before the
@@ -67,7 +69,7 @@ def main() -> None:
             )
             .localCheckpoint(eager=True)
         )
-        _materialize(block_clusters(er_scored_edges(a)))
+        _materialize(er_clusters(er_scored_edges(a)))
 
     from scripts._hoststat import bandwidth_probe, cpu_sample, steal_pct
 

@@ -32,10 +32,7 @@ def main() -> None:
     import pyspark.sql.functions as F
 
     from word_sense_disambiguation_spark.datagen import build_world, world_to_spark
-    from word_sense_disambiguation_spark.operators.blocking import (
-        er_scored_edges,
-        phonetic_key_pairs,
-    )
+    from word_sense_disambiguation_spark.operators.blocking import er_scored_edges
     from word_sense_disambiguation_spark.operators.dedup import (
         duplicate_span_stats,
         minhash_near_duplicate_clusters,
@@ -190,9 +187,10 @@ def main() -> None:
             "sense, same context direction; over it: canopy-aware stars "
             "— linear, no silent caps) and scores them in numpy (JW, "
             "cosine over one embedding per member, sense agreement); no "
-            "join back to mention attributes, no distinct. "
-            "clustering.block_clusters then needs one shuffle on "
-            "block_id.",
+            "join back to mention attributes, no distinct. The same "
+            "pass labels each block's matched components, so "
+            "blocking.er_clusters is a narrow projection of these "
+            "edges (no Exchange, no MapInPandas).",
             er_edges,
         ),
         (
@@ -341,20 +339,6 @@ def main() -> None:
                 ),
                 "ts", ["event_type"], "value", length_s=900, slide_s=300,
             ),
-        ),
-        (
-            "phonetic_blocking (Soundex candidate pairs)",
-            "Pure-codegen key (translate/regexp chains — no EvalPython "
-            "anywhere), skew-capped pairing: partial-combined block "
-            "counts, broadcast ANTI-join excludes oversized blocks "
-            "(Window-free cap). At sf0.01 the self-join itself is a "
-            "broadcast hash join; above the broadcast threshold both "
-            "sides hash-partition on the key and the exchange is "
-            "reused. Tests: test_phonetic_key_is_pure_codegen.",
-            phonetic_key_pairs(
-                docs, "doc_id", "element_at(split(text, ' '), 1)",
-                max_block_size=24,
-            )[0],
         ),
         (
             "zorder_layout (Morton chunk audit)",

@@ -317,15 +317,15 @@ def test_er_scored_edges_is_exact_for_the_scorer(spark, sworld):
     and oriented id_a < id_b; every edge row ``(id_a, id_b, score,
     is_match)`` equals ``score_mention_pairs`` on the same pairs; and under
     the default and the sense-only scorer configs the matched edges
-    ``(id_a, id_b, score)`` and the ``block_clusters`` rows equal those of
+    ``(id_a, id_b, score)`` and the ``er_clusters`` rows equal those of
     the historical set through ``cluster_mentions`` — on the test world at
     cap 256 and 16 (oversized blocks present) and on hand-built edge-case
     blocks."""
     from word_sense_disambiguation_spark.operators.blocking import (
+        er_clusters,
         er_scored_edges,
         oversized_star_pairs,
     )
-    from word_sense_disambiguation_spark.operators.clustering import block_clusters
 
     def rows(df, *cols):
         return sorted(tuple(r) for r in df.select(*cols).collect())
@@ -351,7 +351,6 @@ def test_er_scored_edges_is_exact_for_the_scorer(spark, sworld):
             assert len(got) == len(set(got))
             assert all(x < y for x, y in got)
             assert set(got) <= reference
-            assert new.filter("lev_norm != 0").count() == 0
             cols = ("id_a", "id_b", "score", "is_match")
             rescored = score_mention_pairs(new.select("id_a", "id_b"), a, **kw)
             assert rows(new, *cols) == rows(rescored, *cols), (cap, kw)
@@ -362,7 +361,7 @@ def test_er_scored_edges_is_exact_for_the_scorer(spark, sworld):
                 e_old.filter("is_match"), *matched
             ), (cap, kw)
             c_old = sorted(tuple(r) for r in cluster_mentions(e_old).collect())
-            c_new = sorted(tuple(r) for r in block_clusters(new).collect())
+            c_new = sorted(tuple(r) for r in er_clusters(new).collect())
             assert c_new == c_old, (cap, kw)
     # the hand blocks exercise what they claim: the parallel pair, the
     # hash-colliding pair, the case-variant same-sense pair and the

@@ -12,6 +12,7 @@ import sys
 import pyspark.sql.functions as F
 import pytest
 
+from word_sense_disambiguation_spark.operators.blocking import er_clusters
 from word_sense_disambiguation_spark.operators.profiling import table_checksum
 from word_sense_disambiguation_spark.plans.checkpoint import (
     MANIFEST,
@@ -170,9 +171,11 @@ def _next_job_id(spark) -> int:
 @pytest.mark.parametrize("cap", (256, 16))
 def test_er_job_counts_and_counters_once(spark, sworld, tmp_path, cap):
     """Each stage manifest records its Spark jobs (job group + status
-    tracker, no extra job): they sum to the jobs the tracker saw, 10 or
+    tracker, no extra job): they sum to the jobs the tracker saw, 7 or
     fewer for the whole ER job at the default cap and at a cap small
-    enough to leave oversized blocks; it also records the tasks those
+    enough to leave oversized blocks, and the clusters stage is one write
+    job — a projection of the committed edges with no Exchange and no
+    MapInPandas in its plan; each manifest also records the tasks those
     jobs ran (at least one per job) and the driver time spent building
     the plan (within the stage's wall time), and the edges manifest
     records its match count. A crash after the data and counters were
@@ -188,7 +191,10 @@ def test_er_job_counts_and_counters_once(spark, sworld, tmp_path, cap):
     manifests = {name: r.manifest(name) for name in ER_STAGES}
     per_stage = {name: m["spark_jobs"] for name, m in manifests.items()}
     assert sum(per_stage.values()) == n_jobs, per_stage
-    assert n_jobs <= 10, per_stage
+    assert n_jobs <= 7, per_stage
+    assert manifests["clusters"]["spark_jobs"] == 1, per_stage
+    plan = er_clusters(out["edges"])._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan and "MapInPandas" not in plan, plan
     assert all(v >= 1 for v in per_stage.values()), per_stage
     for name, m in manifests.items():
         assert m["spark_tasks"] >= m["spark_jobs"], (name, m)

@@ -489,7 +489,6 @@ _DERIVEDQ = [
     "incremental_dedup",
     "blocklist_filter",
     "cluster_split",
-    "phonetic_blocking",
     "zorder_layout",
     "pos_normalize",
     "blocking_join",

@@ -156,8 +156,10 @@ def test_residual_blocks_under_the_er_job_cap(spark):
     all-pairs there, so two NOTA duplicates whose context differs from the
     block hub's still find each other (a 64 cap would star the block over
     its hub and strand them as singletons)."""
-    from word_sense_disambiguation_spark.operators.blocking import er_scored_edges
-    from word_sense_disambiguation_spark.operators.clustering import block_clusters
+    from word_sense_disambiguation_spark.operators.blocking import (
+        er_clusters,
+        er_scored_edges,
+    )
 
     twins = {"m050", "m051"}
     rows = []
@@ -179,7 +181,7 @@ def test_residual_blocks_under_the_er_job_cap(spark):
     got = {r.mention_id: r.entity_id for r in out.collect()}
     cc = {
         r.mention_id: r.entity_id
-        for r in block_clusters(er_scored_edges(batch)).collect()
+        for r in er_clusters(er_scored_edges(batch)).collect()
     }
     assert got == {m: cc.get(m, m) for m in got}
     assert got["m050"] == got["m051"] == "m050"
@@ -214,15 +216,17 @@ def world_split(spark, sworld):
     extra row with a NULL ``norm_surface``."""
     from pyspark.sql import functions as F
 
-    from word_sense_disambiguation_spark.operators.blocking import er_scored_edges
-    from word_sense_disambiguation_spark.operators.clustering import block_clusters
+    from word_sense_disambiguation_spark.operators.blocking import (
+        er_clusters,
+        er_scored_edges,
+    )
     from word_sense_disambiguation_spark.plans.pipeline import sense_assignments
 
     cut = sorted(r.url for r in sworld["pages"].select("url").collect())[90]
     pages = sworld["pages"]
     base = sense_assignments(pages.filter(F.col("url") < cut), sworld["senses"])
     base = base.localCheckpoint(eager=True)
-    base_clusters = block_clusters(er_scored_edges(base)).localCheckpoint(eager=True)
+    base_clusters = er_clusters(er_scored_edges(base)).localCheckpoint(eager=True)
     batch = sense_assignments(pages.filter(F.col("url") >= cut), sworld["senses"])
     null_row = batch.limit(1).select(
         *[
@@ -240,11 +244,12 @@ def _reference_attach(batch, base, base_clusters, kw, max_reps_per_key, max_bloc
     """The attach as a composition of the public scorer and ER functions:
     representatives per (key, entity), ``score_mention_pairs`` on batch x
     representative pairs, best entity by ``max_by``, then
-    ``er_scored_edges`` + ``block_clusters`` on the residual."""
+    ``cluster_mentions`` over ``er_scored_edges`` on the residual (the
+    general connected components, not the attach's block labelling)."""
     from pyspark.sql import functions as F
 
     from word_sense_disambiguation_spark.operators.blocking import er_scored_edges
-    from word_sense_disambiguation_spark.operators.clustering import block_clusters
+    from word_sense_disambiguation_spark.operators.clustering import cluster_mentions
     from word_sense_disambiguation_spark.operators.pairs import score_mention_pairs
 
     keys = ["norm_surface", "pos"]
@@ -276,17 +281,15 @@ def _reference_attach(batch, base, base_clusters, kw, max_reps_per_key, max_bloc
         )
     )
     residual = batch.join(best, on="mention_id", how="left_anti")
-    minted = residual.select("mention_id").join(
-        block_clusters(er_scored_edges(residual, max_block_size, **kw)),
-        on="mention_id",
-        how="left",
-    )
+    clusters = cluster_mentions(er_scored_edges(residual, max_block_size, **kw))
+    minted = residual.select("mention_id").join(clusters, on="mention_id", how="left")
     resolved = [
         (r.mention_id, r.entity_id, "attached", r.best_score) for r in best.collect()
     ] + [
         (r.mention_id, r.entity_id or r.mention_id, "minted", None)
         for r in minted.collect()
     ]
+    clusters.unpersist()
     n_big = residual.groupBy(*keys).count().filter(f"count > {max_block_size}").count()
     return sorted(resolved), sorted(map(tuple, oversized.collect())), n_big
 

@@ -12,8 +12,8 @@ resolves the mentions to entities —
    sense agreement, Jaro-Winkler and context cosine (blocking and scoring
    are one keyed pass, ``operators.blocking.er_scored_edges``),
 3. **clustering** — connected components per block (no edge crosses a
-   block), canonical entity id = minimum member
-   (``operators.clustering.block_clusters``),
+   block), canonical entity id = minimum member, labelled in the same
+   keyed pass and projected by ``operators.blocking.er_clusters``,
 
 with each stage committed by ``plans.checkpoint.run_er_pipeline`` so a
 killed run resumes, and ``streaming.ingest`` attaching new crawl
@@ -27,7 +27,7 @@ path, Arrow-batched pandas UDFs only where Spark has no native operator.
 
 import sys
 
-__version__ = "0.2.0"
+__version__ = "0.3.0"
 
 
 def _share_unchanged_zip_directories() -> None:

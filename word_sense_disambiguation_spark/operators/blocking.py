@@ -7,11 +7,14 @@ key (``wsd/word_sense_disambiguation.py:384-387``) — then
 per block the scorer-aware pairs (only the pairs the pair scorer can
 match, plus one hub star per block that keeps every member in the
 clustered node set) or, for a block over the cap, linear canopy-aware
-star edges, scored in the same pass. ``run_er_pipeline``, the
-driver-contract ER queries and the scaling harness all call it, and the
-incremental attach runs its per-block kernels (:func:`_block_pairs`,
-:func:`_score_pairs`) in its own keyed pass, so every ER job runs the same
-blocking policy and scorer under the same cap (:data:`ER_MAX_BLOCK`).
+star edges, scored in the same pass, whose matched components it labels
+too: each edge row carries its endpoints' entities, and
+:func:`er_clusters` projects them to the clusters without a shuffle.
+``run_er_pipeline``, the driver-contract ER queries and the scaling
+harness all call the pair, and the incremental attach runs the same block
+sequence (:func:`_block_entities`) in its own keyed pass, so every ER job
+runs the same blocking policy, scorer and clustering under the same cap
+(:data:`ER_MAX_BLOCK`).
 
 The rest of the module:
 
@@ -23,15 +26,13 @@ The rest of the module:
   over char shingles (no reference analogue; semantics per the classic
   banding construction, MMDS ch.3), the candidate generator of the
   near-duplicate dedup operators;
-* :func:`phonetic_key_pairs` — Soundex blocking for spelling-variant
-  names that share no surface key (driver query ``phonetic_blocking``);
 * :func:`blocking_quality` — pair completeness and reduction ratio of a
   candidate set against gold pairs.
 
 Every pair generator is skew-aware: hot blocks are the scale killer (a
 block of size B emits B(B-1)/2 pairs), so each takes ``max_block_size``.
-``surface_key_pairs``, ``phonetic_key_pairs`` and ``minhash_lsh_pairs``
-emit a side table of the blocks they dropped — **no silent caps** — and ``er_scored_edges`` turns
+``surface_key_pairs`` and ``minhash_lsh_pairs`` emit a side table of the
+blocks they dropped — **no silent caps** — and ``er_scored_edges`` turns
 such blocks into linear star edges itself. The reference's
 analogue of this discipline is its length-bucketed batching
 (``wsd/masked_language_model.py:113-126``) — bounding worst-case work per
@@ -52,6 +53,7 @@ from word_sense_disambiguation_spark.functions.hashing import (
     lsh_bands,
     minhash_signature,
 )
+from word_sense_disambiguation_spark.operators.clustering import _min_labels
 from word_sense_disambiguation_spark.operators.pairs import (
     MATCH_THRESHOLD,
     W_COS,
@@ -307,6 +309,28 @@ def _score_pairs(
     return score, is_match
 
 
+def _block_entities(
+    pdf: pd.DataFrame,
+    block: np.ndarray,
+    rank: np.ndarray,
+    max_block_size: int,
+    threshold: float,
+    w_jw: float,
+    w_cos: float,
+    w_sense: float,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """The ER block sequence over whole blocks of ``pdf`` -> ``(i, j,
+    score, is_match, label)``: the candidate row pairs of
+    :func:`_block_pairs`, their :func:`_score_pairs` scores, and each
+    member's component label on the id rank (``label[rank[r]]`` is the
+    smallest rank of row r's matched component; a NULL ``is_match`` never
+    merges)."""
+    i, j = _block_pairs(pdf, block, rank, max_block_size)
+    score, is_match = _score_pairs(pdf, i, j, threshold, w_jw, w_cos, w_sense)
+    m = pd.Series(is_match).eq(True).to_numpy()
+    return i, j, score, is_match, _min_labels(len(pdf), rank[i[m]], rank[j[m]])
+
+
 def _block_edges_run(
     batches: Iterator[pd.DataFrame],
     max_block_size: int,
@@ -316,8 +340,8 @@ def _block_edges_run(
     w_sense: float,
 ) -> Iterator[pd.DataFrame]:
     """Per-partition pass of :func:`er_scored_edges` over whole blocks (the
-    partition holds every member of each of its blocks): enumerate the
-    candidate pairs, then score them with :func:`_score_pairs`."""
+    partition holds every member of each of its blocks): the scored edges
+    of :func:`_block_entities`, each endpoint's entity on its first edge."""
     parts = [b for b in batches if len(b)]
     if not parts:
         return
@@ -325,20 +349,23 @@ def _block_edges_run(
     rank, uniq = pd.factorize(pdf["mention_id"], sort=True)  # rank order == id order
     uniq = np.asarray(uniq)
     block = pdf.groupby(["norm_surface", "pos"], sort=False).ngroup().to_numpy()
-    i, j = _block_pairs(pdf, block, rank, max_block_size)
+    i, j, score, is_match, label = _block_entities(
+        pdf, block, rank, max_block_size, threshold, w_jw, w_cos, w_sense
+    )
     if not len(i):
         return
-    score, is_match = _score_pairs(pdf, i, j, threshold, w_jw, w_cos, w_sense)
 
-    first = np.full(block.max() + 1, len(pdf))
-    np.minimum.at(first, block, rank)
+    ends = np.column_stack([i, j]).ravel()  # a0, b0, a1, b1, ...
+    first = np.zeros(len(ends), dtype=bool)
+    first[np.unique(ends, return_index=True)[1]] = True
+    entity = np.where(first, uniq[label[rank[ends]]], None).reshape(-1, 2)
     yield pd.DataFrame({
         "id_a": uniq[rank[i]],
         "id_b": uniq[rank[j]],
-        "lev_norm": np.zeros(len(i), dtype=np.int32),
         "score": score,
         "is_match": is_match,
-        "block_id": uniq[first[block[i]]],
+        "entity_a": entity[:, 0],
+        "entity_b": entity[:, 1],
     })
 
 
@@ -363,7 +390,7 @@ def er_scored_edges(
     w_sense: float = W_SENSE,
 ) -> DataFrame:
     """The ER job's blocking and pair scoring in one keyed pass ->
-    ``(id_a, id_b, lev_norm, score, is_match, block_id)``.
+    ``(id_a, id_b, score, is_match, entity_a, entity_b)``.
 
     ``assignments`` needs ``mention_id`` (unique), the surface key
     ``(norm_surface, pos)`` and the attributes the scorer reads
@@ -394,9 +421,13 @@ def er_scored_edges(
     once per member then ``cosine_batch``, summed as
     ``((0.0 + w_jw·jw) + w_cos·max(cos, 0)) + w_sense·same`` with SQL NULL
     semantics for ``same``; a term whose weight is 0 is not computed.
-    ``lev_norm`` is 0 by construction (both sides share ``norm_surface``).
-    ``block_id`` is the block's minimum mention id: every edge lies inside
-    one block, so :func:`clustering.block_clusters` clusters per block.
+
+    **Entities.** Every edge lies inside one block, so the pass also
+    labels each block's matched components (min-label propagation over
+    the edges with ``is_match`` true): ``entity_a`` / ``entity_b`` hold the
+    endpoint's entity, the minimum id of its component, on exactly one row
+    per mention (its first edge) and NULL on every other row.
+    :func:`er_clusters` projects them to the clusters.
 
     **Exactness.** Every pair of the historical set that the pair scorer
     can match is emitted, for any weights with ``w_jw, w_cos >= 0`` and
@@ -447,9 +478,22 @@ def er_scored_edges(
 
     return members.repartition(*key).mapInPandas(
         run,
-        schema=f"id_a {id_type}, id_b {id_type}, lev_norm int, score double, "
-        f"is_match boolean, block_id {id_type}",
+        schema=f"id_a {id_type}, id_b {id_type}, score double, is_match boolean, "
+        f"entity_a {id_type}, entity_b {id_type}",
     )
+
+
+def er_clusters(edges: DataFrame) -> DataFrame:
+    """The ER job's clusters -> ``(mention_id, entity_id)``: one row per id
+    that appears in :func:`er_scored_edges`' output, read off the entity
+    columns that pass wrote — a narrow projection (one ``inline`` of the
+    two endpoints and a filter), no shuffle, no Python. Its rows equal
+    :func:`clustering.cluster_mentions` on the same edges."""
+    ends = F.array(
+        F.struct(F.col("id_a").alias("mention_id"), F.col("entity_a").alias("entity_id")),
+        F.struct(F.col("id_b").alias("mention_id"), F.col("entity_b").alias("entity_id")),
+    )
+    return edges.select(F.inline(ends)).filter(F.col("entity_id").isNotNull())
 
 
 def minhash_bands(
@@ -609,39 +653,3 @@ def blocking_quality(
             / F.greatest(total, F.lit(1)).cast("double")
         ).alias("reduction_ratio"),
     )
-
-
-def phonetic_key_pairs(
-    df: DataFrame,
-    id_col: str,
-    name_expr: str,
-    max_block_size: int = DEFAULT_MAX_BLOCK,
-) -> tuple[DataFrame, DataFrame]:
-    """Phonetic (Soundex) blocking -> (id_a < id_b) candidate pairs.
-
-    The third member of the blocking family: surface equi-keys catch
-    exact normalized matches, MinHash-LSH catches token-bag overlap, and
-    the phonetic key catches *spelling-variant* names ("Ashcraft" /
-    "Ashcroft") that share no surface key and too few shingles — the
-    classic census-linkage blocker (Fellegi-Sunter era; see
-    ``operators/pairs.py`` for the scoring stage it feeds).
-
-    ``name_expr`` is a SQL expression string (column name or derivation)
-    so the exact same text feeds :func:`soundex_sql` on the oracle side.
-    The key is pure codegen (translate/regexp chains — no UDF); the
-    pairing reuses the skew-capped ``_pairs_within_blocks`` (hot blocks
-    excluded and RETURNED, never silently dropped — a B-sized block
-    emits B(B-1)/2 pairs, so phonetic keys over web-scale name columns
-    MUST be capped: soundex collapses hard, ~26^1*7^3 possible keys).
-
-    Returns ``(pairs, oversized)``; rows whose key is NULL (no letters
-    in the name) never pair — a NULL phonetic key is a non-key, the
-    same consumer contract as ``canonical_url`` (webfilters.py).
-    """
-    from word_sense_disambiguation_spark.functions.phonetic import soundex_col
-
-    keyed = df.select(
-        F.col(id_col), soundex_col(name_expr).alias("phonetic_key")
-    ).filter(F.col("phonetic_key").isNotNull())
-    return _pairs_within_blocks(keyed, id_col, ["phonetic_key"], max_block_size)
-

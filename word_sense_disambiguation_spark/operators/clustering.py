@@ -36,10 +36,11 @@ that stay huge even contracted. All paths produce identical
 oracle).
 
 The ER job itself needs none of that machinery: its edges never cross a
-``(norm_surface, pos)`` block, so :func:`block_clusters` solves each
-block's components with the same NumPy kernel after one shuffle on the
-block id. ``connected_components`` serves graphs whose edges may cross
-blocks (``cluster_mentions``, ``dedup``).
+``(norm_surface, pos)`` block, so ``blocking.er_scored_edges`` labels each
+block's components with :func:`_min_labels` in the same pass that scores
+the edges, and ``blocking.er_clusters`` projects the labels.
+``connected_components`` serves graphs whose edges may cross blocks
+(``cluster_mentions``, ``dedup``).
 
 No reference analogue exists (the reference never clusters across
 requests); semantics are anchored in the paper, tests in a brute-force
@@ -361,7 +362,7 @@ def cluster_mentions(match_edges: DataFrame) -> DataFrame:
     """Match edges (id_a, id_b, is_match) -> (mention_id, entity_id).
 
     The general form, for edges that may cross blocks; the ER job's edges
-    never do, and :func:`block_clusters` clusters them in one keyed pass.
+    never do, and ``blocking.er_scored_edges`` labels them in its own pass.
 
     Non-matching pair members still get singleton clusters so every mention
     that entered pairing receives a canonical id — but singletons NEVER
@@ -411,44 +412,6 @@ def cluster_mentions(match_edges: DataFrame) -> DataFrame:
     out.count()  # materialize the result, then release the edge cache
     me.unpersist(blocking=False)
     return out
-
-
-def _block_cc_run(batches):
-    """Per-partition pass of :func:`block_clusters`: the partition holds
-    every edge of each of its blocks, so its components are complete."""
-    import pandas as pd
-
-    parts = [b for b in batches if len(b)]
-    if not parts:
-        return
-    pdf = pd.concat(parts, ignore_index=True)
-    n = len(pdf)
-    codes, uniques = pd.factorize(
-        pd.concat([pdf["id_a"], pdf["id_b"]], ignore_index=True), sort=True
-    )
-    m = pdf["is_match"].eq(True).to_numpy()  # a NULL is_match never merges
-    lab = _min_labels(len(uniques), codes[:n][m], codes[n:][m])
-    yield pd.DataFrame({"mention_id": uniques, "entity_id": uniques[lab]})
-
-
-def block_clusters(edges: DataFrame) -> DataFrame:
-    """Block-local clustering of scored edges (id_a, id_b, is_match,
-    block_id) -> (mention_id, entity_id), for edges that never cross a
-    block (``blocking.er_scored_edges``' output).
-
-    ONE shuffle on ``block_id`` and one NumPy pass per partition
-    (:func:`_min_labels` over the matched edges) — no global connected
-    components, no ``distinct``, no driver action. Every id that appears in
-    an edge gets exactly one row, and its ``entity_id`` is the minimum id
-    of its matched component: the rows of :func:`cluster_mentions` on the
-    same edges.
-    """
-    id_type = edges.schema["id_a"].dataType.simpleString()
-    return (
-        edges.select("id_a", "id_b", "is_match", "block_id")
-        .repartition("block_id")
-        .mapInPandas(_block_cc_run, schema=f"mention_id {id_type}, entity_id {id_type}")
-    )
 
 
 def cluster_cohesion(

@@ -62,11 +62,10 @@ from pyspark.sql import functions as F
 
 from word_sense_disambiguation_spark.operators.blocking import (
     ER_MAX_BLOCK,
-    _block_pairs,
+    _block_entities,
     _check_pruning_covers,
     _score_pairs,
 )
-from word_sense_disambiguation_spark.operators.clustering import _min_labels
 from word_sense_disambiguation_spark.operators.pairs import (
     MATCH_THRESHOLD,
     W_COS,
@@ -119,15 +118,14 @@ def _attach_run(
     )
     won = best["row"].to_numpy()
 
-    # the rest of the batch clusters among itself as er_scored_edges +
-    # block_clusters would: block pairs, scores, min labels on the id rank
+    # the rest of the batch clusters among itself through the ER job's own
+    # block sequence (er_scored_edges' pass); an unmatched row mints its id
     residual = ~is_rep
     residual[won] = False
     res = pdf[residual].reset_index(drop=True)
     rank, uniq = pd.factorize(res["mention_id"], sort=True)  # rank order == id order
-    a, b = _block_pairs(res, block[residual], rank, max_block_size)
-    m = pd.Series(_score_pairs(res, a, b, *scorer)[1]).eq(True).to_numpy()
-    minted = np.asarray(uniq)[_min_labels(len(res), rank[a[m]], rank[b[m]])[rank]]
+    label = _block_entities(res, block[residual], rank, max_block_size, *scorer)[4]
+    minted = np.asarray(uniq)[label[rank]]
     yield pd.DataFrame({
         "mention_id": np.concatenate([ids[won], ids[residual]]),
         "entity_id": np.concatenate([best["entity_id"].to_numpy(), minted]),
@@ -166,7 +164,7 @@ def attach_mentions_to_clusters(
       ``max_reps_per_key`` distinct entities, excluded from attach.
 
     The residual is blocked, scored and clustered like the snapshot
-    build (``er_scored_edges`` + ``block_clusters``, under
+    build (``er_scored_edges`` + ``er_clusters``, under
     ``max_block_size``), whose pruning is exact only for the scorer
     configs ``pairs.pruning_covers`` accepts; any other config raises
     ``ValueError`` before any Spark job runs.

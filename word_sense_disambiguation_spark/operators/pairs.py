@@ -90,7 +90,6 @@ def score_mention_pairs(
     pairs: DataFrame,
     assignments: DataFrame,
     threshold: float = MATCH_THRESHOLD,
-    materialize: bool = False,
     w_jw: float = W_JW,
     w_cos: float = W_COS,
     w_sense: float = W_SENSE,
@@ -115,10 +114,6 @@ def score_mention_pairs(
         pairs.join(_side(assignments, "a"), on="id_a")
         .join(_side(assignments, "b"), on="id_b")
     )
-    if materialize:
-        # optional barrier for callers that will consume the result many
-        # times without their own checkpoint
-        e = e.localCheckpoint(eager=True)
 
     score = F.lit(0.0)
     if w_jw != 0.0:

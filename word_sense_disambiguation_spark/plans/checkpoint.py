@@ -57,6 +57,7 @@ from pyspark.sql import types as T
 from word_sense_disambiguation_spark import __version__
 from word_sense_disambiguation_spark.operators.blocking import (
     ER_MAX_BLOCK,
+    er_clusters,
     er_scored_edges,
 )
 
@@ -429,14 +430,14 @@ def run_er_pipeline(
 
     ``edges`` is ``blocking.er_scored_edges`` — the one ER blocking and
     scoring policy, one shuffle of the committed assignments on the block
-    key — and its commit observes the match count. ``clusters`` is
-    ``clustering.block_clusters`` over the committed edges: one shuffle on
-    the block id, components solved per block.
+    key, that also labels each block's matched components — and its
+    commit observes the match count. ``clusters`` is
+    ``blocking.er_clusters`` over the committed edges: a narrow projection
+    of the entity columns, one write job with no shuffle and no Python.
     """
     from word_sense_disambiguation_spark.operators.candidates import (
         candidates_for_mentions,
     )
-    from word_sense_disambiguation_spark.operators.clustering import block_clusters
     from word_sense_disambiguation_spark.operators.scoring import (
         assign_senses,
         score_candidates,
@@ -466,7 +467,7 @@ def run_er_pipeline(
             "matches": F.coalesce(F.sum(F.col("is_match").cast("long")), F.lit(0))
         },
     )
-    clusters = r.stage("clusters", lambda: block_clusters(edges))
+    clusters = r.stage("clusters", lambda: er_clusters(edges))
     return {
         "mentions": mentions,
         "assignments": assignments,
