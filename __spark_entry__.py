@@ -892,83 +892,6 @@ def _q_er_eval_bcubed(spark, sf_dir):
     return b_cubed_metrics(_derived_er_labeled(spark, sf_dir))
 
 
-def _q_mutual_best_match(spark, sf_dir):
-    """One-to-one record linkage over the Fellegi-Sunter corrupted-
-    customer world: the SAME nation-blocked, three-field FS-scored pair
-    table as ``fellegi_sunter``, resolved to at-most-one partner per
-    side by ``mutual_best_match`` (argmax both ways — two partial-
-    combined max_by aggregates + one contracted equi-join, never a
-    row_number window). Integer milli scores make the argmax tie rule
-    (score DESC, partner id ASC) exactly replayable; min_score=0 drops
-    the clear non-matches before the argmax, so a record whose true
-    partner scored below zero simply goes unmatched (no forced pair)."""
-    from word_sense_disambiguation_spark.operators.pairs import (
-        mutual_best_match,
-    )
-
-    return mutual_best_match(
-        _fs_scored_customers(spark, sf_dir), score_col="total_milli", min_score=0
-    ).select("id_a", "id_b", F.col("score").cast("long").alias("score"))
-
-
-def _q_pr_sweep(spark, sf_dir):
-    """Threshold-calibration curve over the Fellegi-Sunter corrupted-
-    customer world: the SAME nation-blocked, three-field FS-scored pair
-    table as ``fellegi_sunter`` (UNfiltered — the sweep needs the whole
-    score axis), gold label = same custkey (the corrupted copy of k IS
-    record k), swept by ``pr_threshold_sweep``: one row per distinct
-    integer milli score with exact tp/fp/fn of "match iff score >= t"
-    and single-IEEE-division precision/recall/F1. One partial-combined
-    groupBy(score) contracts the pairs to the <= 3^3-point score
-    alphabet; the cumulative windows run over that tiny table."""
-    from word_sense_disambiguation_spark.operators.evaluation import (
-        pr_threshold_sweep,
-    )
-
-    scored = _fs_scored_customers(spark, sf_dir)
-    labeled = scored.select(
-        F.col("total_milli").alias("score"),
-        (F.col("id_a") == F.col("id_b")).alias("is_match"),
-    )
-    return pr_threshold_sweep(labeled, "score", "is_match")
-
-
-
-
-def _q_threshold_curve(spark, sf_dir):
-    """Cluster-shape-vs-threshold curve over the FS corrupted-customer
-    world: four candidate cutoffs (0/1500/3000/4500 milli) each run the
-    REAL adaptive CC over the pairs scoring at or above them — entity
-    counts, max/mean cluster size per point. Node ids are namespaced
-    ('a:'/'b:') so the original and its corrupted copy are distinct
-    records sharing a key."""
-    from word_sense_disambiguation_spark.operators.clustering import (
-        threshold_cluster_curve,
-    )
-
-    scored = _fs_scored_customers(spark, sf_dir)
-    pairs = scored.select(
-        F.concat(F.lit("a:"), F.col("id_a").cast("string")).alias("id_a"),
-        F.concat(F.lit("b:"), F.col("id_b").cast("string")).alias("id_b"),
-        F.col("total_milli").alias("score"),
-    )
-    return threshold_cluster_curve(pairs, thresholds=(0, 1500, 3000, 4500))
-
-
-def _q_er_size_stats(spark, sf_dir):
-    """One-row shape audit of the derived-world ER clustering (same
-    pred construction as er_eval_pairwise: CC entity or own-id
-    fallback): record/entity counts, max cluster, singleton share, mean
-    size, dedup ratio — exact BIGINTs, single IEEE divisions."""
-    from word_sense_disambiguation_spark.operators.clustering import (
-        cluster_size_stats,
-    )
-
-    return cluster_size_stats(
-        _derived_er_labeled(spark, sf_dir), cluster_col="pred"
-    )
-
-
 def _q_incremental_er_attach(spark, sf_dir):
     """Incremental ER under the full hash gate: the derived corpus is split
     into a frozen base (even doc_ids, clustered with the REAL snapshot
@@ -1319,66 +1242,6 @@ def _q_quality_classifier(spark, sf_dir):
     return quality_classifier_scores(_t(spark, sf_dir, "documents"))
 
 
-def _q_fellegi_sunter(spark, sf_dir):
-    """Fellegi-Sunter probabilistic record linkage: a deterministically
-    corrupted copy of the customer table (name edits, segment blanking,
-    code char swap — all keyed on custkey) is blocked against the
-    original on nation; three Levenshtein agreement levels per field
-    index integer milli log-weights, the exact BIGINT total drives the
-    classic match / possible / non_match three-zone decision; clear
-    non-matches are dropped."""
-    return _fs_scored_customers(spark, sf_dir).filter(
-        F.col("decision") != "non_match"
-    )
-
-
-def _fs_scored_customers(spark, sf_dir):
-    """The FS corrupted-customer world, scored — shared by
-    ``fellegi_sunter`` and ``mutual_best_match``."""
-    from word_sense_disambiguation_spark.operators.pairs import (
-        fellegi_sunter_scores,
-    )
-
-    pairs, comps = _fs_customer_pairs(spark, sf_dir)
-    return fellegi_sunter_scores(pairs, comps, match_milli=3000, review_milli=0)
-
-
-def _fs_customer_pairs(spark, sf_dir):
-    """The raw FS corrupted-customer pair world (nation-blocked pairs +
-    the three comparison specs) — shared by ``fellegi_sunter``,
-    ``mutual_best_match`` and ``fs_pattern_counts``."""
-    cust = _t(spark, sf_dir, "customer")
-    k = F.col("c_custkey")
-    code = F.substring(F.md5(k.cast("string")), 1, 6)
-    orig = cust.select(
-        k.alias("id_a"),
-        F.col("c_nationkey").alias("nk"),
-        F.col("c_name").alias("name_a"),
-        F.col("c_mktsegment").alias("seg_a"),
-        code.alias("code_a"),
-    )
-    name_b = (
-        F.when(k % 4 == 1, F.replace(F.col("c_name"), F.lit("Customer"), F.lit("Custmr")))
-        .when(k % 4 == 2, F.substring(F.col("c_name"), 2, 1000))
-        .when(k % 4 == 3, F.concat(F.col("c_name"), F.lit("x")))
-        .otherwise(F.col("c_name"))
-    )
-    corrupt = cust.select(
-        k.alias("id_b"),
-        F.col("c_nationkey").alias("nk"),
-        name_b.alias("name_b"),
-        F.when(k % 5 == 0, F.lit("UNKNOWN")).otherwise(F.col("c_mktsegment")).alias("seg_b"),
-        F.when(k % 6 == 0, F.concat(F.lit("z"), F.substring(code, 2, 5))).otherwise(code).alias("code_b"),
-    )
-    pairs = orig.join(corrupt, on="nk")
-    comps = [
-        {"name": "name", "left": "name_a", "right": "name_b", "close": 3, "w": (1500, 600, -1200)},
-        {"name": "segment", "left": "seg_a", "right": "seg_b", "close": 0, "w": (800, 0, -800)},
-        {"name": "code", "left": "code_a", "right": "code_b", "close": 2, "w": (2500, 1000, -2000)},
-    ]
-    return pairs, comps
-
-
 def _q_token_diversity(spark, sf_dir):
     """Simpson token diversity per document — the log-free entropy
     analogue (exact integers until one IEEE division); empty docs keep
@@ -1430,95 +1293,6 @@ def _q_script_profile(spark, sf_dir):
     )
 
     return script_profile(_t(spark, sf_dir, "documents"), "doc_id", "text")
-
-
-def _q_sparsify_topk(spark, sf_dir):
-    """kNN sparsification over the close-key customer edge world with
-    keyed integer scores: keep edges in either endpoint's top-2 by
-    (score DESC, partner ASC). Salted two-level windows inside the
-    operator; the oracle replays the UNSALTED per-node top-k (the salt
-    never changes the result — the k best of a set are among the k
-    best of each part)."""
-    from word_sense_disambiguation_spark.operators.clustering import (
-        sparsify_topk_edges,
-    )
-
-    cust = _t(spark, sf_dir, "customer")
-    a = cust.select(
-        F.col("c_custkey").alias("ka"), F.col("c_nationkey").alias("nk")
-    )
-    b = cust.select(
-        F.col("c_custkey").alias("kb"), F.col("c_nationkey").alias("nk")
-    )
-    edges = (
-        a.join(b, on="nk")
-        .filter((F.col("ka") < F.col("kb")) & (F.col("kb") - F.col("ka") <= 3))
-        .select(
-            F.col("ka").alias("id_a"),
-            F.col("kb").alias("id_b"),
-            ((F.col("ka") * 7 + F.col("kb")) % 100).cast("long").alias("score"),
-        )
-    )
-    return sparsify_topk_edges(edges, k=2)
-
-
-def _q_fs_match_probability(spark, sf_dir):
-    """FS posterior decode over the corrupted-customer pair world with
-    documented prior m/u literals: P(match|pattern) as one fixed
-    left-associated IEEE tree of CASE-selected literals (the Splink
-    predict() layer; learned params are estimated elsewhere in real
-    use). Non-dyadic literals are fine — literal parsing and each
-    multiply/divide are correctly rounded on both engines as long as the
-    oracle spells the identical parenthesization. Dyadic 0.5 threshold."""
-    from word_sense_disambiguation_spark.operators.pairs import (
-        fs_match_probability,
-    )
-
-    pairs, comps = _fs_customer_pairs(spark, sf_dir)
-    for spec, m, u in zip(
-        comps,
-        [(0.05, 0.15, 0.8), (0.1, 0.1, 0.8), (0.02, 0.08, 0.9)],
-        [(0.9, 0.07, 0.03), (0.25, 0.05, 0.7), (0.95, 0.04, 0.01)],
-    ):
-        spec["m"], spec["u"] = m, u
-    return fs_match_probability(pairs, comps, lam=0.1, threshold=0.5)
-
-
-def _q_degree_pruned_edges(spark, sf_dir):
-    """Pre-CC degree capping over the same close-key customer edge world
-    as ``cluster_cohesion``: edges touching nodes with degree > 4 are
-    dropped and the hubs surfaced (no silent caps) — the hygiene step
-    that stops one hub surface key welding the match graph into a
-    mega-cluster. Both outputs ride one tagged union: ('edge', id_a,
-    id_b) for kept edges, ('hub', node, degree) for the exclusions."""
-    from word_sense_disambiguation_spark.operators.clustering import (
-        prune_high_degree_edges,
-    )
-
-    cust = _t(spark, sf_dir, "customer")
-    a = cust.select(
-        F.col("c_custkey").alias("ka"), F.col("c_nationkey").alias("nk")
-    )
-    b = cust.select(
-        F.col("c_custkey").alias("kb"), F.col("c_nationkey").alias("nk")
-    )
-    edges = (
-        a.join(b, on="nk")
-        .filter((F.col("ka") < F.col("kb")) & (F.col("kb") - F.col("ka") <= 3))
-        .select(F.col("ka").alias("id_a"), F.col("kb").alias("id_b"))
-    )
-    kept, hubs = prune_high_degree_edges(edges, max_degree=4)
-    return kept.select(
-        F.lit("edge").alias("kind"),
-        F.col("id_a").alias("x"),
-        F.col("id_b").alias("y"),
-    ).unionByName(
-        hubs.select(
-            F.lit("hub").alias("kind"),
-            F.col("node").alias("x"),
-            F.col("degree").alias("y"),
-        )
-    )
 
 
 def _q_ngram_containment(spark, sf_dir):
@@ -1578,58 +1352,6 @@ def _q_tfidf_cosine(spark, sf_dir):
         )
     )
     return tfidf_cosine_pairs(docs, "doc_id", "text", pairs, threshold=0.75)
-
-
-def _q_cluster_cohesion(spark, sf_dir):
-    """Per-cluster cohesion audit over a deterministic customer world:
-    clusters are (nation, segment) groups, candidate edges link same-
-    nation customers with close keys (so some edges cross segment
-    boundaries and must be excluded as inter-cluster), and a keyed
-    modulus picks which edges 'matched'. Exact doubled-integer counts,
-    one IEEE division; singletons -> NULL cohesion. The operator is the
-    CC loop-closer: it measures how far a transitive closure stepped
-    beyond its edge evidence (over-merge chains score low)."""
-    from word_sense_disambiguation_spark.operators.clustering import (
-        cluster_cohesion,
-    )
-
-    cust = _t(spark, sf_dir, "customer")
-    members = cust.select(
-        F.col("c_custkey").alias("mention_id"),
-        F.concat(
-            F.col("c_nationkey").cast("string"), F.lit("|"), F.col("c_mktsegment")
-        ).alias("entity_id"),
-    )
-    a = cust.select(
-        F.col("c_custkey").alias("ka"), F.col("c_nationkey").alias("nk")
-    )
-    b = cust.select(
-        F.col("c_custkey").alias("kb"), F.col("c_nationkey").alias("nk")
-    )
-    edges = (
-        a.join(b, on="nk")
-        .filter((F.col("ka") < F.col("kb")) & (F.col("kb") - F.col("ka") <= 3))
-        .select(
-            F.col("ka").alias("id_a"),
-            F.col("kb").alias("id_b"),
-            ((F.col("ka") + F.col("kb")) % 4 != 0).alias("is_match"),
-        )
-    )
-    return cluster_cohesion(members, edges)
-
-
-def _q_fs_pattern_counts(spark, sf_dir):
-    """The Splink-style EM contraction under the hash gate: the FS
-    customer pair world collapsed to its agreement-pattern table (one
-    partial-combined groupBy over the per-field three-level vector,
-    <= 3^F rows out) — the exact-integer counts an EM weight estimator
-    consumes, hash-replayed here."""
-    from word_sense_disambiguation_spark.operators.pairs import (
-        fs_agreement_patterns,
-    )
-
-    pairs, comps = _fs_customer_pairs(spark, sf_dir)
-    return fs_agreement_patterns(pairs, comps)
 
 
 def _q_blocking_quality(spark, sf_dir):
@@ -2256,56 +1978,6 @@ def _q_scd2_history(spark, sf_dir):
     )
 
 
-def _q_constrained_clusters(spark, sf_dir):
-    """ER cluster repair under cannot-link constraints: a deterministic
-    match graph over user ids (chains u-(u+1) for u%3=0, triangles
-    {u,u+1,u+2} for u%6=0, spokes u-(u+5) for u%10=0) with negative
-    rules forbidding (u,u+1) at u%6=0 and (u,u+5) at u%10=0.
-    Constrained edges are anti-joined away BEFORE clustering; the
-    triangle's third path re-connects its forbidden pair, so those
-    components surface as ``violated`` (no silent order-dependent
-    splits); a spoke endpoint whose only edge was forbidden re-enters
-    as its own singleton via the coalesce join-back — all three
-    semantics branches live in one fixture."""
-    from word_sense_disambiguation_spark.operators.clustering import (
-        constrained_components,
-    )
-
-    u = (
-        _t(spark, sf_dir, "events")
-        .filter(F.col("user_id").isNotNull())
-        .select(F.col("user_id").cast("long").alias("u"))
-        .distinct()
-    )
-    e = (
-        u.filter(F.col("u") % 3 == 0)
-        .select(F.col("u").alias("s"), (F.col("u") + 1).alias("d"))
-        .unionAll(
-            u.filter(F.col("u") % 6 == 0).select(
-                F.col("u").alias("s"), (F.col("u") + 2).alias("d")
-            )
-        )
-        .unionAll(
-            u.filter(F.col("u") % 6 == 0).select(
-                (F.col("u") + 1).alias("s"), (F.col("u") + 2).alias("d")
-            )
-        )
-        .unionAll(
-            u.filter(F.col("u") % 10 == 0).select(
-                F.col("u").alias("s"), (F.col("u") + 5).alias("d")
-            )
-        )
-    )
-    cl = u.filter(F.col("u") % 6 == 0).select(
-        F.col("u").alias("s"), (F.col("u") + 1).alias("d")
-    ).unionAll(
-        u.filter(F.col("u") % 10 == 0).select(
-            F.col("u").alias("s"), (F.col("u") + 5).alias("d")
-        )
-    )
-    return constrained_components(e, cl, src="s", dst="d", cl_a="s", cl_b="d")
-
-
 def _q_interval_merge(spark, sf_dir):
     """Gaps-and-islands coverage merge: deterministic integer fetch
     windows derived from events (start = event_id % 997, length
@@ -2757,17 +2429,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ccnet_buckets": _q_ccnet_buckets,
         "length_outliers": _q_length_outliers,
         "rrf_hybrid": _q_rrf_hybrid,
-        "fellegi_sunter": _q_fellegi_sunter,
-        "mutual_best_match": _q_mutual_best_match,
-        "pr_sweep": _q_pr_sweep,
-        "threshold_curve": _q_threshold_curve,
-        "fs_pattern_counts": _q_fs_pattern_counts,
-        "cluster_cohesion": _q_cluster_cohesion,
         "tfidf_cosine": _q_tfidf_cosine,
         "ngram_containment": _q_ngram_containment,
-        "degree_pruned_edges": _q_degree_pruned_edges,
-        "fs_match_probability": _q_fs_match_probability,
-        "sparsify_topk": _q_sparsify_topk,
         "script_profile": _q_script_profile,
         "vocabulary": _q_vocabulary,
         "cooccurrence": _q_cooccurrence,
@@ -2810,7 +2473,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "er_clusters_derived": _q_er_clusters_derived,
         "er_eval_pairwise": _q_er_eval_pairwise,
         "er_eval_bcubed": _q_er_eval_bcubed,
-        "er_size_stats": _q_er_size_stats,
         "incremental_er_attach": _q_incremental_er_attach,
         "eval_examples": _q_eval_examples,
         "training_prompts": _q_training_prompts,
@@ -2818,7 +2480,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "prompt_path_assignments": _q_prompt_path_assignments,
         "prompt_path_assignments_derived": _q_prompt_path_derived,
         "scd2_history": _q_scd2_history,
-        "constrained_clusters": _q_constrained_clusters,
         "interval_merge": _q_interval_merge,
         "funnel_counts": _q_funnel_counts,
         "snapshot_diff": _q_snapshot_diff,
@@ -3270,128 +2931,6 @@ def oracle_sql() -> dict[str, str]:
                              / CAST(n_chars AS DOUBLE)
                    END AS dominant_ratio
             FROM c
-        """,
-        # FS posterior replay: same agreement levels, identical literal
-        # products (left-associated) and one ratio; computing pm/pu in a
-        # CTE column changes nothing — values, not plans, are hashed.
-        "fs_match_probability": r"""
-            WITH orig AS (
-              SELECT c_custkey AS id_a, c_nationkey AS nk,
-                     c_name AS name_a, c_mktsegment AS seg_a,
-                     substr(md5(CAST(c_custkey AS VARCHAR)), 1, 6) AS code_a
-              FROM customer
-            ),
-            corrupt AS (
-              SELECT c_custkey AS id_b, c_nationkey AS nk,
-                     CASE c_custkey % 4
-                       WHEN 1 THEN replace(c_name, 'Customer', 'Custmr')
-                       WHEN 2 THEN substr(c_name, 2, 1000)
-                       WHEN 3 THEN c_name || 'x'
-                       ELSE c_name END AS name_b,
-                     CASE WHEN c_custkey % 5 = 0 THEN 'UNKNOWN'
-                          ELSE c_mktsegment END AS seg_b,
-                     CASE WHEN c_custkey % 6 = 0
-                          THEN 'z' || substr(substr(md5(CAST(c_custkey AS VARCHAR)), 1, 6), 2, 5)
-                          ELSE substr(md5(CAST(c_custkey AS VARCHAR)), 1, 6) END AS code_b
-              FROM customer
-            ),
-            p AS (SELECT * FROM orig JOIN corrupt USING (nk)),
-            lv AS (
-              SELECT id_a, id_b,
-                     CASE WHEN levenshtein(name_a, name_b) = 0 THEN 2
-                          WHEN levenshtein(name_a, name_b) <= 3 THEN 1
-                          ELSE 0 END AS lvl_name,
-                     CASE WHEN levenshtein(seg_a, seg_b) = 0 THEN 2
-                          ELSE 0 END AS lvl_segment,
-                     CASE WHEN levenshtein(code_a, code_b) = 0 THEN 2
-                          WHEN levenshtein(code_a, code_b) <= 2 THEN 1
-                          ELSE 0 END AS lvl_code
-              FROM p
-            ),
-            t AS (
-              SELECT id_a, id_b, lvl_name, lvl_segment, lvl_code,
-                     (((CAST(0.1 AS DOUBLE)
-                        * CASE lvl_name WHEN 2 THEN CAST(0.8 AS DOUBLE)
-                                        WHEN 1 THEN CAST(0.15 AS DOUBLE)
-                                        ELSE CAST(0.05 AS DOUBLE) END)
-                       * CASE lvl_segment WHEN 2 THEN CAST(0.8 AS DOUBLE)
-                                          WHEN 1 THEN CAST(0.1 AS DOUBLE)
-                                          ELSE CAST(0.1 AS DOUBLE) END)
-                      * CASE lvl_code WHEN 2 THEN CAST(0.9 AS DOUBLE)
-                                      WHEN 1 THEN CAST(0.08 AS DOUBLE)
-                                      ELSE CAST(0.02 AS DOUBLE) END) AS pm,
-                     ((((CAST(1.0 AS DOUBLE) - CAST(0.1 AS DOUBLE))
-                        * CASE lvl_name WHEN 2 THEN CAST(0.03 AS DOUBLE)
-                                        WHEN 1 THEN CAST(0.07 AS DOUBLE)
-                                        ELSE CAST(0.9 AS DOUBLE) END)
-                       * CASE lvl_segment WHEN 2 THEN CAST(0.7 AS DOUBLE)
-                                          WHEN 1 THEN CAST(0.05 AS DOUBLE)
-                                          ELSE CAST(0.25 AS DOUBLE) END)
-                      * CASE lvl_code WHEN 2 THEN CAST(0.01 AS DOUBLE)
-                                      WHEN 1 THEN CAST(0.04 AS DOUBLE)
-                                      ELSE CAST(0.95 AS DOUBLE) END) AS pu
-              FROM lv
-            )
-            SELECT id_a, id_b, lvl_name, lvl_segment, lvl_code,
-                   pm / (pm + pu) AS p_match,
-                   pm / (pm + pu) >= CAST(0.5 AS DOUBLE) AS is_match
-            FROM t
-        """,
-        # Sparsify replay: unsalted per-node top-k windows (salts don't
-        # change the result), either-endpoint union, edge dedup.
-        "sparsify_topk": r"""
-            WITH e AS (
-              SELECT a.c_custkey AS id_a, b.c_custkey AS id_b,
-                     CAST((a.c_custkey * 7 + b.c_custkey) % 100 AS BIGINT)
-                       AS score
-              FROM customer a
-              JOIN customer b ON a.c_nationkey = b.c_nationkey
-              WHERE a.c_custkey < b.c_custkey
-                AND b.c_custkey - a.c_custkey <= 3
-            ),
-            ends AS (
-              SELECT id_a AS node, id_b AS partner, id_a, id_b, score FROM e
-              UNION ALL
-              SELECT id_b AS node, id_a AS partner, id_a, id_b, score FROM e
-            ),
-            ranked AS (
-              SELECT id_a, id_b, score,
-                     row_number() OVER (PARTITION BY node
-                                        ORDER BY score DESC, partner ASC)
-                       AS rn
-              FROM ends
-            )
-            SELECT id_a, id_b, CAST(min(score) AS BIGINT) AS score
-            FROM ranked WHERE rn <= 2
-            GROUP BY id_a, id_b
-        """,
-        # Degree-cap replay: same close-key edge world, symmetrized
-        # endpoint counts, hub exclusion via NOT IN, tagged union.
-        "degree_pruned_edges": r"""
-            WITH e AS (
-              SELECT a.c_custkey AS id_a, b.c_custkey AS id_b
-              FROM customer a
-              JOIN customer b ON a.c_nationkey = b.c_nationkey
-              WHERE a.c_custkey < b.c_custkey
-                AND b.c_custkey - a.c_custkey <= 3
-            ),
-            ends AS (
-              SELECT id_a AS node FROM e
-              UNION ALL SELECT id_b FROM e
-            ),
-            deg AS (
-              SELECT node, CAST(count(*) AS BIGINT) AS degree
-              FROM ends GROUP BY node
-            ),
-            hubs AS (SELECT node, degree FROM deg WHERE degree > 4),
-            kept AS (
-              SELECT id_a, id_b FROM e
-              WHERE id_a NOT IN (SELECT node FROM hubs)
-                AND id_b NOT IN (SELECT node FROM hubs)
-            )
-            SELECT 'edge' AS kind, id_a AS x, id_b AS y FROM kept
-            UNION ALL
-            SELECT 'hub' AS kind, node AS x, degree AS y FROM hubs
         """,
         # Containment replay: same gram/block construction as
         # ngram_jaccard_block, per-side divisions, dyadic 0.75 threshold.
@@ -5081,367 +4620,6 @@ def oracle_sql() -> dict[str, str]:
                      AS reduction_ratio
             FROM n, nc, h
         """,
-        # Fellegi-Sunter replay: same deterministic corruption, DuckDB's
-        # built-in levenshtein (ASCII parity with Spark's pinned by
-        # test; OFF ascii they diverge — codepoints vs UTF-8 bytes — so
-        # every compared field here is ASCII by construction), integer
-        # milli-weight CASE ladders, BIGINT total, three-zone decision.
-        "fellegi_sunter": r"""
-            WITH orig AS (
-              SELECT c_custkey AS id_a, c_nationkey AS nk,
-                     c_name AS name_a, c_mktsegment AS seg_a,
-                     substr(md5(CAST(c_custkey AS VARCHAR)), 1, 6) AS code_a
-              FROM customer
-            ),
-            corrupt AS (
-              SELECT c_custkey AS id_b, c_nationkey AS nk,
-                     CASE c_custkey % 4
-                       WHEN 1 THEN replace(c_name, 'Customer', 'Custmr')
-                       WHEN 2 THEN substr(c_name, 2, 1000)
-                       WHEN 3 THEN c_name || 'x'
-                       ELSE c_name END AS name_b,
-                     CASE WHEN c_custkey % 5 = 0 THEN 'UNKNOWN'
-                          ELSE c_mktsegment END AS seg_b,
-                     CASE WHEN c_custkey % 6 = 0
-                          THEN 'z' || substr(substr(md5(CAST(c_custkey AS VARCHAR)), 1, 6), 2, 5)
-                          ELSE substr(md5(CAST(c_custkey AS VARCHAR)), 1, 6) END AS code_b
-              FROM customer
-            ),
-            p AS (SELECT * FROM orig JOIN corrupt USING (nk)),
-            lv AS (
-              SELECT id_a, id_b,
-                     CASE WHEN levenshtein(name_a, name_b) = 0 THEN 2
-                          WHEN levenshtein(name_a, name_b) <= 3 THEN 1
-                          ELSE 0 END AS lvl_name,
-                     CASE WHEN levenshtein(seg_a, seg_b) = 0 THEN 2
-                          ELSE 0 END AS lvl_segment,
-                     CASE WHEN levenshtein(code_a, code_b) = 0 THEN 2
-                          WHEN levenshtein(code_a, code_b) <= 2 THEN 1
-                          ELSE 0 END AS lvl_code
-              FROM p
-            ),
-            t AS (
-              SELECT id_a, id_b, lvl_name, lvl_segment, lvl_code,
-                     CAST(CASE lvl_name WHEN 2 THEN 1500 WHEN 1 THEN 600 ELSE -1200 END
-                        + CASE lvl_segment WHEN 2 THEN 800 WHEN 1 THEN 0 ELSE -800 END
-                        + CASE lvl_code WHEN 2 THEN 2500 WHEN 1 THEN 1000 ELSE -2000 END
-                        AS BIGINT) AS total_milli
-              FROM lv
-            )
-            SELECT id_a, id_b, lvl_name, lvl_segment, lvl_code, total_milli,
-                   CASE WHEN total_milli >= 3000 THEN 'match'
-                        WHEN total_milli >= 0 THEN 'possible'
-                        ELSE 'non_match' END AS decision
-            FROM t
-            WHERE total_milli >= 0
-        """,
-        # One-to-one linkage replay: same FS-scored world, argmax both
-        # ways spelled as row_number windows (fine in the skew-free
-        # oracle; the operator uses partial-combined max_by aggregates)
-        # with the operator's exact tie rule (score DESC, partner ASC).
-        "mutual_best_match": r"""
-            WITH orig AS (
-              SELECT c_custkey AS id_a, c_nationkey AS nk,
-                     c_name AS name_a, c_mktsegment AS seg_a,
-                     substr(md5(CAST(c_custkey AS VARCHAR)), 1, 6) AS code_a
-              FROM customer
-            ),
-            corrupt AS (
-              SELECT c_custkey AS id_b, c_nationkey AS nk,
-                     CASE c_custkey % 4
-                       WHEN 1 THEN replace(c_name, 'Customer', 'Custmr')
-                       WHEN 2 THEN substr(c_name, 2, 1000)
-                       WHEN 3 THEN c_name || 'x'
-                       ELSE c_name END AS name_b,
-                     CASE WHEN c_custkey % 5 = 0 THEN 'UNKNOWN'
-                          ELSE c_mktsegment END AS seg_b,
-                     CASE WHEN c_custkey % 6 = 0
-                          THEN 'z' || substr(substr(md5(CAST(c_custkey AS VARCHAR)), 1, 6), 2, 5)
-                          ELSE substr(md5(CAST(c_custkey AS VARCHAR)), 1, 6) END AS code_b
-              FROM customer
-            ),
-            p AS (SELECT * FROM orig JOIN corrupt USING (nk)),
-            t AS (
-              SELECT id_a, id_b,
-                     CAST(CASE WHEN levenshtein(name_a, name_b) = 0 THEN 1500
-                               WHEN levenshtein(name_a, name_b) <= 3 THEN 600
-                               ELSE -1200 END
-                        + CASE WHEN levenshtein(seg_a, seg_b) = 0 THEN 800
-                               ELSE -800 END
-                        + CASE WHEN levenshtein(code_a, code_b) = 0 THEN 2500
-                               WHEN levenshtein(code_a, code_b) <= 2 THEN 1000
-                               ELSE -2000 END
-                        AS BIGINT) AS total_milli
-              FROM p
-            ),
-            s AS (SELECT id_a, id_b, total_milli FROM t WHERE total_milli >= 0),
-            ra AS (
-              SELECT id_a, id_b, total_milli,
-                     row_number() OVER (PARTITION BY id_a
-                                        ORDER BY total_milli DESC, id_b ASC) AS rk
-              FROM s
-            ),
-            rb AS (
-              SELECT id_a, id_b,
-                     row_number() OVER (PARTITION BY id_b
-                                        ORDER BY total_milli DESC, id_a ASC) AS rk
-              FROM s
-            )
-            SELECT ra.id_a, ra.id_b, CAST(ra.total_milli AS BIGINT) AS score
-            FROM ra JOIN rb ON ra.id_a = rb.id_a AND ra.id_b = rb.id_b
-            WHERE ra.rk = 1 AND rb.rk = 1
-        """,
-        # Threshold-curve replay: the FS score CTE once, then per cutoff a
-        # recursive-CTE transitive closure over the namespaced surviving
-        # edges and the same one-row shape aggregate; 4 points UNION ALL.
-        "threshold_curve": r"""
-            WITH orig AS (
-              SELECT c_custkey AS id_a, c_nationkey AS nk,
-                     c_name AS name_a, c_mktsegment AS seg_a,
-                     substr(md5(CAST(c_custkey AS VARCHAR)), 1, 6) AS code_a
-              FROM customer
-            ),
-            corrupt AS (
-              SELECT c_custkey AS id_b, c_nationkey AS nk,
-                     CASE c_custkey % 4
-                       WHEN 1 THEN replace(c_name, 'Customer', 'Custmr')
-                       WHEN 2 THEN substr(c_name, 2, 1000)
-                       WHEN 3 THEN c_name || 'x'
-                       ELSE c_name END AS name_b,
-                     CASE WHEN c_custkey % 5 = 0 THEN 'UNKNOWN'
-                          ELSE c_mktsegment END AS seg_b,
-                     CASE WHEN c_custkey % 6 = 0
-                          THEN 'z' || substr(substr(md5(CAST(c_custkey AS VARCHAR)), 1, 6), 2, 5)
-                          ELSE substr(md5(CAST(c_custkey AS VARCHAR)), 1, 6) END AS code_b
-              FROM customer
-            ),
-            p AS (SELECT * FROM orig JOIN corrupt USING (nk)),
-            fs AS (
-              SELECT id_a, id_b,
-                     CAST(CASE WHEN levenshtein(name_a, name_b) = 0 THEN 1500
-                               WHEN levenshtein(name_a, name_b) <= 3 THEN 600
-                               ELSE -1200 END
-                        + CASE WHEN levenshtein(seg_a, seg_b) = 0 THEN 800
-                               ELSE -800 END
-                        + CASE WHEN levenshtein(code_a, code_b) = 0 THEN 2500
-                               WHEN levenshtein(code_a, code_b) <= 2 THEN 1000
-                               ELSE -2000 END
-                        AS BIGINT) AS score
-              FROM p
-            )
-              SELECT CAST(0 AS BIGINT) AS threshold,
-                     CAST(COALESCE(SUM(sz), 0) AS BIGINT) AS n_linked_records,
-                     CAST(COUNT(*) AS BIGINT) AS n_entities,
-                     CAST(COALESCE(MAX(sz), 0) AS BIGINT) AS max_cluster_size,
-                     CASE WHEN COUNT(*) = 0 THEN CAST(NULL AS DOUBLE)
-                          ELSE CAST(COALESCE(SUM(sz), 0) AS DOUBLE)
-                               / CAST(COUNT(*) AS DOUBLE) END AS mean_cluster_size
-              FROM (
-                WITH RECURSIVE e AS (
-                  SELECT 'a:' || CAST(id_a AS VARCHAR) AS src,
-                         'b:' || CAST(id_b AS VARCHAR) AS dst
-                  FROM fs WHERE score >= 0
-                ),
-                nodes AS (SELECT src AS n FROM e UNION SELECT dst FROM e),
-                sym AS (SELECT src, dst FROM e
-                        UNION SELECT dst AS src, src AS dst FROM e),
-                reach(a, b) AS (
-                  SELECT n, n FROM nodes
-                  UNION
-                  SELECT r.a, s.dst FROM reach r JOIN sym s ON r.b = s.src
-                ),
-                comp AS (SELECT a AS node, min(b) AS component
-                         FROM reach GROUP BY a)
-                SELECT component, CAST(count(*) AS BIGINT) AS sz
-                FROM comp GROUP BY component
-              )
-              UNION ALL
-              SELECT CAST(1500 AS BIGINT) AS threshold,
-                     CAST(COALESCE(SUM(sz), 0) AS BIGINT) AS n_linked_records,
-                     CAST(COUNT(*) AS BIGINT) AS n_entities,
-                     CAST(COALESCE(MAX(sz), 0) AS BIGINT) AS max_cluster_size,
-                     CASE WHEN COUNT(*) = 0 THEN CAST(NULL AS DOUBLE)
-                          ELSE CAST(COALESCE(SUM(sz), 0) AS DOUBLE)
-                               / CAST(COUNT(*) AS DOUBLE) END AS mean_cluster_size
-              FROM (
-                WITH RECURSIVE e AS (
-                  SELECT 'a:' || CAST(id_a AS VARCHAR) AS src,
-                         'b:' || CAST(id_b AS VARCHAR) AS dst
-                  FROM fs WHERE score >= 1500
-                ),
-                nodes AS (SELECT src AS n FROM e UNION SELECT dst FROM e),
-                sym AS (SELECT src, dst FROM e
-                        UNION SELECT dst AS src, src AS dst FROM e),
-                reach(a, b) AS (
-                  SELECT n, n FROM nodes
-                  UNION
-                  SELECT r.a, s.dst FROM reach r JOIN sym s ON r.b = s.src
-                ),
-                comp AS (SELECT a AS node, min(b) AS component
-                         FROM reach GROUP BY a)
-                SELECT component, CAST(count(*) AS BIGINT) AS sz
-                FROM comp GROUP BY component
-              )
-              UNION ALL
-              SELECT CAST(3000 AS BIGINT) AS threshold,
-                     CAST(COALESCE(SUM(sz), 0) AS BIGINT) AS n_linked_records,
-                     CAST(COUNT(*) AS BIGINT) AS n_entities,
-                     CAST(COALESCE(MAX(sz), 0) AS BIGINT) AS max_cluster_size,
-                     CASE WHEN COUNT(*) = 0 THEN CAST(NULL AS DOUBLE)
-                          ELSE CAST(COALESCE(SUM(sz), 0) AS DOUBLE)
-                               / CAST(COUNT(*) AS DOUBLE) END AS mean_cluster_size
-              FROM (
-                WITH RECURSIVE e AS (
-                  SELECT 'a:' || CAST(id_a AS VARCHAR) AS src,
-                         'b:' || CAST(id_b AS VARCHAR) AS dst
-                  FROM fs WHERE score >= 3000
-                ),
-                nodes AS (SELECT src AS n FROM e UNION SELECT dst FROM e),
-                sym AS (SELECT src, dst FROM e
-                        UNION SELECT dst AS src, src AS dst FROM e),
-                reach(a, b) AS (
-                  SELECT n, n FROM nodes
-                  UNION
-                  SELECT r.a, s.dst FROM reach r JOIN sym s ON r.b = s.src
-                ),
-                comp AS (SELECT a AS node, min(b) AS component
-                         FROM reach GROUP BY a)
-                SELECT component, CAST(count(*) AS BIGINT) AS sz
-                FROM comp GROUP BY component
-              )
-              UNION ALL
-              SELECT CAST(4500 AS BIGINT) AS threshold,
-                     CAST(COALESCE(SUM(sz), 0) AS BIGINT) AS n_linked_records,
-                     CAST(COUNT(*) AS BIGINT) AS n_entities,
-                     CAST(COALESCE(MAX(sz), 0) AS BIGINT) AS max_cluster_size,
-                     CASE WHEN COUNT(*) = 0 THEN CAST(NULL AS DOUBLE)
-                          ELSE CAST(COALESCE(SUM(sz), 0) AS DOUBLE)
-                               / CAST(COUNT(*) AS DOUBLE) END AS mean_cluster_size
-              FROM (
-                WITH RECURSIVE e AS (
-                  SELECT 'a:' || CAST(id_a AS VARCHAR) AS src,
-                         'b:' || CAST(id_b AS VARCHAR) AS dst
-                  FROM fs WHERE score >= 4500
-                ),
-                nodes AS (SELECT src AS n FROM e UNION SELECT dst FROM e),
-                sym AS (SELECT src, dst FROM e
-                        UNION SELECT dst AS src, src AS dst FROM e),
-                reach(a, b) AS (
-                  SELECT n, n FROM nodes
-                  UNION
-                  SELECT r.a, s.dst FROM reach r JOIN sym s ON r.b = s.src
-                ),
-                comp AS (SELECT a AS node, min(b) AS component
-                         FROM reach GROUP BY a)
-                SELECT component, CAST(count(*) AS BIGINT) AS sz
-                FROM comp GROUP BY component
-              )
-        """,
-        # Threshold-sweep replay: same FS-scored world UNfiltered, gold
-        # = same custkey; one groupBy(score) histogram then cumulative
-        # sums from the top of the score axis — all BIGINT, each metric
-        # ONE IEEE division of exact integers (f1 = 2tp/(2tp+fp+fn)).
-        "pr_sweep": r"""
-            WITH orig AS (
-              SELECT c_custkey AS id_a, c_nationkey AS nk,
-                     c_name AS name_a, c_mktsegment AS seg_a,
-                     substr(md5(CAST(c_custkey AS VARCHAR)), 1, 6) AS code_a
-              FROM customer
-            ),
-            corrupt AS (
-              SELECT c_custkey AS id_b, c_nationkey AS nk,
-                     CASE c_custkey % 4
-                       WHEN 1 THEN replace(c_name, 'Customer', 'Custmr')
-                       WHEN 2 THEN substr(c_name, 2, 1000)
-                       WHEN 3 THEN c_name || 'x'
-                       ELSE c_name END AS name_b,
-                     CASE WHEN c_custkey % 5 = 0 THEN 'UNKNOWN'
-                          ELSE c_mktsegment END AS seg_b,
-                     CASE WHEN c_custkey % 6 = 0
-                          THEN 'z' || substr(substr(md5(CAST(c_custkey AS VARCHAR)), 1, 6), 2, 5)
-                          ELSE substr(md5(CAST(c_custkey AS VARCHAR)), 1, 6) END AS code_b
-              FROM customer
-            ),
-            p AS (SELECT * FROM orig JOIN corrupt USING (nk)),
-            t AS (
-              SELECT id_a, id_b,
-                     CAST(CASE WHEN levenshtein(name_a, name_b) = 0 THEN 1500
-                               WHEN levenshtein(name_a, name_b) <= 3 THEN 600
-                               ELSE -1200 END
-                        + CASE WHEN levenshtein(seg_a, seg_b) = 0 THEN 800
-                               ELSE -800 END
-                        + CASE WHEN levenshtein(code_a, code_b) = 0 THEN 2500
-                               WHEN levenshtein(code_a, code_b) <= 2 THEN 1000
-                               ELSE -2000 END
-                        AS BIGINT) AS score
-              FROM p
-            ),
-            h AS (
-              SELECT score AS threshold,
-                     CAST(SUM(CASE WHEN id_a = id_b THEN 1 ELSE 0 END) AS BIGINT) AS pos,
-                     CAST(SUM(CASE WHEN id_a = id_b THEN 0 ELSE 1 END) AS BIGINT) AS neg
-              FROM t GROUP BY score
-            ),
-            c AS (
-              SELECT threshold,
-                     CAST(SUM(pos) OVER (ORDER BY threshold DESC
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS tp,
-                     CAST(SUM(neg) OVER (ORDER BY threshold DESC
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS fp,
-                     CAST(SUM(pos) OVER ()
-                          - SUM(pos) OVER (ORDER BY threshold DESC
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS fn
-              FROM h
-            )
-            SELECT threshold, tp, fp, fn,
-                   CASE WHEN tp + fp = 0 THEN CAST(NULL AS DOUBLE)
-                        ELSE CAST(tp AS DOUBLE) / CAST(tp + fp AS DOUBLE) END AS precision_at,
-                   CASE WHEN tp + fn = 0 THEN CAST(NULL AS DOUBLE)
-                        ELSE CAST(tp AS DOUBLE) / CAST(tp + fn AS DOUBLE) END AS recall_at,
-                   CASE WHEN 2 * tp + fp + fn = 0 THEN CAST(NULL AS DOUBLE)
-                        ELSE CAST(2 * tp AS DOUBLE) / CAST(2 * tp + fp + fn AS DOUBLE) END AS f1_at
-            FROM c
-        """,
-        # EM contraction replay: same corrupted-customer pair world and
-        # agreement levels, grouped to pattern counts.
-        "fs_pattern_counts": r"""
-            WITH orig AS (
-              SELECT c_custkey AS id_a, c_nationkey AS nk,
-                     c_name AS name_a, c_mktsegment AS seg_a,
-                     substr(md5(CAST(c_custkey AS VARCHAR)), 1, 6) AS code_a
-              FROM customer
-            ),
-            corrupt AS (
-              SELECT c_custkey AS id_b, c_nationkey AS nk,
-                     CASE c_custkey % 4
-                       WHEN 1 THEN replace(c_name, 'Customer', 'Custmr')
-                       WHEN 2 THEN substr(c_name, 2, 1000)
-                       WHEN 3 THEN c_name || 'x'
-                       ELSE c_name END AS name_b,
-                     CASE WHEN c_custkey % 5 = 0 THEN 'UNKNOWN'
-                          ELSE c_mktsegment END AS seg_b,
-                     CASE WHEN c_custkey % 6 = 0
-                          THEN 'z' || substr(substr(md5(CAST(c_custkey AS VARCHAR)), 1, 6), 2, 5)
-                          ELSE substr(md5(CAST(c_custkey AS VARCHAR)), 1, 6) END AS code_b
-              FROM customer
-            ),
-            p AS (SELECT * FROM orig JOIN corrupt USING (nk)),
-            lv AS (
-              SELECT CASE WHEN levenshtein(name_a, name_b) = 0 THEN 2
-                          WHEN levenshtein(name_a, name_b) <= 3 THEN 1
-                          ELSE 0 END AS lvl_name,
-                     CASE WHEN levenshtein(seg_a, seg_b) = 0 THEN 2
-                          ELSE 0 END AS lvl_segment,
-                     CASE WHEN levenshtein(code_a, code_b) = 0 THEN 2
-                          WHEN levenshtein(code_a, code_b) <= 2 THEN 1
-                          ELSE 0 END AS lvl_code
-              FROM p
-            )
-            SELECT lvl_name, lvl_segment, lvl_code,
-                   CAST(count(*) AS BIGINT) AS n_pairs
-            FROM lv
-            GROUP BY lvl_name, lvl_segment, lvl_code
-        """,
         # TF-IDF cosine replay: same integer scaled-DIV weights, HUGEINT
         # dot/norm sums (Spark sums DECIMAL(38,0) — both exact), same
         # fixed IEEE cos^2 tree and exact-dyadic 0.5625 threshold.
@@ -5507,44 +4685,6 @@ def oracle_sql() -> dict[str, str]:
                    CASE WHEN cos2 IS NULL THEN false
                         ELSE cos2 >= 0.5625 END AS is_match
             FROM fin
-        """,
-        # Cohesion replay: same (nation, segment) clusters + close-key
-        # same-nation match edges; doubled-integer counts, one IEEE
-        # division, NULL for singletons.
-        "cluster_cohesion": r"""
-            WITH mem AS (
-              SELECT c_custkey AS id,
-                     CAST(c_nationkey AS VARCHAR) || '|' || c_mktsegment AS cl
-              FROM customer
-            ),
-            e AS (
-              SELECT a.c_custkey AS id_a, b.c_custkey AS id_b
-              FROM customer a
-              JOIN customer b ON a.c_nationkey = b.c_nationkey
-              WHERE a.c_custkey < b.c_custkey
-                AND b.c_custkey - a.c_custkey <= 3
-                AND (a.c_custkey + b.c_custkey) % 4 <> 0
-            ),
-            intra AS (
-              SELECT ma.cl AS cl, CAST(count(*) AS BIGINT) AS m
-              FROM (SELECT DISTINCT id_a, id_b FROM e) e2
-              JOIN mem ma ON ma.id = e2.id_a
-              JOIN mem mb ON mb.id = e2.id_b
-              WHERE ma.cl = mb.cl
-              GROUP BY ma.cl
-            ),
-            sz AS (
-              SELECT cl, CAST(count(*) AS BIGINT) AS n FROM mem GROUP BY cl
-            )
-            SELECT sz.cl AS entity_id,
-                   sz.n AS n_members,
-                   (sz.n * (sz.n - 1)) // 2 AS n_pairs_possible,
-                   CAST(COALESCE(intra.m, 0) AS BIGINT) AS n_match_edges,
-                   CASE WHEN sz.n * (sz.n - 1) = 0 THEN CAST(NULL AS DOUBLE)
-                        ELSE CAST(2 * COALESCE(intra.m, 0) AS DOUBLE)
-                             / CAST(sz.n * (sz.n - 1) AS DOUBLE)
-                   END AS cohesion
-            FROM sz LEFT JOIN intra ON intra.cl = sz.cl
         """,
         # Linear-classifier replay: integer milli-weights ((60-bit md5
         # prefix mod 2001) - 1000), exact BIGINT logit sum (association-
@@ -5873,54 +5013,6 @@ def oracle_sql() -> dict[str, str]:
                                 - 2.0 * CAST(sp2 AS DOUBLE) * CAST(sg2 AS DOUBLE))
                    END AS adjusted_rand
             FROM tot, sp, sg
-        """,
-        # Size-stats replay: same labeled pred construction, one size
-        # aggregate, exact counts, single IEEE divisions.
-        "er_size_stats": f"""
-            WITH pred_cc AS ({_ER_DERIVED_CC_SQL}),
-            docsplit2 AS (
-              SELECT doc_id,
-                     regexp_split_to_array(lower(trim(text)), '[ \t\n\r\f\x0B]+') AS toks
-              FROM documents
-            ),
-            mg AS (
-              SELECT CAST(doc_id AS VARCHAR) || ':' || CAST(i AS VARCHAR)
-                       AS mention_id
-              FROM (
-                SELECT doc_id, i, toks[i + 1] AS tok
-                FROM (SELECT doc_id, toks, unnest(range(len(toks))) AS i
-                      FROM docsplit2)
-                WHERE regexp_matches(toks[i + 1], '^[a-z]+$')
-                  AND length(toks[i + 1]) > 3
-                  AND (doc_id + i) % 23 = 0)
-            ),
-            lab AS (
-              SELECT COALESCE(p.entity_id, mg.mention_id) AS pred
-              FROM mg LEFT JOIN pred_cc p ON p.mention_id = mg.mention_id
-            ),
-            sizes AS (
-              SELECT pred, CAST(count(*) AS BIGINT) AS n
-              FROM lab GROUP BY pred
-            ),
-            agg AS (
-              SELECT CAST(COALESCE(sum(n), 0) AS BIGINT) AS n_records,
-                     CAST(count(*) AS BIGINT) AS n_entities,
-                     CAST(COALESCE(max(n), 0) AS BIGINT) AS max_cluster_size,
-                     CAST(COALESCE(sum(CASE WHEN n = 1 THEN 1 ELSE 0 END), 0) AS BIGINT)
-                       AS n_singletons
-              FROM sizes
-            )
-            SELECT n_records, n_entities, max_cluster_size, n_singletons,
-                   CASE WHEN n_entities = 0 THEN CAST(NULL AS DOUBLE)
-                        ELSE CAST(n_singletons AS DOUBLE)
-                             / CAST(n_entities AS DOUBLE) END AS singleton_share,
-                   CASE WHEN n_entities = 0 THEN CAST(NULL AS DOUBLE)
-                        ELSE CAST(n_records AS DOUBLE)
-                             / CAST(n_entities AS DOUBLE) END AS mean_cluster_size,
-                   CASE WHEN n_records = 0 THEN CAST(NULL AS DOUBLE)
-                        ELSE CAST(1.0 AS DOUBLE) - CAST(n_entities AS DOUBLE)
-                             / CAST(n_records AS DOUBLE) END AS dedup_ratio
-            FROM agg
         """,
         # B-cubed replay: same labeled construction, per-cell INTEGER
         # scaled-DIV contributions (c*((c*10^9)//n)) summed as HUGEINT
@@ -6321,60 +5413,6 @@ def oracle_sql() -> dict[str, str]:
                    n_versions
             FROM runs
             WINDOW w AS (PARTITION BY user_id ORDER BY v)
-        """,
-        # Constrained CC replay: identical deterministic fixture graph,
-        # anti-join constraint removal, recursive-CTE reachability over
-        # the kept symmetric edges, min-id components over the ORIGINAL
-        # node set (constrained-away endpoints re-enter as singletons),
-        # violation = a cannot-link pair still co-clustered.
-        "constrained_clusters": """
-            WITH RECURSIVE u AS (
-              SELECT DISTINCT CAST(user_id AS BIGINT) AS u FROM events
-              WHERE user_id IS NOT NULL
-            ),
-            raw_e AS (
-              SELECT u AS s, u + 1 AS d FROM u WHERE u % 3 = 0
-              UNION ALL SELECT u, u + 2 FROM u WHERE u % 6 = 0
-              UNION ALL SELECT u + 1, u + 2 FROM u WHERE u % 6 = 0
-              UNION ALL SELECT u, u + 5 FROM u WHERE u % 10 = 0
-            ),
-            e AS (
-              SELECT DISTINCT least(s, d) AS a, greatest(s, d) AS b
-              FROM raw_e WHERE s <> d
-            ),
-            cl AS (
-              SELECT DISTINCT least(s, d) AS a, greatest(s, d) AS b FROM (
-                SELECT u AS s, u + 1 AS d FROM u WHERE u % 6 = 0
-                UNION ALL SELECT u, u + 5 FROM u WHERE u % 10 = 0
-              ) WHERE s <> d
-            ),
-            kept AS (
-              SELECT e.a, e.b FROM e
-              ANTI JOIN cl ON e.a = cl.a AND e.b = cl.b
-            ),
-            nodes AS (SELECT a AS n FROM e UNION SELECT b FROM e),
-            sym AS (
-              SELECT a AS src, b AS dst FROM kept WHERE a <> b
-              UNION SELECT b, a FROM kept WHERE a <> b
-            ),
-            reach(x, y) AS (
-              SELECT n, n FROM nodes
-              UNION
-              SELECT r.x, s.dst FROM reach r JOIN sym s ON r.y = s.src
-            ),
-            comp AS (
-              SELECT x AS node, CAST(min(y) AS BIGINT) AS component
-              FROM reach GROUP BY 1
-            ),
-            viol AS (
-              SELECT DISTINCT ca.component
-              FROM cl
-              JOIN comp ca ON cl.a = ca.node
-              JOIN comp cb ON cl.b = cb.node AND ca.component = cb.component
-            )
-            SELECT c.node, c.component,
-                   (v.component IS NOT NULL) AS violated
-            FROM comp c LEFT JOIN viol v ON c.component = v.component
         """,
         # Gaps-and-islands replay. The ordering is TOTAL (s, e, eid):
         # the construction is two window passes (running max -> flag ->

@@ -56,12 +56,6 @@ def main() -> None:
         time_bucket_rollup,
     )
     from word_sense_disambiguation_spark.operators.cdc import scd2_history
-    from word_sense_disambiguation_spark.operators.clustering import (
-        cluster_cohesion,
-        cluster_size_stats,
-        prune_high_degree_edges,
-        sparsify_topk_edges,
-    )
     from word_sense_disambiguation_spark.operators.profiling import (
         checksum_diff,
     )
@@ -73,13 +67,6 @@ def main() -> None:
     )
     from word_sense_disambiguation_spark.operators.evaluation import (
         b_cubed_metrics,
-        pr_threshold_sweep,
-    )
-    from word_sense_disambiguation_spark.operators.pairs import (
-        fellegi_sunter_scores,
-        fs_agreement_patterns,
-        fs_match_probability,
-        mutual_best_match,
     )
     from word_sense_disambiguation_spark.operators.similarity_search import (
         brute_force_topk,
@@ -141,29 +128,6 @@ def main() -> None:
     qvecs = [(int(r.vec_id), list(r.embedding)) for r in emb.orderBy("vec_id").limit(2).collect()]
     ivf = ivf_index(emb, n_lists=8, lloyd_iters=1)
     lsh = lsh_index(emb)
-
-    # FS corrupted-customer world (mirrors the entry's _fs_customer_pairs)
-    cust = spark.read.parquet(os.path.join(sf_dir, "customer.parquet"))
-    fs_raw = (
-        cust.select(
-            F.col("c_custkey").alias("id_a"),
-            F.col("c_nationkey").alias("nk"),
-            F.col("c_name").alias("name_a"),
-        )
-        .join(
-            cust.select(
-                F.col("c_custkey").alias("id_b"),
-                F.col("c_nationkey").alias("nk"),
-                F.concat(F.col("c_name"), F.lit("x")).alias("name_b"),
-            ),
-            on="nk",
-        )
-    )
-    fs_comps = [
-        {"name": "name", "left": "name_a", "right": "name_b", "close": 3, "w": (1500, 600, -1200)},
-    ]
-    cust_pairs = fellegi_sunter_scores(fs_raw, fs_comps)
-    fs_patterns = fs_agreement_patterns(fs_raw, fs_comps)
 
     sections = [
         (
@@ -366,27 +330,6 @@ def main() -> None:
             group_quantiles(docs, ["source"], "n_chars"),
         ),
         (
-            "mutual_best_match (one-to-one linkage argmax)",
-            "Two partial-combined max_by AGGREGATES contract the scored "
-            "pair table to one best-partner row per side entity (a hot "
-            "record's candidate list collapses map-side), then ONE "
-            "equi-join of the two contracted tables — never a row_number "
-            "window. Tests: "
-            "test_blocking_pairs.test_mutual_best_match_aggregate_not_window.",
-            mutual_best_match(
-                cust_pairs, score_col="total_milli", min_score=0
-            ),
-        ),
-        (
-            "fs_pattern_counts (EM agreement-pattern contraction)",
-            "ONE partial-combined groupBy over the per-field agreement "
-            "levels (pure codegen levenshtein CASEs) contracts the pair "
-            "table to <= 3^F rows; the EM that consumes it runs "
-            "driver-side. The pair build's join is the caller's "
-            "blocking, not the operator's.",
-            fs_patterns,
-        ),
-        (
             "er_eval_bcubed (B-cubed clustering metrics)",
             "One partial-combined contingency groupBy over the labeled "
             "input is the only full-data shuffle; per-cluster / "
@@ -404,40 +347,6 @@ def main() -> None:
             ),
         ),
         (
-            "fs_match_probability (FS Bayes posterior decode)",
-            "Per-row fixed IEEE literal tree over codegen levenshtein "
-            "CASEs: no Exchange, no Python, nothing but the caller's "
-            "blocked-pair scan and projections. Tests: "
-            "test_blocking_pairs.test_fs_match_probability_plan_pure_codegen.",
-            fs_match_probability(
-                fs_raw,
-                [
-                    {
-                        "name": "name", "left": "name_a", "right": "name_b",
-                        "close": 3, "m": (0.05, 0.15, 0.8),
-                        "u": (0.9, 0.07, 0.03),
-                    }
-                ],
-            ),
-        ),
-        (
-            "degree_pruned_edges (pre-CC hub capping)",
-            "Degree is ONE partial-combined groupBy over symmetrized "
-            "endpoints; hub exclusion is two anti-joins with NO "
-            "broadcast hint (the hub table is bounded by 2|E|/cap but "
-            "can still be large at crawl scale — AQE decides). No "
-            "window: a 10^6-degree hub costs one combiner row per "
-            "partition, never a sorted window buffer. Tests: "
-            "test_clustering.test_prune_high_degree_plan_no_window.",
-            prune_high_degree_edges(
-                docs.select(
-                    F.col("doc_id").alias("id_a"),
-                    (F.col("doc_id") + 1).alias("id_b"),
-                ),
-                max_degree=4,
-            )[0],
-        ),
-        (
             "tfidf_cosine (token-weighted pair verify)",
             "ONE (doc, token) tf aggregate; df from the tf table "
             "(second partial-combined groupBy — never countDistinct "
@@ -451,33 +360,6 @@ def main() -> None:
                     F.col("doc_id").alias("id_a"),
                     (F.col("doc_id") + 1).alias("id_b"),
                 ),
-            ),
-        ),
-        (
-            "sparsify_topk (kNN-graph edge sparsification)",
-            "Per-node top-k via the salted two-level window construction "
-            "(level-1 partitions by (node, salt) — spill-safe on hubs; "
-            "level 2 hard-bounded at salts*k), then a partial-combined "
-            "edge dedup. Tests: "
-            "test_clustering.test_sparsify_topk_plan_salted_window.",
-            sparsify_topk_edges(
-                docs.select(
-                    F.col("doc_id").alias("id_a"),
-                    (F.col("doc_id") + 1).alias("id_b"),
-                    (F.col("doc_id") % 100).alias("score"),
-                ),
-                k=2,
-            ),
-        ),
-        (
-            "er_size_stats (clustering shape audit)",
-            "One partial-combined size groupBy + a one-row aggregate; "
-            "exact BIGINTs, single IEEE divisions.",
-            cluster_size_stats(
-                docs.select(
-                    F.col("doc_id").alias("mention_id"),
-                    (F.col("doc_id") % 50).alias("entity_id"),
-                )
             ),
         ),
         (
@@ -500,22 +382,6 @@ def main() -> None:
             rank_buckets(
                 docs.select("doc_id", "lang", (F.col("doc_id") % 97).alias("score")),
                 ["lang"], "score", n_buckets=3,
-            ),
-        ),
-        (
-            "pr_sweep (threshold-calibration curve)",
-            "ONE partial-combined groupBy(score) contracts the pair "
-            "table to the distinct-score histogram; the cumulative "
-            "windows run over that bounded alphabet only (deliberate "
-            "single-task step, like the FS pattern table), never over "
-            "pairs. Exact BIGINT tp/fp/fn, one IEEE division per "
-            "metric. Tests: test_pipeline_e2e."
-            "test_pr_threshold_sweep_plan_contracts_before_window.",
-            pr_threshold_sweep(
-                docs.select(
-                    (F.col("doc_id") % 9).alias("score"),
-                    (F.col("doc_id") % 4 == 0).alias("is_match"),
-                )
             ),
         ),
         (
@@ -551,26 +417,6 @@ def main() -> None:
             "tree. Tests: "
             "test_similarity_textstats.test_cooccurrence_invariance_and_plan.",
             cooccurrence_counts(docs, "doc_id", "text", window=2, min_count=5),
-        ),
-        (
-            "cluster_cohesion (CC over-merge audit)",
-            "Match edges normalize via least/greatest, dedup by a "
-            "partial-combined per-(cluster, pair) groupBy (never a "
-            "raw-edge distinct), endpoint clusters attach through two "
-            "hash joins, counts contract to one row per cluster; "
-            "cohesion is one IEEE division of doubled BIGINTs. Tests: "
-            "test_clustering.test_cluster_cohesion_plan_shape.",
-            cluster_cohesion(
-                docs.select(
-                    F.col("doc_id").alias("mention_id"),
-                    (F.col("doc_id") % 50).alias("entity_id"),
-                ),
-                docs.select(
-                    F.col("doc_id").alias("id_a"),
-                    (F.col("doc_id") + 1).alias("id_b"),
-                    (F.col("doc_id") % 3 != 0).alias("is_match"),
-                ),
-            ),
         ),
         (
             "scd2_history (changelog -> validity intervals)",

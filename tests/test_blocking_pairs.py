@@ -449,104 +449,6 @@ def test_cosine_float32_error_within_blocking_margin():
     assert (1.0 / (2 * sq_u * sq_v) > bound).all()
 
 
-def test_fellegi_sunter_three_zones(spark):
-    """Planted pairs land in the right zone: exact record -> match,
-    lightly corrupted -> match/possible, unrelated -> non_match; totals
-    are exact integer sums of the level weights."""
-    from word_sense_disambiguation_spark.operators.pairs import (
-        fellegi_sunter_scores,
-    )
-
-    rows = [
-        # (id_a, id_b, name_a, name_b, code_a, code_b)
-        (1, 1, "Alice Johnson", "Alice Johnson", "abc123", "abc123"),
-        (2, 2, "Bob Smith", "Bob Smyth", "def456", "def456"),
-        (3, 3, "Carol White", "Karol Wite", "ghi789", "zhi789"),
-        (4, 5, "Dan Brown", "Eve Stone", "jkl012", "mno345"),
-        (6, 6, None, None, "pqr678", "pqr678"),
-    ]
-    df = spark.createDataFrame(
-        rows, "id_a long, id_b long, name_a string, name_b string, code_a string, code_b string"
-    )
-    comps = [
-        {"name": "name", "left": "name_a", "right": "name_b", "close": 3, "w": (1500, 600, -1200)},
-        {"name": "code", "left": "code_a", "right": "code_b", "close": 2, "w": (2500, 1000, -2000)},
-    ]
-    out = {
-        (r["id_a"], r["id_b"]): r
-        for r in fellegi_sunter_scores(df, comps, match_milli=3000, review_milli=0).collect()
-    }
-    assert out[(1, 1)]["total_milli"] == 4000 and out[(1, 1)]["decision"] == "match"
-    # Smyth: lev 1 -> close name (600) + exact code (2500) = 3100 -> match
-    assert out[(2, 2)]["lvl_name"] == 1
-    assert out[(2, 2)]["total_milli"] == 3100 and out[(2, 2)]["decision"] == "match"
-    # Karol Wite: lev 3 -> close (600); zhi789: lev 1 -> close (1000) -> possible
-    assert out[(3, 3)]["total_milli"] == 1600 and out[(3, 3)]["decision"] == "possible"
-    assert out[(4, 5)]["total_milli"] == -3200 and out[(4, 5)]["decision"] == "non_match"
-    # NULL-coalesce contract: two NULLs compare exact ('' == '')
-    assert out[(6, 6)]["lvl_name"] == 2 and out[(6, 6)]["decision"] == "match"
-
-
-def test_fellegi_sunter_levenshtein_duckdb_parity(spark):
-    """The oracle claim: Spark F.levenshtein == DuckDB levenshtein on
-    ASCII input — and the KNOWN DIVERGENCE off ASCII is pinned here:
-    Spark counts Unicode codepoints, DuckDB counts UTF-8 BYTES
-    ('café'->'cafe' is 1 vs 2). Same trap family as \\s vs WS_CLASS;
-    any levenshtein expression mirrored into a DuckDB oracle must only
-    ever see ASCII fields (the fellegi_sunter oracle's customer fields
-    are ASCII by construction)."""
-    import duckdb
-
-    import pyspark.sql.functions as F
-
-    ascii_cases = [
-        ("Customer#000000001", "Custmr#000000001"),
-        ("Customer#000000001", "ustomer#000000001"),
-        ("Customer#000000001", "Customer#000000001x"),
-        ("ABc", "abc"),
-        ("kitten", "sitting"),
-        ("", "abc"),
-        ("same", "same"),
-    ]
-    df = spark.createDataFrame(ascii_cases, "a string, b string")
-    got = [r[0] for r in df.select(F.levenshtein("a", "b")).collect()]
-    want = [
-        duckdb.sql("SELECT levenshtein(?, ?)", params=[a, b]).fetchone()[0]
-        for a, b in ascii_cases
-    ]
-    assert got == want
-    # the divergence, pinned so a future engine upgrade that changes it
-    # is caught rather than silently shifting oracle semantics
-    sp = (
-        spark.createDataFrame([("café", "cafe")], "a string, b string")
-        .select(F.levenshtein("a", "b"))
-        .collect()[0][0]
-    )
-    du = duckdb.sql("SELECT levenshtein('café', 'cafe')").fetchone()[0]
-    assert sp == 1 and du == 2
-
-
-def test_fellegi_sunter_plan_no_shuffle(spark):
-    """Scoring an already-blocked pair table is pure per-row codegen:
-    no Exchange, no UDF eval node."""
-    from word_sense_disambiguation_spark.operators.pairs import (
-        fellegi_sunter_scores,
-    )
-
-    df = spark.createDataFrame(
-        [(1, 2, "a", "b")], "id_a long, id_b long, name_a string, name_b string"
-    )
-    comps = [{"name": "name", "left": "name_a", "right": "name_b", "close": 2, "w": (1, 0, -1)}]
-    plan = (
-        fellegi_sunter_scores(df, comps)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "Exchange" not in plan, plan[:1500]
-    assert "Python" not in plan, plan[:1500]
-
-
 def test_blocking_quality_planted(spark):
     """Known candidate/gold sets produce exact metric arithmetic;
     orientation flips, duplicate pairs, and self-pairs are normalized
@@ -584,171 +486,3 @@ def test_blocking_quality_empty_gold_is_vacuously_complete(spark):
     r = blocking_quality(cand, gold, records).collect()[0]
     assert r["n_gold"] == 0 and r["n_hit"] == 0
     assert r["pair_completeness"] == 1.0
-
-
-def test_mutual_best_match_hand_example(spark):
-    """Argmax both ways with the pinned tie rule (score DESC, smallest
-    partner id): a1 ties b1/b2 -> picks b1, but b1 prefers a2 (7 > 5),
-    so only (a2, b1) is mutual; b2's best a1 is not reciprocated."""
-    from word_sense_disambiguation_spark.operators.pairs import (
-        mutual_best_match,
-    )
-
-    rows = [("a1", "b1", 5), ("a1", "b2", 5), ("a2", "b1", 7)]
-    df = spark.createDataFrame(rows, "id_a string, id_b string, score long")
-    got = sorted(
-        (r.id_a, r.id_b, r.score) for r in mutual_best_match(df).collect()
-    )
-    assert got == [("a2", "b1", 7)]
-    # remove the competitor: the tie pair (a1, b1) becomes mutual
-    got2 = sorted(
-        (r.id_a, r.id_b, r.score)
-        for r in mutual_best_match(
-            df.filter(F.col("id_a") != "a2")
-        ).collect()
-    )
-    assert got2 == [("a1", "b1", 5)]
-
-
-def test_mutual_best_match_one_to_one_and_invariance(spark):
-    """Output is one-to-one by construction (each id appears at most
-    once per side), min_score drops sub-threshold candidates BEFORE the
-    argmax, and integer scores make the result partitioning-invariant."""
-    from word_sense_disambiguation_spark.operators.pairs import (
-        mutual_best_match,
-    )
-
-    rows = [
-        (a, b, (a * 7 + b * 3) % 11)
-        for a in range(1, 9)
-        for b in range(1, 9)
-        if (a + b) % 3 != 0
-    ]
-    df = spark.createDataFrame(rows, "id_a long, id_b long, score long")
-    out = mutual_best_match(df).collect()
-    assert len({r.id_a for r in out}) == len(out)
-    assert len({r.id_b for r in out}) == len(out)
-    lo = mutual_best_match(df, min_score=9).collect()
-    assert lo and all(r.score >= 9 for r in lo)
-    # every surviving pair is still each side's global best
-    best = {}
-    for a, b, s in rows:
-        if s >= 9:
-            if a not in best or (-s, b) < best[a][0]:
-                best[a] = ((-s, b), b)
-    assert all(best[r.id_a][1] == r.id_b for r in lo)
-    one = sorted(map(tuple, mutual_best_match(df.coalesce(1)).collect()))
-    many = sorted(map(tuple, mutual_best_match(df.repartition(7)).collect()))
-    assert one == many == sorted(map(tuple, out))
-
-
-def test_mutual_best_match_aggregate_not_window(spark):
-    """The argmax must be the partial-combined max_by AGGREGATE, never a
-    row_number window (a hot record's candidate list would sort-buffer
-    in one task): no Window node in the physical plan."""
-    from word_sense_disambiguation_spark.operators.pairs import (
-        mutual_best_match,
-    )
-
-    df = spark.createDataFrame(
-        [(1, 2, 3)], "id_a long, id_b long, score long"
-    )
-    plan = (
-        mutual_best_match(df)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "Window" not in plan, plan[:1500]
-
-
-def test_fs_agreement_patterns_hand_counts(spark):
-    """Pattern contraction counts exactly: 2 exact-exact pairs, 1
-    close-exact, 1 diff-diff."""
-    from word_sense_disambiguation_spark.operators.pairs import (
-        fs_agreement_patterns,
-    )
-
-    rows = [
-        ("alice", "alice", "k1", "k1"),
-        ("bob", "bob", "k2", "k2"),
-        ("carol", "caro", "k3", "k3"),
-        ("dave", "zzzzzzzz", "k4", "qqqq"),
-    ]
-    df = spark.createDataFrame(
-        rows, "name_a string, name_b string, code_a string, code_b string"
-    )
-    comps = [
-        {"name": "name", "left": "name_a", "right": "name_b", "close": 1, "w": (0, 0, 0)},
-        {"name": "code", "left": "code_a", "right": "code_b", "close": 0, "w": (0, 0, 0)},
-    ]
-    got = {
-        (r.lvl_name, r.lvl_code): r.n_pairs
-        for r in fs_agreement_patterns(df, comps).collect()
-    }
-    assert got == {(2, 2): 2, (1, 2): 1, (0, 0): 1}
-
-
-def test_fs_match_probability_hand_example(spark):
-    """Exact Bayes arithmetic on planted levels, mirrored in python with
-    the same left-associated float tree; all-agree pattern clears 0.5,
-    all-differ pattern lands near zero."""
-    from word_sense_disambiguation_spark.operators.pairs import (
-        fs_match_probability,
-    )
-
-    rows = [
-        (1, 1, "Alice", "Alice", "k111", "k111"),     # exact/exact
-        (2, 2, "Bobby", "Bobbz", "k222", "zzzz"),     # close/diff
-        (3, 3, "Cara", "Zzzzzzzz", "k333", "qqqq"),   # diff/diff
-    ]
-    df = spark.createDataFrame(
-        rows,
-        "id_a long, id_b long, name_a string, name_b string, code_a string, code_b string",
-    )
-    comps = [
-        {"name": "name", "left": "name_a", "right": "name_b", "close": 1,
-         "m": (0.05, 0.15, 0.8), "u": (0.9, 0.07, 0.03)},
-        {"name": "code", "left": "code_a", "right": "code_b", "close": 1,
-         "m": (0.02, 0.08, 0.9), "u": (0.95, 0.04, 0.01)},
-    ]
-    out = {
-        r.id_a: r
-        for r in fs_match_probability(df, comps, lam=0.1, threshold=0.5).collect()
-    }
-
-    def post(mlvls, ulvls):
-        pm = 0.1
-        pu = 1.0 - 0.1
-        for m, u in zip(mlvls, ulvls):
-            pm = pm * m
-            pu = pu * u
-        return pm / (pm + pu)
-
-    assert out[1].p_match == post([0.8, 0.9], [0.03, 0.01])
-    assert out[1].is_match
-    assert out[2].p_match == post([0.15, 0.02], [0.07, 0.95])
-    assert not out[2].is_match
-    assert out[3].p_match == post([0.05, 0.02], [0.9, 0.95])
-    assert out[3].p_match < 0.001
-
-
-def test_fs_match_probability_plan_pure_codegen(spark):
-    """Per-row decode over blocked pairs: no Exchange, no Python."""
-    from word_sense_disambiguation_spark.operators.pairs import (
-        fs_match_probability,
-    )
-
-    df = spark.createDataFrame(
-        [(1, 2, "a", "b")], "id_a long, id_b long, name_a string, name_b string"
-    )
-    comps = [{"name": "name", "left": "name_a", "right": "name_b", "close": 1,
-              "m": (0.1, 0.2, 0.7), "u": (0.7, 0.2, 0.1)}]
-    plan = (
-        fs_match_probability(df, comps)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "Exchange" not in plan, plan[:1200]
-    assert "Python" not in plan, plan[:1200]

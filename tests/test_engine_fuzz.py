@@ -209,18 +209,6 @@ def test_fuzz_driver_queries_parity(spark, fuzz_world, qname):
     _compare(spark_df, entrymod.oracle_sql()[qname], pdf)
 
 
-_CUSTQ = [
-    "fellegi_sunter",
-    "mutual_best_match",
-    "fs_pattern_counts",
-    "fs_match_probability",
-    "pr_sweep",
-    "threshold_curve",
-    "cluster_cohesion",
-    "degree_pruned_edges",
-    "sparsify_topk",
-]
-
 _NAME_BITS = [
     "Customer", "Custmr", "#", "000", "x", "", " ", "--", "Q",
     "aaaaaaaaaaaaaaaaaaaaaaaa", "A b C", ".", "!!",
@@ -229,9 +217,9 @@ _NAME_BITS = [
 
 @pytest.fixture(scope="module")
 def fuzz_customers(tmp_path_factory):
-    """Adversarial ASCII customer world (names stay ASCII on purpose —
-    the oracle-mirrored-levenshtein pin): empty names, repeats, hot
-    nations, duplicate names across keys."""
+    """Adversarial ASCII customer world, the customer table of
+    ``fuzz_events_world``: empty names, repeats, hot nations, duplicate
+    names across keys."""
     rng = random.Random(11)
     rows = []
     for i in range(300):
@@ -247,32 +235,6 @@ def fuzz_customers(tmp_path_factory):
     return str(d), pdf
 
 
-@pytest.mark.parametrize("qname", _CUSTQ)
-def test_fuzz_customer_queries_parity(spark, fuzz_customers, qname):
-    sf_dir, pdf = fuzz_customers
-    spark_df = entrymod.queries()[qname](spark, sf_dir)
-    con_sql = entrymod.oracle_sql()[qname]
-    con = duckdb.connect()
-    con.register("customer", pdf)
-    sp = spark_df.toPandas()
-    du = con.sql(con_sql).df()
-    cols = sorted(sp.columns)
-    assert cols == sorted(du.columns)
-    sp = sp.reindex(cols, axis=1).sort_values(cols).reset_index(drop=True)
-    du = du.reindex(cols, axis=1).sort_values(cols).reset_index(drop=True)
-    assert len(sp) == len(du), (len(sp), len(du))
-
-    def norm(v):
-        if v is None or (isinstance(v, float) and v != v):
-            return "NULL"
-        return repr(v.item() if hasattr(v, "item") else v)
-
-    for c in cols:
-        for i in range(len(sp)):
-            a, b = norm(sp[c].iloc[i]), norm(du[c].iloc[i])
-            assert a == b, (qname, c, i, a, b)
-
-
 _EVQ = [
     "sessionization",
     "running_sum",
@@ -285,11 +247,9 @@ _EVQ = [
     "sampled_quantiles",
     "table_checksum",
     "profile_columns",
-    # r5 scale-ops additions: the burst second stresses the SCD2
-    # tiebreak, and the tiny id range stresses the constrained-CC
-    # fixture arithmetic.
+    # r5 scale-ops addition: the burst second stresses the SCD2
+    # tiebreak.
     "scd2_history",
-    "constrained_clusters",
     # the burst second makes duplicate (s, e) interval ties and
     # same-instant funnel steps — the total-order tiebreak is what's
     # under test
@@ -477,7 +437,6 @@ _DERIVEDQ = [
     "er_clusters_derived",
     "er_eval_pairwise",
     "er_eval_bcubed",
-    "er_size_stats",
     "incremental_er_attach",
     "prompt_path_assignments_derived",
     "media_metadata",

@@ -5,10 +5,14 @@
   breaks a test instead of silently breaking a harness.
 * Every package module is imported by some non-test file, so a module
   that only its own tests reach cannot come back unnoticed.
-* Every public function of the operator modules of the ER job and its
-  incremental attach (``operators.blocking``, ``operators.clustering``,
-  ``operators.pairs``, ``operators.incremental_er``) is imported by some
-  non-test file, so a test-only operator cannot come back into them."""
+* Every public function of the operator modules of the ER job, its
+  incremental attach and its evaluation (``operators.blocking``,
+  ``operators.clustering``, ``operators.pairs``,
+  ``operators.incremental_er``, ``operators.evaluation``) is imported by
+  some non-test file, so a test-only operator cannot come back into them.
+* The driver registries agree: every oracle has its query, and only the
+  two rows-only queries lack an oracle, so a half-deleted family fails.
+* PLANS.md's sections are exactly ``scripts/plan_audit.py``'s, in order."""
 
 from __future__ import annotations
 
@@ -103,7 +107,9 @@ def test_every_er_operator_function_has_a_non_test_importer():
     for path in _non_test_files():
         imported |= set(_package_imports(path))
     orphans = []
-    for module in ("blocking", "clustering", "pairs", "incremental_er"):
+    for module in (
+        "blocking", "clustering", "pairs", "incremental_er", "evaluation"
+    ):
         path = ROOT / PKG / "operators" / f"{module}.py"
         dotted = f"{PKG}.operators.{module}"
         orphans += [
@@ -114,6 +120,34 @@ def test_every_er_operator_function_has_a_non_test_importer():
             and (dotted, node.name) not in imported
         ]
     assert not orphans, f"imported only by tests (or by nothing): {orphans}"
+
+
+def test_driver_registries_agree():
+    import __spark_entry__ as entry
+
+    queries, oracles = set(entry.queries()), set(entry.oracle_sql())
+    assert oracles <= queries, sorted(oracles - queries)
+    # rows-only: both run Arrow float32 kernels no SQL oracle replays
+    assert queries - oracles == {
+        "er_clusters_synthetic", "prompt_path_assignments"
+    }
+
+
+def test_plans_md_sections_are_the_plan_audit_sections():
+    path = ROOT / "scripts" / "plan_audit.py"
+    sections = next(
+        node.value
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path)))
+        if isinstance(node, ast.Assign)
+        and getattr(node.targets[0], "id", None) == "sections"
+    )
+    titles = [ast.literal_eval(el.elts[0]) for el in sections.elts]
+    headings = [
+        line[3:]
+        for line in (ROOT / "PLANS.md").read_text().splitlines()
+        if line.startswith("## ")
+    ]
+    assert titles and titles == headings
 
 
 def test_pyproject_version_is_the_engine_version():

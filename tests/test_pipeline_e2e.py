@@ -325,82 +325,3 @@ def test_pairwise_cluster_metrics_no_pair_join(spark):
     assert "SortMergeJoin" not in plan
     assert "ShuffledHashJoin" not in plan
     assert "CartesianProduct" not in plan
-
-
-def test_pr_threshold_sweep_hand_example(spark):
-    """Hand-computable curve over 7 scored pairs (4 true matches).
-    Distinct thresholds DESC 10,5,0,-5; e.g. at t=5 the >=t set holds
-    3 true + 1 false -> tp=3 fp=1 fn=1, P=R=3/4, F1=6/8."""
-    from word_sense_disambiguation_spark.operators.evaluation import (
-        pr_threshold_sweep,
-    )
-
-    rows = [(10, True), (10, True), (10, False), (5, True),
-            (0, False), (0, False), (-5, True)]
-    df = spark.createDataFrame(rows, "score long, is_match boolean")
-    out = {r.threshold: r for r in pr_threshold_sweep(df, materialize=False).collect()}
-    assert sorted(out) == [-5, 0, 5, 10]
-    assert (out[10].tp, out[10].fp, out[10].fn) == (2, 1, 2)
-    assert out[10].precision_at == 2.0 / 3.0
-    assert out[10].recall_at == 0.5
-    assert out[10].f1_at == 4.0 / 7.0
-    assert (out[5].tp, out[5].fp, out[5].fn) == (3, 1, 1)
-    assert out[5].precision_at == 0.75 == out[5].recall_at
-    assert (out[0].tp, out[0].fp, out[0].fn) == (3, 3, 1)
-    assert out[0].f1_at == 0.6
-    assert (out[-5].tp, out[-5].fp, out[-5].fn) == (4, 3, 0)
-    assert out[-5].recall_at == 1.0
-    # recall is monotone nonincreasing in the threshold, tp+fp covers
-    # everything at the bottom of the axis
-    assert out[-5].tp + out[-5].fp == 7
-
-
-def test_pr_threshold_sweep_invariance_and_edges(spark):
-    """Partitioning/materialization invariance; an all-negative input
-    yields NULL recall (tp+fn=0) but defined precision; NULL scores and
-    NULL labels are excluded."""
-    from word_sense_disambiguation_spark.operators.evaluation import (
-        pr_threshold_sweep,
-    )
-
-    rows = [(10, True), (10, True), (10, False), (5, True),
-            (0, False), (0, False), (-5, True)]
-    df = spark.createDataFrame(rows, "score long, is_match boolean")
-    base = sorted(
-        pr_threshold_sweep(df.coalesce(1), materialize=False).collect()
-    )
-    many = sorted(
-        pr_threshold_sweep(df.repartition(7), materialize=False).collect()
-    )
-    mat = sorted(pr_threshold_sweep(df, materialize=True).collect())
-    assert base == many == mat
-
-    neg = spark.createDataFrame(
-        [(3, False), (1, False), (None, True), (2, None)],
-        "score long, is_match boolean",
-    )
-    out = {r.threshold: r for r in pr_threshold_sweep(neg, materialize=False).collect()}
-    assert sorted(out) == [1, 3]  # NULL score / NULL label rows excluded
-    assert out[3].recall_at is None and out[3].precision_at == 0.0
-    assert out[1].fp == 2 and out[1].tp == 0
-
-
-def test_pr_threshold_sweep_plan_contracts_before_window(spark):
-    """Scale contract: the pair table is contracted by a partial-combined
-    HashAggregate BEFORE any Window runs — the windows only ever see the
-    distinct-score histogram (bounded alphabet), never pair rows."""
-    from word_sense_disambiguation_spark.operators.evaluation import (
-        pr_threshold_sweep,
-    )
-
-    df = spark.range(0, 10000).select(
-        (F.col("id") % 7).alias("score"), (F.col("id") % 3 == 0).alias("is_match")
-    )
-    out = pr_threshold_sweep(df, materialize=False)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "HashAggregate" in plan, plan[:2000]
-    # the Window must consume the aggregate, not the raw input: in the
-    # bottom-up physical string the aggregate appears BELOW the window
-    wpos = plan.find("Window")
-    apos = plan.find("HashAggregate")
-    assert wpos != -1 and apos != -1 and wpos < apos, plan[:2000]

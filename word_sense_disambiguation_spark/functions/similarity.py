@@ -1,9 +1,9 @@
 """Pairwise similarity measures: Jaro-Winkler, Levenshtein, cosine, Jaccard.
 
 Pure-python/NumPy reference implementations; the Spark operators call the
-batch variants inside Arrow pandas UDFs. Levenshtein also exists as the
-built-in ``F.levenshtein`` (used on the hot path); the python version is for
-tests and the combined pair scorer. Jaro-Winkler matches DuckDB's
+batch variants inside Arrow pandas UDFs. No operator scores with
+Levenshtein; the python version is pinned against DuckDB's
+``levenshtein`` by the tests. Jaro-Winkler matches DuckDB's
 ``jaro_winkler_similarity`` (boost threshold 0.7, prefix scale 0.1) so the
 oracle comparison is exact.
 """

@@ -263,101 +263,6 @@ def connected_components(
     return members.union(roots).union(iso).distinct()
 
 
-def constrained_components(
-    edges: DataFrame,
-    cannot_link: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    cl_a: str = "src",
-    cl_b: str = "dst",
-) -> DataFrame:
-    """Connected components under cannot-link constraints — the ER
-    cluster-repair primitive: production linkage rules carry negative
-    knowledge ("these two are DIFFERENT entities — distinct tax ids,
-    conflicting languages") that must override a fuzzy match edge.
-
-    Semantics (deterministic, order-free):
-
-    1. drop every match edge that IS a constrained pair (either
-       orientation — both sides are normalized to ``(least, greatest)``
-       before the anti-join);
-    2. solve plain :func:`connected_components` on the survivors;
-    3. flag RESIDUAL violations: constrained pairs whose endpoints still
-       share a component via an alternative path. Those clusters are not
-       silently split (any split choice would be order-dependent —
-       correlation clustering is NP-hard); they surface as
-       ``violated = true`` for a human/rules queue, the same
-       no-silent-drops discipline as blocking's ``oversized`` side table.
-
-    Output: ``(node, component, violated)``.
-
-    Scale shape: the constraint table is normalized + deduped once and
-    anti-joined (shuffle on the pair key, broadcastable when small);
-    violation detection is two joins of the constraint table against the
-    assignment table, and the violated-component set (tiny: it is a
-    conflict report) broadcasts back onto nodes.
-
-    Reference parity: the reference encodes negative knowledge as the
-    NOTA slot (reject-all option, wsd/prompt.py:31-47); at linkage scale
-    the analogue is pair-level cannot-link repair.
-    """
-    lo = F.least(F.col(src), F.col(dst))
-    hi = F.greatest(F.col(src), F.col(dst))
-    e_norm = edges.select(lo.alias("_a"), hi.alias("_b"))
-    cl_norm = (
-        cannot_link.select(
-            F.least(F.col(cl_a), F.col(cl_b)).alias("_a"),
-            F.greatest(F.col(cl_a), F.col(cl_b)).alias("_b"),
-        )
-        .filter(F.col("_a") != F.col("_b"))
-        .distinct()
-    )
-    kept = e_norm.join(cl_norm, on=["_a", "_b"], how="left_anti")
-    # Solve REAL surviving edges only; endpoints whose every edge was
-    # constrained away re-enter as their own singleton via the
-    # coalesce join-back (the no-self-loops-into-CC rule, CLAUDE.md).
-    assign = connected_components(kept, src="_a", dst="_b")
-    nodes = (
-        e_norm.select(F.col("_a").alias("node"))
-        .union(e_norm.select(F.col("_b").alias("node")))
-        .distinct()
-    )
-    comp = nodes.join(
-        assign.select("node", F.col("component").alias("_c")),
-        on="node",
-        how="left",
-    ).select(
-        "node", F.coalesce(F.col("_c"), F.col("node")).alias("component")
-    )
-    viol_pairs = (
-        cl_norm.join(
-            comp.select(
-                F.col("node").alias("_a"), F.col("component").alias("_ca")
-            ),
-            on="_a",
-        )
-        .join(
-            comp.select(
-                F.col("node").alias("_b"), F.col("component").alias("_cb")
-            ),
-            on="_b",
-        )
-        .filter(F.col("_ca") == F.col("_cb"))
-    )
-    viol_comps = viol_pairs.select(
-        F.col("_ca").alias("component")
-    ).distinct()
-    return comp.join(
-        F.broadcast(viol_comps.withColumn("_v", F.lit(True))),
-        on="component",
-        how="left",
-    ).select(
-        "node",
-        "component",
-        F.coalesce(F.col("_v"), F.lit(False)).alias("violated"),
-    )
-
-
 def cluster_mentions(match_edges: DataFrame) -> DataFrame:
     """Match edges (id_a, id_b, is_match) -> (mention_id, entity_id).
 
@@ -411,334 +316,4 @@ def cluster_mentions(match_edges: DataFrame) -> DataFrame:
     out = out.persist()
     out.count()  # materialize the result, then release the edge cache
     me.unpersist(blocking=False)
-    return out
-
-
-def cluster_cohesion(
-    members: DataFrame,
-    edges: DataFrame,
-    id_col: str = "mention_id",
-    cluster_col: str = "entity_id",
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    match_col: str = "is_match",
-) -> DataFrame:
-    """Per-cluster cohesion audit: what fraction of each predicted
-    cluster's member pairs is backed by an actual scored match edge?
-    Connected components merges TRANSITIVELY — a chain a-b-c-d collapses
-    into one entity on 3 edges where cohesion would want 6 — so low
-    cohesion is the standard production signal for over-merged chains
-    (the pathology threshold-CC is known for; Hassanzadeh et al.'s
-    clustering-quality framing of record linkage).
-
-    Output per cluster: ``(entity_id, n_members, n_pairs_possible
-    = C(n,2), n_match_edges, cohesion = n_match_edges / C(n,2))``.
-    Singletons have no pairs to audit -> NULL cohesion (explicit CASE,
-    never 0/0).
-
-    Scale shape: two hash joins attach each edge endpoint's cluster
-    (edges are blocked-pair scale, members one row per record), the
-    intra-cluster filter drops cross-cluster edges BEFORE any
-    aggregation, duplicate/reversed edges are normalized
-    (least/greatest) and deduped by a partial-combined groupBy per
-    (cluster, pair) — never a distinct over the raw edge table — and
-    the count contracts to one row per cluster. Counts are BIGINT-exact
-    doubled forms (n*(n-1) halves evenly); cohesion is ONE IEEE division
-    of exact integers. No windows, no cartesian products, no collects.
-
-    Reference parity anchor: the engine's own CC construction above
-    (``cluster_mentions``); the audit closes its loop — edges in,
-    clusters out, cohesion says how far the transitive closure stepped
-    beyond the evidence.
-    """
-    sizes = members.groupBy(F.col(cluster_col).alias("entity_id")).agg(
-        F.count("*").cast("long").alias("n_members")
-    )
-    mm = members.select(
-        F.col(id_col).alias("_node"), F.col(cluster_col).alias("_cl")
-    )
-    e = (
-        edges.filter(F.col(match_col))
-        .select(
-            F.least(F.col(id_a), F.col(id_b)).alias("_lid"),
-            F.greatest(F.col(id_a), F.col(id_b)).alias("_gid"),
-        )
-        .filter(F.col("_lid") != F.col("_gid"))
-    )
-    intra = (
-        e.join(mm.withColumnRenamed("_cl", "_cl_a"), e["_lid"] == mm["_node"])
-        .drop("_node")
-        .join(
-            mm.withColumnRenamed("_cl", "_cl_b").withColumnRenamed(
-                "_node", "_node_b"
-            ),
-            F.col("_gid") == F.col("_node_b"),
-        )
-        .filter(F.col("_cl_a") == F.col("_cl_b"))
-        .groupBy(
-            F.col("_cl_a").alias("entity_id"), "_lid", "_gid"
-        )
-        .agg(F.lit(1).alias("_one"))
-        .groupBy("entity_id")
-        .agg(F.count("*").cast("long").alias("n_match_edges"))
-    )
-    return (
-        sizes.join(intra, on="entity_id", how="left")
-        .select(
-            "entity_id",
-            "n_members",
-            F.expr("n_members * (n_members - 1L) DIV 2").alias(
-                "n_pairs_possible"
-            ),
-            F.coalesce(F.col("n_match_edges"), F.lit(0))
-            .cast("long")
-            .alias("n_match_edges"),
-            F.expr(
-                "CASE WHEN n_members * (n_members - 1L) = 0"
-                " THEN CAST(NULL AS DOUBLE)"
-                " ELSE CAST(2L * coalesce(n_match_edges, 0L) AS DOUBLE)"
-                "      / CAST(n_members * (n_members - 1L) AS DOUBLE) END"
-            ).alias("cohesion"),
-        )
-    )
-
-
-def prune_high_degree_edges(
-    edges: DataFrame,
-    max_degree: int = 64,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-) -> tuple[DataFrame, DataFrame]:
-    """Pre-CC graph hygiene: drop every edge that touches a node whose
-    degree exceeds ``max_degree``, and surface those hub nodes in a side
-    table — never silently. Hubs are where threshold-CC goes pathological
-    at crawl scale (one 'John Smith' surface key or boilerplate page
-    matching 10^6 others welds the graph into a mega-cluster); capping
-    degree BEFORE the closure bounds any component's growth rate to
-    ``max_degree`` per hop and keeps the contraction rounds balanced.
-    Same no-silent-caps contract as ``surface_key_pairs``' oversized
-    side table: the caller decides whether hubs get star recovery,
-    manual review, or the bin.
-
-    Scale shape: degree is ONE partial-combined groupBy over the
-    symmetrized endpoint list (explode to (node), count — a hot node's
-    count combines map-side); hubs broadcast back as two left_semi-
-    style exclusion joins (left_anti on each endpoint). No window — a
-    10^6-degree hub costs one combiner row per partition, not a sorted
-    window buffer. Self-loops count once per side (degree 2 total, the
-    standard convention) but are dropped from the kept set regardless —
-    CC derives nothing from them.
-
-    Returns ``(kept_edges, hubs)`` where hubs is ``(node, degree)``.
-    Reference parity anchor: the block-size cap + oversized-table
-    pattern of ``operators/blocking.py:surface_key_pairs`` (same
-    philosophy one graph layer later).
-    """
-    ends = edges.select(F.col(id_a).alias("node")).unionAll(
-        edges.select(F.col(id_b).alias("node"))
-    )
-    deg = ends.groupBy("node").agg(F.count("*").cast("long").alias("degree"))
-    hubs = deg.filter(F.col("degree") > int(max_degree))
-    # no broadcast hint on purpose: the hub table is bounded by
-    # 2|E|/max_degree, which can still be large at crawl scale — AQE
-    # picks broadcast when it actually fits
-    kept = (
-        edges.filter(F.col(id_a) != F.col(id_b))
-        .join(hubs.select(F.col("node").alias(id_a)), on=id_a, how="left_anti")
-        .join(hubs.select(F.col("node").alias(id_b)), on=id_b, how="left_anti")
-        .select(*edges.columns)  # anti-joins move their key first; restore
-    )
-    return kept, hubs
-
-
-def cluster_size_stats(
-    members: DataFrame,
-    cluster_col: str = "entity_id",
-) -> DataFrame:
-    """One-row clustering shape audit — the dataset-card numbers an ER
-    run publishes next to its clusters: ``(n_records, n_entities,
-    max_cluster_size, n_singletons, singleton_share, mean_cluster_size,
-    dedup_ratio)``. ``dedup_ratio = 1 - n_entities/n_records`` is the
-    fraction of records a downstream keep-one-per-entity pass removes;
-    ``singleton_share`` (share of ENTITIES that are singletons) and
-    ``max_cluster_size`` bracket the two failure smells — a blocker that
-    never fires vs a closure that welded a mega-cluster.
-
-    Scale shape: one partial-combined size groupBy, one one-row
-    aggregate over the contracted size table. Exact BIGINT counts; the
-    three ratios are single IEEE divisions (NULL on empty input).
-    """
-    sizes = members.groupBy(F.col(cluster_col).alias("_cl")).agg(
-        F.count("*").cast("long").alias("n")
-    )
-    return sizes.agg(
-        F.coalesce(F.sum("n"), F.lit(0)).cast("long").alias("n_records"),
-        F.count("*").cast("long").alias("n_entities"),
-        F.coalesce(F.max("n"), F.lit(0)).cast("long").alias(
-            "max_cluster_size"
-        ),
-        F.coalesce(
-            F.sum(F.when(F.col("n") == 1, 1).otherwise(0)), F.lit(0)
-        ).cast("long").alias("n_singletons"),
-    ).select(
-        "n_records",
-        "n_entities",
-        "max_cluster_size",
-        "n_singletons",
-        F.expr(
-            "CASE WHEN n_entities = 0 THEN CAST(NULL AS DOUBLE)"
-            " ELSE CAST(n_singletons AS DOUBLE)"
-            " / CAST(n_entities AS DOUBLE) END"
-        ).alias("singleton_share"),
-        F.expr(
-            "CASE WHEN n_entities = 0 THEN CAST(NULL AS DOUBLE)"
-            " ELSE CAST(n_records AS DOUBLE)"
-            " / CAST(n_entities AS DOUBLE) END"
-        ).alias("mean_cluster_size"),
-        F.expr(
-            "CASE WHEN n_records = 0 THEN CAST(NULL AS DOUBLE)"
-            " ELSE CAST(1.0 AS DOUBLE) - CAST(n_entities AS DOUBLE)"
-            " / CAST(n_records AS DOUBLE) END"
-        ).alias("dedup_ratio"),
-    )
-
-
-def sparsify_topk_edges(
-    edges: DataFrame,
-    k: int = 16,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    score_col: str = "score",
-    salts: int = 64,
-) -> DataFrame:
-    """kNN-graph sparsification before CC: keep each edge iff it ranks
-    in the top ``k`` by (score DESC, partner ASC) of EITHER endpoint —
-    the standard keep-the-evidence alternative to
-    ``prune_high_degree_edges``' drop-the-hub policy (embedding-based
-    dedup/ER builds exactly this mutual-kNN-union graph; a hub keeps
-    its k strongest matches instead of losing everything).
-
-    Scale shape is the ``site_quota_sample`` salted two-level top-K,
-    per graph node: level 1 ranks within ``(node, xxhash64(partner) %
-    salts)`` — a 10^6-degree hub's candidate list splits across
-    ``salts`` independent spill-safe window groups — and level 2
-    re-ranks the survivors within ``node``, hard-bounded at
-    ``salts * k`` rows per group by construction. Exact per-node top-k
-    (the k best of a set are among the k best of each part), total
-    deterministic order, then one partial-combined groupBy dedupes
-    edges kept via both endpoints. Input edges are assumed unique per
-    (id_a, id_b) — the engine's pair tables are — duplicates would
-    each occupy a top-k slot. Self-loops are dropped.
-
-    Output: ``(id_a, id_b, <score_col>)``.
-    """
-    from pyspark.sql import Window
-
-    e = edges.filter(F.col(id_a) != F.col(id_b)).select(
-        F.col(id_a).alias("_ea"), F.col(id_b).alias("_eb"),
-        F.col(score_col).alias("_s"),
-    )
-    ends = e.select(
-        F.col("_ea").alias("_node"), F.col("_eb").alias("_partner"),
-        "_ea", "_eb", "_s",
-    ).unionByName(
-        e.select(
-            F.col("_eb").alias("_node"), F.col("_ea").alias("_partner"),
-            "_ea", "_eb", "_s",
-        )
-    ).withColumn(
-        "_salt", F.pmod(F.xxhash64("_partner"), F.lit(int(salts))).cast("int")
-    )
-    w1 = Window.partitionBy("_node", "_salt").orderBy(
-        F.desc("_s"), F.asc("_partner")
-    )
-    lv1 = ends.withColumn("_rn", F.row_number().over(w1)).filter(
-        F.col("_rn") <= int(k)
-    )
-    w2 = Window.partitionBy("_node").orderBy(F.desc("_s"), F.asc("_partner"))
-    kept = (
-        lv1.withColumn("_rn2", F.row_number().over(w2))
-        .filter(F.col("_rn2") <= int(k))
-        .groupBy("_ea", "_eb")
-        .agg(F.first("_s").alias("_s"))
-    )
-    return kept.select(
-        F.col("_ea").alias(id_a), F.col("_eb").alias(id_b),
-        F.col("_s").alias(score_col),
-    )
-
-
-def threshold_cluster_curve(
-    scored_pairs: DataFrame,
-    id_a_col: str = "id_a",
-    id_b_col: str = "id_b",
-    score_col: str = "score",
-    thresholds: tuple[int, ...] = (0, 1500, 3000, 4500),
-) -> DataFrame:
-    """Cluster-shape-vs-threshold curve — the linkage-tuning chart read
-    before picking a match cutoff (Splink's cluster-count chart; the
-    single-link dendrogram sampled at the thresholds that matter): for
-    each candidate threshold, run the REAL transitive clustering over
-    the pairs scoring at or above it and report one row of shape
-    statistics. A threshold too loose shows up as a mega-cluster
-    (max_cluster_size explodes); too tight as entity count collapsing
-    toward the record count.
-
-    Per threshold (all BIGINT, one IEEE division for the mean):
-    ``n_linked_records`` (records touching >= 1 surviving edge —
-    unlinked records are threshold-invariant singletons and deliberately
-    out), ``n_entities`` (connected components over the surviving
-    edges), ``max_cluster_size``, ``mean_cluster_size``. Single-link
-    monotonicity makes the curve interpretable: raising the threshold
-    only ever splits clusters, so ``n_entities`` is nondecreasing in
-    per-linked-record terms while ``max_cluster_size`` is nonincreasing.
-
-    Scale shape: one ``connected_components`` call per threshold — the
-    adaptive CC (single-task NumPy under the threshold, contraction +
-    star rounds above it), so each point costs <= 2 driver rounds on
-    real match graphs; shape stats contract with one partial-combined
-    size groupBy + a one-row aggregate per point; K points union to a
-    K-row table. K is a handful of candidate cutoffs, not a sweep —
-    for the full score axis use ``pr_threshold_sweep`` (per-pair
-    confusion counts, no clustering).
-
-    Reference parity anchor: the confidence-threshold knob the
-    reference exposes on its argmax decision
-    (/root/reference/wsd/word_sense_disambiguation.py:194-217), lifted
-    to the transitive-clustering consequence of the pair decision.
-    """
-    outs = []
-    for t in thresholds:
-        t = int(t)
-        edges = scored_pairs.filter(F.col(score_col) >= t).select(
-            F.col(id_a_col).alias("src"), F.col(id_b_col).alias("dst")
-        )
-        cc = connected_components(edges)
-        sizes = cc.groupBy("component").agg(
-            F.count(F.lit(1)).cast("long").alias("sz")
-        )
-        outs.append(
-            sizes.agg(
-                F.coalesce(F.sum("sz"), F.lit(0))
-                .cast("long")
-                .alias("n_linked_records"),
-                F.count(F.lit(1)).cast("long").alias("n_entities"),
-                F.coalesce(F.max("sz"), F.lit(0))
-                .cast("long")
-                .alias("max_cluster_size"),
-            ).select(
-                F.lit(t).cast("long").alias("threshold"),
-                "n_linked_records",
-                "n_entities",
-                "max_cluster_size",
-                F.expr(
-                    "CASE WHEN n_entities = 0 THEN CAST(NULL AS DOUBLE)"
-                    " ELSE CAST(n_linked_records AS DOUBLE)"
-                    " / CAST(n_entities AS DOUBLE) END"
-                ).alias("mean_cluster_size"),
-            )
-        )
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
     return out

@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def predictions_for_gold(assignments: DataFrame, gold: DataFrame) -> DataFrame:
+def _predictions_for_gold(assignments: DataFrame, gold: DataFrame) -> DataFrame:
     """Join gold mentions to pipeline predictions on ``(url, lemma)``.
 
     The generator plants at most one mention per (url, lemma), so this is a
@@ -33,7 +33,7 @@ def predictions_for_gold(assignments: DataFrame, gold: DataFrame) -> DataFrame:
 
 def accuracy(assignments: DataFrame, gold: DataFrame) -> DataFrame:
     """Mention-level accuracy (reference's benchmark metric)."""
-    j = predictions_for_gold(assignments, gold)
+    j = _predictions_for_gold(assignments, gold)
     correct = F.when(
         F.col("is_nota"), F.col("decision") == F.lit("nota")
     ).otherwise(F.col("pred_sense_id") == F.col("gold_sense_id"))
@@ -56,7 +56,7 @@ def pairwise_f1(assignments: DataFrame, gold: DataFrame) -> DataFrame:
     pair generation — so the metric measures the same decision surface the
     pipeline actually exposes at scale.
     """
-    p = predictions_for_gold(assignments, gold).select(
+    p = _predictions_for_gold(assignments, gold).select(
         "pair_id", "lemma", "pos", "gold_sense_id", "is_nota",
         "decision", "pred_sense_id",
     )
@@ -379,96 +379,3 @@ def disjoint_split(
     md5 hash (same value in Spark and DuckDB — used by the oracle check)."""
     h = F.conv(F.substring(F.md5(F.concat_ws(":", F.lit(str(seed)), F.col(key))), 1, 8), 16, 10)
     return examples.withColumn("bucket", (h.cast("long") % n_buckets).cast("int"))
-
-
-def pr_threshold_sweep(
-    scored: DataFrame,
-    score_col: str = "score",
-    label_col: str = "is_match",
-    materialize: bool = True,
-) -> DataFrame:
-    """Precision/recall/F1 at EVERY distinct score threshold — the
-    match-weight calibration curve a linker reads to pick its match /
-    review cutoffs (Splink's ``threshold_selection`` chart; Fellegi &
-    Sunter 1969 §5's error-rate-indexed decision rule, here swept over
-    the whole score axis instead of solved for one (mu, lambda) point).
-
-    Input: one row per CANDIDATE PAIR with an (integer) comparison score
-    and a boolean gold label. Output: one row per distinct score value
-    ``t`` with the confusion counts of the rule "predict match iff
-    score >= t" — tp/fp/fn as BIGINT, precision/recall/F1 each as ONE
-    IEEE division of exact integers (f1 = 2tp/(2tp+fp+fn), the
-    pair-level harmonic identity — no float intermediate sums anywhere,
-    so any engine replays the curve bit-for-bit).
-
-    Scale shape: ONE partial-combined ``groupBy(score)`` contracts the
-    pair table to one row per DISTINCT SCORE (map-side combine ships a
-    bounded number of rows per partition — for level-indexed integer
-    weights the score alphabet is <= prod(levels_f) ~ 3^F, the same
-    bound as ``fs_agreement_patterns``' pattern table); the
-    cumulative windows then run over that tiny contracted table, never
-    over pairs. Callers with genuinely continuous scores bucket first
-    (the table stays exact for any bucketing). The unpartitioned window
-    is therefore a deliberate single-task step over <= |alphabet| rows,
-    not a skew hazard — mirroring how the FS pattern table is reasoned
-    about. ``materialize`` eagerly localCheckpoints the contracted
-    histogram before the window+total fan-out (multi-consumer rule).
-
-    Labels must be non-NULL booleans (assert-filtered); NULL scores are
-    excluded (a pair with no score has no threshold to sit on) and
-    surfaced via the caller's own accounting if needed.
-
-    Reference parity anchor: the accuracy-vs-confidence trade the
-    reference reads off its renormalized top-1 probabilities
-    (/root/reference/wsd/word_sense_disambiguation.py:194-217) —
-    generalized to the pair-decision surface with exact counts.
-    """
-    from pyspark.sql import Window
-
-    hist = (
-        scored.filter(F.col(score_col).isNotNull() & F.col(label_col).isNotNull())
-        .groupBy(F.col(score_col).alias("threshold"))
-        .agg(
-            F.sum(F.when(F.col(label_col), 1).otherwise(0))
-            .cast("long")
-            .alias("pos"),
-            F.sum(F.when(F.col(label_col), 0).otherwise(1))
-            .cast("long")
-            .alias("neg"),
-        )
-    )
-    if materialize:
-        hist = hist.localCheckpoint(eager=True)
-    # cumulative from the TOP of the score axis: at threshold t the
-    # predicted-match set is every pair scoring >= t.
-    w = (
-        Window.orderBy(F.col("threshold").desc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    wt = Window.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    curve = hist.select(
-        "threshold",
-        F.sum("pos").over(w).cast("long").alias("tp"),
-        F.sum("neg").over(w).cast("long").alias("fp"),
-        (F.sum("pos").over(wt) - F.sum("pos").over(w)).cast("long").alias("fn"),
-    )
-    return curve.select(
-        "threshold",
-        "tp",
-        "fp",
-        "fn",
-        F.expr(
-            "CASE WHEN tp + fp = 0 THEN CAST(NULL AS DOUBLE)"
-            " ELSE CAST(tp AS DOUBLE) / CAST(tp + fp AS DOUBLE) END"
-        ).alias("precision_at"),
-        F.expr(
-            "CASE WHEN tp + fn = 0 THEN CAST(NULL AS DOUBLE)"
-            " ELSE CAST(tp AS DOUBLE) / CAST(tp + fn AS DOUBLE) END"
-        ).alias("recall_at"),
-        F.expr(
-            "CASE WHEN 2 * tp + fp + fn = 0 THEN CAST(NULL AS DOUBLE)"
-            " ELSE CAST(2 * tp AS DOUBLE) / CAST(2 * tp + fp + fn AS DOUBLE) END"
-        ).alias("f1_at"),
-    )
