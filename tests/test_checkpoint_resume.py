@@ -20,6 +20,7 @@ from word_sense_disambiguation_spark.plans.checkpoint import (
     er_binding,
     run_er_pipeline,
 )
+from word_sense_disambiguation_spark.plans.pipeline import sense_assignments
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -123,30 +124,24 @@ def test_mid_stage_bucket_resume(spark, sworld, tmp_path):
 
 
 def test_kill_and_resume_mid_pipeline(spark, sworld, tmp_path):
-    """Simulate a crash after the first of the ER job's four stages;
+    """Simulate a crash after the first of the ER job's three stages;
     resume must not recompute committed stages and must produce identical
     final clusters."""
     run_dir = str(tmp_path / "er")
     pages, senses = sworld["pages"], sworld["senses"]
 
-    # partial run: execute only the first two stages, then "crash"
+    # partial run: execute only the first stage, then "crash"
     r = StageRunner(spark, run_dir, run_id="partial", binding=er_binding(pages, senses))
-    from word_sense_disambiguation_spark.operators.tokenize import mentions_from_pages
-
-    r.stage("mentions", lambda: mentions_from_pages(pages))
-    assert r.is_committed("mentions")
-    mentions_mtime = os.path.getmtime(
-        os.path.join(run_dir, "mentions", "_MANIFEST.json")
-    )
+    r.stage("assignments", lambda: sense_assignments(pages, senses))
+    assert r.is_committed("assignments")
+    manifest = os.path.join(run_dir, "assignments", "_MANIFEST.json")
+    assignments_mtime = os.path.getmtime(manifest)
 
     # resume: full pipeline over the same run_dir
     out = run_er_pipeline(spark, pages, senses, run_dir, run_id="resumed")
     assert out["clusters"].count() > 0
     # committed stage untouched (same manifest file, same mtime)
-    assert (
-        os.path.getmtime(os.path.join(run_dir, "mentions", "_MANIFEST.json"))
-        == mentions_mtime
-    )
+    assert os.path.getmtime(manifest) == assignments_mtime
 
     # and the resumed result equals a from-scratch run
     fresh = run_er_pipeline(spark, pages, senses, str(tmp_path / "er2"), run_id="fresh")
@@ -155,7 +150,20 @@ def test_kill_and_resume_mid_pipeline(spark, sworld, tmp_path):
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 
-ER_STAGES = ("mentions", "assignments", "edges", "clusters")
+def test_er_job_use_html_matches_text_path(spark, sworld, tmp_path):
+    """``use_html=True`` (the pandas extractor over the HTML) commits the
+    same edges and clusters as the default JVM text extractor: the two
+    extractors are row-identical."""
+    pages, senses = sworld["pages"], sworld["senses"]
+    text = run_er_pipeline(spark, pages, senses, str(tmp_path / "text"))
+    html = run_er_pipeline(spark, pages, senses, str(tmp_path / "html"), use_html=True)
+    assert html["runner"].manifest("assignments")["binding"]["use_html"] is True
+    for name in ("edges", "clusters"):
+        assert _checksum(html[name]) == _checksum(text[name]), name
+        assert html["runner"].manifest(name)["rows"] > 0, name
+
+
+ER_STAGES = ("assignments", "edges", "clusters")
 
 
 def _next_job_id(spark) -> int:
@@ -171,7 +179,7 @@ def _next_job_id(spark) -> int:
 @pytest.mark.parametrize("cap", (256, 16))
 def test_er_job_counts_and_counters_once(spark, sworld, tmp_path, cap):
     """Each stage manifest records its Spark jobs (job group + status
-    tracker, no extra job): they sum to the jobs the tracker saw, 7 or
+    tracker, no extra job): they sum to the jobs the tracker saw, 6 or
     fewer for the whole ER job at the default cap and at a cap small
     enough to leave oversized blocks, and the clusters stage is one write
     job — a projection of the committed edges with no Exchange and no
@@ -191,7 +199,7 @@ def test_er_job_counts_and_counters_once(spark, sworld, tmp_path, cap):
     manifests = {name: r.manifest(name) for name in ER_STAGES}
     per_stage = {name: m["spark_jobs"] for name, m in manifests.items()}
     assert sum(per_stage.values()) == n_jobs, per_stage
-    assert n_jobs <= 7, per_stage
+    assert n_jobs <= 6, per_stage
     assert manifests["clusters"]["spark_jobs"] == 1, per_stage
     plan = er_clusters(out["edges"])._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan and "MapInPandas" not in plan, plan
@@ -219,10 +227,11 @@ def test_er_job_counts_and_counters_once(spark, sworld, tmp_path, cap):
 
 def test_run_dir_binding(spark, sworld, tmp_path):
     """A run dir is bound to its parameters, its inputs and the engine
-    version: re-using it with another block cap, other pages or a
-    manifest written by another engine version raises ValueError naming
-    the stage and the field; an identical re-run skips every committed
-    stage."""
+    version: re-using it with another block cap, another ``use_html``,
+    other pages or a manifest written by another engine version raises
+    ValueError naming the stage and the field — also a 0.3.0 run dir that
+    holds only its first stage, ``mentions``, which this layout never
+    commits; an identical re-run skips every committed stage."""
     urls = [x.url for x in sworld["pages"].select("url").orderBy("url").limit(31).collect()]
     pages_dir, other_dir = str(tmp_path / "pages"), str(tmp_path / "other")
     base = sworld["pages"].filter(F.col("url").isin(urls[:30]))
@@ -235,23 +244,32 @@ def test_run_dir_binding(spark, sworld, tmp_path):
     manifest = os.path.join(run_dir, "clusters", "_MANIFEST.json")
     mtime = os.path.getmtime(manifest)
 
-    with pytest.raises(ValueError, match="'mentions'.*max_block_size"):
+    with pytest.raises(ValueError, match="'assignments'.*max_block_size"):
         run_er_pipeline(spark, pages, senses, run_dir, max_block_size=64)
-    with pytest.raises(ValueError, match="'mentions'.*pages"):
+    with pytest.raises(ValueError, match="'assignments'.*use_html"):
+        run_er_pipeline(spark, pages, senses, run_dir, use_html=True)
+    with pytest.raises(ValueError, match="'assignments'.*pages"):
         run_er_pipeline(spark, spark.read.parquet(other_dir), senses, run_dir)
     out = run_er_pipeline(spark, spark.read.parquet(pages_dir), senses, run_dir)
     assert os.path.getmtime(manifest) == mtime
     assert out["clusters"].count() > 0
 
     # a run dir of an older engine (another stage layout) is not resumed
-    path = os.path.join(run_dir, "mentions", MANIFEST)
+    path = os.path.join(run_dir, "assignments", MANIFEST)
     with open(path) as f:
         old = json.load(f)
-    old["binding"]["engine_version"] = "0.1.0"
+    old["binding"]["engine_version"] = "0.3.0"
     with open(path, "w") as f:
         json.dump(old, f)
-    with pytest.raises(ValueError, match="'mentions'.*engine_version"):
+    with pytest.raises(ValueError, match="'assignments'.*engine_version"):
         run_er_pipeline(spark, spark.read.parquet(pages_dir), senses, run_dir)
+    # ... also when it died before committing any stage this layout has
+    partial = os.path.join(str(tmp_path / "partial"), "mentions")
+    os.makedirs(partial)
+    with open(os.path.join(partial, MANIFEST), "w") as f:
+        json.dump({**old, "stage": "mentions"}, f)
+    with pytest.raises(ValueError, match="'mentions'.*engine_version"):
+        run_er_pipeline(spark, pages, senses, str(tmp_path / "partial"))
 
 
 # A driver process that runs the ER job and SIGKILLs itself at one commit
@@ -361,9 +379,9 @@ def test_sigkill_and_resume(spark, parquet_world, tmp_path, point):
         s: os.stat(p).st_mtime_ns for s, p in manifests.items() if os.path.exists(p)
     }
     if point == "after_clusters_data":
-        assert tuple(committed) == ("mentions", "assignments", "edges")
+        assert tuple(committed) == ("assignments", "edges")
     else:
-        assert tuple(committed) == ("mentions", "assignments")
+        assert tuple(committed) == ("assignments",)
 
     out = run_er_pipeline(
         spark, spark.read.parquet(pages_dir), spark.read.parquet(senses_dir), run_dir,

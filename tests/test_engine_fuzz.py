@@ -113,7 +113,8 @@ def test_dotted_capital_i_divergence_pinned(spark):
     """Java's lower('İ') is the two-codepoint full mapping
     'i̇'; DuckDB's is the simple 'i'. Pinned so an engine upgrade
     that changes either side is caught instead of silently shifting
-    oracle semantics (the levenshtein-divergence pin's sibling)."""
+    oracle semantics (a sibling of the codepoint-vs-byte levenshtein
+    trap)."""
     sp = (
         spark.createDataFrame([("İ",)], "t string")
         .select(F.lower("t"))

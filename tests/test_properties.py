@@ -18,10 +18,7 @@ from word_sense_disambiguation_spark.functions.hashing import (
     minhash_signature,
     simhash64,
 )
-from word_sense_disambiguation_spark.functions.similarity import (
-    jaro_winkler,
-    levenshtein,
-)
+from word_sense_disambiguation_spark.functions.similarity import jaro_winkler
 from word_sense_disambiguation_spark.functions.text import (
     SentenceAlreadyMarkedError,
     WordNotFoundError,
@@ -40,13 +37,6 @@ _ascii_word = st.text(
 def test_jaro_winkler_matches_duckdb(a, b):
     d = duckdb.sql("select jaro_winkler_similarity(?, ?)", params=[a, b]).fetchone()[0]
     assert abs(jaro_winkler(a, b) - d) < 1e-9, (a, b)
-
-
-@settings(max_examples=200, deadline=None)
-@given(_ascii_word, _ascii_word)
-def test_levenshtein_matches_duckdb(a, b):
-    d = duckdb.sql("select levenshtein(?, ?)", params=[a, b]).fetchone()[0]
-    assert levenshtein(a, b) == d, (a, b)
 
 
 @settings(max_examples=100, deadline=None)

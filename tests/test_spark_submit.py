@@ -65,13 +65,13 @@ def test_spark_submit_pipeline_and_resume(spark, world, tmp_path):
     assert r.returncode == 0, r.stderr[-3000:]
     line = [ln for ln in r.stdout.splitlines() if ln.startswith("{")][-1]
     rows = json.loads(line)["rows"]
-    assert rows["clusters"] > 0 and rows["mentions"] > 0
+    assert rows["clusters"] > 0 and rows["assignments"] > 0
     assert os.path.exists(os.path.join(run_dir, "clusters", "_MANIFEST.json"))
     assert os.path.exists(os.path.join(run_dir, "metrics"))
 
     # resume: a second submit must skip all committed stages (manifest
     # mtimes unchanged) and report identical row counts
-    mtime = os.path.getmtime(os.path.join(run_dir, "mentions", "_MANIFEST.json"))
+    mtime = os.path.getmtime(os.path.join(run_dir, "assignments", "_MANIFEST.json"))
     r2 = subprocess.run(
         cmd[:-1] + ["submit2"], capture_output=True, text=True, timeout=900, env=env
     )
@@ -80,7 +80,7 @@ def test_spark_submit_pipeline_and_resume(spark, world, tmp_path):
         [ln for ln in r2.stdout.splitlines() if ln.startswith("{")][-1]
     )["rows"]
     assert rows2 == rows
-    assert os.path.getmtime(os.path.join(run_dir, "mentions", "_MANIFEST.json")) == mtime
+    assert os.path.getmtime(os.path.join(run_dir, "assignments", "_MANIFEST.json")) == mtime
 
 
 def test_default_driver_heap_fits_the_host(spark):

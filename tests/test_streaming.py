@@ -1,5 +1,5 @@
 """Structured Streaming surfaces: batch/stream parity for windowed counts,
-incremental flagship pipeline via foreachBatch with exactly-once resume."""
+the streamed attach to frozen clusters and append-mode sessionization."""
 
 from __future__ import annotations
 
@@ -8,10 +8,7 @@ import shutil
 
 import pyspark.sql.functions as F
 
-from word_sense_disambiguation_spark.streaming.ingest import (
-    stream_sense_assignments,
-    stream_windowed_event_counts,
-)
+from word_sense_disambiguation_spark.streaming.ingest import stream_windowed_event_counts
 
 EVENTS_SCHEMA = (
     "event_id long, ts timestamp, user_id long, event_type string, "
@@ -38,34 +35,6 @@ def test_stream_batch_parity_windowed_counts(spark, tmp_path):
     s = streamed.select("window_start", "event_type", "n", "sum_value")
     assert s.exceptAll(batch).count() == 0
     assert batch.exceptAll(s).count() == 0
-
-
-def test_incremental_sense_pipeline_resumes(spark, world, tmp_path):
-    """Two micro-batch rounds: new files only are processed on round 2
-    (checkpointed offsets), and the union equals the batch run."""
-    from word_sense_disambiguation_spark.datagen import world_to_spark
-    from word_sense_disambiguation_spark.plans.pipeline import sense_assignments
-
-    sw = world_to_spark(spark, world)
-    pages_dir = str(tmp_path / "pages")
-    out_dir = str(tmp_path / "out")
-    ck_dir = str(tmp_path / "ck")
-
-    first = sw["pages"].filter(F.col("url") < "https://synthetic.example/0000/page-0000060")
-    rest = sw["pages"].filter(F.col("url") >= "https://synthetic.example/0000/page-0000060")
-    first.write.mode("append").parquet(pages_dir)
-    n1 = stream_sense_assignments(spark, pages_dir, sw["senses"], out_dir, ck_dir)
-    assert n1 > 0
-
-    rest.write.mode("append").parquet(pages_dir)
-    n2 = stream_sense_assignments(spark, pages_dir, sw["senses"], out_dir, ck_dir)
-    assert n2 > n1
-
-    batch = sense_assignments(sw["pages"], sw["senses"]).drop("context_words")
-    streamed = spark.read.parquet(out_dir)
-    cols = ["mention_id", "decision", "pred_sense_id"]
-    assert streamed.select(cols).exceptAll(batch.select(cols)).count() == 0
-    assert batch.select(cols).exceptAll(streamed.select(cols)).count() == 0
 
 
 def test_stream_attach_to_clusters_parity(spark, tmp_path):
@@ -133,75 +102,6 @@ def test_stream_attach_to_clusters_parity(spark, tmp_path):
     assert len(ids) == len(set(ids))
     base_assignments.unpersist()
     base_clusters.unpersist()
-
-
-def test_stream_curate_increment_parity(spark, tmp_path):
-    """Streaming corpus admission == the batch decision per micro-batch:
-    a frozen corpus, two increment files (maxFilesPerTrigger=1 -> two
-    epochs) carrying an exact dup, a near dup, a novel doc and a
-    quality-reject each; the streamed decision rows must equal the
-    union of per-increment BATCH quality+incremental_dedup decisions."""
-    from word_sense_disambiguation_spark.operators.dedup import (
-        incremental_dedup,
-    )
-    from word_sense_disambiguation_spark.operators.webfilters import (
-        quality_rule_flags,
-    )
-    from word_sense_disambiguation_spark.streaming.ingest import (
-        stream_curate_increment,
-    )
-
-    base_text = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    corpus = spark.createDataFrame(
-        [(i, base_text + f" filler{i}") for i in range(10)],
-        "doc_id long, text string",
-    ).cache()
-    corpus.count()
-
-    def make_inc(start):
-        return [
-            (start, base_text + f" filler{start % 10}", "en", "web", 60),   # exact dup
-            (start + 1, base_text + " fresh tail", "en", "web", 60),        # near dup
-            (start + 2, "completely different words " * 3 + str(start), "fr", "wiki", 80),  # novel
-            (start + 3, "tiny", "en", "web", 4),                            # quality reject
-        ]
-    schema = "doc_id long, text string, lang string, source string, n_chars long"
-    inc1 = spark.createDataFrame(make_inc(100), schema)
-    inc2 = spark.createDataFrame(make_inc(200), schema)
-    docs_dir = str(tmp_path / "docs")
-    inc1.coalesce(1).write.mode("append").parquet(docs_dir)
-    inc2.coalesce(1).write.mode("append").parquet(docs_dir)
-
-    n = stream_curate_increment(
-        spark, docs_dir, corpus,
-        str(tmp_path / "out"), str(tmp_path / "ck"),
-        max_files_per_trigger=1,
-    )
-    assert n == 8
-    streamed = {
-        r.doc_id: (r.keep_quality, r.status, r.matched_id)
-        for r in spark.read.parquet(str(tmp_path / "out")).collect()
-    }
-
-    want = {}
-    for inc in (inc1, inc2):
-        flags = quality_rule_flags(inc, min_stop_words=0)
-        keep = {r.doc_id: r.keep for r in flags.collect()}
-        surv = inc.join(
-            flags.filter(F.col("keep")).select("doc_id"), on="doc_id"
-        )
-        dd, _ = incremental_dedup(surv, corpus)
-        dmap = {r.doc_id: (r.status, r.matched_id) for r in dd.collect()}
-        for r in inc.collect():
-            st_, mid = dmap.get(r.doc_id, (None, None))
-            want[r.doc_id] = (keep[r.doc_id], st_, mid)
-    assert streamed == want
-    # the planted semantics actually happened
-    assert streamed[100][1] == "exact_dup" and streamed[200][1] == "exact_dup"
-    assert streamed[101][1] == "near_dup"
-    assert streamed[102][1] == "novel"
-    assert streamed[103] == (False, None, None)
-    corpus.unpersist()
 
 
 def test_stream_session_watermark_finalization(spark, tmp_path):

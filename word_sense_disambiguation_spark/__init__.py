@@ -15,9 +15,11 @@ resolves the mentions to entities —
    block), canonical entity id = minimum member, labelled in the same
    keyed pass and projected by ``operators.blocking.er_clusters``,
 
-with each stage committed by ``plans.checkpoint.run_er_pipeline`` so a
-killed run resumes, and ``streaming.ingest`` attaching new crawl
-increments to a frozen cluster snapshot. The corpus-analysis operators
+with the assignments (``plans.pipeline.sense_assignments``), the scored
+edges and the clusters each committed by
+``plans.checkpoint.run_er_pipeline`` so a killed run resumes, and
+``streaming.ingest`` attaching new crawl increments to a frozen cluster
+snapshot. The corpus-analysis operators
 (text statistics, quantiles, temporal joins, CDC, Z-order layout, media
 headers) serve the driver-contract queries, not the pipeline.
 
@@ -27,7 +29,7 @@ path, Arrow-batched pandas UDFs only where Spark has no native operator.
 
 import sys
 
-__version__ = "0.3.0"
+__version__ = "0.4.0"
 
 
 def _share_unchanged_zip_directories() -> None:

@@ -115,16 +115,20 @@ def signed_count_matrix(bags: list, dim: int = EMBED_DIM) -> np.ndarray:
     ).reshape(n, dim)
 
 
+def normalize_rows(M: np.ndarray) -> np.ndarray:
+    """A :func:`signed_count_matrix` L2-normalized per row in float64, then
+    cast -> (n, dim) float32 (all-zero rows stay zero — the norm guard).
+    ``M`` is left unchanged, so a caller can keep using its counts."""
+    norms = np.linalg.norm(M, axis=1, keepdims=True)
+    return np.divide(M, norms, out=M.copy(), where=norms > 0).astype(np.float32)
+
+
 def embed_token_bags(bags: list, dim: int = EMBED_DIM) -> np.ndarray:
     """Embed a whole Arrow batch of token bags at once -> (n, dim) float32
-    matrix: :func:`signed_count_matrix`, L2-normalized per row in float64,
-    then cast (all-zero rows stay zero — the norm guard). The vectorized
-    hot path of the pair and candidate scorers.
+    matrix: :func:`signed_count_matrix`, then :func:`normalize_rows`. The
+    vectorized hot path of the pair and candidate scorers.
     """
-    M = signed_count_matrix(bags, dim)
-    norms = np.linalg.norm(M, axis=1, keepdims=True)
-    np.divide(M, norms, out=M, where=norms > 0)
-    return M.astype(np.float32)
+    return normalize_rows(signed_count_matrix(bags, dim))
 
 
 def embed_token_bags_dedup(bags: list, dim: int = EMBED_DIM) -> np.ndarray:

@@ -1,9 +1,7 @@
-"""Pairwise similarity measures: Jaro-Winkler, Levenshtein, cosine, Jaccard.
+"""Pairwise similarity measures: Jaro-Winkler, cosine, Jaccard.
 
 Pure-python/NumPy reference implementations; the Spark operators call the
-batch variants inside Arrow pandas UDFs. No operator scores with
-Levenshtein; the python version is pinned against DuckDB's
-``levenshtein`` by the tests. Jaro-Winkler matches DuckDB's
+batch variants inside Arrow pandas UDFs. Jaro-Winkler matches DuckDB's
 ``jaro_winkler_similarity`` (boost threshold 0.7, prefix scale 0.1) so the
 oracle comparison is exact.
 """
@@ -91,22 +89,6 @@ def jaro_winkler_batch(s1, s2) -> np.ndarray:
             memo[key] = v
         out[i] = v
     return out
-
-
-def levenshtein(s1: str, s2: str) -> int:
-    if s1 == s2:
-        return 0
-    if not s1:
-        return len(s2)
-    if not s2:
-        return len(s1)
-    prev = list(range(len(s2) + 1))
-    for i, c1 in enumerate(s1, 1):
-        cur = [i]
-        for j, c2 in enumerate(s2, 1):
-            cur.append(min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (c1 != c2)))
-        prev = cur
-    return prev[-1]
 
 
 def cosine(a: np.ndarray, b: np.ndarray) -> float:

@@ -52,6 +52,8 @@ from word_sense_disambiguation_spark.functions.hashing import (
     char_shingles,
     lsh_bands,
     minhash_signature,
+    normalize_rows,
+    signed_count_matrix,
 )
 from word_sense_disambiguation_spark.operators.clustering import _min_labels
 from word_sense_disambiguation_spark.operators.pairs import (
@@ -211,19 +213,21 @@ def _sql_and(terms: list[tuple[np.ndarray, np.ndarray]]) -> np.ndarray:
 
 
 def _block_pairs(
-    pdf: pd.DataFrame, block: np.ndarray, rank: np.ndarray, max_block_size: int
+    pdf: pd.DataFrame,
+    counts: np.ndarray,
+    block: np.ndarray,
+    rank: np.ndarray,
+    max_block_size: int,
 ) -> tuple[np.ndarray, np.ndarray]:
     """Row pairs (i, j), id order, of the ER candidate set over whole
     blocks: the scorer-aware pairs of blocks within the cap and the
-    oversized-star edges of blocks over it (see :func:`er_scored_edges`)."""
-    from word_sense_disambiguation_spark.functions.hashing import (
-        signed_count_matrix,
-    )
-
+    oversized-star edges of blocks over it (see :func:`er_scored_edges`).
+    ``counts`` is the :func:`hashing.signed_count_matrix` of ``pdf``'s
+    context bags."""
     over = (np.bincount(block) > max_block_size)[block]
     assigned = (pdf["decision"] == "assigned").to_numpy()
 
-    M = signed_count_matrix(pdf["context_words"]).astype(np.int64)
+    M = counts.astype(np.int64)
     sq = (M * M).sum(axis=1).astype(np.float64)
     # the cosine margin proof holds in a block with 4*R*S*eps*1.001 < 1,
     # R = max |v|^2 (nnz + 3) and S = max |v|^2 over its members
@@ -267,6 +271,7 @@ def _block_pairs(
 
 def _score_pairs(
     pdf: pd.DataFrame,
+    counts: np.ndarray,
     i: np.ndarray,
     j: np.ndarray,
     threshold: float,
@@ -277,8 +282,8 @@ def _score_pairs(
     """``(score, is_match)`` of the row pairs (i, j) of ``pdf``, ``i`` on
     the ``id_a`` side: ``score_mention_pairs``' kernels in its float order,
     with SQL NULL semantics (a NaN score is NULL, its ``is_match`` None).
-    ``pdf`` needs ``surface, context_words, decision, pred_sense_id``."""
-    from word_sense_disambiguation_spark.functions.hashing import embed_token_bags
+    ``pdf`` needs ``surface, decision, pred_sense_id``; ``counts`` is the
+    :func:`hashing.signed_count_matrix` of its context bags."""
     from word_sense_disambiguation_spark.functions.similarity import (
         cosine_batch,
         jaro_winkler_batch,
@@ -289,7 +294,7 @@ def _score_pairs(
         surface = pdf["surface"].to_numpy(dtype=object)
         score = score + w_jw * jaro_winkler_batch(surface[i], surface[j])
     if w_cos != 0.0:
-        E = embed_token_bags(pdf["context_words"])  # once per member
+        E = normalize_rows(counts)  # once per member
         cos = cosine_batch(E[i], E[j]).astype(np.float64)
         score = score + w_cos * np.maximum(cos, 0.0)
     decision, sense = pdf["decision"], pdf["pred_sense_id"]
@@ -311,6 +316,7 @@ def _score_pairs(
 
 def _block_entities(
     pdf: pd.DataFrame,
+    counts: np.ndarray,
     block: np.ndarray,
     rank: np.ndarray,
     max_block_size: int,
@@ -324,9 +330,10 @@ def _block_entities(
     :func:`_block_pairs`, their :func:`_score_pairs` scores, and each
     member's component label on the id rank (``label[rank[r]]`` is the
     smallest rank of row r's matched component; a NULL ``is_match`` never
-    merges)."""
-    i, j = _block_pairs(pdf, block, rank, max_block_size)
-    score, is_match = _score_pairs(pdf, i, j, threshold, w_jw, w_cos, w_sense)
+    merges). ``counts`` is the :func:`hashing.signed_count_matrix` of
+    ``pdf``'s context bags, hashed once for both steps."""
+    i, j = _block_pairs(pdf, counts, block, rank, max_block_size)
+    score, is_match = _score_pairs(pdf, counts, i, j, threshold, w_jw, w_cos, w_sense)
     m = pd.Series(is_match).eq(True).to_numpy()
     return i, j, score, is_match, _min_labels(len(pdf), rank[i[m]], rank[j[m]])
 
@@ -349,8 +356,9 @@ def _block_edges_run(
     rank, uniq = pd.factorize(pdf["mention_id"], sort=True)  # rank order == id order
     uniq = np.asarray(uniq)
     block = pdf.groupby(["norm_surface", "pos"], sort=False).ngroup().to_numpy()
+    counts = signed_count_matrix(pdf["context_words"])
     i, j, score, is_match, label = _block_entities(
-        pdf, block, rank, max_block_size, threshold, w_jw, w_cos, w_sense
+        pdf, counts, block, rank, max_block_size, threshold, w_jw, w_cos, w_sense
     )
     if not len(i):
         return
@@ -417,8 +425,9 @@ def er_scored_edges(
     (the historical candidate set), and each is emitted once.
 
     **Scores.** Bit-equal to :func:`pairs.score_mention_pairs` on the same
-    pairs: ``jaro_winkler_batch`` on the surfaces, ``embed_token_bags``
-    once per member then ``cosine_batch``, summed as
+    pairs: ``jaro_winkler_batch`` on the surfaces, the signed counts
+    above, normalized once per member (``embed_token_bags``' floats), then
+    ``cosine_batch``, summed as
     ``((0.0 + w_jw·jw) + w_cos·max(cos, 0)) + w_sense·same`` with SQL NULL
     semantics for ``same``; a term whose weight is 0 is not computed.
 

@@ -60,6 +60,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from word_sense_disambiguation_spark.functions.hashing import signed_count_matrix
 from word_sense_disambiguation_spark.operators.blocking import (
     ER_MAX_BLOCK,
     _block_entities,
@@ -107,7 +108,8 @@ def _attach_run(
     rows = pd.DataFrame({"block": block, "row": np.arange(len(pdf))})
     cand = rows[~is_rep & open_key].merge(rows[is_rep & open_key], on="block")
     i, j = cand["row_x"].to_numpy(), cand["row_y"].to_numpy()
-    score, is_match = _score_pairs(pdf, i, j, *scorer)
+    counts = signed_count_matrix(pdf["context_words"])  # hashed once per row
+    score, is_match = _score_pairs(pdf, counts, i, j, *scorer)
     hit = pd.Series(is_match).eq(True).to_numpy()  # a NULL is_match never attaches
     # best entity per batch row: highest score, then largest entity_id
     entity = pdf["entity_id"].to_numpy()[j[hit]]
@@ -124,7 +126,9 @@ def _attach_run(
     residual[won] = False
     res = pdf[residual].reset_index(drop=True)
     rank, uniq = pd.factorize(res["mention_id"], sort=True)  # rank order == id order
-    label = _block_entities(res, block[residual], rank, max_block_size, *scorer)[4]
+    label = _block_entities(
+        res, counts[residual], block[residual], rank, max_block_size, *scorer
+    )[4]
     minted = np.asarray(uniq)[label[rank]]
     yield pd.DataFrame({
         "mention_id": np.concatenate([ids[won], ids[residual]]),

@@ -31,8 +31,8 @@ jars; on a cluster, point ``_write``/``_read`` at an Iceberg catalog):
 
 Reading the committed output back (instead of reusing the in-memory plan)
 also cuts lineage between stages — the batch analogue of
-``localCheckpoint`` — so a 4-stage pipeline never accumulates a 4-stage
-recovery DAG.
+``localCheckpoint`` — so a multi-stage pipeline never accumulates a
+multi-stage recovery DAG.
 """
 
 from __future__ import annotations
@@ -60,6 +60,7 @@ from word_sense_disambiguation_spark.operators.blocking import (
     er_clusters,
     er_scored_edges,
 )
+from word_sense_disambiguation_spark.plans.pipeline import sense_assignments
 
 MANIFEST = "_MANIFEST.json"
 # where Spark's parquet writer records the Spark schema in each footer
@@ -106,7 +107,9 @@ class StageRunner:
     ``binding`` names what the stages' outputs depend on beyond their
     code (stage parameters, input fingerprints); it is recorded in every
     manifest together with the engine version, and a committed stage
-    whose recorded binding differs raises ``ValueError``.
+    whose recorded binding differs raises ``ValueError`` — already here,
+    for every stage committed in ``run_dir``, so a run dir left by another
+    stage layout raises even when this run never reaches its stages.
     """
 
     def __init__(
@@ -121,6 +124,8 @@ class StageRunner:
         self.run_id = run_id
         self.binding = {"engine_version": __version__, **(binding or {})}
         os.makedirs(run_dir, exist_ok=True)
+        for path in sorted(glob.glob(os.path.join(run_dir, "*", MANIFEST))):
+            self.is_committed(os.path.basename(os.path.dirname(path)))
 
     # -- paths --------------------------------------------------------------
     def _stage_dir(self, name: str) -> str:
@@ -288,14 +293,14 @@ class StageRunner:
         """Mid-stage-resumable stage: output written and COMMITTED in
         bucket groups.
 
-        ``run_er_pipeline`` does not use it: its stages are plain
+        ``run_er_pipeline`` does not use it: its three stages are plain
         :meth:`stage` commits (one write job each), because re-running a
         whole stage costs less than the localCheckpoint and the four
         bucket-group writes (about 0.4 s against 2 s for the mentions of a
         200-page job). It is kept only because the benchmark's traced
-        re-composition of the ER job still commits its mentions through
-        it; it can go once that re-composition runs the pipeline's own
-        stages.
+        re-composition of the ER job still commits a mentions table
+        through it; it can go once that re-composition runs the
+        pipeline's own stages.
 
         The stage output is hash-bucketed on ``bucket_col`` (portable md5,
         so bucket membership is stable across runs) and written with
@@ -419,46 +424,34 @@ def run_er_pipeline(
     max_block_size: int = ER_MAX_BLOCK,
     use_html: bool = False,
 ) -> dict[str, DataFrame]:
-    """The full checkpointed ER pipeline: blocking, pair scoring and
-    clustering over the sense assignments.
+    """The full checkpointed ER pipeline: sense assignment, then blocking,
+    pair scoring and clustering over the assignments.
 
-    Stages: mentions -> assignments -> edges -> clusters, each one
-    committed :meth:`StageRunner.stage`; re-running after a crash
-    re-executes only the stages that never committed. The run dir is bound
-    to ``max_block_size``, ``use_html`` and fingerprints of ``pages`` and
+    Stages: assignments -> edges -> clusters, each one committed
+    :meth:`StageRunner.stage`; re-running after a crash re-executes only
+    the stages that never committed. The run dir is bound to
+    ``max_block_size``, ``use_html`` and fingerprints of ``pages`` and
     ``senses``: reusing it with any of them changed raises ``ValueError``.
 
-    ``edges`` is ``blocking.er_scored_edges`` — the one ER blocking and
-    scoring policy, one shuffle of the committed assignments on the block
-    key, that also labels each block's matched components — and its
-    commit observes the match count. ``clusters`` is
-    ``blocking.er_clusters`` over the committed edges: a narrow projection
-    of the entity columns, one write job with no shuffle and no Python.
-    """
-    from word_sense_disambiguation_spark.operators.candidates import (
-        candidates_for_mentions,
-    )
-    from word_sense_disambiguation_spark.operators.scoring import (
-        assign_senses,
-        score_candidates,
-    )
-    from word_sense_disambiguation_spark.operators.tokenize import (
-        mentions_from_pages,
-        mentions_from_pages_sql,
-    )
+    ``assignments`` is ``pipeline.sense_assignments``, the one
+    pages -> mentions -> candidates -> assignments composition; its rows
+    carry every mention column the later stages read. ``edges`` is
+    ``blocking.er_scored_edges`` — the one ER blocking and scoring policy,
+    one shuffle of the committed assignments on the block key, that also
+    labels each block's matched components — and its commit observes the
+    match count. ``clusters`` is ``blocking.er_clusters`` over the
+    committed edges: a narrow projection of the entity columns, one write
+    job with no shuffle and no Python.
 
+    The returned ``mentions`` is the committed assignments table (one row
+    per mention), kept only for the benchmark's orphan check; a traced
+    op that runs this function's own stages can drop the key.
+    """
     r = StageRunner(
         spark, run_dir, run_id, er_binding(pages, senses, max_block_size, use_html)
     )
-    mentions = r.stage(
-        "mentions",
-        lambda: mentions_from_pages(pages, use_html=True)
-        if use_html
-        else mentions_from_pages_sql(pages),
-    )
     assignments = r.stage(
-        "assignments",
-        lambda: assign_senses(score_candidates(candidates_for_mentions(mentions, senses))),
+        "assignments", lambda: sense_assignments(pages, senses, use_html)
     )
     edges = r.stage(
         "edges",
@@ -469,7 +462,7 @@ def run_er_pipeline(
     )
     clusters = r.stage("clusters", lambda: er_clusters(edges))
     return {
-        "mentions": mentions,
+        "mentions": assignments,
         "assignments": assignments,
         "edges": edges,
         "clusters": clusters,

@@ -8,10 +8,13 @@ a web-scale crawl pipeline ingests incrementally, so the engine exposes:
   streaming engine synchronously (memory sink + ``processAllAvailable``)
   and the result equals the batch ``date_trunc`` aggregate — the streaming/
   batch parity Spark guarantees for append-mode windowed aggregates.
-* :func:`stream_sense_assignments` — foreachBatch incremental version of
-  the flagship pipeline: each micro-batch of pages runs the same
-  pages->assignments DAG and appends to a parquet sink (exactly-once via
-  checkpointLocation), demonstrating mid-stream resumability.
+* :func:`stream_session_stats` — append-mode ``session_window``
+  sessionization whose finals equal the batch
+  ``operators.temporal.session_window_stats``.
+* :func:`stream_attach_to_clusters` — foreachBatch incremental ER: each
+  micro-batch of pages runs ``sense_assignments`` and
+  ``attach_mentions_to_clusters`` against a frozen cluster snapshot and
+  appends to a parquet sink (exactly-once via checkpointLocation).
 """
 
 from __future__ import annotations
@@ -123,37 +126,6 @@ def stream_session_stats(
     return q, name
 
 
-def stream_sense_assignments(
-    spark: SparkSession,
-    pages_dir: str,
-    senses: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-) -> int:
-    """Incremental flagship pipeline via foreachBatch; returns rows written.
-
-    Each micro-batch runs the identical batch DAG — one code path for batch
-    and streaming, the engine-wide rule.
-    """
-    from word_sense_disambiguation_spark.datagen import PAGES_SCHEMA
-    from word_sense_disambiguation_spark.plans.pipeline import sense_assignments
-
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        out = sense_assignments(batch_df, senses)
-        out.drop("context_words").write.mode("append").parquet(out_dir)
-
-    q = (
-        spark.readStream.schema(PAGES_SCHEMA)
-        .parquet(pages_dir)
-        .writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(out_dir).count()
-
-
 def stream_attach_to_clusters(
     spark: SparkSession,
     pages_dir: str,
@@ -183,8 +155,7 @@ def stream_attach_to_clusters(
     state, which is what lets it run indefinitely.
 
     Exactly-once: file-source progress lives in ``checkpoint_dir``; a
-    killed-and-restarted query reprocesses only unfinished files (the
-    same cross-JVM resume contract tested for the sense pipeline).
+    killed-and-restarted query reprocesses only unfinished files.
     """
     from word_sense_disambiguation_spark.datagen import PAGES_SCHEMA
     from word_sense_disambiguation_spark.operators.incremental_er import (
@@ -204,76 +175,6 @@ def stream_attach_to_clusters(
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     q = (
         reader.parquet(pages_dir)
-        .writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(out_dir).count()
-
-
-def stream_curate_increment(
-    spark: SparkSession,
-    docs_dir: str,
-    corpus: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-    docs_schema: str = "doc_id long, text string, lang string, source string, n_chars long",
-    max_files_per_trigger: int | None = None,
-    min_stop_words: int = 0,
-) -> int:
-    """Streaming corpus admission — the standing loop of a crawl
-    pipeline: each micro-batch of new documents runs the identical
-    batch curation decision (Gopher quality gates, then
-    ``incremental_dedup`` against the FROZEN accumulated corpus) and
-    appends one decision row per document to a parquet sink:
-    ``(doc_id, lang, source, keep_quality, status, matched_id)`` where
-    status is exact_dup / near_dup / novel (NULL for quality-rejected
-    docs — they never reach the dedup stage, mirroring the batch
-    pipeline's stage order).
-
-    Same lambda-architecture contract as ``stream_attach_to_clusters``:
-    decisions against the frozen corpus are exact (deterministic
-    operators, frozen reference side); WITHIN-stream duplicates arriving
-    in different micro-batches are each admitted as novel — folding
-    admitted docs back into the corpus belongs to the periodic batch
-    re-index, so the stream itself keeps NO growing state and runs
-    indefinitely. Exactly-once via the file-source checkpoint: a
-    killed-and-restarted query reprocesses only unfinished files.
-
-    Returns total decision rows written.
-    """
-    from word_sense_disambiguation_spark.operators.dedup import (
-        incremental_dedup,
-    )
-    from word_sense_disambiguation_spark.operators.webfilters import (
-        quality_rule_flags,
-    )
-
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        flags = quality_rule_flags(batch_df, min_stop_words=min_stop_words)
-        keep = flags.select("doc_id", F.col("keep").alias("keep_quality"))
-        survivors = batch_df.join(
-            keep.filter(F.col("keep_quality")).select("doc_id"), on="doc_id"
-        )
-        dedup, _oversized = incremental_dedup(survivors, corpus)
-        decisions = (
-            batch_df.select("doc_id", "lang", "source")
-            .join(keep, on="doc_id", how="left")
-            .join(
-                dedup.select("doc_id", "status", "matched_id"),
-                on="doc_id",
-                how="left",
-            )
-        )
-        decisions.write.mode("append").parquet(out_dir)
-
-    reader = spark.readStream.schema(docs_schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    q = (
-        reader.parquet(docs_dir)
         .writeStream.foreachBatch(handle)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
